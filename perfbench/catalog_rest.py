@@ -7,7 +7,8 @@ assert-ref-snapshot-id; at the table's seeded history length the same
 commit also removes the oldest snapshot), ~4% commit_transaction over
 2-4 tables, ~5% prefix-only sign_s3 against the s3:// warehouse, ~3%
 list_tables / load_namespace. Tables are picked with Zipf skew, so hot
-tables see real CAS contention; after a 409 the client reloads and
+tables see real CAS contention. Like an Iceberg client's commit, every
+attempt first reloads the tables it changes; after a 409 the client
 retries, up to RETRY_CAP attempts.
 """
 
@@ -41,9 +42,8 @@ MAX_HISTORY = 200
 CLIENTS = 4
 ZIPF_S = 1.1
 RETRY_CAP = 32
-SETUPS = 3
+SETUPS = 5
 WARMUP_S = 1.0
-SUBWINDOWS = 5
 MIX = (
     ("load_table", 70),
     ("commit_table", 18),
@@ -146,11 +146,6 @@ class Workload:
         self.cum = list(itertools.accumulate(1.0 / (r + 1) ** ZIPF_S for r in range(tables)))
         self.op_cum = list(itertools.accumulate(share for _, share in MIX))
         boot = RestCatalogClient(url)
-        boot.configure(cs.PROJECT, cs.LOCAL_WH)
-        self.initial = {
-            cs.table_name(i): boot.load_table(cs.NAMESPACE, cs.table_name(i))["metadata"]
-            for i in range(tables)
-        }
         boot.configure(cs.PROJECT, cs.S3_WH)
         self.s3_keys = [
             boot.load_table(cs.NAMESPACE, cs.table_name(i))["metadata"]["location"]
@@ -211,15 +206,13 @@ class Workload:
         client.configure(cs.PROJECT, cs.LOCAL_WH)
         signer = RestCatalogClient(self.url)
         signer.configure(cs.PROJECT, cs.S3_WH)
-        cache = dict(self.initial)
         lat: dict[str, list[float]] = defaultdict(list)
         failed: dict[str, int] = defaultdict(int)
         errors: list[str] = []
         ns = cs.NAMESPACE
 
         def load(table: str) -> dict:
-            cache[table] = client.load_table(ns, table)["metadata"]
-            return cache[table]
+            return client.load_table(ns, table)["metadata"]
 
         while True:
             now = time.perf_counter()
@@ -238,26 +231,23 @@ class Workload:
                         table = cs.table_name(self.pick(rng))
                         if table not in picked:
                             picked.append(table)
-                    metas = {t: cache.get(t) or load(t) for t in picked}
                     t0 = time.perf_counter()
                     for attempt in range(1, RETRY_CAP + 1):
-                        changes = {t: self.change(metas[t], t, rng) for t in picked}
+                        # like an Iceberg client's commit, every attempt
+                        # refreshes the table metadata it builds on
+                        changes = {t: self.change(load(t), t, rng) for t in picked}
                         try:
                             if op == "commit_table":
                                 reqs, updates, _ = changes[table]
-                                cache[table] = client.commit_table(
-                                    ns, table, reqs, updates)["metadata"]
+                                client.commit_table(ns, table, reqs, updates)
                             else:
                                 client.commit_transaction([
                                     {"identifier": {"namespace": ns, "name": t},
                                      "requirements": reqs, "updates": updates}
                                     for t, (reqs, updates, _) in changes.items()])
-                                for t in picked:  # 204: no metadata comes back
-                                    cache.pop(t, None)
                         except CatalogHTTPError as e:
                             if e.code != 409:
                                 raise
-                            metas = {t: load(t) for t in picked}
                             continue
                         self.ledger.ack([ack for _, _, ack in changes.values()], attempt)
                         break
@@ -278,7 +268,7 @@ class Workload:
                         client.load_namespace(ns)
                 t1 = time.perf_counter()
                 if t0 >= start:
-                    lat[op].append((t1, (t1 - t0) * 1000.0))
+                    lat[op].append((t1 - t0) * 1000.0)
             except (CatalogHTTPError, RetriesExhausted, urllib.error.URLError, OSError,
                     RuntimeError) as e:
                 failed[op] += 1
@@ -293,49 +283,28 @@ class Workload:
         return {t: client.load_table(cs.NAMESPACE, t)["metadata"] for t in self.ledger.added}
 
 
-def window_metrics(lat: dict[str, list[float]], seconds: float) -> dict:
-    """End-to-end metrics of one window; None where it has no samples."""
-    every = [v for values in lat.values() for v in values]
-
-    def p50(op: str) -> float | None:
-        return median(lat[op]) if lat.get(op) else None
-
-    return {
-        "ops_per_s": len(every) / seconds,
-        "op_p50_ms": median(every) if every else None,
-        "op_p90_ms": percentile(every, 90) if every else None,
-        "read_p50_ms": p50("load_table"),
-        "write_p50_ms": p50("commit_table"),
-        "multi_p50_ms": p50("commit_transaction"),
-    }
-
-
 def summarize(run: dict, seconds: float) -> tuple[dict, dict]:
     """End-to-end metrics and the per-op detail of one timed window.
 
-    The end-to-end metrics are medians over SUBWINDOWS equal slices of the
-    window (by completion time), so a few seconds of hypervisor steal
-    move them less; the detail figures use the whole window."""
-    lat = {op: [ms for _, ms in v] for op, v in run["lat"].items()}
+    Latencies are medians over the whole window: medians over five
+    slices of it, meant to shed bursts of hypervisor steal, spread twice
+    as much from run to run on a quiet host."""
+    lat = run["lat"]
     every = [v for values in lat.values() for v in values]
+    metrics = {
+        "ops_per_s": len(every) / seconds,
+        "op_p50_ms": median(every),
+        "op_p90_ms": percentile(every, 90),
+        "read_p50_ms": median(lat["load_table"]),
+        "write_p50_ms": median(lat["commit_table"]),
+        "multi_p50_ms": median(lat["commit_transaction"]),
+    }
     detail = {
-        "catalog_ops_per_s": len(every) / seconds,
-        "load_table_p50_ms": median(lat["load_table"]),
         "load_table_p99_ms": percentile(lat["load_table"], 99),
-        "commit_p50_ms": median(lat["commit_table"]),
         "commit_p99_ms": percentile(lat["commit_table"], 99),
-        "txn_commit_p50_ms": median(lat["commit_transaction"]),
         "sign_p50_ms": median(lat["sign_s3"]),
         "samples": {op: len(v) for op, v in lat.items()},
     }
-    width = seconds / SUBWINDOWS
-    slices = [defaultdict(list) for _ in range(SUBWINDOWS)]
-    for op, values in run["lat"].items():
-        for t_end, ms in values:
-            slices[min(SUBWINDOWS - 1, int((t_end - run["start"]) / width))][op].append(ms)
-    per_slice = [window_metrics(s, width) for s in slices]
-    metrics = {
-        k: median([m[k] for m in per_slice if m[k] is not None]) for k in per_slice[0]}
     return metrics, detail
 
 

@@ -1,15 +1,19 @@
-"""``lakehouse-dml`` workload: Spark writes and reads a lineitem-derived
-table through the catalog, which runs as its own server process.
+"""The lakehouse DML script, measured in ``query-mix``'s traced run: Spark
+writes and reads a lineitem-derived table through the catalog, which
+runs as its own server process.
 
-One script iteration starts from a fresh table partitioned by
+The script starts from a fresh table partitioned by
 ``identity(l_returnflag)``: SLICES appends of generated lineitem slices,
 a ``merge`` upsert on ``row_id`` after every MERGE_EVERY appends and a
 snapshot read after every SCAN_EVERY, then ``delete_where``, ``compact``,
 a time-travel read and a filtered ``spark.read.format("iceberg_rest")``
-read. Timed
-iterations repeat while another whole one fits in the window. Every
-iteration's final table is checked against a pandas recomputation of
-the same script.
+read. Its scans and final table are checked against a pandas
+recomputation of the same script.
+
+It is not a timed workload of its own: ten runs of it spread by more
+than a bound allows on a shared 4-vCPU host (see README.md), so it
+yields the ``catalog.spark_table`` and ``catalog.datasource`` per-layer
+metrics only.
 """
 
 from __future__ import annotations
@@ -26,8 +30,7 @@ import pyarrow.parquet as pq
 import catalog_server as cs
 import datagen
 from catalog_rest import CatalogServer
-from common import median, metric, peak_rss_mb, percentile
-from spark_env import jvm_pid, start_spark, stop_spark
+from common import median
 
 SF = 0.01
 SLICES = 16
@@ -183,93 +186,33 @@ class Script:
         return SparkCatalogTable(self.spark, self.client, cs.NAMESPACE, name).read().toPandas()
 
 
-def summarize(lat: dict[str, list[float]], elapsed: float) -> dict:
-    every = [v for values in lat.values() for v in values]
-    return {
-        "ops_per_s": len(every) / elapsed,
-        "op_p50_ms": median(every),
-        "op_p90_ms": percentile(every, 90),
-        "read_p50_ms": median(lat["scan"]),
-        "write_p50_ms": median(lat["append"]),
-        "multi_p50_ms": median(lat["merge"]),
-    }
-
-
-def run(work: Path, seed: int, seconds: float, trace: bool, scale: float = 1.0) -> dict:
-    spark = server = None
+def traced_script(spark, probe, work: Path, seed: int, scale: float) -> dict:
+    """Start a catalog server, warm the script up on a short untimed
+    iteration, then run one iteration with SparkCatalogTable and the REST
+    client wrapped in spans and every step measured by ``probe``.
+    Returns the per-layer metrics, a detail record, the number of steps
+    and the correctness problems found."""
+    inputs = script_inputs(seed, SF * scale, work / "dml-inputs")
+    (work / "dml-catalog").mkdir()
+    server = CatalogServer(work / "dml-catalog", seed, 0, 1, False)
     try:
-        inputs = script_inputs(seed, SF * scale, work / "inputs")
-        t0 = time.perf_counter()
-        (work / "catalog").mkdir()
-        server = CatalogServer(work / "catalog", seed, 0, 1, False)
-        spark = start_spark(work, ui=trace)
         script = Script(spark, server.url, inputs)
-        script.run("warmup", lambda kind, fn: fn(), slices=MERGE_EVERY)  # untimed
-        setup_s = time.perf_counter() - t0
-
-        lat: dict[str, list[float]] = defaultdict(list)
-        walls, problems, tables = [], [], []
-
-        def timed(kind, fn):
-            t = time.perf_counter()
-            out = fn()
-            lat[kind].append((time.perf_counter() - t) * 1000)
-            return out
-
-        start = time.perf_counter()
-        while True:
-            i0 = time.perf_counter()
-            name = f"lineitem_{len(tables)}"
-            problems += check_scans(script.run(name, timed), inputs["expected"]["scans"])
-            tables.append(name)
-            now = time.perf_counter()
-            walls.append(now - i0)
-            if now - start + walls[-1] > seconds:
-                break
-        elapsed = time.perf_counter() - start
-        rss = peak_rss_mb(jvm_pid(spark)) + peak_rss_mb(server.proc.pid)
-        for name in tables:
-            problems += check_table(script.final(name), inputs["expected"]["final"])
-        metrics = summarize(lat, elapsed)
-        out = {
-            "attempted": sum(len(v) for v in lat.values()),
-            "failed": len(problems),
-            "correct": not problems,
-            "metrics": {
-                "setup_s": metric(setup_s, "s"),
-                "peak_rss_mb": metric(rss, "MB"),
-                **{k: metric(v, "1/s" if k == "ops_per_s" else "ms") for k, v in metrics.items()},
-            },
-            "detail": {
-                "dml_wall_s": median(walls),
-                "append_p50_s": median(lat["append"]) / 1000,
-                "merge_p50_s": median(lat["merge"]) / 1000,
-                "scan_p50_s": median(lat["scan"]) / 1000,
-                "iterations": len(tables),
-                "samples": {k: len(v) for k, v in lat.items()},
-                "correctness_problems": problems[:10],
-            },
-        }
-        if trace:
-            out["layers"], out["detail"]["trace"] = traced_iteration(script, metrics)
-        return out
+        script.run("warmup", lambda kind, fn: fn(), slices=MERGE_EVERY)
+        out = traced_iteration(script, probe)
+        problems = check_scans(out.pop("scans"), inputs["expected"]["scans"])
+        problems += check_table(script.final(out.pop("table")), inputs["expected"]["final"])
+        return {**out, "problems": problems}
     finally:
-        if spark is not None:
-            stop_spark(spark)
-        if server is not None:
-            server.stop()
+        server.stop()
 
 
-def traced_iteration(script: Script, untraced: dict) -> tuple[dict, dict]:
-    """One more iteration with SparkCatalogTable and the REST client
-    wrapped in spans and every step measured by the Spark probe."""
+def traced_iteration(script: Script, probe) -> dict:
     from iceberg_rest_server_spark.catalog.client import RestCatalogClient
     from iceberg_rest_server_spark.catalog.spark_table import SparkCatalogTable
     from spans import SpanTree, Tracer
-    from spark_probe import SparkProbe, mean_layers
+    from spark_probe import mean_layers
 
     tracer = Tracer()
-    probe = SparkProbe(script.spark)
     tracer.wrap_methods(RestCatalogClient, "client")
     tracer.wrap_methods(SparkCatalogTable, "catalog.spark_table")
     records: dict[str, list[dict]] = defaultdict(list)
@@ -278,13 +221,13 @@ def traced_iteration(script: Script, untraced: dict) -> tuple[dict, dict]:
     def probed(kind, fn):
         out, wall, layer = probe.measure(fn)
         records[kind].append(layer)
-        lat[kind].append(wall * 1000)
+        lat[kind].append(wall)
         return out
 
     name = "lineitem_traced"
     start = time.perf_counter()
     try:
-        script.run(name, probed)
+        scans = script.run(name, probed)
     finally:
         tracer.restore()
     elapsed = time.perf_counter() - start
@@ -302,8 +245,7 @@ def traced_iteration(script: Script, untraced: dict) -> tuple[dict, dict]:
     metadata = table.metadata()
     snap = next(s for s in metadata["snapshots"]
                 if s["snapshot-id"] == metadata["current-snapshot-id"])
-    layers = mean_layers([r for rs in records.values() for r in rs])
-    layers.update({
+    layers = {
         "catalog.spark_table.catalog_calls_per_op": mean([client_calls(s) for s in ops]),
         "catalog.spark_table.catalog_ms": mean(
             [tree.layer_time(s, "client") * 1000 for s in ops]),
@@ -312,9 +254,15 @@ def traced_iteration(script: Script, untraced: dict) -> tuple[dict, dict]:
             [(tree.duration(s) - tree.layer_time(s, "client")) * 1000 for s in writes]),
         "catalog.datasource.files_planned": len(table._snapshot_files(metadata, snap)),
         "catalog.datasource.files_read": script.datasource_read(name).rdd.getNumPartitions(),
-    })
-    traced = summarize(lat, elapsed)
-    return layers, {
-        "per_op_type": {k: mean_layers(v) for k, v in records.items()},
-        "overhead_traced_minus_untraced": {k: traced[k] - untraced[k] for k in untraced},
+    }
+    return {
+        "layers": layers,
+        "detail": {
+            "dml_wall_s": elapsed,
+            **{f"{kind}_p50_s": median(lat[kind]) for kind in ("append", "merge", "scan")},
+            "per_op_type": {k: mean_layers(v) for k, v in records.items()},
+        },
+        "steps": sum(len(v) for v in lat.values()),
+        "scans": scans,
+        "table": name,
     }

@@ -1,6 +1,6 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload catalog-rest --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload catalog-rest --seed 1 --seconds 25 --trace 0
 
 Runs one workload against the program in this checkout and prints, as
 its last line, one JSON object with ``correct``, ``attempted``,
@@ -34,7 +34,7 @@ from common import (
     steal_ticks,
 )
 
-WORKLOADS = ("catalog-rest", "lakehouse-dml", "query-mix")
+WORKLOADS = ("catalog-rest", "query-mix")
 
 
 def benchmark_spec() -> dict:
@@ -61,10 +61,6 @@ def run_workload(name: str, work: Path, seed: int, seconds: float, trace: bool,
         import catalog_rest
 
         return catalog_rest.run(work, seed, seconds, trace, scale)
-    if name == "lakehouse-dml":
-        import lakehouse_dml
-
-        return lakehouse_dml.run(work, seed, seconds, trace, scale)
     import query_mix
 
     return query_mix.run(work, seed, seconds, trace, scale)
