@@ -24,12 +24,17 @@ Scale shape:
   field-id → display-name mapping and schema-evolution null backfill
   (a file written before ADD COLUMN simply lacks the new f<id> and
   yields nulls — same semantics as SparkCatalogTable._read_files).
+
+Every snapshot decision — which snapshot and schema the options select,
+the manifest, the CAS commit, the incremental diff, partition pruning —
+is made in snapshots.py, shared with SparkCatalogTable; this module only
+moves the data, through pyarrow in each file's own partition.
 """
 
 from __future__ import annotations
 
-import json
 import os
+import uuid
 from typing import Iterator
 
 from pyspark.sql.datasource import (
@@ -42,6 +47,11 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql import types as T
 
+from . import snapshots
+from .client import RestCatalogClient
+from .io import local_path
+from .spark_table import _ICEBERG_TO_SPARK as _JVM_READ_TYPES
+
 _ICEBERG_TO_ARROW = {
     "long": "int64",
     "int": "int32",
@@ -49,7 +59,7 @@ _ICEBERG_TO_ARROW = {
     "float": "float32",
     "string": "string",
     "boolean": "bool",
-    "timestamp": "us",  # handled specially
+    "timestamp": "timestamp[us]",
     "date": "date32",
     "binary": "binary",
 }
@@ -61,18 +71,39 @@ _ICEBERG_TO_ARROW = {
 # would make Spark re-interpret wall-clock values through the session
 # zone on the Arrow boundary. spark_table.py reads through the JVM
 # parquet reader where the session-zone cast is applied uniformly, so
-# it keeps TimestampType. Both choices are documented at both sites.
-_ICEBERG_TO_SPARK = {
-    "long": T.LongType(),
-    "int": T.IntegerType(),
-    "double": T.DoubleType(),
-    "float": T.FloatType(),
-    "string": T.StringType(),
-    "boolean": T.BooleanType(),
-    "timestamp": T.TimestampNTZType(),
-    "date": T.DateType(),
-    "binary": T.BinaryType(),
-}
+# it keeps TimestampType.
+_ICEBERG_TO_SPARK = {**_JVM_READ_TYPES, "timestamp": T.TimestampNTZType()}
+
+
+def _arrow_type(ice_type: str):
+    import pyarrow as pa
+
+    return pa.type_for_alias(_ICEBERG_TO_ARROW[ice_type])
+
+
+def _client(options: dict) -> tuple[RestCatalogClient, list[str], str]:
+    """(client, namespace, table) named by the options — through the same
+    RestCatalogClient every other consumer uses: config round-trip for
+    the prefix, 0x1F namespace separator, error envelope handling."""
+    client = RestCatalogClient(options["uri"])
+    client.configure(options.get("project", "p"), options.get("warehouse", "wh"))
+    return client, options["namespace"].split("."), options["table"]
+
+
+def _load(options: dict) -> dict:
+    client, namespace, table = _client(options)
+    return client.load_table(namespace, table)["metadata"]
+
+
+def _resolve(options: dict) -> tuple[dict, dict | None, dict]:
+    """(metadata, snapshot, schema) the ``snapshot_id`` / ``ref`` options
+    select — time travel binds the snapshot's schema."""
+    metadata = _load(options)
+    sid = options.get("snapshot_id")
+    snap, schema = snapshots.resolve_read(
+        metadata, None if sid is None else int(sid), options.get("ref")
+    )
+    return metadata, snap, schema
 
 
 class _FilePartition(InputPartition):
@@ -81,125 +112,34 @@ class _FilePartition(InputPartition):
         self.fields = fields  # [{"id", "name", "type"}...]
 
 
-def _load_table_state(
-    options: dict,
-) -> tuple[list[dict], list[str], list[dict], dict[int, dict]]:
-    """Driver-side metadata resolution: (schema fields, data file paths).
-    Goes through the same RestCatalogClient every other consumer uses —
-    config round-trip for the prefix, 0x1F namespace separator, error
-    envelope handling."""
-    from .client import RestCatalogClient
-
-    client = RestCatalogClient(options["uri"])
-    client.configure(options.get("project", "p"), options.get("warehouse", "wh"))
-    meta = client.load_table(
-        options["namespace"].split("."), options["table"]
-    )["metadata"]
-    ref = options.get("ref")
-    snapshot_id = options.get("snapshot_id")
-    snap = None
-    if snapshot_id is not None:
-        snap = next(
-            s for s in meta["snapshots"] if s["snapshot-id"] == int(snapshot_id)
-        )
-    elif ref is not None:
-        r = meta["refs"].get(ref)
-        if r is None:
-            raise ValueError(f"unknown ref {ref!r}")
-        snap = next(
-            s for s in meta["snapshots"] if s["snapshot-id"] == r["snapshot-id"]
-        )
-    elif meta.get("current-snapshot-id") is not None:
-        snap = next(
-            (
-                s
-                for s in meta["snapshots"]
-                if s["snapshot-id"] == meta["current-snapshot-id"]
-            ),
-            None,
-        )
-    schema_id = meta["current-schema-id"]
-    if snap is not None and snapshot_id is not None and snap.get("schema-id") is not None:
-        schema_id = snap["schema-id"]  # time travel binds the snapshot schema
-    fields = next(s for s in meta["schemas"] if s["schema-id"] == schema_id)["fields"]
-    files: list[str] = []
-    if snap is not None:
-        manifest = snap["manifest-list"]
-        path = manifest[len("file://"):] if manifest.startswith("file://") else manifest
-        with open(path) as fh:
-            files = json.load(fh)["files"]
-    # field definitions across every schema version + partition specs,
-    # for path-encoded partition pruning (see pushFilters)
-    fields_by_id: dict[int, dict] = {}
-    for s in sorted(meta["schemas"], key=lambda s: s["schema-id"]):
-        for f in s["fields"]:
-            fields_by_id[f["id"]] = f
-    return fields, files, meta.get("partition-specs", []), fields_by_id
-
-
 class IcebergRestReader(DataSourceReader):
     def __init__(self, options: dict):
-        self._fields, self._files, self._specs, self._fields_by_id = (
-            _load_table_state(options)
-        )
-        self._eq: dict[str, object] = {}
+        self._metadata, snap, schema = _resolve(options)
+        self._fields = schema["fields"]
+        self._files = [] if snap is None else snapshots.read_manifest(snap)
 
     def pushFilters(self, filters):
         """File-level partition pruning — Iceberg's manifest pruning
-        surfaced through the Spark 4 pushdown hook: equality predicates
-        on columns that feed any partition-spec field drop non-matching
-        files (path-encoded ``p<field-id>=<transformed>`` tuples, same
-        rule as SparkCatalogTable.read_where, robust to spec evolution:
-        files missing the segment are conservatively kept). Pruning is
-        file-granular, not row-exact, so EVERY filter is returned for
-        Spark to re-apply post-scan — results stay exact, the scan just
-        touches fewer files."""
+        surfaced through the Spark 4 pushdown hook: single-column
+        equality predicates go to snapshots.prune, the rule
+        SparkCatalogTable.read_where uses. Pruning is file-granular, not
+        row-exact, so EVERY filter is returned for Spark to re-apply
+        post-scan — results stay exact, the scan just touches fewer
+        files."""
         from pyspark.sql.datasource import EqualTo
 
-        partition_sources = {
-            self._fields_by_id[pf["source-id"]]["name"]
-            for spec in self._specs
-            for pf in spec.get("fields", [])
-            if pf["source-id"] in self._fields_by_id
+        eq = {
+            f.attribute[0]: f.value
+            for f in filters
+            if isinstance(f, EqualTo) and len(f.attribute) == 1
         }
-        for f in filters:
-            if (
-                isinstance(f, EqualTo)
-                and len(f.attribute) == 1
-                and f.attribute[0] in partition_sources
-            ):
-                self._eq[f.attribute[0]] = f.value
+        self._files = snapshots.prune(self._metadata, self._files, eq)
         return filters  # file pruning only — Spark still filters rows
-
-    def _pruned_files(self) -> list[str]:
-        if not self._eq:
-            return self._files
-        from .spark_table import SparkCatalogTable
-
-        expect: dict[int, str] = {}
-        for spec in self._specs:
-            for pf in spec.get("fields", []):
-                src = self._fields_by_id.get(pf["source-id"])
-                if src is None or src["name"] not in self._eq:
-                    continue
-                expect[pf["field-id"]] = SparkCatalogTable._transform_literal(
-                    pf["transform"], self._eq[src["name"]], src["type"]
-                )
-        return [
-            f
-            for f in self._files
-            if all(
-                got is None or got == want
-                for fid, want in expect.items()
-                for got in [SparkCatalogTable._file_partition_values(f).get(fid)]
-            )
-        ]
 
     def partitions(self) -> list[InputPartition]:
         # one partition per (pruned) data file — the unit the manifests
         # track and the unit Spark schedules; empty reads as one no-op
-        files = self._pruned_files()
-        return [_FilePartition(p, self._fields) for p in files] or [
+        return [_FilePartition(p, self._fields) for p in self._files] or [
             _FilePartition("", self._fields)
         ]
 
@@ -208,13 +148,8 @@ class IcebergRestReader(DataSourceReader):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        def target_type(ice: str) -> pa.DataType:
-            if ice == "timestamp":
-                return pa.timestamp("us")
-            return pa.type_for_alias(_ICEBERG_TO_ARROW[ice])
-
         target = pa.schema(
-            [pa.field(f["name"], target_type(f["type"])) for f in partition.fields]
+            [pa.field(f["name"], _arrow_type(f["type"])) for f in partition.fields]
         )
         if not partition.path or not os.path.exists(partition.path):
             return iter(())
@@ -227,12 +162,12 @@ class IcebergRestReader(DataSourceReader):
                 fid = f"f{f['id']}"
                 if fid in table.column_names:
                     arrays.append(
-                        table.column(fid).cast(target_type(f["type"])).combine_chunks()
+                        table.column(fid).cast(_arrow_type(f["type"])).combine_chunks()
                     )
                 else:
                     # schema evolution: field added after this file was
                     # written — all-null backfill, never wrong values
-                    arrays.append(pa.nulls(n, target_type(f["type"])))
+                    arrays.append(pa.nulls(n, _arrow_type(f["type"])))
             yield pa.RecordBatch.from_arrays(
                 [a.chunk(0) if isinstance(a, pa.ChunkedArray) else a for a in arrays],
                 schema=target,
@@ -249,7 +184,7 @@ class IcebergRestDataSource(DataSource):
         return "iceberg_rest"
 
     def schema(self) -> T.StructType:
-        fields = _load_table_state(self.options)[0]
+        fields = _resolve(self.options)[2]["fields"]
         return T.StructType(
             [
                 T.StructField(
@@ -286,50 +221,30 @@ class IcebergRestWriter(DataSourceArrowWriter):
        return only the file PATH as their commit message — data never
        moves to the driver.
     2. The *driver's* commit() makes ONE CAS-guarded REST commit:
-       manifest of (head files + new files) for append, or new files
-       only for overwrite, then add-snapshot + set-snapshot-ref. A
-       concurrent committer's CAS failure surfaces as the standard 409
-       and Spark retries/aborts the job — exactly the reference's
-       optimistic-concurrency contract (rest/table.rs:153-189).
+       snapshots.commit_snapshot on ``main``, where append keeps the
+       head's files and overwrite replaces them. A concurrent committer's CAS
+       failure surfaces as the standard 409 and Spark aborts the job —
+       the reference's optimistic-concurrency contract.
     3. abort() deletes the orphaned files (and remove_orphan_files
        would reap any leak after a crash, same as Iceberg).
     """
 
     def __init__(self, options: dict, overwrite: bool):
-        from .client import RestCatalogClient
-
         self._options = dict(options)
         self._overwrite = overwrite
-        client = RestCatalogClient(options["uri"])
-        client.configure(options.get("project", "p"), options.get("warehouse", "wh"))
-        meta = client.load_table(options["namespace"].split("."), options["table"])[
-            "metadata"
-        ]
-        schema = next(
-            s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
+        metadata = _load(options)
+        self._fields = snapshots.schema(metadata)["fields"]
+        self._data_dir = os.path.join(
+            local_path(metadata["location"]), "data", uuid.uuid4().hex
         )
-        self._fields = schema["fields"]
-        loc = meta["location"]
-        loc = loc[len("file://"):] if loc.startswith("file://") else loc
-        self._location = loc
-        import uuid as _uuid
-
-        self._data_dir = os.path.join(loc, "data", _uuid.uuid4().hex)
 
     # executor-side
     def write(self, iterator) -> WriterCommitMessage:
-        import uuid as _uuid
-
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        def target_type(ice: str) -> "pa.DataType":
-            if ice == "timestamp":
-                return pa.timestamp("us")
-            return pa.type_for_alias(_ICEBERG_TO_ARROW[ice])
-
         fid_schema = pa.schema(
-            [pa.field(f"f{f['id']}", target_type(f["type"])) for f in self._fields]
+            [pa.field(f"f{f['id']}", _arrow_type(f["type"])) for f in self._fields]
         )
         batches = []
         for batch in iterator:
@@ -343,77 +258,28 @@ class IcebergRestWriter(DataSourceArrowWriter):
                         f"column {f['name']!r} missing from input DataFrame; "
                         f"table requires {[x['name'] for x in self._fields]}"
                     )
-                arrays.append(batch.column(idx).cast(target_type(f["type"])))
+                arrays.append(batch.column(idx).cast(_arrow_type(f["type"])))
             batches.append(
                 pa.RecordBatch.from_arrays(arrays, schema=fid_schema)
             )
         if not batches or sum(b.num_rows for b in batches) == 0:
             return _FilesCommitMessage([])  # empty partition → no file
         os.makedirs(self._data_dir, exist_ok=True)
-        path = os.path.join(self._data_dir, f"part-{_uuid.uuid4().hex}.parquet")
+        path = os.path.join(self._data_dir, f"part-{uuid.uuid4().hex}.parquet")
         pq.write_table(pa.Table.from_batches(batches, schema=fid_schema), path)
         return _FilesCommitMessage([path])
 
     # driver-side
     def commit(self, messages) -> None:
-        import time as _time
-        import uuid as _uuid
-
-        from .client import RestCatalogClient
-
-        new_files = [p for m in messages for p in m.files]
-        client = RestCatalogClient(self._options["uri"])
-        client.configure(
-            self._options.get("project", "p"), self._options.get("warehouse", "wh")
-        )
-        ns = self._options["namespace"].split(".")
-        tbl = self._options["table"]
-        meta = client.load_table(ns, tbl)["metadata"]
-        head_ref = meta["refs"].get("main")
-        parent_id = None if head_ref is None else head_ref["snapshot-id"]
-        existing: list[str] = []
-        if not self._overwrite and parent_id is not None:
-            head = next(s for s in meta["snapshots"] if s["snapshot-id"] == parent_id)
-            manifest = head["manifest-list"]
-            mp = manifest[len("file://"):] if manifest.startswith("file://") else manifest
-            with open(mp) as fh:
-                existing = json.load(fh)["files"]
-        snapshot_id = _uuid.uuid4().int % (1 << 62)
-        manifest_path = os.path.join(
-            self._location, "metadata", f"manifest-{snapshot_id}.json"
-        )
-        os.makedirs(os.path.dirname(manifest_path), exist_ok=True)
-        files = existing + new_files
-        with open(manifest_path, "w") as fh:
-            json.dump({"files": files}, fh)
-        operation = "overwrite" if self._overwrite else "append"
-        snapshot = {
-            "snapshot-id": snapshot_id,
-            "parent-snapshot-id": parent_id,
-            "timestamp-ms": int(_time.time() * 1000),
-            "operation": operation,
-            "manifest-list": manifest_path,
-            "summary": {
-                "operation": operation,
-                "added-files": str(len(new_files)),
-                "writer": "python-datasource",
-            },
-        }
-        client.commit_table(
-            ns,
-            tbl,
-            # CAS on the branch head: a concurrent commit ⇒ 409, Spark
-            # surfaces the failure — optimistic concurrency, not lost data
-            [{"type": "assert-ref-snapshot-id", "ref": "main", "snapshot-id": parent_id}],
-            [
-                {"action": "add-snapshot", "snapshot": snapshot},
-                {
-                    "action": "set-snapshot-ref",
-                    "ref-name": "main",
-                    "snapshot-id": snapshot_id,
-                    "type": "branch",
-                },
-            ],
+        client, namespace, table = _client(self._options)
+        snapshots.commit_snapshot(
+            client,
+            namespace,
+            table,
+            client.load_table(namespace, table)["metadata"],
+            [p for m in messages for p in m.files],
+            "overwrite" if self._overwrite else "append",
+            summary_extra={"writer": "python-datasource"},
         )
 
     def abort(self, messages) -> None:
@@ -439,12 +305,11 @@ class IcebergRestStreamReader(DataSourceStreamReader):
       the query tails new commits — file-source semantics).
     - partitions(start, end) is metadata-only on the driver: walk the
       parent chain end→start and diff each append snapshot's file list
-      against its parent (manifest reads). One InputPartition per added
-      file, read executor-side exactly like the batch path.
-    - An overwrite/replace snapshot inside the range raises — its
-      row-level delta is not recoverable from an append-only file diff
-      (same contract as SparkCatalogTable.read_incremental and
-      Iceberg's own streaming source).
+      against its parent (snapshots.appended_files). One InputPartition per added
+      file, read executor-side exactly like the batch path. It rejects what SparkCatalogTable.read_incremental
+      rejects, with the same message: a non-append snapshot in the
+      range, a start offset that is no longer an ancestor (rollback),
+      an expired snapshot (Iceberg's own streaming source does too).
     - Offset persistence in the checkpoint gives exactly-once batches
       across restarts; commit() is a no-op because snapshots are
       immutable.
@@ -452,79 +317,23 @@ class IcebergRestStreamReader(DataSourceStreamReader):
 
     def __init__(self, options: dict):
         self._options = dict(options)
-        self._fields, _, _, _ = _load_table_state(options)
-
-    def _meta(self) -> dict:
-        from .client import RestCatalogClient
-
-        client = RestCatalogClient(self._options["uri"])
-        client.configure(
-            self._options.get("project", "p"), self._options.get("warehouse", "wh")
-        )
-        return client.load_table(
-            self._options["namespace"].split("."), self._options["table"]
-        )["metadata"]
-
-    @staticmethod
-    def _files_of(snap: dict) -> list[str]:
-        manifest = snap["manifest-list"]
-        path = manifest[len("file://"):] if manifest.startswith("file://") else manifest
-        with open(path) as fh:
-            return json.load(fh)["files"]
+        self._fields = _resolve(options)[2]["fields"]
 
     def initialOffset(self) -> dict:
         return {"snapshot_id": -1}
 
     def latestOffset(self) -> dict:
-        meta = self._meta()
-        cur = meta.get("current-snapshot-id")
+        cur = _load(self._options).get("current-snapshot-id")
         return {"snapshot_id": -1 if cur is None else cur}
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
         start_id, end_id = start["snapshot_id"], end["snapshot_id"]
         if end_id == -1 or start_id == end_id:
             return []
-        meta = self._meta()
-        by_id = {s["snapshot-id"]: s for s in meta["snapshots"]}
-        added: list[str] = []
-        cur: int | None = end_id
-        while cur is not None and cur != start_id:
-            snap = by_id.get(cur)
-            if snap is None:
-                raise ValueError(
-                    f"snapshot {cur} expired from history before the stream read it"
-                )
-            parent = snap.get("parent-snapshot-id")
-            op = snap.get("operation", snap.get("summary", {}).get("operation"))
-            if op not in (None, "append"):
-                raise ValueError(
-                    f"snapshot {cur} is {op!r}; streaming reads require an "
-                    "append-only history (Iceberg streaming contract)"
-                )
-            if parent is not None and parent not in by_id:
-                raise ValueError(
-                    f"parent snapshot {parent} expired from history before "
-                    "the stream read it"
-                )
-            parent_files = set() if parent is None else set(
-                self._files_of(by_id[parent])
-            )
-            added.extend(
-                f for f in self._files_of(snap) if f not in parent_files
-            )
-            cur = parent
-        if start_id != -1 and cur is None:
-            # The walk hit the root without ever meeting start_id: the
-            # checkpointed offset is no longer an ancestor of end (e.g.
-            # rollback_to followed by new commits rewrote history).
-            # Falling through would silently re-emit the ENTIRE table as
-            # "added" — duplicate delivery. Fail loudly instead.
-            raise ValueError(
-                f"start offset snapshot {start_id} is not an ancestor of "
-                f"{end_id} — table history was rewritten (rollback?); "
-                "restart the stream from a fresh checkpoint"
-            )
-        return [_FilePartition(p, self._fields) for p in added]
+        files = snapshots.appended_files(
+            _load(self._options), None if start_id == -1 else start_id, end_id
+        )
+        return [_FilePartition(p, self._fields) for p in files]
 
     def read(self, partition: _FilePartition):
         return IcebergRestReader.read(self, partition)  # same Arrow path

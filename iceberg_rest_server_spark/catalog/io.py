@@ -17,11 +17,11 @@ import os
 
 def metadata_file_path(table_location: str, metadata_uuid: str) -> str:
     return os.path.join(
-        _local(table_location), "metadata", f"{metadata_uuid}.gz.metadata.json"
+        local_path(table_location), "metadata", f"{metadata_uuid}.gz.metadata.json"
     )
 
 
-def _local(path: str) -> str:
+def local_path(path: str) -> str:
     return path[len("file://"):] if path.startswith("file://") else path
 
 
@@ -34,7 +34,7 @@ def write_metadata_file(path: str, metadata: dict) -> str:
     deployment."""
     if path.startswith(("s3://", "s3a://")):
         return path
-    p = _local(path)
+    p = local_path(path)
     os.makedirs(os.path.dirname(p), exist_ok=True)
     with gzip.open(p, "wt", encoding="utf-8") as fh:
         json.dump(metadata, fh)
@@ -42,5 +42,5 @@ def write_metadata_file(path: str, metadata: dict) -> str:
 
 
 def read_metadata_file(path: str) -> dict:
-    with gzip.open(_local(path), "rt", encoding="utf-8") as fh:
+    with gzip.open(local_path(path), "rt", encoding="utf-8") as fh:
         return json.load(fh)

@@ -6,29 +6,30 @@ together (conftest.py:204-226): Spark executors write parquet data
 files; the *commit* — AddSnapshot + SetSnapshotRef(main) with an
 optimistic CAS requirement — goes through the catalog server, exactly
 like the reference's DML flow (SURVEY.md §3.3). Reads resolve a
-snapshot (current, tag, branch, or explicit id), load its manifest
-(a JSON file-list next to the data, so the metadata document stays
-O(snapshots), not O(files)), and hand Spark the parquet paths — scan
-planning, pushdown and pruning stay fully inside Catalyst.
+snapshot (current, tag, branch, or explicit id), load its manifest and
+hand Spark the parquet paths — scan planning, pushdown and pruning stay
+fully inside Catalyst.
+
+Every snapshot decision (resolution and schema binding, manifests, the
+CAS commit, the incremental diff, partition pruning) is made in
+snapshots.py, which the ``iceberg_rest`` Data Source shares; this
+module only moves the data, through the JVM parquet reader and writer.
 """
 
 from __future__ import annotations
 
-import datetime
-import json
 import os
 import time
-import urllib.parse
 import uuid
 from typing import Any
-
-import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import snapshots
 from .client import CatalogHTTPError, RestCatalogClient
+from .io import local_path
 from .metadata import MAIN_BRANCH
 
 _SPARK_TO_ICEBERG = {
@@ -107,36 +108,10 @@ class SparkCatalogTable:
         return self.client.load_table(self.namespace, self.name)["metadata"]
 
     @staticmethod
-    def _local(path: str) -> str:
-        return path[len("file://"):] if path.startswith("file://") else path
+    def _snapshot_files(metadata: dict, snapshot: dict) -> list[str]:
+        return snapshots.read_manifest(snapshot)
 
-    def _manifest_path(self, metadata: dict, snapshot_id: int) -> str:
-        return os.path.join(
-            self._local(metadata["location"]), "metadata", f"manifest-{snapshot_id}.json"
-        )
-
-    def _snapshot_files(self, metadata: dict, snapshot: dict) -> list[str]:
-        with open(snapshot["manifest-list"]) as fh:
-            return json.load(fh)["files"]
-
-    def _resolve_snapshot(
-        self, metadata: dict, snapshot_id: int | None = None, ref: str | None = None
-    ) -> dict | None:
-        if snapshot_id is None and ref is not None:
-            r = metadata["refs"].get(ref)
-            if r is None:
-                raise KeyError(f"ref {ref!r} not found")
-            snapshot_id = r["snapshot-id"]
-        if snapshot_id is None:
-            snapshot_id = metadata.get("current-snapshot-id")
-        if snapshot_id is None:
-            return None
-        snap = next(
-            (s for s in metadata["snapshots"] if s["snapshot-id"] == snapshot_id), None
-        )
-        if snap is None:
-            raise KeyError(f"snapshot {snapshot_id} not found")
-        return snap
+    _resolve_snapshot = staticmethod(snapshots.resolve_snapshot)
 
     # -------------------------------------------------------------- write
 
@@ -155,10 +130,7 @@ class SparkCatalogTable:
         )
         if not order or not order.get("fields"):
             return df
-        schema = next(
-            s for s in metadata["schemas"] if s["schema-id"] == metadata["current-schema-id"]
-        )
-        by_id = {f["id"]: f["name"] for f in schema["fields"]}
+        by_id = {f["id"]: f["name"] for f in snapshots.schema(metadata)["fields"]}
         cols = []
         for f in order["fields"]:
             name = by_id.get(f["source-id"])
@@ -175,28 +147,7 @@ class SparkCatalogTable:
         writing. Without this, at scale every write task holds rows of
         every partition and a P-partition table gets tasks×P small files
         per commit; with it each partition's rows land in ~one task."""
-        spec = next(
-            (
-                s
-                for s in metadata.get("partition-specs", [])
-                if s["spec-id"] == metadata.get("default-spec-id")
-            ),
-            None,
-        )
-        if not spec or not spec.get("fields"):
-            return df
-        schema = next(
-            s for s in metadata["schemas"] if s["schema-id"] == metadata["current-schema-id"]
-        )
-        by_id = {f["id"]: f for f in schema["fields"]}
-        exprs = []
-        for pf in spec["fields"]:
-            src = by_id.get(pf["source-id"])
-            if src is None or src["name"] not in df.columns:
-                continue
-            exprs.append(
-                self._partition_expr(pf["transform"], F.col(src["name"]), src["type"])
-            )
+        exprs = [c for _, c in self._partition_columns(df, metadata)]
         return df.repartition(*exprs) if exprs else df
 
     def _write_files(self, df: DataFrame, metadata: dict) -> list[str]:
@@ -207,13 +158,10 @@ class SparkCatalogTable:
         etc., test_spark.py:169-178) and gives drop/re-add-column the
         correct semantics: a re-added name gets a fresh id, so old data
         is not resurrected."""
-        data_dir = os.path.join(self._local(metadata["location"]), "data", uuid.uuid4().hex)
+        data_dir = os.path.join(local_path(metadata["location"]), "data", uuid.uuid4().hex)
         df = self._apply_write_distribution(df, metadata)
         df = self._apply_write_order(df, metadata)
-        schema = next(
-            s for s in metadata["schemas"] if s["schema-id"] == metadata["current-schema-id"]
-        )
-        by_name = {f["name"]: f["id"] for f in schema["fields"]}
+        by_name = {f["name"]: f["id"] for f in snapshots.schema(metadata)["fields"]}
         renamed = [
             df[name].alias(f"f{by_name[name]}") if name in by_name else df[name]
             for name in df.columns
@@ -226,7 +174,7 @@ class SparkCatalogTable:
         # The p-columns are computed extras, so partitionBy drops only
         # them; every f<id> data column stays in the file.
         pcols = self._partition_columns(df, metadata)
-        safe = df.select(*renamed, *[c for _, c in pcols])
+        safe = df.select(*renamed, *[c.alias(n) for n, c in pcols])
         if pcols:
             safe.write.mode("overwrite").partitionBy([n for n, _ in pcols]).parquet(data_dir)
         else:
@@ -239,8 +187,8 @@ class SparkCatalogTable:
         )
 
     def _partition_columns(self, df: DataFrame, metadata: dict) -> list[tuple[str, Any]]:
-        """(name, Column) pairs `p<partition-field-id>` holding the
-        transformed partition value of each row under the default spec."""
+        """(`p<partition-field-id>`, Column) pairs: the transformed
+        partition value of each row under the default spec."""
         spec = next(
             (
                 s
@@ -251,59 +199,30 @@ class SparkCatalogTable:
         )
         if not spec or not spec.get("fields"):
             return []
-        schema = next(
-            s for s in metadata["schemas"] if s["schema-id"] == metadata["current-schema-id"]
-        )
-        by_id = {f["id"]: f for f in schema["fields"]}
+        by_id = {f["id"]: f for f in snapshots.schema(metadata)["fields"]}
         out = []
         for pf in spec["fields"]:
             src = by_id.get(pf["source-id"])
             if src is None or src["name"] not in df.columns:
                 continue
             expr = self._partition_expr(pf["transform"], F.col(src["name"]), src["type"])
-            out.append((f"p{pf['field-id']}", expr.alias(f"p{pf['field-id']}")))
+            out.append((f"p{pf['field-id']}", expr))
         return out
 
-    def _commit_snapshot(
+    def _commit(
         self,
-        metadata: dict,
-        files: list[str],
+        new_files: list[str],
         operation: str,
-        branch: str = MAIN_BRANCH,
-        summary_extra: dict[str, str] | None = None,
+        branch: str,
+        summary_extra: dict[str, str] | None,
     ) -> int:
-        snapshot_id = uuid.uuid4().int % (1 << 62)
-        manifest = self._manifest_path(metadata, snapshot_id)
-        os.makedirs(os.path.dirname(manifest), exist_ok=True)
-        with open(manifest, "w") as fh:
-            json.dump({"files": files}, fh)
-        parent_ref = metadata["refs"].get(branch)
-        parent_id = None if parent_ref is None else parent_ref["snapshot-id"]
-        requirements = [
-            # optimistic CAS on the branch head (rest/table.rs:153-189)
-            {"type": "assert-ref-snapshot-id", "ref": branch, "snapshot-id": parent_id}
-        ]
-        summary = {"operation": operation, "added-files": str(len(files))}
-        summary.update(summary_extra or {})
-        snapshot = {
-            "snapshot-id": snapshot_id,
-            "parent-snapshot-id": parent_id,
-            "timestamp-ms": int(time.time() * 1000),
-            "operation": operation,
-            "manifest-list": manifest,
-            "summary": summary,
-        }
-        self.client.commit_table(
-            self.namespace,
-            self.name,
-            requirements,
-            [
-                {"action": "add-snapshot", "snapshot": snapshot},
-                {"action": "set-snapshot-ref", "ref-name": branch, "snapshot-id": snapshot_id,
-                 "type": "branch"},
-            ],
+        """One CAS-retried snapshot commit of already-written files."""
+        return self._retry_cas(
+            lambda: snapshots.commit_snapshot(
+                self.client, self.namespace, self.name, self._load(), new_files,
+                operation, branch, summary_extra,
+            )
         )
-        return snapshot_id
 
     def append(
         self,
@@ -315,18 +234,8 @@ class SparkCatalogTable:
         files (AppendData → AddSnapshot, SURVEY.md §2E). `summary_extra`
         lands in the snapshot summary (streaming sinks use it to record
         epoch ids for exactly-once replay)."""
-        metadata = self._load()
-        new_files = self._write_files(df, metadata)
-
-        def attempt() -> int:
-            m = self._load()
-            head = self._resolve_snapshot(m, ref=branch if branch in m["refs"] else None)
-            existing = [] if head is None else self._snapshot_files(m, head)
-            return self._commit_snapshot(
-                m, existing + new_files, "append", branch, summary_extra
-            )
-
-        return self._retry_cas(attempt)
+        new_files = self._write_files(df, self._load())
+        return self._commit(new_files, "append", branch, summary_extra)
 
     def overwrite(
         self,
@@ -338,13 +247,8 @@ class SparkCatalogTable:
         new files (rewrite_data_files compaction uses this too).
         `summary_extra` lands in the snapshot summary — the streaming
         upsert sink records its (query-id, epoch-id) there."""
-        metadata = self._load()
-        new_files = self._write_files(df, metadata)
-        return self._retry_cas(
-            lambda: self._commit_snapshot(
-                self._load(), new_files, "overwrite", branch, summary_extra
-            )
-        )
+        new_files = self._write_files(df, self._load())
+        return self._commit(new_files, "overwrite", branch, summary_extra)
 
     def create_or_replace(self, df: DataFrame) -> int:
         """CREATE OR REPLACE TABLE ... AS semantics (writeTo(...)
@@ -458,28 +362,11 @@ class SparkCatalogTable:
     def read(
         self, snapshot_id: int | None = None, ref: str | None = None
     ) -> DataFrame:
-        metadata = self._load()
-        snap = self._resolve_snapshot(metadata, snapshot_id, ref)
-        # Time-travel reads (explicit snapshot id, or a tag) resolve the
-        # schema from the *snapshot's* schema-id (Iceberg spec; the
-        # reference tracks schema-id per snapshot) — else after ADD/DROP
-        # COLUMN a `VERSION AS OF` read would apply the current schema to
-        # old files. Branch reads keep the table's current schema, like
-        # Iceberg: branches are write targets, and the DML paths
-        # (merge/delete/compact) read the branch head before rewriting.
-        schema_id = metadata["current-schema-id"]
-        ref_type = (metadata["refs"].get(ref) or {}).get("type") if ref else None
-        time_travel = snapshot_id is not None or ref_type == "tag"
-        if time_travel and snap is not None and snap.get("schema-id") is not None:
-            schema_id = snap["schema-id"]
-        ice_schema = next(s for s in metadata["schemas"] if s["schema-id"] == schema_id)
-        schema = spark_schema_from_iceberg(ice_schema)
-        if snap is None:
-            return self.spark.createDataFrame([], schema)
-        files = self._snapshot_files(metadata, snap)
-        if not files:
-            return self.spark.createDataFrame([], schema)
-        return self._read_files(ice_schema["fields"], files)
+        """The snapshot's rows, bound to the schema snapshots.resolve_read
+        picks (time travel reads the snapshot's schema)."""
+        snap, schema = snapshots.resolve_read(self._load(), snapshot_id, ref)
+        files = [] if snap is None else snapshots.read_manifest(snap)
+        return self._read_files(schema["fields"], files)
 
     def _read_files(
         self, ice_fields: list[dict], files: list[str], with_file_col: str | None = None
@@ -487,7 +374,10 @@ class SparkCatalogTable:
         """Read data files by field id: files carry f<id> column names
         (see _write_files); read with the id-keyed schema, then restore
         display names — ids absent from a file backfill as null (schema
-        evolution)."""
+        evolution). No files reads as an empty frame."""
+        if not files:
+            schema = spark_schema_from_iceberg({"fields": ice_fields})
+            return self.spark.createDataFrame([], schema)
         id_schema = T.StructType(
             [
                 T.StructField(
@@ -502,104 +392,20 @@ class SparkCatalogTable:
             cols.append(F.input_file_name().alias(with_file_col))
         return raw.select(*cols)
 
-    @staticmethod
-    def _file_partition_values(path: str) -> dict[int, str]:
-        """Parse the hive-layout ``p<partition-field-id>=<value>`` segments
-        out of a data file path (written by _write_files)."""
-        out: dict[int, str] = {}
-        for seg in path.split(os.sep):
-            key, eq, val = seg.partition("=")
-            if eq and key.startswith("p") and key[1:].isdigit():
-                out[int(key[1:])] = urllib.parse.unquote(val)
-        return out
-
-    @staticmethod
-    def _transform_literal(transform: str, value: Any, ice_type: str) -> str:
-        """Driver-side evaluation of an Iceberg partition transform on one
-        literal, stringified the way Spark stringifies hive partition-dir
-        values — the comparison key for file pruning. Mirrors the Column
-        transforms in operators/transforms.py exactly."""
-        from ..operators.transforms import _murmur3_32_8bytes_le, _murmur3_32_bytes
-
-        if transform == "identity":
-            return str(value)
-        if transform.startswith("bucket["):
-            n = int(transform[len("bucket[") : -1])
-            if ice_type == "string":
-                h = _murmur3_32_bytes(str(value).encode())
-            else:
-                h = int(_murmur3_32_8bytes_le(np.array([int(value)], dtype=np.int64))[0])
-            return str((h & 0x7FFFFFFF) % n)
-        if transform.startswith("truncate["):
-            w = int(transform[len("truncate[") : -1])
-            if ice_type == "string":
-                return str(value)[:w]
-            v = int(value)
-            return str(v - (v % w))
-        ts = value
-        if isinstance(ts, str):
-            ts = datetime.datetime.fromisoformat(ts)
-        if transform in ("year", "years"):
-            return str(ts.year - 1970)
-        if transform in ("month", "months"):
-            return str((ts.year - 1970) * 12 + ts.month - 1)
-        if transform in ("day", "days"):
-            d = ts.date() if isinstance(ts, datetime.datetime) else ts
-            return str((d - datetime.date(1970, 1, 1)).days)
-        if transform in ("hour", "hours"):
-            epoch = ts.replace(tzinfo=datetime.timezone.utc).timestamp()
-            return str(int(epoch // 3600))
-        raise ValueError(f"unknown transform {transform!r}")
-
     def read_where(
         self, eq: dict[str, Any], snapshot_id: int | None = None, ref: str | None = None
     ) -> DataFrame:
         """Partition-pruned read: equality predicates prune data FILES by
-        the path-encoded partition tuple before any scan is planned —
-        Iceberg's manifest-level pruning, the difference between touching
-        a 100 TB table and touching one partition of it. Works across
-        partition-spec evolution: a predicate prunes through EVERY spec
-        field (any spec) whose source column it names; files written
-        before partitioning (no ``p<id>=`` segment for that field) are
-        conservatively kept. The residual equality filter is still
-        applied (and pushed to the parquet scan), so results are exact
-        even when a file can't be pruned."""
+        the path-encoded partition tuple before any scan is planned
+        (snapshots.prune) — Iceberg's manifest-level pruning, the
+        difference between touching a 100 TB table and touching one
+        partition of it. The residual equality filter is still applied
+        (and pushed to the parquet scan), so results are exact even when
+        a file can't be pruned."""
         m = self._load()
-        snap = self._resolve_snapshot(m, snapshot_id, ref)
-        schema_id = m["current-schema-id"]
-        ice_schema = next(s for s in m["schemas"] if s["schema-id"] == schema_id)
-        if snap is None:
-            df = self.spark.createDataFrame([], spark_schema_from_iceberg(ice_schema))
-        else:
-            files = self._snapshot_files(m, snap)
-            fields_by_id: dict[int, dict] = {}
-            for s in sorted(m["schemas"], key=lambda s: s["schema-id"]):
-                for f in s["fields"]:
-                    fields_by_id[f["id"]] = f
-            # (partition-field-id, expected path value) per predicate, for
-            # every spec field any predicate column feeds
-            expect: dict[int, str] = {}
-            for spec in m.get("partition-specs", []):
-                for pf in spec.get("fields", []):
-                    src = fields_by_id.get(pf["source-id"])
-                    if src is None or src["name"] not in eq:
-                        continue
-                    expect[pf["field-id"]] = self._transform_literal(
-                        pf["transform"], eq[src["name"]], src["type"]
-                    )
-            kept = [
-                f
-                for f in files
-                if all(
-                    got is None or got == want
-                    for fid, want in expect.items()
-                    for got in [self._file_partition_values(f).get(fid)]
-                )
-            ]
-            if not kept:
-                df = self.spark.createDataFrame([], spark_schema_from_iceberg(ice_schema))
-            else:
-                df = self._read_files(ice_schema["fields"], kept)
+        snap, schema = snapshots.resolve_read(m, snapshot_id, ref)
+        files = [] if snap is None else snapshots.prune(m, snapshots.read_manifest(snap), eq)
+        df = self._read_files(schema["fields"], files)
         for col, val in eq.items():
             if col in df.columns:
                 df = df.filter(F.col(col) == F.lit(val))
@@ -610,45 +416,17 @@ class SparkCatalogTable:
     ) -> DataFrame:
         """Incremental append scan (Iceberg's incremental read): rows
         ADDED strictly after `from_snapshot_id` up to and including
-        `to_snapshot_id` (default: current head). Walks the parent chain
-        and diffs each append snapshot's file set against its parent —
-        metadata-scale work; the data scan touches only the added files,
-        which is the point: a 100 TB table's nightly delta reads like a
-        small table. Matches Iceberg semantics: overwrite/replace
-        snapshots in the range raise (their row-level delta is not
-        recoverable from an append-only file diff)."""
+        `to_snapshot_id` (default: current head), under the current
+        schema. The data scan touches only the added files, which is the
+        point: a 100 TB table's nightly delta reads like a small table.
+        Raises on the cases snapshots.appended_files rejects (a
+        non-append snapshot in the range, rewritten or expired history)."""
         m = self._load()
-        by_id = {s["snapshot-id"]: s for s in m["snapshots"]}
         head_id = to_snapshot_id if to_snapshot_id is not None else m["current-snapshot-id"]
         if head_id is None:
             raise ValueError("table has no snapshots")
-        chain: list[dict] = []
-        cur = by_id.get(head_id)
-        while cur is not None and cur["snapshot-id"] != from_snapshot_id:
-            chain.append(cur)
-            cur = by_id.get(cur.get("parent-snapshot-id"))
-        if cur is None:
-            raise ValueError(
-                f"snapshot {from_snapshot_id} is not an ancestor of {head_id}"
-            )
-        added: list[str] = []
-        for snap in reversed(chain):  # oldest → newest
-            op = snap.get("operation") or snap.get("summary", {}).get("operation")
-            if op != "append":
-                raise ValueError(
-                    f"incremental append scan hit a {op!r} snapshot "
-                    f"({snap['snapshot-id']}); only appends are supported"
-                )
-            parent = by_id.get(snap.get("parent-snapshot-id"))
-            parent_files = set() if parent is None else set(self._snapshot_files(m, parent))
-            added.extend(
-                f for f in self._snapshot_files(m, snap) if f not in parent_files
-            )
-        schema_id = m["current-schema-id"]
-        ice_schema = next(s for s in m["schemas"] if s["schema-id"] == schema_id)
-        if not added:
-            return self.spark.createDataFrame([], spark_schema_from_iceberg(ice_schema))
-        return self._read_files(ice_schema["fields"], added)
+        added = snapshots.appended_files(m, from_snapshot_id, head_id)
+        return self._read_files(snapshots.schema(m)["fields"], added)
 
     # ----------------------------------------------------------- refs/ddl
 
@@ -660,7 +438,7 @@ class SparkCatalogTable:
         expire_snapshots, which drops aged-out refs before computing the
         protected snapshot set."""
         metadata = self._load()
-        snap = self._resolve_snapshot(metadata, snapshot_id)
+        snap = snapshots.resolve_snapshot(metadata, snapshot_id)
         update = {
             "action": "set-snapshot-ref",
             "ref-name": tag,
@@ -689,13 +467,7 @@ class SparkCatalogTable:
         head = metadata["refs"].get(branch)
         if head is None:
             raise ValueError(f"branch {branch!r} has no snapshots")
-        by_id = {s["snapshot-id"]: s for s in metadata["snapshots"]}
-        cur: int | None = head["snapshot-id"]
-        ancestors = set()
-        while cur is not None:
-            ancestors.add(cur)
-            cur = by_id[cur].get("parent-snapshot-id")
-        if snapshot_id not in ancestors:
+        if snapshot_id not in snapshots.ancestor_ids(metadata, head["snapshot-id"]):
             raise ValueError(
                 f"snapshot {snapshot_id} is not an ancestor of {branch!r}"
             )
@@ -728,7 +500,7 @@ class SparkCatalogTable:
         max_snapshot_age_ms: int | None = None,
     ) -> None:
         metadata = self._load()
-        snap = self._resolve_snapshot(metadata, snapshot_id)
+        snap = snapshots.resolve_snapshot(metadata, snapshot_id)
         update = {
             "action": "set-snapshot-ref",
             "ref-name": branch,
@@ -753,9 +525,7 @@ class SparkCatalogTable:
         """ALTER TABLE ADD COLUMN parity (test_spark.py:228-233):
         AddSchema (current fields + new field, fresh id) + SetCurrentSchema."""
         m = self._load()
-        schema = next(
-            s for s in m["schemas"] if s["schema-id"] == m["current-schema-id"]
-        )
+        schema = snapshots.schema(m)
         new_field_id = m["last-column-id"] + 1
         new_schema = {
             "type": "struct",
@@ -775,9 +545,7 @@ class SparkCatalogTable:
     def drop_column(self, name: str) -> None:
         """ALTER TABLE DROP COLUMN parity: new schema without the field."""
         m = self._load()
-        schema = next(
-            s for s in m["schemas"] if s["schema-id"] == m["current-schema-id"]
-        )
+        schema = snapshots.schema(m)
         new_schema = {
             "type": "struct",
             "fields": [f for f in schema["fields"] if f["name"] != name],
@@ -796,9 +564,7 @@ class SparkCatalogTable:
         """ALTER TABLE ADD PARTITION FIELD parity (test_spark.py:244):
         AddSpec (current fields + new) + SetDefaultSpec; field ids ≥1000."""
         m = self._load()
-        schema = next(
-            s for s in m["schemas"] if s["schema-id"] == m["current-schema-id"]
-        )
+        schema = snapshots.schema(m)
         source = next(f for f in schema["fields"] if f["name"] == source_name)
         current_spec = next(
             s for s in m["partition-specs"] if s["spec-id"] == m["default-spec-id"]
@@ -846,9 +612,7 @@ class SparkCatalogTable:
         """ALTER TABLE ... WRITE ORDERED BY parity: fields is a list of
         (column_name, 'asc'|'desc'); AddSortOrder + SetDefaultSortOrder."""
         m = self._load()
-        schema = next(
-            s for s in m["schemas"] if s["schema-id"] == m["current-schema-id"]
-        )
+        schema = snapshots.schema(m)
         by_name = {f["name"]: f["id"] for f in schema["fields"]}
         order_fields = [
             {
@@ -878,10 +642,8 @@ class SparkCatalogTable:
         delete data files and manifests referenced *only* by the expired
         snapshots. Metadata swap happens first (CAS-guarded commit), file
         deletion after — a crash between the two leaks files but never
-        corrupts the table, the same ordering Iceberg uses. Our manifests
-        list each snapshot's full file set, so the orphan set is a plain
-        set difference against every retained snapshot's manifest —
-        metadata-scale work on the driver, no data scan."""
+        corrupts the table, the same ordering Iceberg uses
+        (snapshots.delete_unreferenced: metadata-scale, no data scan)."""
         m = self._load()
         snaps = sorted(m["snapshots"], key=lambda s: s.get("sequence-number", 0))
         # refs past their max-ref-age (RETAIN n DAYS) age out first —
@@ -923,17 +685,9 @@ class SparkCatalogTable:
             ],
         )
         expired_ids = {s["snapshot-id"] for s in expired}
-        retained_files: set[str] = set()
-        for s in snaps:
-            if s["snapshot-id"] not in expired_ids:
-                retained_files.update(self._snapshot_files(m, s))
-        deleted = 0
-        for s in expired:
-            for f in self._snapshot_files(m, s):
-                if f not in retained_files and os.path.exists(f):
-                    os.remove(f)
-                    deleted += 1
-            os.remove(s["manifest-list"])
+        deleted = snapshots.delete_unreferenced(
+            expired, [s for s in snaps if s["snapshot-id"] not in expired_ids]
+        )
         return {"expired": len(expired), "deleted_files": deleted}
 
     def remove_orphan_files(self, older_than_ms: int | None = None) -> dict[str, int]:
@@ -945,10 +699,8 @@ class SparkCatalogTable:
         snapshot commit — the same safety valve Iceberg's procedure has.
         Metadata-scale set difference; no data scan."""
         m = self._load()
-        referenced: set[str] = set()
-        for s in m["snapshots"]:
-            referenced.update(self._snapshot_files(m, s))
-        data_root = os.path.join(self._local(m["location"]), "data")
+        referenced = {f for s in m["snapshots"] for f in snapshots.read_manifest(s)}
+        data_root = os.path.join(local_path(m["location"]), "data")
         deleted = 0
         for root, _, files in os.walk(data_root):
             for fn in files:
@@ -1007,11 +759,7 @@ class SparkCatalogTable:
         Metadata-sized: built from the snapshot log, no file IO."""
         m = self._load()
         by_id = {s["snapshot-id"]: s for s in m["snapshots"]}
-        ancestors: set[int] = set()
-        cur = m.get("current-snapshot-id")
-        while cur is not None and cur != -1 and cur in by_id:
-            ancestors.add(cur)
-            cur = by_id[cur].get("parent-snapshot-id")
+        ancestors = set(snapshots.ancestor_ids(m, m.get("current-snapshot-id")))
         rows = [
             (
                 e["timestamp-ms"],
@@ -1029,9 +777,8 @@ class SparkCatalogTable:
 
     def files_df(self) -> DataFrame:
         """`SELECT * FROM tbl.files` parity (test_spark.py:344-357)."""
-        m = self._load()
-        snap = self._resolve_snapshot(m)
-        files = [] if snap is None else self._snapshot_files(m, snap)
+        snap = snapshots.resolve_snapshot(self._load())
+        files = [] if snap is None else snapshots.read_manifest(snap)
         return self.spark.createDataFrame(
             [(f, os.path.getsize(f)) for f in files], "file_path string, file_size_bytes long"
         )
@@ -1079,28 +826,22 @@ class SparkCatalogTable:
         driver."""
         out_schema = "partition string, spec_id int, record_count long, file_count long"
         m = self._load()
-        snap = self._resolve_snapshot(m)
-        if snap is None:
-            return self.spark.createDataFrame([], out_schema)
-        files = self._snapshot_files(m, snap)
+        snap = snapshots.resolve_snapshot(m)
+        files = [] if snap is None else snapshots.read_manifest(snap)
         if not files:
             return self.spark.createDataFrame([], out_schema)
         # file → spec: first (commit-ordered) snapshot that contains it
         file_spec: dict[str, int] = {}
         for s in sorted(m["snapshots"], key=lambda s: s.get("sequence-number", 0)):
             sid = s.get("spec-id", m["default-spec-id"])
-            for f in self._snapshot_files(m, s):
+            for f in snapshots.read_manifest(s):
                 file_spec.setdefault(f, sid)
         by_spec: dict[int, list[str]] = {}
         for f in files:
             by_spec.setdefault(file_spec.get(f, m["default-spec-id"]), []).append(f)
         specs = {s["spec-id"]: s for s in m["partition-specs"]}
-        # source columns may live in an older schema (dropped since);
-        # resolve field ids across all schemas, newest first
-        fields_by_id: dict[int, dict] = {}
-        for s in sorted(m["schemas"], key=lambda s: s["schema-id"]):
-            for f in s["fields"]:
-                fields_by_id[f["id"]] = f
+        # source columns may live in an older schema (dropped since)
+        fields_by_id = snapshots.fields_by_id(m)
         parts = []
         for spec_id, flist in sorted(by_spec.items()):
             spec = specs[spec_id]

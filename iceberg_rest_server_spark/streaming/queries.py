@@ -128,7 +128,11 @@ def run_to_table(stream_df: DataFrame, spark: SparkSession, output_mode: str) ->
         ]
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
-    return spark.table(name)
+    # the frame keeps the sink's rows once planned; dropping the view
+    # releases the session's name for them, so no drain leaves one behind
+    result = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return result
 
 
 # per-drain StreamingQueryProgress dicts from the most recent

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import urllib.parse
 
 import pytest
 from pyspark.sql import functions as F
@@ -379,25 +380,65 @@ def test_tag_retention_expires_ref(table_env):
 
 def test_incremental_append_scan(table_env):
     """read_incremental returns exactly the rows appended after the
-    `from` snapshot; overwrites in the range raise."""
+    `from` snapshot. It shares one rule set with the iceberg_rest stream
+    reader, so every rejected case fails both surfaces with the same
+    message: an overwrite in the range, a start that is not an ancestor
+    (unknown, or orphaned by a rollback), an expired start, and a
+    snapshot without an operation."""
+    from iceberg_rest_server_spark.catalog.datasource import IcebergRestStreamReader
+
     spark, client, table, df = table_env
+    stream = IcebergRestStreamReader(
+        {"uri": client.base_url, "project": "p", "warehouse": "wh",
+         "namespace": "ns", "table": "t"}
+    )
+
+    def keys(start):
+        inc = table.read_incremental(start)
+        planned = stream.partitions({"snapshot_id": start}, stream.latestOffset())
+        assert sorted(p.path for p in planned) == sorted(
+            urllib.parse.unquote(urllib.parse.urlparse(u).path) for u in inc.inputFiles()
+        )
+        return sorted(r["k"] for r in inc.collect())
+
+    def rejects(match, start):
+        with pytest.raises(ValueError, match=match):
+            table.read_incremental(start)
+        with pytest.raises(ValueError, match=match):
+            stream.partitions({"snapshot_id": start}, stream.latestOffset())
+
     table.append(df)  # k ∈ 0..4
     snap1 = table.metadata()["current-snapshot-id"]
     table.append(df.withColumn("k", F.col("k") + 100))
+    snap2 = table.metadata()["current-snapshot-id"]
     table.append(df.withColumn("k", F.col("k") + 200))
-    inc = table.read_incremental(snap1)
-    got = sorted(r["k"] for r in inc.collect())
-    assert got == sorted(list(range(100, 105)) + list(range(200, 205)))
+    assert keys(snap1) == sorted(list(range(100, 105)) + list(range(200, 205)))
     snap3 = table.metadata()["current-snapshot-id"]
     assert table.read_incremental(snap3).count() == 0
     table.overwrite(df)
-    import pytest as _pt
-
-    with _pt.raises(ValueError, match="overwrite"):
-        table.read_incremental(snap1)
-    # not-an-ancestor detection
-    with _pt.raises(ValueError, match="ancestor"):
-        table.read_incremental(12345)
+    orphaned = table.metadata()["current-snapshot-id"]
+    rejects("overwrite", snap1)
+    rejects("append-only", snap1)
+    # not-an-ancestor detection: an unknown id, and one a rollback orphaned
+    rejects("ancestor", 12345)
+    table.rollback_to(snap3)
+    table.append(df.withColumn("k", F.col("k") + 300))
+    rejects("ancestor", orphaned)
+    assert keys(snap2) == sorted(list(range(200, 205)) + list(range(300, 305)))
+    # an expired start: its file set is gone, so the diff is unknowable
+    assert table.expire_snapshots(retain_last=3)["expired"] == 2  # snap1, snap2
+    rejects("expired", snap2)
+    # a snapshot without an operation cannot be shown to be an append
+    m = table.metadata()
+    head = next(s for s in m["snapshots"] if s["snapshot-id"] == m["current-snapshot-id"])
+    client.commit_table(["ns"], "t", [], [
+        {"action": "add-snapshot", "snapshot": {
+            "snapshot-id": 777, "parent-snapshot-id": head["snapshot-id"],
+            "manifest-list": head["manifest-list"], "summary": {}}},
+        {"action": "set-snapshot-ref", "ref-name": "main", "snapshot-id": 777,
+         "type": "branch"},
+    ])
+    rejects("append-only", head["snapshot-id"])
 
 
 def test_partition_pruned_read(table_env):

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import os
 import tempfile
+import urllib.parse
+from collections import Counter
 
 import pytest
 
@@ -52,14 +54,94 @@ def _read(spark, server, **extra):
     return r.load()
 
 
-def test_read_matches_catalog_read(ds_env):
+def _opts(server, **extra) -> dict:
+    return {
+        "uri": server.base_url,
+        "project": "p",
+        "warehouse": "wh",
+        "namespace": "ns",
+        "table": "t",
+        **{k: str(v) for k, v in extra.items()},
+    }
+
+
+def _head(table, df):
+    table.append(df)
+    table.append(df)
+    return {}, {}
+
+
+def _snapshot_id(table, df):
+    table.append(df)
+    first = table.metadata()["current-snapshot-id"]
+    table.append(df)
+    return {"snapshot_id": first}, {}
+
+
+def _branch(table, df):
+    table.append(df)
+    table.create_branch("dev")
+    table.append(df.limit(3), branch="dev")
+    table.append(df)
+    return {"ref": "dev"}, {}
+
+
+def _evolve(table, df):
+    table.drop_column("v")
+    table.add_column("extra", "string")
+    table.append(df.select("k", F.lit("x").alias("extra")))
+
+
+def _tag(table, df):
+    # the tag binds the schema it was taken under: the tagged values of
+    # the dropped `v` stay readable, and the later `extra` does not appear
+    table.append(df)
+    table.create_tag("v1")
+    _evolve(table, df)
+    return {"ref": "v1"}, {}
+
+
+def _add_drop_column(table, df):
+    table.append(df)
+    _evolve(table, df)
+    return {}, {}
+
+
+def _partition_filter(table, df):
+    table.add_partition_field("k", "bucket[4]", "k_bucket")
+    table.append(df)
+    table.append(df)
+    return {}, {"k": 7}
+
+
+@pytest.mark.parametrize(
+    "setup",
+    [_head, _snapshot_id, _branch, _tag, _add_drop_column, _partition_filter],
+    ids=["head", "snapshot_id", "branch", "tag", "add_drop_column", "partition_filter"],
+)
+def test_read_matches_catalog_read(ds_env, setup):
+    """The Data Source and SparkCatalogTable read the same snapshot the
+    same way: same columns and types, same rows, and the same planned
+    data files (after partition pruning, for an equality filter)."""
+    from pyspark.sql.datasource import EqualTo
+
     spark, server, client, table, df = ds_env
-    table.append(df)
-    table.append(df)
-    back = _read(spark, server)
-    assert back.schema.simpleString() == "struct<k:bigint,v:double>"
-    assert back.count() == 20
-    assert back.agg(F.sum("k")).collect()[0][0] == 2 * sum(range(10))
+    target, eq = setup(table, df)
+    via_catalog = table.read_where(eq, **target) if eq else table.read(**target)
+    via_ds = _read(spark, server, **target)
+    for col, val in eq.items():
+        via_ds = via_ds.filter(F.col(col) == val)
+    assert via_ds.dtypes == via_catalog.dtypes
+    assert Counter(map(tuple, via_ds.collect())) == Counter(map(tuple, via_catalog.collect()))
+
+    reader = IcebergRestReader(_opts(server, **target))
+    reader.pushFilters([EqualTo((col,), val) for col, val in eq.items()])
+    planned = sorted(p.path for p in reader.partitions())
+    kept = sorted(urllib.parse.unquote(urllib.parse.urlparse(u).path)
+                  for u in via_catalog.inputFiles())
+    assert planned == kept
+    if eq:  # the filter really pruned
+        assert len(planned) < len(IcebergRestReader(_opts(server, **target)).partitions())
 
 
 def test_empty_table_reads_zero_rows(ds_env):
@@ -257,7 +339,7 @@ def test_stream_read_tails_snapshots(ds_env):
 def test_stream_read_rejects_overwrite_in_range(ds_env):
     """An overwrite snapshot inside the offset range must fail the
     stream (its row-level delta is not an append-only file diff) —
-    Iceberg's streaming contract, same as read_incremental."""
+    Iceberg's streaming contract; read_incremental fails the same way."""
     from iceberg_rest_server_spark.catalog.datasource import (
         IcebergRestStreamReader,
     )
@@ -278,6 +360,8 @@ def test_stream_read_rejects_overwrite_in_range(ds_env):
     head = reader.latestOffset()
     with pytest.raises(ValueError, match="append-only"):
         reader.partitions({"snapshot_id": first}, head)
+    with pytest.raises(ValueError, match="append-only"):
+        table.read_incremental(first)
 
 
 def test_failed_write_commits_nothing(ds_env):
@@ -309,7 +393,7 @@ def test_stream_read_rejects_rewritten_history(ds_env):
     """If the checkpointed start offset is no longer an ancestor of end
     (rollback_to followed by new commits), the ancestor walk must fail
     loudly — NOT silently re-emit the whole table as newly-added files
-    (duplicate delivery)."""
+    (duplicate delivery). read_incremental fails the same way."""
     from iceberg_rest_server_spark.catalog.datasource import (
         IcebergRestStreamReader,
     )
@@ -333,6 +417,8 @@ def test_stream_read_rejects_rewritten_history(ds_env):
     head = reader.latestOffset()
     with pytest.raises(ValueError, match="not an ancestor"):
         reader.partitions({"snapshot_id": orphaned}, head)
+    with pytest.raises(ValueError, match="not an ancestor"):
+        table.read_incremental(orphaned)
     # the full initial read (start=-1) still works on the new history
     parts = reader.partitions({"snapshot_id": -1}, head)
     assert len(parts) >= 1

@@ -179,6 +179,26 @@ def test_no_unguarded_driver_collect_sites():
     assert not offenders, f"unguarded driver materialization: {offenders}"
 
 
+def test_manifest_io_has_one_owner():
+    """Only catalog/snapshots.py reads, writes or deletes a snapshot's
+    manifest (the file its ``manifest-list`` names, built as
+    ``manifest-<id>.json``). SparkCatalogTable and the iceberg_rest Data
+    Source both call it, so their snapshot handling cannot drift apart
+    again — a second copy (a manifest read in a reader, a delete in
+    expire_snapshots) fails here."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "iceberg_rest_server_spark"
+    owner = pkg / "catalog" / "snapshots.py"
+    offenders = [
+        str(path)
+        for path in pkg.rglob("*.py")
+        if path != owner and re.search(r"manifest-list|manifest-\{", path.read_text())
+    ]
+    assert not offenders, f"manifest I/O outside catalog/snapshots.py: {offenders}"
+
+
 def test_q151_selection_is_dim_parallel_and_fences_broadcast(spark, sf_dir):
     """q151's scale shape: the quantile selection is a dim-PARTITIONED
     window (64-way parallel, never a global single-partition sort) and

@@ -236,3 +236,18 @@ def test_q172_sliding_window_matches_batch_rederivation(spark, sf_dir):
         assert abs(total - want_sum[key]) < 1e-6, key
     assert (out["window_end"] - out["window_start"] == pd.Timedelta(hours=1)).all()
     assert not (out["event_type"] == "__wm__").any()
+
+
+def test_drain_leaves_no_memory_sink_view(spark, tmp_path):
+    """A run_to_table drain drops the `stream_result_*` memory-sink view
+    it registers — the returned frame still holds the drained rows, but
+    the session keeps no view (and no rows held for one) behind."""
+    from iceberg_rest_server_spark.streaming.queries import run_to_table
+
+    src = str(tmp_path / "src")
+    _write_batch(spark, [(None, "a"), (None, "b"), (None, "a")], src)
+    stream = spark.readStream.schema(SCHEMA).parquet(src).groupBy("k").count()
+    result = run_to_table(stream, spark, "complete")
+    views = [t.name for t in spark.catalog.listTables() if t.name.startswith("stream_result_")]
+    assert views == []
+    assert sorted(tuple(r) for r in result.collect()) == [("a", 2), ("b", 1)]
