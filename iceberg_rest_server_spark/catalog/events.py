@@ -72,7 +72,7 @@ def publish_event(
         }
         path = os.path.join(d, f"{event['time_ms']}-{event['event_id']}.json")
         with open(path, "w") as fh:
-            json.dump(event, fh)
+            fh.write(json.dumps(event))
     except OSError:
         pass
 

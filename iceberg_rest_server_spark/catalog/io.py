@@ -6,6 +6,12 @@ Parity with the reference's `catalog/io.rs:7-85` + naming scheme
 the metastore commit (catalog/tables.rs:150-188): a crash between the
 two leaks an orphan file but never a broken catalog pointer — the same
 ordering is used by CatalogStore when wired with a writer.
+
+The writer takes the metadata already encoded as JSON text: the store
+encodes each new metadata version once (one-shot ``json.dumps``, which
+uses the C encoder — streaming ``json.dump`` into a file never does) and
+stores that same text in the metastore row, so the file gunzips to
+exactly the row's ``metadata`` column.
 """
 
 from __future__ import annotations
@@ -25,8 +31,9 @@ def local_path(path: str) -> str:
     return path[len("file://"):] if path.startswith("file://") else path
 
 
-def write_metadata_file(path: str, metadata: dict) -> str:
-    """Write gzip'd metadata JSON; returns the path written.
+def write_metadata_file(path: str, metadata_json: str) -> str:
+    """Write already-encoded metadata JSON, gzip'd at the default level
+    9 in one write; returns the path written.
 
     s3:// paths are tracked but not written — this container has no S3
     client (boto3/fsspec); the metastore row stays authoritative, and the
@@ -36,8 +43,9 @@ def write_metadata_file(path: str, metadata: dict) -> str:
         return path
     p = local_path(path)
     os.makedirs(os.path.dirname(p), exist_ok=True)
-    with gzip.open(p, "wt", encoding="utf-8") as fh:
-        json.dump(metadata, fh)
+    data = gzip.compress(metadata_json.encode("utf-8"))
+    with open(p, "wb") as fh:
+        fh.write(data)
     return path
 
 

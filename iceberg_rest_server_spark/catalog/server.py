@@ -92,15 +92,33 @@ def _ns_from_path(segment: str) -> list[str]:
 # r9 scrub dropped EVERY null recursively, so a future
 # nullable-with-meaning field would be silently eaten). These are
 # exactly the serde `Option` + skip_serializing_if fields our in-memory
-# model ever holds as None: `current-snapshot-id` (None until the first
-# snapshot commits, and again after RemoveSnapshots drops the current
-# one — metadata.py:90,342,368) and `parent-snapshot-id` (first
-# snapshot of a lineage). `metadata-location` is handled separately at
+# model ever holds as None, and each lives in one known place, which is
+# the only place the scrub looks: `current-snapshot-id` at the top
+# level of the metadata (None until the first snapshot commits, and
+# again after RemoveSnapshots drops the current one —
+# metadata.py:90,342,368) and `parent-snapshot-id` in each `snapshots[]`
+# entry (first snapshot of a lineage), so a response costs no walk of
+# the whole metadata tree. `metadata-location` is handled separately at
 # the top level (None only for stage-created tables). Any OTHER null is
 # left on the wire on purpose: the OpenAPI response validator
 # (tests/openapi_schema.py, every conformance exchange) then fails the
 # contract check loudly instead of the scrub hiding the bug.
 SCRUBBED_NULL_KEYS = frozenset({"current-snapshot-id", "parent-snapshot-id"})
+
+
+def _without_null(node, key: str):
+    if isinstance(node, dict) and key in node and node[key] is None:
+        return {k: v for k, v in node.items() if k != key}
+    return node
+
+
+def _scrub_table_metadata(metadata: dict) -> dict:
+    """Drop the SCRUBBED_NULL_KEYS where they occur, without mutating
+    the input: only the top level and the snapshot entries are copied."""
+    out = dict(_without_null(metadata, "current-snapshot-id"))
+    if isinstance(out.get("snapshots"), list):
+        out["snapshots"] = [_without_null(s, "parent-snapshot-id") for s in out["snapshots"]]
+    return out
 
 
 def _scrub_metadata_nulls(payload: dict) -> dict:
@@ -116,21 +134,9 @@ def _scrub_metadata_nulls(payload: dict) -> dict:
     tests/test_catalog.py::test_scrub_strips_exactly_the_pinned_keys).
     `next-page-token: null` stays — the spec's PageToken is nullable
     and clients read null as end-of-listing."""
-
-    def scrub(node):
-        if isinstance(node, dict):
-            return {
-                k: scrub(v)
-                for k, v in node.items()
-                if not (v is None and k in SCRUBBED_NULL_KEYS)
-            }
-        if isinstance(node, list):
-            return [scrub(x) for x in node]
-        return node
-
     out = dict(payload)
     if isinstance(out.get("metadata"), dict):
-        out["metadata"] = scrub(out["metadata"])
+        out["metadata"] = _scrub_table_metadata(out["metadata"])
     if "metadata-location" in out and out["metadata-location"] is None:
         del out["metadata-location"]
     if isinstance(out.get("results"), list):  # commit_transaction

@@ -422,7 +422,8 @@ class SparkCatalogTable:
         Raises on the cases snapshots.appended_files rejects (a
         non-append snapshot in the range, rewritten or expired history)."""
         m = self._load()
-        head_id = to_snapshot_id if to_snapshot_id is not None else m["current-snapshot-id"]
+        # the wire omits a null current-snapshot-id
+        head_id = to_snapshot_id if to_snapshot_id is not None else m.get("current-snapshot-id")
         if head_id is None:
             raise ValueError("table has no snapshots")
         added = snapshots.appended_files(m, from_snapshot_id, head_id)

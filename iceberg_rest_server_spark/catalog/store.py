@@ -584,6 +584,8 @@ class CatalogStore:
         if properties:
             builder.apply({"action": "set-properties", "updates": properties})
         metadata = builder.build()
+        # encoded once: the same text goes to the file and the row
+        metadata_json = json.dumps(metadata)
         if stage_create:
             metadata_location = None
         else:
@@ -591,7 +593,7 @@ class CatalogStore:
             # here leaks an orphan file, never a broken catalog entry
             # (catalog/tables.rs:150-188 ordering)
             metadata_location = metadata_file_path(table_location, new_uuid())
-            write_metadata_file(metadata_location, metadata)
+            write_metadata_file(metadata_location, metadata_json)
         with self._lock, self._conn:
             existing = self._conn.execute(
                 "SELECT table_id, metadata_location FROM tbl"
@@ -611,7 +613,7 @@ class CatalogStore:
                     table_id,
                     ns_row[0],
                     name,
-                    json.dumps(metadata),
+                    metadata_json,
                     metadata_location,
                     table_location,
                 ),
@@ -628,13 +630,12 @@ class CatalogStore:
         }
 
     def _table_row(self, warehouse_id: str, namespace: list[str], name: str):
-        ns_row = self._namespace_row(warehouse_id, namespace)
-        if ns_row is None:
-            return None
+        # one query, like the reference's lookups (postgres/table.rs:40-55)
         return self._conn.execute(
-            "SELECT table_id, metadata, metadata_location, namespace_id FROM tbl"
-            " WHERE namespace_id = ? AND name = ?",
-            (ns_row[0], name),
+            "SELECT t.table_id, t.metadata, t.metadata_location"
+            " FROM tbl t JOIN namespace n ON n.namespace_id = t.namespace_id"
+            " WHERE n.warehouse_id = ? AND n.name_key = ? AND t.name = ?",
+            (warehouse_id, _ns_key(namespace), name),
         ).fetchone()
 
     def list_tables(
@@ -740,8 +741,11 @@ class CatalogStore:
     def commit_transaction(self, warehouse_id: str, changes: list[dict]) -> list[dict]:
         """Atomic multi-table commit (catalog/tables.rs:746-962;
         postgres/table.rs:771-852): assert ALL requirements against
-        current metadata, then apply ALL update lists, then swap every
-        row inside one transaction."""
+        current metadata and build ALL new metadata versions, then write
+        every metadata file, then swap every row inside one transaction —
+        a change that fails its requirements or updates leaves no file
+        behind. Each new version is JSON-encoded once; that text is both
+        the file's content and the row's."""
         results = []
         events = []
         wh = self.get_warehouse(warehouse_id)
@@ -749,7 +753,6 @@ class CatalogStore:
             staged = []
             for change in changes:
                 ns, name = change["namespace"], change["name"]
-                ns_row = self._namespace_row(warehouse_id, ns)
                 row = self._table_row(warehouse_id, ns, name)
                 current = None
                 if row is not None and row[2] is not None:
@@ -770,14 +773,15 @@ class CatalogStore:
                     builder.apply(update)
                 new_metadata = builder.build()
                 new_location = metadata_file_path(new_metadata["location"], new_uuid())
-                # file write precedes the row swap (reference ordering)
-                write_metadata_file(new_location, new_metadata)
-                staged.append((row[0], new_metadata, new_location, ns_row[0] if ns_row else None))
+                staged.append((row[0], new_metadata, json.dumps(new_metadata), new_location))
                 events.append((row[0], ns, name, new_location))
-            for table_id, new_metadata, new_location, _ in staged:
+            # file writes precede the row swap (reference ordering)
+            for _, _, new_json, new_location in staged:
+                write_metadata_file(new_location, new_json)
+            for table_id, new_metadata, new_json, new_location in staged:
                 cur = c.execute(
                     "UPDATE tbl SET metadata = ?, metadata_location = ? WHERE table_id = ?",
-                    (json.dumps(new_metadata), new_location, table_id),
+                    (new_json, new_location, table_id),
                 )
                 if cur.rowcount != 1:
                     # rowcount verified (postgres/table.rs:842-849)

@@ -330,6 +330,89 @@ def test_multi_table_commit_atomic(store):
     assert s.load_table(wid, ["ns1"], "b")["metadata"]["properties"] == {"k": "v"}
 
 
+def _metadata_files(root) -> set:
+    return {str(p) for p in root.rglob("*.metadata.json")}
+
+
+def _append(snapshot_id: int) -> list[dict]:
+    return [
+        {"action": "add-snapshot",
+         "snapshot": {"snapshot-id": snapshot_id, "summary": {"operation": "append"}}},
+        {"action": "set-snapshot-ref", "ref-name": "main",
+         "snapshot-id": snapshot_id, "type": "branch"},
+    ]
+
+
+def test_failed_multi_table_commit_writes_no_file(tmp_path):
+    """Every requirement is asserted and every new metadata version built
+    before any file is written: a 4-table transaction that fails on the
+    4th table's assert-ref-snapshot-id leaves neither a metadata file nor
+    a changed row behind."""
+    s = CatalogStore()
+    wid = s.create_warehouse("p1", "wh", f"file://{tmp_path}")
+    s.create_namespace(wid, ["ns1"])
+    names = ["a", "b", "c", "d"]
+    for name in names:
+        s.create_table(wid, ["ns1"], name, SCHEMA)
+    before_files = _metadata_files(tmp_path)
+    before_rows = {n: s.load_table(wid, ["ns1"], n) for n in names}
+    changes = [
+        {"namespace": ["ns1"], "name": n,
+         "requirements": [{"type": "assert-ref-snapshot-id", "ref": "main", "snapshot-id": None}],
+         "updates": _append(i + 1)}
+        for i, n in enumerate(names)
+    ]
+    changes[-1]["requirements"][0]["snapshot-id"] = 12345  # main does not exist: 409
+    with pytest.raises(CommitError):
+        s.commit_transaction(wid, changes)
+    assert _metadata_files(tmp_path) == before_files
+    assert {n: s.load_table(wid, ["ns1"], n) for n in names} == before_rows
+    # the same transaction with a true requirement writes one file per table
+    changes[-1]["requirements"][0]["snapshot-id"] = None
+    s.commit_transaction(wid, changes)
+    assert len(_metadata_files(tmp_path) - before_files) == len(names)
+
+
+def test_commit_encodes_metadata_once(tmp_path, monkeypatch):
+    """A single-table commit JSON-encodes its new metadata exactly once,
+    with the one-shot encoder, and that one text is both the gzip file's
+    content and the row's."""
+    import gzip
+    import json
+
+    from iceberg_rest_server_spark.catalog.io import read_metadata_file, local_path
+
+    s = CatalogStore(str(tmp_path / "catalog.sqlite"))
+    wid = s.create_warehouse("p1", "wh", f"file://{tmp_path}/wh")
+    s.create_namespace(wid, ["ns1"])
+    s.create_table(wid, ["ns1"], "t", SCHEMA)
+
+    encoded = []
+    dumps = json.dumps
+
+    def counting_dumps(obj, *args, **kwargs):
+        if isinstance(obj, dict) and "table-uuid" in obj:
+            encoded.append(obj)
+        return dumps(obj, *args, **kwargs)
+
+    def no_dump(*args, **kwargs):
+        raise AssertionError("json.dump streams through the pure-Python encoder")
+
+    monkeypatch.setattr(json, "dumps", counting_dumps)
+    monkeypatch.setattr(json, "dump", no_dump)
+    (result,) = s.commit_transaction(
+        wid, [{"namespace": ["ns1"], "name": "t", "requirements": [], "updates": _append(1)}]
+    )
+    monkeypatch.undo()
+    assert len(encoded) == 1
+
+    location = result["metadata-location"]
+    row_text = s._table_row(wid, ["ns1"], "t")[1]
+    with open(local_path(location), "rb") as fh:
+        assert gzip.decompress(fh.read()).decode("utf-8") == row_text
+    assert read_metadata_file(location) == s.load_table(wid, ["ns1"], "t")["metadata"]
+
+
 # ------------------------------------------------------------------ HTTP
 
 def test_rest_roundtrip_and_error_codes():

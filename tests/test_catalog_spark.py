@@ -43,6 +43,15 @@ def test_metadata_file_written_gzip(table_env):
     assert on_disk["current-snapshot-id"] == loaded["metadata"]["current-snapshot-id"]
 
 
+def test_incremental_read_of_empty_table_raises(table_env):
+    """The wire omits a null current-snapshot-id, so a table with no
+    snapshots has no such key at all."""
+    spark, client, table, df = table_env
+    assert "current-snapshot-id" not in table.metadata()
+    with pytest.raises(ValueError, match="table has no snapshots"):
+        table.read_incremental(1)
+
+
 def test_schema_evolution_mid_data(table_env):
     spark, client, table, df = table_env
     table.append(df)

@@ -4,12 +4,19 @@ SURVEY.md §7 ranks hardest ('easy to silently corrupt')."""
 
 from __future__ import annotations
 
+import copy
+import json
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from iceberg_rest_server_spark.catalog.metadata import (
     PARTITION_FIELD_ID_START,
     TableMetadataBuilder,
+)
+from iceberg_rest_server_spark.catalog.server import (
+    SCRUBBED_NULL_KEYS,
+    _scrub_metadata_nulls,
 )
 
 BASE_SCHEMA = {
@@ -104,3 +111,87 @@ def test_invariants_hold_under_update_sequences(ops):
     spec_ids = [s["spec-id"] for s in m["partition-specs"]]
     assert len(spec_ids) == len(set(spec_ids))
     assert m["default-spec-id"] in spec_ids
+
+
+def _recursive_scrub(payload: dict) -> dict:
+    """The scrub the server used before it looked only where the pinned
+    keys occur: every dict under ``metadata``, at any depth, loses its
+    null-valued SCRUBBED_NULL_KEYS. Kept here as the reference."""
+    from iceberg_rest_server_spark.catalog.server import SCRUBBED_NULL_KEYS
+
+    def scrub(node):
+        if isinstance(node, dict):
+            return {
+                k: scrub(v)
+                for k, v in node.items()
+                if not (v is None and k in SCRUBBED_NULL_KEYS)
+            }
+        if isinstance(node, list):
+            return [scrub(x) for x in node]
+        return node
+
+    out = dict(payload)
+    if isinstance(out.get("metadata"), dict):
+        out["metadata"] = scrub(out["metadata"])
+    if "metadata-location" in out and out["metadata-location"] is None:
+        del out["metadata-location"]
+    if isinstance(out.get("results"), list):
+        out["results"] = [
+            r if not isinstance(r, dict) else _recursive_scrub(r) for r in out["results"]
+        ]
+    return out
+
+
+history_op = st.sampled_from(
+    ["append", "orphan", "remove_current", "remove_main", "tag", "props", "null_prop"]
+)
+
+
+@settings(max_examples=80, deadline=None)
+@given(st.lists(history_op, min_size=0, max_size=20), st.booleans())
+def test_targeted_scrub_matches_recursive_scrub(ops, staged):
+    """The server strips null `current-snapshot-id` at the top level and
+    null `parent-snapshot-id` in each snapshot only; over builder
+    histories (first snapshots with no parent, snapshots committed off
+    the branch, the current snapshot removed, main dropped) that is
+    exactly what the recursive scrub stripped: the response body is the
+    same byte for byte, and the input is left untouched."""
+    b = fresh_builder()
+    next_snap = 1
+    for op in ops:
+        current = b.m["current-snapshot-id"]
+        if op in ("append", "orphan"):
+            # an orphan starts a new lineage: its parent is None
+            parent = current if op == "append" else None
+            b.apply({"action": "add-snapshot", "snapshot": {
+                "snapshot-id": next_snap, "parent-snapshot-id": parent,
+                "summary": {"operation": "append"}}})
+            if op == "append":
+                b.apply({"action": "set-snapshot-ref", "ref-name": "main",
+                         "snapshot-id": next_snap})
+            next_snap += 1
+        elif op == "remove_current" and current is not None:
+            b.apply({"action": "remove-snapshots", "snapshot-ids": [current]})
+        elif op == "remove_main":
+            b.apply({"action": "remove-snapshot-ref", "ref-name": "main"})
+        elif op == "tag" and current is not None:
+            b.apply({"action": "set-snapshot-ref", "ref-name": f"tag{next_snap}",
+                     "snapshot-id": current, "type": "tag"})
+        elif op == "props":
+            b.apply({"action": "set-properties", "updates": {f"k{next_snap}": "v"}})
+        elif op == "null_prop":
+            # a null that is not a pinned key must survive both scrubs
+            b.apply({"action": "set-properties", "updates": {"owner": None}})
+    # the wire payload is built from the stored row, as load_table does
+    metadata = json.loads(json.dumps(b.build()))
+    location = None if staged else "file:///tmp/x/metadata/v.gz.metadata.json"
+    payloads = [
+        {"metadata": metadata, "metadata-location": location},
+        {"results": [{"metadata": metadata, "metadata-location": location}]},
+    ]
+    for payload in payloads:
+        before = copy.deepcopy(payload)
+        out, expected = _scrub_metadata_nulls(payload), _recursive_scrub(payload)
+        assert out == expected
+        assert json.dumps(out) == json.dumps(expected)  # same bytes on the wire
+        assert payload == before
