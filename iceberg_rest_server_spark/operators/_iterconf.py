@@ -1,5 +1,5 @@
-"""Shared runtime plumbing for iterative operators (PageRank, connected
-components): scale-gated loop tuning and localCheckpoint block release.
+"""Scale-gated loop tuning for iterative operators (PageRank, connected
+components). Their per-round checkpoints are owned by materialize.scope.
 
 Iterative graph loops run many micro-queries over a dataset whose size
 the operator has already MEASURED (a count() precedes every loop). Two
@@ -55,20 +55,3 @@ def iteration_conf(spark: SparkSession, n_rows: int):
         conf.set("spark.sql.adaptive.enabled", old_aqe)
         conf.set("spark.sql.shuffle.partitions", old_parts)
 
-
-def cached_rdd_ids(spark: SparkSession) -> set[int]:
-    sc = spark.sparkContext
-    return {info.id() for info in sc._jsc.sc().getRDDStorageInfo()}
-
-
-def release_rdds(spark: SparkSession, ids: set[int]) -> None:
-    """Unpersist cached RDDs by id — the only handle PySpark exposes to
-    localCheckpoint blocks (DataFrame.unpersist only covers CacheManager
-    entries)."""
-    if not ids:
-        return
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-    while it.hasNext():
-        entry = it.next()
-        if entry._1() in ids:
-            entry._2().unpersist(False)

@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import materialize
+
 
 def kmeans_fit_assign(
     df: DataFrame,
@@ -53,8 +55,10 @@ def kmeans_fit_assign(
     seed_rows = df.select(vec_col).orderBy(id_col).limit(k).collect()
     C = np.stack([np.asarray(r[0], dtype=np.float64) for r in seed_rows])
 
-    vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).persist()
-    try:
+    with materialize.scope():  # vecs and each round's partials
+        vecs = materialize.persist(
+            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+        )
         vecs.count()  # materialize once; every iteration rescans from cache
         history: list[float] = []
         for _ in range(max_iter):
@@ -99,7 +103,7 @@ def kmeans_fit_assign(
             # aggregate, counts/inertia via a k-row aggregate. The driver
             # then receives exactly k×dim + k rows regardless of scale.
             kk, dim = C.shape
-            part = part.persist()
+            part = materialize.persist(part)
             comp_rows = (
                 part.select(
                     "cluster", F.posexplode("sum_vec").alias("dim", "val")
@@ -113,7 +117,7 @@ def kmeans_fit_assign(
                 .agg(F.sum("cnt").alias("cnt"), F.sum("inertia").alias("inertia"))
                 .collect()
             )
-            part.unpersist()
+            materialize.release(part)
             sums = np.zeros((kk, dim))
             counts = np.zeros(kk, dtype=np.int64)
             total_inertia = 0.0
@@ -146,10 +150,6 @@ def kmeans_fit_assign(
         assignments = vecs.select(
             F.col("id").alias(id_col), nearest(F.col("v")).alias("cluster")
         )
-        # assignments must be computed before vecs is unpersisted by the
-        # caller's action — materialization order is the caller's concern;
-        # the persisted input is only needed during the fit loop above, and
-        # the final assignment pass re-reads the (small, cached) source.
+        # the persisted input is only needed during the fit loop above;
+        # the final assignment pass re-reads the (small) source.
         return assignments, history, C
-    finally:
-        vecs.unpersist()

@@ -32,6 +32,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 from pyspark.sql.window import Window
 
+from .. import materialize
+
 
 def exact_dedup(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
     """Exact deduplication — hash shuffle on the chosen columns."""
@@ -81,38 +83,30 @@ def hashed_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> Da
     )
 
 
-# Above this many distinct grams the corpus-wide bitmap dictionary stops
-# being broadcastable / per-doc bitmaps stop being small, and verify falls
-# back to array_intersect on the gram arrays.
+# Above this many distinct grams exact_jaccard_pairs verifies with
+# array_intersect on the gram arrays instead of the inline bitmap.
 #
-# r10 re-derivation, from a MEASURED scale inversion (tools/scaling.py):
-# the inline-bitmap verify rides ON the inverted-index self-join, so
-# every raw candidate match processes rows n_words longs wide — and
-# n_words grows with the GLOBAL distinct-gram count while per-doc gram
-# sets stay fixed-size. At a 16x corpus (6k distinct grams -> 95-long
-# bitmaps, 115M raw candidates) the verify stage measured ~360x its 1x
-# cost (~21,600 CPU-s observed live at 14/32 tasks) because each of the
-# 115M matches materializes ~1.5 KB of joined bitmap row — the strategy
-# inverts even though per-candidate popcount is still cheap. The old
-# 8192-gram bound allowed 128-long rows; the bound must cap the row
-# WIDTH in absolute terms, small enough that the inline row (~32 B key
-# cols + 8·n_words) stays within ~4x of the narrow array-path candidate
-# row. 1024 grams = 16 longs = 128 B: sf0.1's 377-gram corpus keeps the
-# measured-50x bitmap win, and big-vocabulary corpora take the array
-# path, whose inverted-index join ships NARROW (id1,id2) rows, dedups,
-# and only fetches gram arrays once per surviving pair — linear row
-# volume at any vocabulary.
+# The bound caps the bitmap row WIDTH in absolute terms: the inline
+# verify rides ON the inverted-index self-join, so every raw candidate
+# match carries n_words longs, and n_words grows with the GLOBAL
+# distinct-gram count while per-doc gram sets stay fixed-size. Measured
+# (tools/scaling.py, r10) at a 16x corpus (6k distinct grams -> 95-long
+# bitmaps, 115M raw candidates): the verify stage cost ~360x its 1x cost
+# (~21,600 CPU-s) because each match materialized ~1.5 KB of joined
+# bitmap row. 1024 grams = 16 longs = 128 B keeps the inline row within
+# ~4x of the narrow array-path candidate row; big-vocabulary corpora take
+# the array path, whose join ships NARROW (id1, id2) rows, dedups, and
+# fetches gram arrays once per surviving pair — linear at any vocabulary.
 #
-# Which path runs at registry scale (measured r11, pinned by
-# tests/test_operators.py::test_bitmap_strategy_runs_at_registry_scale):
-# the documents corpus has exactly 377 distinct character trigrams at
-# sf0.001, sf0.01 AND sf0.1 (the generator's template alphabet
-# saturates), so `auto` selects the BITMAP verify at every registry
-# scale factor — the r10 8192→1024 cutover did not flip the strategy
-# the driver/bench actually run, and EXPLAIN.md's q32 section remains
-# the live plan. Only corpora with >1024 distinct grams (e.g. the
+# Which path runs at registry scale (pinned by tests/test_operators.py::
+# test_bitmap_strategy_runs_at_registry_scale): the documents corpus has
+# exactly 377 distinct character trigrams at sf0.001, sf0.01 AND sf0.1
+# (the generator's template alphabet saturates), so the BITMAP verify
+# runs at every registry scale factor and EXPLAIN.md's q32 section is the
+# live plan. Only corpora with >1024 distinct grams (e.g. the
 # cipher-scaled SCALING.md corpus, vocabulary ~= 377·k) take the array
-# path under `auto`.
+# path; tools/scaling.py sets the bound to 0 to pin the array path across
+# its ladder.
 _BITMAP_MAX_GRAMS = 1024
 
 
@@ -143,18 +137,10 @@ def exact_jaccard_pairs(
     # (df, gram) — and int comparisons/intersections are far cheaper
     # than strings. 64-bit collisions are ~1e-13 per doc pair.
     #
-    # SPARK_GRAFT_JACCARD_VERIFY ∈ {auto, array, bitmap}: measurement
-    # control for tools/scaling.py — a scaling ladder must hold ONE
-    # strategy across its points or the adaptive cutover's flip shows
-    # up as fake super-linearity. Results are identical either way
-    # (both verifies are exact); default auto picks by corpus stats.
-    import os as _os
-
-    verify_mode = _os.environ.get("SPARK_GRAFT_JACCARD_VERIFY", "auto")
-    g = (
-        hashed_shingles(docs, id_col, text_col, n)
-        .withColumnRenamed("hgrams", "grams")
-        .persist()
+    # Materializations (g, rp / ranked, the verify checkpoint) are read
+    # by the returned plan, so they register with the caller's scope.
+    g = materialize.persist(
+        hashed_shingles(docs, id_col, text_col, n).withColumnRenamed("hgrams", "grams")
     )
     # sz travels with every exploded row (one array-length read) instead
     # of a second count() window pass downstream
@@ -163,26 +149,10 @@ def exact_jaccard_pairs(
     )
     # not persisted: both consumers (the prefix ranking and, on the
     # bitmap path, the dictionary) rebuild this one cheap aggregate from
-    # the cached gram sets — a persist here would outlive the call and
-    # leak executor cache across repeated invocations
+    # the cached gram sets
     df_freq = exploded.groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
     # one metadata-scale job to pick the verify strategy
     n_distinct_grams = df_freq.count()
-
-    def _ranked():
-        # global prefix ranking via a window over the exploded rows —
-        # used by the array path (and the legacy wide-bitmap build),
-        # where per-doc gram arrays are too wide to sort array-side
-        w = Window.partitionBy("id").orderBy("df", "gram")
-        return (
-            exploded.join(df_freq, "gram")
-            .withColumn("pos", F.row_number().over(w))
-            .withColumn(
-                "prefix_len", F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1
-            )
-            .filter(F.col("pos") <= F.col("prefix_len"))
-            .select("id", "gram", "pos", "sz")
-        )
 
     # PPJoin filters: size compatibility (j≥t bounds |A|/|B| within t) and
     # the positional upper bound on achievable overlap — both prune
@@ -201,11 +171,7 @@ def exact_jaccard_pairs(
     jaccard_of = lambda inter: inter.cast("double") / (  # noqa: E731
         F.col("size1") + F.col("size2") - inter
     )
-    use_bitmap = (
-        verify_mode == "bitmap"
-        or (verify_mode == "auto" and n_distinct_grams <= _BITMAP_MAX_GRAMS)
-    )
-    if use_bitmap:
+    if n_distinct_grams <= _BITMAP_MAX_GRAMS:
         # Small-vocabulary corpora are exactly where the prefix filter
         # prunes worst (few distinct grams → no rare grams → candidate
         # multiplicity ~2× and candidate count near-quadratic in the hot
@@ -230,81 +196,49 @@ def exact_jaccard_pairs(
             "df",
             (F.row_number().over(Window.orderBy("gram")) - 1).alias("idx"),
         )
-        if n_words <= _BITMAP_MAX_GRAMS // 64:
-            # Fused build (r13, guide §2.3/§2.4): prefix selection,
-            # prefix position AND the bitmap words are all functions of
-            # a doc's own gram set plus the broadcast dictionary, so ONE
-            # id-partitioned aggregate (exchange-free: hashed_shingles
-            # already repartitioned on the id) computes the (df, gram)
-            # sort source and every bitmap word together, and the
-            # prefix comes from an array_sort + slice instead of a
-            # corpus-wide row_number window. Replaces three passes over
-            # the exploded rows (window sort, words bit_or, bm
-            # assembly) and the ranked×bm join with one aggregate +
-            # array-local expressions. Gated on the auto-bitmap regime
-            # (n_words ≤ 16): the per-row n_words-way bit_or would cost
-            # O(n_words) per gram occurrence on a forced wide-vocab
-            # bitmap run, where the legacy two-stage build stays.
-            agg = exploded.join(F.broadcast(idx_map), "gram").groupBy("id").agg(
-                F.first("sz").alias("sz"),
-                F.collect_list(F.struct("df", "gram")).alias("pairs"),
-                *[
-                    F.bit_or(
-                        F.when(
-                            F.shiftright("idx", 6) == i,
-                            F.expr("shiftleft(1L, idx & 63)"),
-                        ).otherwise(F.lit(0).cast("long"))
-                    ).alias(f"w{i}")
-                    for i in range(n_words)
-                ],
+        # Fused build (r13, guide §2.3/§2.4): prefix selection, prefix
+        # position AND the bitmap words are all functions of a doc's own
+        # gram set plus the broadcast dictionary, so ONE id-partitioned
+        # aggregate (exchange-free: hashed_shingles already repartitioned
+        # on the id) computes the (df, gram) sort source and every bitmap
+        # word together, and the prefix comes from an array_sort + slice
+        # instead of a corpus-wide row_number window. n_words ≤ 16 here
+        # (the _BITMAP_MAX_GRAMS cutover), which bounds the per-row
+        # n_words-way bit_or.
+        agg = exploded.join(F.broadcast(idx_map), "gram").groupBy("id").agg(
+            F.first("sz").alias("sz"),
+            F.collect_list(F.struct("df", "gram")).alias("pairs"),
+            *[
+                F.bit_or(
+                    F.when(
+                        F.shiftright("idx", 6) == i,
+                        F.expr("shiftleft(1L, idx & 63)"),
+                    ).otherwise(F.lit(0).cast("long"))
+                ).alias(f"w{i}")
+                for i in range(n_words)
+            ],
+        )
+        prefix_len = (
+            F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1
+        ).cast("int")
+        # persisted: the self-join consumes rp on both sides
+        rp = materialize.persist(
+            agg.select(
+                "id",
+                "sz",
+                F.posexplode(
+                    F.slice(F.array_sort("pairs"), F.lit(1), prefix_len)
+                ).alias("pos0", "pg"),
+                *[F.col(f"w{i}") for i in range(n_words)],
             )
-            prefix_len = (
-                F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1
-            ).cast("int")
-            # persisted: the self-join consumes rp on both sides
-            rp = (
-                agg.select(
-                    "id",
-                    "sz",
-                    F.posexplode(
-                        F.slice(F.array_sort("pairs"), F.lit(1), prefix_len)
-                    ).alias("pos0", "pg"),
-                    *[F.col(f"w{i}") for i in range(n_words)],
-                )
-                .select(
-                    "id",
-                    F.col("pg.gram").alias("gram"),
-                    (F.col("pos0") + 1).alias("pos"),
-                    "sz",
-                    *[F.col(f"w{i}") for i in range(n_words)],
-                )
-                .persist()
+            .select(
+                "id",
+                F.col("pg.gram").alias("gram"),
+                (F.col("pos0") + 1).alias("pos"),
+                "sz",
+                *[F.col(f"w{i}") for i in range(n_words)],
             )
-        else:
-            # legacy two-stage bitmap assembly for forced wide-vocab runs
-            words = (
-                exploded.join(F.broadcast(idx_map.drop("df")), "gram")
-                .select(
-                    "id",
-                    F.shiftright("idx", 6).alias("w"),
-                    F.expr("shiftleft(1L, idx & 63)").alias("b"),
-                )
-                .groupBy("id", "w")
-                .agg(F.bit_or("b").alias("word"))
-            )
-            bm = (
-                words.groupBy("id")
-                .agg(F.map_from_entries(F.collect_list(F.struct("w", "word"))).alias("m"))
-                .select(
-                    "id",
-                    *[
-                        F.coalesce(F.col("m")[i], F.lit(0).cast("long")).alias(f"w{i}")
-                        for i in range(n_words)
-                    ],
-                )
-            )
-            # persisted: the self-join consumes rp on both sides
-            rp = _ranked().join(bm, "id").persist()
+        )
         inter = sum(
             [
                 F.bit_count(F.col(f"a.w{i}").bitwiseAND(F.col(f"b.w{i}")))
@@ -332,7 +266,19 @@ def exact_jaccard_pairs(
     # Large-vocabulary path: gram arrays are too wide to ride the prefix
     # rows, so candidates ARE deduped first and the array_intersect
     # verify runs once per pair after two id joins.
-    ranked = _ranked().persist()  # consumed by both sides of the self-join
+    # global prefix ranking via a window over the exploded rows (per-doc
+    # gram arrays are too wide to sort array-side); persisted: both sides
+    # of the self-join consume it
+    w = Window.partitionBy("id").orderBy("df", "gram")
+    ranked = materialize.persist(
+        exploded.join(df_freq, "gram")
+        .withColumn("pos", F.row_number().over(w))
+        .withColumn(
+            "prefix_len", F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1
+        )
+        .filter(F.col("pos") <= F.col("prefix_len"))
+        .select("id", "gram", "pos", "sz")
+    )
     cands = (
         ranked.alias("a")
         .join(ranked.alias("b"), "gram")
@@ -359,7 +305,7 @@ def exact_jaccard_pairs(
     # evaluates TWICE per candidate. The checkpointed rows carry only
     # (id1, id2, inter, size1, size2) — 40 B/candidate, the arrays are
     # already projected away — so the barrier is cheap at any scale.
-    joined = joined.localCheckpoint(eager=False)
+    joined = materialize.checkpoint(joined)
     verified = (
         joined.withColumn("jaccard", jaccard_of(F.col("inter")))
         .filter(F.col("jaccard") >= threshold)
@@ -402,7 +348,7 @@ def minhash_lsh_pairs(
     # string payload never leaves the first projection. Persisted because
     # the set feeds both the signature pipeline and final verification
     # (otherwise Spark re-shingles the corpus once per consumer).
-    g = hashed_shingles(docs, id_col, text_col, n).persist()
+    g = materialize.persist(hashed_shingles(docs, id_col, text_col, n))
 
     # All num_hashes permutations + band buckets in ONE Arrow pass
     # (VERDICT r1 #8): permutation i = splitmix64(gram_hash ^ seed_i) —
@@ -461,10 +407,9 @@ def minhash_lsh_pairs(
     # two operations keyed the same way share one exchange; here the
     # size attribute is functionally dependent on the id key and simply
     # travels with it).
-    buckets = (
+    buckets = materialize.persist(
         g.select("id", F.size("hgrams").alias("sz"), band_buckets("hgrams").alias("bb"))
         .select("id", "sz", F.posexplode("bb").alias("band", "bucket"))
-        .persist()
     )
     # count-based banding: the groupBy replaces the dedup-distinct (same
     # shuffle) and the count filter prunes the template-similarity mass
@@ -505,7 +450,7 @@ def minhash_lsh_pairs(
     # same lineage barrier as exact_jaccard_pairs: keep the threshold
     # filter from being pushed into the join condition, where the
     # array_intersect would evaluate twice per candidate
-    joined = joined.localCheckpoint(eager=False)
+    joined = materialize.checkpoint(joined)
     return (
         joined.withColumn(
             "jaccard",
@@ -635,32 +580,32 @@ def connected_components(
     each round's cost is bounded by one edge-list shuffle (same cost
     class as one LSH banding round, run ~log(diameter) times).
     """
-    from ._iterconf import cached_rdd_ids, iteration_conf, release_rdds
+    from ._iterconf import iteration_conf
 
     spark = edges.sparkSession
-    # materialize the directed edge list ONCE before symmetrizing: the
-    # union's two branches would otherwise each re-evaluate the (possibly
-    # expensive — e.g. a full near-dup verify) upstream plan
-    e0 = edges.select(
-        F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
-    ).persist()
-    n_edges = e0.count()
-    # r13 measured finding (guide §2.4): pre-partitioning sym on u is a
-    # NO-OP here — the DAG scheduler already reuses the symmetrized edge
-    # shuffle across rounds (skipped stages; verified identical stage
-    # counts and shuffle bytes on a deep chain graph), so an explicit
-    # repartition only adds one upfront exchange. Left as-is.
-    sym = e0.union(e0.select(F.col("v").alias("u"), F.col("u").alias("v"))).persist()
-    ckpt_ids: set[int] = set()
-    try:
+    with materialize.scope() as owned:
+        # materialize the directed edge list ONCE before symmetrizing: the
+        # union's two branches would otherwise each re-evaluate the
+        # (possibly expensive — e.g. a full near-dup verify) upstream plan
+        e0 = materialize.persist(
+            edges.select(F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v"))
+        )
+        n_edges = e0.count()
+        # r13 measured finding (guide §2.4): pre-partitioning sym on u is a
+        # NO-OP here — the DAG scheduler already reuses the symmetrized
+        # edge shuffle across rounds (skipped stages; verified identical
+        # stage counts and shuffle bytes on a deep chain graph), so an
+        # explicit repartition only adds one upfront exchange. Left as-is.
+        sym = materialize.persist(
+            e0.union(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        )
         # loop queries planned small when the measured edge list is small
         # (AQE off + data-sized partitions); no-op at scale
         with iteration_conf(spark, 2 * n_edges):
-            labels = (
+            ckpt = labels = materialize.checkpoint(
                 sym.groupBy(F.col("u").alias("id"))
                 .agg(F.least(F.min("v"), F.first("u")).alias("comp"))
                 .withColumn("comp", F.least("comp", "id"))
-                .localCheckpoint(eager=False)
             )
             for _ in range(max_iter):
                 # neighbor min, fused (r13, guide §2.4): the node's own
@@ -693,31 +638,19 @@ def connected_components(
                 hop = labels.select(
                     F.col("id").alias("comp"), F.col("comp").alias("jcomp")
                 )
-                before = cached_rdd_ids(spark)
-                jumped = (
-                    stepped.join(hop, "comp", "left")
-                    .select(
+                jumped = materialize.checkpoint(
+                    stepped.join(hop, "comp", "left").select(
                         "id",
                         "old",
                         F.least("comp", F.coalesce("jcomp", "comp")).alias("comp"),
                     )
-                    .localCheckpoint(eager=False)
                 )
                 changed = jumped.filter(F.col("comp") != F.col("old")).count()
-                new_ids = cached_rdd_ids(spark) - before
-                labels = jumped.select("id", "comp")
-                release_rdds(spark, ckpt_ids)  # prev round's blocks
-                ckpt_ids = new_ids
+                materialize.release(ckpt)  # prev round's blocks
+                ckpt, labels = jumped, jumped.select("id", "comp")
                 if changed == 0:
                     break
-    except BaseException:
-        # in-flight checkpoints are not returned to the caller: free them
-        release_rdds(spark, ckpt_ids)
-        raise
-    finally:
-        sym.unpersist()
-        e0.unpersist()
-    # the final labels checkpoint stays cached — it IS the result
+        owned.keep(ckpt)  # the result: its lineage is truncated
     return labels.select(F.col("id"), F.col("comp").alias("component"))
 
 

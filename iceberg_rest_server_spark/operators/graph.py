@@ -14,11 +14,10 @@ full round is exactly ONE join (ranks × adjacency on src) + ONE
 aggregation (exploded contributions by dst, map-side combined) whose
 single collect returns both the convergence delta and the next round's
 dangling mass. No other driver-side state; lineage is truncated per
-round with localCheckpoint and the PREVIOUS round's checkpoint blocks
-are explicitly released (localCheckpoint data is not governed by
-DataFrame.unpersist, so block ids are tracked through the SparkContext
-storage registry — same single-threaded-session assumption as
-streaming.run_to_table). The loop plans under _iterconf.iteration_conf
+round with a checkpoint and the PREVIOUS round's checkpoint is released
+as soon as the next one is materialized (one materialize.scope owns the
+loop state; the final rank vector is kept for the caller's scope). The
+loop plans under _iterconf.iteration_conf
 (AQE + shuffle partitions pinned down only for a measured-small graph;
 no-op at scale). Dangling nodes (no out-edges) redistribute their mass
 uniformly, so ranks sum to 1 at every step (checked in tests against a
@@ -30,9 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._iterconf import cached_rdd_ids as _cached_rdd_ids
+from .. import materialize
 from ._iterconf import iteration_conf
-from ._iterconf import release_rdds as _release_rdds
 
 # Max neighbors per adjacency row: bounds the size of any single row at
 # 100 TB scale (a celebrity node with 1e8 out-edges becomes ~1e8/65536
@@ -53,145 +51,115 @@ def pagerank(
     e = edges.select(
         F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
     )
-    nodes = e.select(F.col("u").alias("id")).union(e.select("v")).distinct().persist()
-    # persisted: consumed by both adjacency branches AND the n_src count
-    outdeg = e.groupBy("u").agg(F.count(F.lit(1)).alias("deg")).persist()
-    # Chunked adjacency (co-partitioned join on u: both sides shuffle on
-    # u once, here, never again; ≤_ADJ_CHUNK neighbors per row) PLUS one
-    # self row per node. The self row (vs=[u], is_self=true, deg=real
-    # out-degree or 0 for dangling) rides the same join as the
-    # contribution rows, so each iteration's groupBy(dst) receives every
-    # node's OLD rank and out-degree alongside its incoming mass — the
-    # whole round collapses to ONE join + ONE aggregate. The previous
-    # shape (contribs join, nodes restore-join, old-rank join, outdeg
-    # join = 4 joins + 2 aggregates per round) spent most of q96's wall
-    # time in stage scheduling; fusing it is also strictly fewer shuffles
-    # at 100 TB, not a small-graph special case.
-    adj_real = (
-        e.join(outdeg, "u")
-        .withColumn(
-            "chunk",
-            F.pmod(
-                F.xxhash64("v"),
-                F.greatest(F.lit(1), F.ceil(F.col("deg") / _ADJ_CHUNK)),
-            ),
+    with materialize.scope() as owned:
+        nodes = materialize.persist(
+            e.select(F.col("u").alias("id")).union(e.select("v")).distinct()
         )
-        .groupBy("u", "chunk")
-        .agg(F.collect_list("v").alias("vs"), F.first("deg").alias("deg"))
-        .drop("chunk")
-        .select("u", "vs", "deg", F.lit(False).alias("is_self"))
-    )
-    adj_self = (
-        nodes.join(outdeg, nodes.id == outdeg.u, "left")
-        .select(
-            F.col("id").alias("u"),
-            F.array(F.col("id")).alias("vs"),
-            F.coalesce(F.col("deg"), F.lit(0)).cast("long").alias("deg"),
-            F.lit(True).alias("is_self"),
+        # persisted: consumed by both adjacency branches AND the n_src count
+        outdeg = materialize.persist(e.groupBy("u").agg(F.count(F.lit(1)).alias("deg")))
+        # Chunked adjacency (co-partitioned join on u: both sides shuffle
+        # on u once, here, never again; ≤_ADJ_CHUNK neighbors per row)
+        # PLUS one self row per node. The self row (vs=[u], is_self=true,
+        # deg=real out-degree or 0 for dangling) rides the same join as
+        # the contribution rows, so each iteration's groupBy(dst) receives
+        # every node's OLD rank and out-degree alongside its incoming mass
+        # — the whole round collapses to ONE join + ONE aggregate. The
+        # previous shape (contribs join, nodes restore-join, old-rank
+        # join, outdeg join = 4 joins + 2 aggregates per round) spent most
+        # of q96's wall time in stage scheduling; fusing it is also
+        # strictly fewer shuffles at 100 TB, not a small-graph special
+        # case.
+        adj_real = (
+            e.join(outdeg, "u")
+            .withColumn(
+                "chunk",
+                F.pmod(
+                    F.xxhash64("v"),
+                    F.greatest(F.lit(1), F.ceil(F.col("deg") / _ADJ_CHUNK)),
+                ),
+            )
+            .groupBy("u", "chunk")
+            .agg(F.collect_list("v").alias("vs"), F.first("deg").alias("deg"))
+            .drop("chunk")
+            .select("u", "vs", "deg", F.lit(False).alias("is_self"))
         )
-    )
-    adj = adj_real.unionByName(adj_self).persist()
-    ranks = None
-    ckpt_ids: set[int] = set()
-    try:
+        adj_self = (
+            nodes.join(outdeg, nodes.id == outdeg.u, "left")
+            .select(
+                F.col("id").alias("u"),
+                F.array(F.col("id")).alias("vs"),
+                F.coalesce(F.col("deg"), F.lit(0)).cast("long").alias("deg"),
+                F.lit(True).alias("is_self"),
+            )
+        )
+        adj = materialize.persist(adj_real.unionByName(adj_self))
         # ONE setup action instead of three (r13, guide §1.2): the self
         # rows carry exactly one row per node with its true out-degree
-        # (0 for dangling), so n and n_src fall out of the same
-        # aggregate that materializes the adj persist (and, upstream,
-        # the nodes/outdeg persists it consumes). Dangling mass at t=0
-        # is then pure arithmetic — the loop still needs no warm-up
-        # join/action.
+        # (0 for dangling), so n and n_src fall out of the same aggregate
+        # that materializes the adj persist (and, upstream, the
+        # nodes/outdeg persists it consumes). Dangling mass at t=0 is then
+        # pure arithmetic — the loop still needs no warm-up join/action.
         counts = adj.agg(
             F.count_if(F.col("is_self")).alias("n"),
             F.count_if(F.col("is_self") & (F.col("deg") > 0)).alias("n_src"),
         ).collect()[0]
         n, n_src = counts["n"], counts["n_src"]
-        ranks = _power_iterate(spark, nodes, adj, n, n_src, damping, max_iter, tol)
-    finally:
-        nodes.unpersist()
-        outdeg.unpersist()
-        adj.unpersist()
-    # NOTE: the final `ranks` checkpoint stays cached — it IS the result
-    # (its lineage was truncated, so releasing it would lose the data).
-    return ranks.select("id", "rank")
-
-
-def _power_iterate(spark, nodes, adj, n, n_src, damping, max_iter, tol) -> DataFrame:
-    """The per-round loop of `pagerank`, planned under `iteration_conf`
-    (AQE off + data-sized partitions when the measured n is small; no-op
-    at scale). Returns the final rank vector as a truncated-lineage
-    checkpoint; on exception its in-flight checkpoint blocks are freed
-    (they are not returned to the caller)."""
-    ckpt_ids: set[int] = set()
-    try:
-        return _power_iterate_inner(
-            spark, nodes, adj, n, n_src, damping, max_iter, tol, ckpt_ids
-        )
-    except BaseException:
-        _release_rdds(spark, ckpt_ids)
-        raise
-
-
-def _power_iterate_inner(
-    spark, nodes, adj, n, n_src, damping, max_iter, tol, ckpt_ids
-) -> DataFrame:
-    with iteration_conf(spark, n):
-        ranks = nodes.select("id", F.lit(1.0 / n).alias("rank")).localCheckpoint(
-            eager=False
-        )
-        base = (1.0 - damping) / n
-        dangling = (n - n_src) / n  # Σ rank over out-degree-0 nodes at t=0
-        for _ in range(max_iter):
-            fused = (
-                ranks.select("id", "rank")
-                .join(adj, F.col("id") == adj.u)
-                .select(
-                    F.explode("vs").alias("id"),
-                    F.when(F.col("is_self"), 0.0)
-                    .otherwise(F.col("rank") / F.col("deg"))
-                    .alias("c"),
-                    # only the self row fills these; max() below recovers
-                    # them per destination group (nulls ignored)
-                    F.when(F.col("is_self"), F.col("rank")).alias("old_r"),
-                    F.when(F.col("is_self"), F.col("deg")).alias("deg0"),
-                )
-                .groupBy("id")
-                .agg(
-                    F.sum("c").alias("in_mass"),
-                    F.max("old_r").alias("old_r"),
-                    F.max("deg0").alias("deg0"),
-                )
+        with iteration_conf(spark, n):
+            ranks = materialize.checkpoint(
+                nodes.select("id", F.lit(1.0 / n).alias("rank"))
             )
-            before = _cached_rdd_ids(spark)
-            # eager=False: the stats collect is the round's ONE action —
-            # it materializes the new checkpoint and returns delta +
-            # dangling together
-            new_ranks = fused.select(
-                "id",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    # in_mass is never null: every node's self row puts a
-                    # 0.0 in its group even with no in-edges
-                    * (F.col("in_mass") + F.lit(dangling / n))
-                ).alias("rank"),
-                "old_r",
-                "deg0",
-            ).localCheckpoint(eager=False)
-            stats = new_ranks.agg(
-                F.sum(F.abs(F.col("rank") - F.col("old_r"))).alias("delta"),
-                F.sum(F.when(F.col("deg0") == 0, F.col("rank"))).alias("dangling"),
-            ).collect()[0]
-            new_ckpt_ids = _cached_rdd_ids(spark) - before
-            ranks = new_ranks
-            _release_rdds(spark, ckpt_ids)  # prev round's blocks, no longer referenced
-            # in place: the caller's except-handler holds this same set
-            ckpt_ids.clear()
-            ckpt_ids.update(new_ckpt_ids)
-            dangling = stats["dangling"] or 0.0
-            if stats["delta"] is not None and stats["delta"] < tol:
-                break
-    return ranks
+            base = (1.0 - damping) / n
+            dangling = (n - n_src) / n  # Σ rank over out-degree-0 nodes at t=0
+            for _ in range(max_iter):
+                fused = (
+                    ranks.select("id", "rank")
+                    .join(adj, F.col("id") == adj.u)
+                    .select(
+                        F.explode("vs").alias("id"),
+                        F.when(F.col("is_self"), 0.0)
+                        .otherwise(F.col("rank") / F.col("deg"))
+                        .alias("c"),
+                        # only the self row fills these; max() below
+                        # recovers them per destination group (nulls
+                        # ignored)
+                        F.when(F.col("is_self"), F.col("rank")).alias("old_r"),
+                        F.when(F.col("is_self"), F.col("deg")).alias("deg0"),
+                    )
+                    .groupBy("id")
+                    .agg(
+                        F.sum("c").alias("in_mass"),
+                        F.max("old_r").alias("old_r"),
+                        F.max("deg0").alias("deg0"),
+                    )
+                )
+                # lazy: the stats collect is the round's ONE action — it
+                # materializes the new checkpoint and returns delta +
+                # dangling together
+                new_ranks = materialize.checkpoint(
+                    fused.select(
+                        "id",
+                        (
+                            F.lit(base)
+                            + F.lit(damping)
+                            # in_mass is never null: every node's self row
+                            # puts a 0.0 in its group even with no in-edges
+                            * (F.col("in_mass") + F.lit(dangling / n))
+                        ).alias("rank"),
+                        "old_r",
+                        "deg0",
+                    )
+                )
+                stats = new_ranks.agg(
+                    F.sum(F.abs(F.col("rank") - F.col("old_r"))).alias("delta"),
+                    F.sum(F.when(F.col("deg0") == 0, F.col("rank"))).alias("dangling"),
+                ).collect()[0]
+                materialize.release(ranks)  # prev round's blocks, no longer referenced
+                ranks = new_ranks
+                dangling = stats["dangling"] or 0.0
+                if stats["delta"] is not None and stats["delta"] < tol:
+                    break
+        owned.keep(ranks)  # the result: its lineage is truncated
+    return ranks.select("id", "rank")
 
 
 def pagerank_canonicals(

@@ -22,6 +22,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import materialize
+
 
 def dot(a: Column, b: Column) -> Column:
     """Left-fold dot product in doubles, element order preserved."""
@@ -353,9 +355,9 @@ def cosine_neardup_pairs_blocked(
     v = _prepped(df, id_col, vec_col, "id", "v").withColumn(
         "blk", F.pmod(F.xxhash64(F.col("id")), F.lit(blocks))
     )
-    grouped = v.groupBy("blk").agg(
-        F.collect_list(F.struct("id", "v", "v_nrm")).alias("items")
-    ).persist()
+    grouped = materialize.persist(
+        v.groupBy("blk").agg(F.collect_list(F.struct("id", "v", "v_nrm")).alias("items"))
+    )
     block_pairs = (
         grouped.alias("a")
         .join(grouped.alias("b"), F.col("a.blk") <= F.col("b.blk"))

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import materialize
 from ..operators import similarity
 from ..tables import load
 from ._exact import dec
@@ -734,11 +735,10 @@ def q143(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gone; only the final (p1, p2) support count still shuffles.
     # Baskets are lineitems-per-order-bounded (≤7 at any TPC-H scale).
     # persisted: three consumers (count action, item counts, pairs).
-    sets = (
+    sets = materialize.persist(
         li.select("l_orderkey", "l_partkey")
         .groupBy("l_orderkey")
         .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-        .persist()
     )
     n_orders = sets.count()
     item = (

@@ -19,11 +19,11 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import materialize
 from ..catalog.client import RestCatalogClient
 from ..catalog.server import ServerThread
 from ..catalog.spark_table import SparkCatalogTable, iceberg_schema_from_spark
 from ..tables import load
-from ._materialize import driver_sized
 from ._registry import register
 
 
@@ -63,15 +63,18 @@ def q34(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted (r13, guide §5): the modulo slice feeds five appends and
     # two count probes across the flow — without the cache each one
     # re-scans lineitem and re-filters; the slice is 4% of the table and
-    # projected to 4 columns, so the cache is small and released at the
-    # end of the flow.
-    sample = (
-        load(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice")
-        .filter(F.col("l_orderkey") % 25 == 7)
-        .persist()
-    )
-    with ServerThread() as server, tempfile.TemporaryDirectory() as warehouse_dir:
+    # projected to 4 columns, so the cache is small and released with
+    # the flow's own scope (the result rows are driver-built).
+    with (
+        materialize.scope(),
+        ServerThread() as server,
+        tempfile.TemporaryDirectory() as warehouse_dir,
+    ):
+        sample = materialize.persist(
+            load(spark, sf_dir, "lineitem")
+            .select("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice")
+            .filter(F.col("l_orderkey") % 25 == 7)
+        )
         client = RestCatalogClient(server.base_url)
         client.create_warehouse("proj-1", "wh", warehouse_dir)
         client.configure("proj-1", "wh")
@@ -148,7 +151,6 @@ def q34(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("refs", n_refs),
             ("partition_specs_live", len({r["spec_id"] for r in parts_after})),
         ]
-        sample.unpersist()
         return spark.createDataFrame(rows, "metric string, value long")
 
 
@@ -202,7 +204,7 @@ def q82(spark: SparkSession, sf_dir: str) -> DataFrame:
         table.merge(source_rows, on=["c_custkey"])
         out = table.read().orderBy("c_custkey")
         # materialize before the temp warehouse disappears
-        return driver_sized(out)
+        return materialize.driver_sized(out)
 
 
 @register(
@@ -248,7 +250,7 @@ def q83(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("o_orderstatus")
         )
-        return driver_sized(out)
+        return materialize.driver_sized(out)
 
 
 @register(
@@ -316,7 +318,7 @@ def q101(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("total_dec").cast("double").alias("total"),
         ).orderBy("o_orderstatus")
         # materialize before the server/warehouse teardown
-        return driver_sized(out)
+        return materialize.driver_sized(out)
 
 
 @register(
@@ -409,4 +411,4 @@ def q141(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .select(F.lit(phase).alias("phase"), "event_type", "cnt", "sum_user")
             )
         out = frames[0].unionByName(frames[1]).orderBy("phase", "event_type")
-        return driver_sized(out)
+        return materialize.driver_sized(out)

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import materialize
 from ..tables import load
 from ._registry import register
 
@@ -89,7 +90,7 @@ def q146(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "bg.w1", "bg.w2")
     # model tables re-aggregate from the bigram counts — vocab²-sized,
     # persisted so the corpus explode that builds them runs once
-    big = doc_bigrams.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12")).persist()
+    big = materialize.persist(doc_bigrams.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12")))
     uni = big.groupBy("w1").agg(F.sum("c12").alias("c1"))
     vocab = uni.agg(F.count(F.lit(1)).alias("v"))
     logp = F.round(
@@ -175,7 +176,7 @@ def q147(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
     )
-    tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf")).persist()
+    tf = materialize.persist(toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf")))
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("total_tokens")
@@ -261,7 +262,7 @@ def q147(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q148(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     n_docs = docs.select(F.count(F.lit(1)).alias("n_docs"))
-    toks = (
+    toks = materialize.persist(
         docs.crossJoin(F.broadcast(n_docs))
         .select(
             (
@@ -273,7 +274,6 @@ def q148(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("decile"),
             F.explode(F.split(F.col("text"), " ")).alias("tok"),
         )
-        .persist()
     )
     per_decile = toks.groupBy("decile").agg(F.count(F.lit(1)).alias("n_tokens"))
     new_types = (
@@ -358,7 +358,7 @@ def q149(spark: SparkSession, sf_dir: str) -> DataFrame:
         "                 element_at(w, j) AS w2))))"
     )
     pairs = toks.select(F.explode(pairs_col).alias("p")).select("p.w1", "p.w2")
-    pc = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c")).persist()
+    pc = materialize.persist(pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c")))
     lc = pc.groupBy("w1").agg(F.sum("c").alias("cl"))
     rc = pc.groupBy("w2").agg(F.sum("c").alias("cr"))
     tot = pc.agg(F.sum("c").alias("t"))

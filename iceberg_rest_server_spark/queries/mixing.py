@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import materialize
 from ..tables import load
 from ._exact import dec
 from ._registry import register
@@ -804,8 +805,8 @@ def q100(spark: SparkSession, sf_dir: str) -> DataFrame:
     # split+3-gram+distinct pipeline from the scan. The set is
     # benchmark-sized (bounded by the eval suite, not the corpus), so
     # caching it is metadata-scale at any corpus size.
-    bench_grams = (
-        grams.filter(is_bench).select(F.explode("g").alias("gram")).distinct().persist()
+    bench_grams = materialize.persist(
+        grams.filter(is_bench).select(F.explode("g").alias("gram")).distinct()
     )
     bloom = bloom_filter_words(bench_grams, "gram")
     corpus_grams = grams.filter(~is_bench).select("doc_id", F.explode("g").alias("gram"))

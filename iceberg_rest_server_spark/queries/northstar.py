@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import materialize
 from ..operators import dedup, multimodal, similarity, text
 from ..tables import load
 from ._registry import register
@@ -584,7 +585,7 @@ def q40(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     # one scan computes every per-doc feature (gate inputs + outputs);
     # the only joins left are the near-dup victim anti-join
-    enriched = text.curation_columns(docs, "doc_id", "text").persist()
+    enriched = materialize.persist(text.curation_columns(docs, "doc_id", "text"))
     kept = enriched.filter(F.col("passes_quality") & (F.col("n_cjk") == 0))
     victims = (
         dedup.exact_jaccard_pairs(kept, "doc_id", "text", n=3, threshold=0.8)
@@ -849,7 +850,9 @@ def q96(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     # persisted: both consumers (PageRank's edge list and the CC label
     # propagation) would otherwise re-run the whole near-dup verify
-    pairs = dedup.exact_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.8).persist()
+    pairs = materialize.persist(
+        dedup.exact_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.8)
+    )
     return (
         # 8 iterations: the emitted invariants (mass conservation, rank
         # floor) hold at EVERY iteration and the cluster structure is
@@ -1133,7 +1136,7 @@ def q126(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus-sized explode+partial-agg runs exactly once and the three
     # consumers re-read the vocab²-sized cache (tests/test_plans.py
     # asserts the single-scan shape).
-    big = bigrams.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12")).persist()
+    big = materialize.persist(bigrams.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12")))
     uni = big.groupBy(F.col("w1").alias("tok")).agg(F.sum("c12").alias("c"))
     tot = big.agg(F.sum("c12").alias("n"))
     pmi = F.round(

@@ -51,6 +51,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import materialize
 from ..tables import load
 from ._registry import register
 
@@ -304,50 +305,50 @@ def _cosupply_edges(li: DataFrame) -> DataFrame:
 )
 def q157(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
-    edges = _cosupply_edges(li).persist()
+    with materialize.scope() as owned:  # edges; the result is kept
+        edges = materialize.persist(_cosupply_edges(li))
 
-    # Degree orientation: orient each undirected edge from the endpoint
-    # with the smaller (degree, id) pair. Wedge fan-out is then bounded
-    # by the graph's arboricity instead of its max degree.
-    deg = (
-        edges.select(F.col("u").alias("n"))
-        .unionAll(edges.select(F.col("v").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    du = deg.select(F.col("n").alias("u"), F.col("d").alias("du"))
-    dv = deg.select(F.col("n").alias("v"), F.col("d").alias("dv"))
-    ranked = edges.join(F.broadcast(du), "u").join(F.broadcast(dv), "v")
-    lower_first = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    oriented = ranked.select(
-        F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("src"),
-        F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
-        F.when(lower_first, F.col("du")).otherwise(F.col("dv")).alias("dsrc"),
-        F.when(lower_first, F.col("dv")).otherwise(F.col("du")).alias("ddst"),
-    )
+        # Degree orientation: orient each undirected edge from the endpoint
+        # with the smaller (degree, id) pair. Wedge fan-out is then bounded
+        # by the graph's arboricity instead of its max degree.
+        deg = (
+            edges.select(F.col("u").alias("n"))
+            .unionAll(edges.select(F.col("v").alias("n")))
+            .groupBy("n")
+            .agg(F.count(F.lit(1)).alias("d"))
+        )
+        du = deg.select(F.col("n").alias("u"), F.col("d").alias("du"))
+        dv = deg.select(F.col("n").alias("v"), F.col("d").alias("dv"))
+        ranked = edges.join(F.broadcast(du), "u").join(F.broadcast(dv), "v")
+        lower_first = (F.col("du") < F.col("dv")) | (
+            (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
+        )
+        oriented = ranked.select(
+            F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("src"),
+            F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
+            F.when(lower_first, F.col("du")).otherwise(F.col("dv")).alias("dsrc"),
+            F.when(lower_first, F.col("dv")).otherwise(F.col("du")).alias("ddst"),
+        )
 
-    # Wedges from a common low-degree source; keep one ordering per pair
-    # (by the same (degree, id) rank) so each triangle closes exactly once.
-    e1, e2 = oriented.alias("e1"), oriented.alias("e2")
-    wedges = e1.join(e2, F.col("e1.src") == F.col("e2.src")).filter(
-        (F.col("e1.ddst") < F.col("e2.ddst"))
-        | ((F.col("e1.ddst") == F.col("e2.ddst")) & (F.col("e1.dst") < F.col("e2.dst")))
-    )
-    closing = oriented.select(F.col("src").alias("x"), F.col("dst").alias("y"))
-    tri = wedges.join(
-        closing,
-        (F.col("e1.dst") == F.col("x")) & (F.col("e2.dst") == F.col("y")),
-        "left_semi",
-    )
+        # Wedges from a common low-degree source; keep one ordering per pair
+        # (by the same (degree, id) rank) so each triangle closes exactly once.
+        e1, e2 = oriented.alias("e1"), oriented.alias("e2")
+        wedges = e1.join(e2, F.col("e1.src") == F.col("e2.src")).filter(
+            (F.col("e1.ddst") < F.col("e2.ddst"))
+            | ((F.col("e1.ddst") == F.col("e2.ddst")) & (F.col("e1.dst") < F.col("e2.dst")))
+        )
+        closing = oriented.select(F.col("src").alias("x"), F.col("dst").alias("y"))
+        tri = wedges.join(
+            closing,
+            (F.col("e1.dst") == F.col("x")) & (F.col("e2.dst") == F.col("y")),
+            "left_semi",
+        )
 
-    n_tri = tri.agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
-    n_edges = edges.agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
-    n_nodes = deg.agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
-    out = n_nodes.crossJoin(n_edges).crossJoin(n_tri)
-    result = out.localCheckpoint(eager=True)
-    edges.unpersist()
+        n_tri = tri.agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
+        n_edges = edges.agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
+        n_nodes = deg.agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
+        out = n_nodes.crossJoin(n_edges).crossJoin(n_tri)
+        result = owned.keep(materialize.checkpoint(out, eager=True))
     return result
 
 
@@ -573,43 +574,41 @@ def q159(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q176(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     e0 = _cosupply_edges(li)
-    edges = e0.unionByName(
-        e0.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).persist()
-    src = edges.agg(F.min("u")).collect()[0][0]
     schema = "node long, dist int"
-    if src is None:  # no edge reaches the support threshold at this sf
-        edges.unpersist()
-        return spark.createDataFrame([], schema).groupBy("dist").agg(
-            F.count(F.lit(1)).cast("long").alias("n_nodes"),
-            F.sum("node").cast("long").alias("sum_keys"),
+    with materialize.scope() as owned:  # edges; every level is kept
+        edges = materialize.persist(
+            e0.unionByName(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
         )
-    # r13 (guide §1.2/§5): ONE action per level instead of three. The
-    # new frontier is checkpointed lazily and materialized by the same
-    # count() that drives the exit test (previously: eager checkpoint
-    # job + isEmpty job), and the visited set is kept as the list of
-    # per-level checkpointed frontiers — the anti-join unions the cached
-    # pieces instead of re-materializing a growing visited table every
-    # level (previously: one more full pass over visited per level).
-    levels = [
-        spark.createDataFrame([(int(src), 0)], schema).localCheckpoint(eager=True)
-    ]
-    frontier = levels[0].select("node")
-    for level in range(1, 9):
-        visited_nodes = reduce(DataFrame.unionByName, levels).select("node")
-        nxt = (
-            frontier.join(edges, frontier["node"] == edges["u"])
-            .select(F.col("v").alias("node"))
-            .distinct()
-            .join(visited_nodes, "node", "left_anti")
-            .withColumn("dist", F.lit(level))
-            .localCheckpoint(eager=False)
-        )
-        if nxt.count() == 0:
-            break
-        levels.append(nxt)
-        frontier = nxt.select("node")
-    edges.unpersist()
+        src = edges.agg(F.min("u")).collect()[0][0]
+        if src is None:  # no edge reaches the support threshold at this sf
+            return spark.createDataFrame([], schema).groupBy("dist").agg(
+                F.count(F.lit(1)).cast("long").alias("n_nodes"),
+                F.sum("node").cast("long").alias("sum_keys"),
+            )
+        # r13 (guide §1.2/§5): ONE action per level instead of three. The
+        # new frontier is checkpointed lazily and materialized by the same
+        # count() that drives the exit test (previously: eager checkpoint
+        # job + isEmpty job), and the visited set is kept as the list of
+        # per-level checkpointed frontiers — the anti-join unions the
+        # cached pieces instead of re-materializing a growing visited
+        # table every level (previously: one more full pass over visited
+        # per level).
+        first = spark.createDataFrame([(int(src), 0)], schema)
+        levels = [owned.keep(materialize.checkpoint(first, eager=True))]
+        frontier = levels[0].select("node")
+        for level in range(1, 9):
+            visited_nodes = reduce(DataFrame.unionByName, levels).select("node")
+            nxt = materialize.checkpoint(
+                frontier.join(edges, frontier["node"] == edges["u"])
+                .select(F.col("v").alias("node"))
+                .distinct()
+                .join(visited_nodes, "node", "left_anti")
+                .withColumn("dist", F.lit(level))
+            )
+            if nxt.count() == 0:
+                break
+            levels.append(owned.keep(nxt))
+            frontier = nxt.select("node")
     return (
         reduce(DataFrame.unionByName, levels)
         .groupBy("dist")

@@ -21,8 +21,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..materialize import driver_sized
 from ..tables import load
-from ._materialize import driver_sized
 from ._registry import register
 
 

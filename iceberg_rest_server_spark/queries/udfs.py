@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType
 
+from .. import materialize
 from ..tables import load
 from ._registry import register
 
@@ -159,7 +160,7 @@ def q118(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.udtf.register("q118_tokenize", Tokenize)
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
-    docs.createOrReplaceTempView("q118_docs")
+    materialize.temp_view(docs, "q118_docs")
     return spark.sql(
         """
         SELECT d.doc_id, t.token, count(*) AS cnt

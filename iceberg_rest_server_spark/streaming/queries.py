@@ -16,7 +16,6 @@ as tables.load().
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 import tempfile
 import uuid
@@ -31,7 +30,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..queries._materialize import driver_sized
+from ..materialize import driver_sized
 from ._registry_hook import register
 
 def _events_raw_schema(ts_type) -> StructType:
@@ -82,6 +81,10 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events_ts(raw)
 
 
+# Shuffle (= state-store) partitions of a replay drain; see run_to_table.
+STREAM_PARTITIONS = 2
+
+
 def run_to_table(stream_df: DataFrame, spark: SparkSession, output_mode: str) -> DataFrame:
     """Drain an availableNow replay into a memory sink; return the result.
 
@@ -96,8 +99,8 @@ def run_to_table(stream_df: DataFrame, spark: SparkSession, output_mode: str) ->
     instances per partition per batch, so 8 partitions = 32 store
     commits each batch while the whole replay holds ~40k state rows).
     A production stream sizes this to sustained throughput instead
-    (state partitions are fixed at the first checkpoint); the knob is
-    env-tunable for that reason.
+    (state partitions are fixed at the first checkpoint); the replay
+    harness pins ``STREAM_PARTITIONS``.
 
     NOTE: the override mutates the session-global shuffle-partition conf
     for the duration of the drain (restored in ``finally``). Callers are
@@ -106,10 +109,9 @@ def run_to_table(stream_df: DataFrame, spark: SparkSession, output_mode: str) ->
     multi-tenant session, plan the stream on a cloned session
     (``spark.newSession()``) instead.
     """
-    parts = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "2")
     before = spark.conf.get("spark.sql.shuffle.partitions")
     name = f"stream_result_{uuid.uuid4().hex}"
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
+    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_PARTITIONS))
     try:
         q = (
             stream_df.writeStream.format("memory")
@@ -119,13 +121,6 @@ def run_to_table(stream_df: DataFrame, spark: SparkSession, output_mode: str) ->
             .start()
         )
         q.awaitTermination()
-        # expose the drain's per-micro-batch progress (state-store row
-        # counts, watermark advance) for the EXPLAIN.md state-bound
-        # evidence — observability only, never part of a result
-        global LAST_PROGRESS
-        LAST_PROGRESS = [
-            p if isinstance(p, dict) else json.loads(p.json) for p in q.recentProgress
-        ]
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
     # the frame keeps the sink's rows once planned; dropping the view
@@ -133,11 +128,6 @@ def run_to_table(stream_df: DataFrame, spark: SparkSession, output_mode: str) ->
     result = spark.table(name)
     spark.catalog.dropTempView(name)
     return result
-
-
-# per-drain StreamingQueryProgress dicts from the most recent
-# run_to_table call (see above)
-LAST_PROGRESS: list[dict] = []
 
 
 @register(

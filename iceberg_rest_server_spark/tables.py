@@ -11,6 +11,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import materialize
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -64,6 +66,7 @@ def load_events(spark: SparkSession, path: str) -> DataFrame:
 
 
 def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES) -> None:
-    """Register temp views for SQL-expressed queries (subqueries/CTEs)."""
+    """Register temp views for SQL-expressed queries (subqueries/CTEs),
+    owned by the caller's materialize scope."""
     for name in names:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)
+        materialize.temp_view(load(spark, sf_dir, name), name)

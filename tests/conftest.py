@@ -19,6 +19,16 @@ def spark():
     yield spark
 
 
+@pytest.fixture(autouse=True)
+def query_scope():
+    """Each test is one caller of the package: every cache, checkpoint and
+    temp view it creates is released when the test ends."""
+    from iceberg_rest_server_spark import materialize
+
+    with materialize.scope():
+        yield
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", SF_CORRECTNESS)

@@ -15,40 +15,27 @@ def _pairs(df, cols=("id1", "id2")):
 def test_jaccard_bitmap_verify_equals_array_verify(spark, sf_dir):
     """The adaptive bitmap verify (dictionary-encoded gram sets,
     bit_count(AND)) must be bit-identical to the array_intersect verify
-    it replaces on small-vocabulary corpora."""
+    it replaces on small-vocabulary corpora. _BITMAP_MAX_GRAMS = 0 is
+    also how tools/scaling.py pins the array verify across a ladder."""
     from iceberg_rest_server_spark.operators import dedup
     from iceberg_rest_server_spark.tables import load
 
     docs = load(spark, sf_dir, "documents")
     fast = dedup.exact_jaccard_pairs(docs, "doc_id", "text").orderBy("id1", "id2")
+    # bitmap-path fingerprint: pure codegen over the self-join, no
+    # lineage barrier
+    assert "ExistingRDD" not in fast._jdf.queryExecution().toString()
     old = dedup._BITMAP_MAX_GRAMS
     try:
         dedup._BITMAP_MAX_GRAMS = 0  # force the array path
         slow = dedup.exact_jaccard_pairs(docs, "doc_id", "text").orderBy("id1", "id2")
-        assert fast.collect() == slow.collect()
+        # array-path fingerprint: its lineage barrier (localCheckpoint)
+        # leaves an ExistingRDD scan in the plan
+        assert "ExistingRDD" in slow._jdf.queryExecution().toString()
+        rows = fast.collect()
+        assert rows and rows == slow.collect()
     finally:
         dedup._BITMAP_MAX_GRAMS = old
-
-
-def test_jaccard_verify_env_override_pins_strategy(spark, sf_dir, monkeypatch):
-    """SPARK_GRAFT_JACCARD_VERIFY is the tools/scaling.py measurement
-    control: 'array'/'bitmap' must pin the strategy regardless of the
-    corpus-stats cutover, with identical (exact) results either way."""
-    from iceberg_rest_server_spark.operators import dedup
-    from iceberg_rest_server_spark.tables import load
-
-    docs = load(spark, sf_dir, "documents")
-    monkeypatch.setenv("SPARK_GRAFT_JACCARD_VERIFY", "array")
-    forced_array = dedup.exact_jaccard_pairs(docs, "doc_id", "text")
-    # array-path fingerprint: its lineage barrier (localCheckpoint)
-    # leaves an ExistingRDD scan in the plan; the bitmap path is pure
-    # codegen over the self-join
-    assert "ExistingRDD" in forced_array._jdf.queryExecution().toString()
-    monkeypatch.setenv("SPARK_GRAFT_JACCARD_VERIFY", "bitmap")
-    forced_bitmap = dedup.exact_jaccard_pairs(docs, "doc_id", "text")
-    rows_a = sorted(map(tuple, forced_array.select("id1", "id2").collect()))
-    rows_b = sorted(map(tuple, forced_bitmap.select("id1", "id2").collect()))
-    assert rows_a == rows_b and rows_a
 
 
 def test_minhash_lsh_equals_exact(spark, sf_dir):

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import pytest
 
+from iceberg_rest_server_spark import materialize
 from iceberg_rest_server_spark.oracle import compare_frames
 from iceberg_rest_server_spark.queries._registry import REGISTRY
 
@@ -59,13 +60,14 @@ FLOAT_EMITTERS = [
 
 @pytest.mark.parametrize("name", FLOAT_EMITTERS)
 def test_partition_count_invariance(spark, sf_dir, name):
-    base = REGISTRY[name].fn(spark, sf_dir).toPandas()
+    with materialize.scope():
+        base = REGISTRY[name].fn(spark, sf_dir).toPandas()
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "7")
-        alt = REGISTRY[name].fn(spark, sf_dir).toPandas()
+        with materialize.scope():
+            alt = REGISTRY[name].fn(spark, sf_dir).toPandas()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
-        spark.catalog.clearCache()  # q126 persists its bigram counts
     r = compare_frames(name, base, alt)
     assert r.ok, f"{name} varies with partition count: {r.detail} {r.diffs[:3]}"

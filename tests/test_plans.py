@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import pytest
 
+from conftest import SF_CORRECTNESS
 from iceberg_rest_server_spark.queries import REGISTRY
 
 
@@ -114,21 +115,17 @@ def test_q126_bigram_explode_runs_once(spark, sf_dir):
     measured 7 corpus scans without it): every consumer of the bigram
     counts reads the InMemoryRelation, and no consumer re-derives it
     from a raw documents scan."""
-    df = REGISTRY["q126_pmi_collocations"].fn(spark, sf_dir)
-    try:
-        plan = _plan(df)
-        assert "InMemoryTableScan" in plan, "bigram counts not cached"
-        # Every appearance of the documents scan must be INSIDE the
-        # cached relation's stored build plan — on the live execution
-        # side of each InMemoryTableScan there is no other path to the
-        # corpus, so pre-cache-build the plan shows exactly the one
-        # explode subtree, repeated per cached-scan print.
-        segments = plan.split("InMemoryTableScan")
-        assert "documents.parquet" not in segments[0], (
-            "a consumer still scans the corpus directly above the cache"
-        )
-    finally:
-        spark.catalog.clearCache()
+    plan = _plan(REGISTRY["q126_pmi_collocations"].fn(spark, sf_dir))
+    assert "InMemoryTableScan" in plan, "bigram counts not cached"
+    # Every appearance of the documents scan must be INSIDE the
+    # cached relation's stored build plan — on the live execution
+    # side of each InMemoryTableScan there is no other path to the
+    # corpus, so pre-cache-build the plan shows exactly the one
+    # explode subtree, repeated per cached-scan print.
+    segments = plan.split("InMemoryTableScan")
+    assert "documents.parquet" not in segments[0], (
+        "a consumer still scans the corpus directly above the cache"
+    )
 
 
 def test_q147_bm25_is_broadcast_probe(spark, sf_dir):
@@ -136,40 +133,31 @@ def test_q147_bm25_is_broadcast_probe(spark, sf_dir):
     BROADCAST query terms and scalars — no shuffle of the corpus against
     the 5-row query side, no cartesian fallback beyond the two 1-row
     scalar cross joins."""
-    df = REGISTRY["q147_bm25_topk"].fn(spark, sf_dir)
-    try:
-        plan = _plan(df)
-        assert "BroadcastHashJoin" in plan
-        assert "SortMergeJoin" not in plan
-    finally:
-        spark.catalog.clearCache()
+    plan = _plan(REGISTRY["q147_bm25_topk"].fn(spark, sf_dir))
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
 
 
 def test_q146_model_join_broadcasts_and_counts_cached(spark, sf_dir):
     """q146: the vocab²-sized model table broadcasts onto the corpus
     explode, and the bigram counts are persisted (the model derivations
     must not re-explode the corpus)."""
-    df = REGISTRY["q146_bigram_lm_perplexity"].fn(spark, sf_dir)
-    try:
-        plan = _plan(df)
-        assert "InMemoryTableScan" in plan
-        assert "BroadcastHashJoin" in plan
-    finally:
-        spark.catalog.clearCache()
+    plan = _plan(REGISTRY["q146_bigram_lm_perplexity"].fn(spark, sf_dir))
+    assert "InMemoryTableScan" in plan
+    assert "BroadcastHashJoin" in plan
 
 
 def test_no_unguarded_driver_collect_sites():
     """Every createDataFrame(<df>.collect(), ...) round-trip must go
-    through queries/_materialize.driver_sized (bounded LIMIT + row-count
-    guard) — a raw site silently ships a data-sized result through the
-    driver."""
+    through materialize.driver_sized (bounded LIMIT + row-count guard) —
+    a raw site silently ships a data-sized result through the driver."""
     import pathlib
     import re
 
     pkg = pathlib.Path(__file__).resolve().parents[1] / "iceberg_rest_server_spark"
     offenders = []
     for path in pkg.rglob("*.py"):
-        if path.name == "_materialize.py":
+        if path == pkg / "materialize.py":
             continue
         src = path.read_text()
         # literal-rows createDataFrame([...], schema) is fine; flag only
@@ -197,6 +185,29 @@ def test_manifest_io_has_one_owner():
         if path != owner and re.search(r"manifest-list|manifest-\{", path.read_text())
     ]
     assert not offenders, f"manifest I/O outside catalog/snapshots.py: {offenders}"
+
+
+def test_materialization_has_one_owner():
+    """Only materialize.py persists, checkpoints, registers temp views or
+    releases: every other module goes through its scoped helpers, so no
+    cache, checkpoint or view is created outside a lifetime the scopes
+    track — a raw df.persist(), a localCheckpoint or an RDD-id release
+    beside the scope fails here."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "iceberg_rest_server_spark"
+    owner = pkg / "materialize.py"
+    raw = re.compile(
+        r"(?<!materialize)\.(persist|localCheckpoint|unpersist)\(|\.cache\(\)"
+        r"|getPersistentRDDs|createOrReplaceTempView"
+    )
+    offenders = [
+        str(path)
+        for path in pkg.rglob("*.py")
+        if path != owner and raw.search(path.read_text())
+    ]
+    assert not offenders, f"materialization outside materialize.py: {offenders}"
 
 
 def test_q151_selection_is_dim_parallel_and_fences_broadcast(spark, sf_dir):
@@ -392,11 +403,8 @@ def test_explain_md_not_stale(spark, name):
         md = fh.read()
     committed = _AUDIT.plan_shape_normalized(_AUDIT.committed_plan(md, name))
     assert committed, f"EXPLAIN.md section missing/unparseable: {name}"
-    try:
-        df = _AUDIT.build(name, spark, "/root/testdata/sf0.01")
-        live = _AUDIT.plan_shape_normalized(_AUDIT.explain_formatted(df))
-    finally:
-        spark.catalog.clearCache()
+    df = _AUDIT.build(name, spark, SF_CORRECTNESS)
+    live = _AUDIT.plan_shape_normalized(_AUDIT.explain_formatted(df))
     assert live == committed, (
         f"EXPLAIN.md is stale for {name} — run `python tools/"
         f"explain_audit.py` and review the prose.\n"

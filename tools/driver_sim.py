@@ -19,6 +19,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     import __spark_entry__ as e
+    from iceberg_rest_server_spark import materialize
     from iceberg_rest_server_spark.oracle import compare_frames, duck_connect
     from iceberg_rest_server_spark.session import get_spark
 
@@ -29,7 +30,8 @@ def main() -> int:
     names = e.queries()
     bad: list[tuple] = []
     for i, (name, fn) in enumerate(names.items()):
-        pdf = fn(spark, sf_dir).toPandas()
+        with materialize.scope():  # the query releases what it materialized
+            pdf = fn(spark, sf_dir).toPandas()
         status = "rows-only"
         if name in osql:
             r = compare_frames(name, pdf, con.sql(osql[name]).df())

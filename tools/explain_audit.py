@@ -10,6 +10,7 @@ join shapes, and the absence of cartesian products.
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
@@ -29,7 +30,7 @@ HEADLINE = [
         "re-verified r11): the registry corpora measure exactly 377 "
         "distinct trigrams at sf0.001/sf0.01/sf0.1 (pinned by tests/"
         "test_operators.py::test_bitmap_strategy_runs_at_registry_scale), "
-        "so `auto` selects THIS bitmap-verify plan at every registry "
+        "so the cutover selects THIS bitmap-verify plan at every registry "
         "scale factor — the cutover only re-routes >1024-gram corpora "
         "(e.g. the cipher-scaled SCALING.md ladder) to the array path.",
     ),
@@ -386,6 +387,7 @@ def explain_formatted(df) -> str:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    from iceberg_rest_server_spark import materialize
     from iceberg_rest_server_spark.queries import REGISTRY
     from iceberg_rest_server_spark.session import get_spark
 
@@ -399,9 +401,8 @@ def main() -> None:
         "",
     ]
     for name, why in HEADLINE:
-        df = build(name, spark, sf_dir)
-        plan = explain_formatted(df)
-        spark.catalog.clearCache()
+        with materialize.scope():
+            plan = explain_formatted(build(name, spark, sf_dir))
         out.append(f"## {name}")
         out.append("")
         out.append(f"_{why}_")
@@ -444,8 +445,51 @@ STATEFUL = [
 ]
 
 
+def _drain_progress(spark, fn) -> list[dict]:
+    """Run ``fn`` and return the StreamingQueryProgress dicts of every
+    stream it drains, in order, from a listener registered around it."""
+    import threading
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class Progress(StreamingQueryListener):
+        def __init__(self) -> None:
+            self.batches: list[dict] = []
+            self.running: set = set()
+            self.idle = threading.Event()
+            self.idle.set()
+
+        def onQueryStarted(self, event) -> None:
+            self.running.add(event.id)
+            self.idle.clear()
+
+        def onQueryProgress(self, event) -> None:
+            self.batches.append(json.loads(event.progress.json))
+
+        def onQueryIdle(self, event) -> None:
+            pass
+
+        def onQueryTerminated(self, event) -> None:
+            # the listener bus is ordered: a query's last progress event
+            # arrives before its termination event
+            self.running.discard(event.id)
+            if not self.running:
+                self.idle.set()
+
+    listener = Progress()
+    spark.streams.addListener(listener)
+    try:
+        fn()
+        if not listener.idle.wait(timeout=60):
+            raise TimeoutError("stream termination event not delivered")
+    finally:
+        spark.streams.removeListener(listener)
+    return listener.batches
+
+
 def _streaming_state_evidence(spark, sf_dir: str) -> list[str]:
-    from iceberg_rest_server_spark.streaming import queries as sq
+    from iceberg_rest_server_spark import materialize
+    from iceberg_rest_server_spark.queries import REGISTRY
 
     out = [
         "## Streaming state-bound evidence (per-micro-batch StateStore rows)",
@@ -458,9 +502,10 @@ def _streaming_state_evidence(spark, sf_dir: str) -> list[str]:
         "",
     ]
     for name, why in STATEFUL:
-        from iceberg_rest_server_spark.queries import REGISTRY
-
-        REGISTRY[name].fn(spark, sf_dir).collect()
+        with materialize.scope():  # the drain runs while the query is built
+            progress = _drain_progress(
+                spark, lambda: REGISTRY[name].fn(spark, sf_dir).collect()
+            )
         out.append(f"### {name}")
         out.append("")
         out.append(f"_{why}_")
@@ -470,7 +515,7 @@ def _streaming_state_evidence(spark, sf_dir: str) -> list[str]:
             "added | removed |"
         )
         out.append("|---|---|---|---|---|---|---|")
-        for p in sq.LAST_PROGRESS:
+        for p in progress:
             wm = (p.get("eventTime") or {}).get("watermark", "-")
             for op in p.get("stateOperators", []):
                 out.append(

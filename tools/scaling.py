@@ -122,9 +122,9 @@ CONTROL_SCALES = [64, 128, 256]
 # char-trigram corpora saturate; the cipher corpus inflates vocabulary
 # x k by construction — the price of keeping copies disjoint). So the
 # exact tier runs EXACT_SCALES with the ARRAY strategy pinned
-# (SPARK_GRAFT_JACCARD_VERIFY=array): ONE strategy across the ladder,
-# or the auto bitmap/array cutover's flip between points would read as
-# fake super-linearity.
+# (dedup._BITMAP_MAX_GRAMS = 0): ONE strategy across the ladder, or the
+# bitmap/array cutover's flip between points would read as fake
+# super-linearity.
 EXACT_TIER = {
     "q32_ngram_jaccard_pairs",
     "q49_dedup_clusters",
@@ -302,6 +302,8 @@ def measure(name: str) -> None:
     warm-up run absorbs C2 compilation + Python-worker spawn for this
     query's plan shapes; plan shapes are scale-invariant, so later
     scales run JIT-warm and the growth ratio is clean."""
+    from iceberg_rest_server_spark import materialize
+    from iceberg_rest_server_spark.operators import dedup
     from iceberg_rest_server_spark.queries import REGISTRY
     from iceberg_rest_server_spark.session import get_spark
 
@@ -311,7 +313,7 @@ def measure(name: str) -> None:
     elif name in EXACT_TIER:
         scales = EXACT_SCALES
         # pin ONE verify strategy across the ladder (see EXACT_TIER)
-        os.environ["SPARK_GRAFT_JACCARD_VERIFY"] = "array"
+        dedup._BITMAP_MAX_GRAMS = 0
     else:
         scales = SCALES
     extra_conf = {
@@ -338,9 +340,9 @@ def measure(name: str) -> None:
 
     def run(sf_dir: str) -> float:
         t0 = time.perf_counter()
-        q.fn(spark, sf_dir).toPandas()
-        dt = time.perf_counter() - t0
-        spark.catalog.clearCache()
+        with materialize.scope():
+            q.fn(spark, sf_dir).toPandas()
+            dt = time.perf_counter() - t0
         spark.sparkContext._jvm.System.gc()
         return dt
 
@@ -575,7 +577,7 @@ def write_report(results: list[dict], failures: list[str]) -> None:
         "",
         "The EXACT near-dup tier (q32_ngram/q49/q96) runs a [1, 2, 4]",
         "ladder (3-point fit since r11) with the array verify strategy",
-        "pinned (SPARK_GRAFT_JACCARD_VERIFY=array): its cost driver is",
+        "pinned (dedup._BITMAP_MAX_GRAMS = 0): its cost driver is",
         "the corpus's ~4.5M-per-copy j>=0.5 template-similar candidate",
         "mass (linear in scale, every pair touched by ANY exact",
         "verifier, each shipping ~2.2 KB of gram arrays), which exceeds",
