@@ -7,12 +7,15 @@ obtainable here: every response body the conformance replay produces is
 checked for required fields / types / enum values against the schema a
 real RESTCatalog client is generated from.
 
-Used two ways:
+Used two ways, both wherever SPEC_PATH exists (``HAVE_SPEC``):
   - test_protocol_conformance._req validates EVERY catalog exchange it
     makes (a missing field anywhere in the suite renders as that test's
-    failure);
+    failure); without the document it skips this layer and each test
+    still makes its own status, shape and envelope assertions;
   - test_openapi_contract.py unit-tests the validator itself (a
-    deliberately corrupted body must fail) and asserts coverage.
+    deliberately corrupted body must fail) and asserts coverage; those
+    tests skip, with SPEC_PATH in the reason, where the document is
+    absent.
 
 OpenAPI 3.0 schemas are almost-JSON-Schema; the two gaps that matter
 here are bridged at load time: ``nullable: true`` becomes a null-
@@ -24,12 +27,16 @@ structural check still applies in full.
 from __future__ import annotations
 
 import functools
+import os
 from typing import Any
 
 import jsonschema
 import yaml
 
 SPEC_PATH = "/root/reference/openapi/rest-catalog-open-api.yaml"
+# the reference checkout that holds the document is not always present;
+# validation runs exactly where it is, and nothing else gates it
+HAVE_SPEC = os.path.exists(SPEC_PATH)
 
 # served route-space -> spec route-space: the server mounts the Iceberg
 # catalog API under /catalog (reference serves it the same way; the

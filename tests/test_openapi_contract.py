@@ -2,8 +2,14 @@
 a required field, carrying a wrong type, or using a null where the
 contract forbids one has to FAIL, and the happy path has to pass. (The
 validator is wired into every exchange test_protocol_conformance._req
-makes; these tests prove that wiring actually detects drift — r8 verdict
-missing #1: nothing validated response bodies structurally before.)"""
+makes wherever the document exists; these tests prove that wiring
+actually detects drift — r8 verdict missing #1: nothing validated
+response bodies structurally before.)
+
+Every test here that needs the document skips where SPEC_PATH is absent
+(``needs_spec``; the reason names the path), so a run without the
+reference checkout reports that OpenAPI validation was off. The scrub
+test needs no document and always runs."""
 
 from __future__ import annotations
 
@@ -11,15 +17,22 @@ import http.client
 import json
 
 import pytest
-from openapi_schema import spec, validate_request, validate_response
+from openapi_schema import HAVE_SPEC, SPEC_PATH, spec
+from openapi_schema import validate_request, validate_response
 
 from iceberg_rest_server_spark.catalog.server import ServerThread
 from iceberg_rest_server_spark.catalog.server import _scrub_metadata_nulls
 
 
+needs_spec = pytest.mark.skipif(
+    not HAVE_SPEC,
+    reason=f"{SPEC_PATH} absent: the reference checkout is not present",
+)
+
 GOOD_ERROR = {"error": {"message": "nope", "type": "NoSuchTableException", "code": 404}}
 
 
+@needs_spec
 def test_error_envelope_schema_enforced():
     path = "/catalog/v1/p/namespaces/ns/tables/t"
     assert validate_response("GET", path, 404, GOOD_ERROR)
@@ -33,6 +46,7 @@ def test_error_envelope_schema_enforced():
         )
 
 
+@needs_spec
 def test_off_document_status_fallback_is_bounded():
     """ADVICE r9: the off-document fallback exists for exactly the two
     families the reference emits outside its own document — axum-level
@@ -58,6 +72,7 @@ def test_off_document_status_fallback_is_bounded():
     assert validate_response("GET", path, 405, bad_req)
 
 
+@needs_spec
 def test_load_table_result_schema_enforced():
     path = "/catalog/v1/p/namespaces/ns/tables/t"
     md = {
@@ -89,6 +104,7 @@ def test_load_table_result_schema_enforced():
         )
 
 
+@needs_spec
 def test_route_matching_specificity_and_mount():
     # literal segment wins over {param}: /tables/rename is renameTable,
     # not namespaces/{namespace}
@@ -111,6 +127,7 @@ def test_route_matching_specificity_and_mount():
         validate_response("GET", "/catalog/v1/p/not-a-route", 200, {})
 
 
+@needs_spec
 def test_request_validation_has_teeth():
     path = "/catalog/v1/p/namespaces"
     good = {"namespace": ["ns"], "properties": {}}
@@ -170,6 +187,7 @@ def test_scrub_drops_null_optionals_but_keeps_page_token():
     assert out["next-page-token"] is None
 
 
+@needs_spec
 def test_live_server_responses_validate(tmp_path):
     """End-to-end: raw exchanges against a live server all validate —
     including the table-metadata shape after a real create."""
@@ -241,6 +259,7 @@ def test_live_server_responses_validate(tmp_path):
     assert checked >= 5  # config, ns, create, load, 404 all schema-checked
 
 
+@needs_spec
 def test_every_implemented_spec_route_validates(tmp_path):
     """Route-coverage map: one validated exchange per OpenAPI path the
     server implements (the 501 parity stubs validate against the error
@@ -408,6 +427,7 @@ def test_every_implemented_spec_route_validates(tmp_path):
     assert templates <= hit, sorted(templates - hit)
 
 
+@needs_spec
 def test_spec_document_is_the_references_own():
     doc = spec()
     assert doc["info"]["title"] == "Apache Iceberg REST Catalog API"
