@@ -1,16 +1,24 @@
-"""Python client for the catalog REST API (urllib, stdlib-only) —
+"""Python client for the catalog REST API (http.client, stdlib-only) —
 the same protocol surface Spark's RESTCatalog/pyiceberg speak to the
-reference (tests/python/tests/conftest.py:204-226)."""
+reference (tests/python/tests/conftest.py:204-226).
+
+Each client keeps one persistent HTTP/1.1 connection per thread, as
+Iceberg's pooled Java HTTPClient does, so successive requests skip the
+TCP handshake and the server's per-connection thread start."""
 
 from __future__ import annotations
 
+import http.client
 import json
-import urllib.error
+import threading
 import urllib.parse
-import urllib.request
 from typing import Any
 
 from .store import UNIT_SEPARATOR
+
+# a kept-alive connection the server has since closed (idle timeout,
+# restart) fails with one of these before any response arrives
+_STALE_CONNECTION = (http.client.RemoteDisconnected, BrokenPipeError, ConnectionResetError)
 
 
 class CatalogHTTPError(Exception):
@@ -24,24 +32,43 @@ class CatalogHTTPError(Exception):
 class RestCatalogClient:
     def __init__(self, base_url: str):
         self.base_url = base_url.rstrip("/")
+        url = urllib.parse.urlsplit(self.base_url)
+        self._netloc, self._base_path = url.netloc, url.path
+        self._local = threading.local()  # .conn: this thread's connection
         self.prefix: str | None = None
 
     def _request(self, method: str, path: str, body: dict | None = None) -> dict | None:
-        url = f"{self.base_url}{path}"
         data = None if body is None else json.dumps(body).encode()
-        req = urllib.request.Request(url, data=data, method=method)
-        req.add_header("Content-Type", "application/json")
+        headers = {"Content-Type": "application/json"}
+        url = self._base_path + path
+        conn = getattr(self._local, "conn", None)
+        reused = conn is not None
+        if not reused:
+            conn = self._local.conn = http.client.HTTPConnection(self._netloc)
         try:
-            with urllib.request.urlopen(req) as resp:
-                raw = resp.read()
-                return json.loads(raw) if raw else None
-        except urllib.error.HTTPError as e:
-            raw = e.read()
+            try:
+                conn.request(method, url, data, headers)
+                resp = conn.getresponse()
+            except _STALE_CONNECTION:
+                if not reused:
+                    raise
+                # reconnect once: request() reopens a closed connection
+                conn.close()
+                conn.request(method, url, data, headers)
+                resp = conn.getresponse()
+            raw = resp.read()
+        except BaseException:
+            # a failed exchange leaves the connection in an unknown state
+            conn.close()
+            self._local.conn = None
+            raise
+        if resp.status >= 400:
             try:
                 payload = json.loads(raw) if raw else {}
             except json.JSONDecodeError:
                 payload = {}
-            raise CatalogHTTPError(e.code, payload.get("error", {"message": raw.decode()}))
+            raise CatalogHTTPError(resp.status, payload.get("error", {"message": raw.decode()}))
+        return json.loads(raw) if raw else None
 
     @staticmethod
     def _ns(namespace: list[str]) -> str:

@@ -338,7 +338,8 @@ class TableMetadataBuilder:
         self.m["refs"] = {
             name: ref for name, ref in self.m["refs"].items() if ref["snapshot-id"] not in ids
         }
-        if self.m["current-snapshot-id"] in ids:
+        # stored versions omit a null current-snapshot-id (store.py scrub)
+        if self.m.get("current-snapshot-id") in ids:
             self.m["current-snapshot-id"] = None
 
     def _set_snapshot_ref(self, u: dict) -> None:

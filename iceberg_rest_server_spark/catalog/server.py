@@ -2,6 +2,14 @@
 (reference routes: `crates/iceberg-catalog/src/api/router.rs:40-52`,
 handlers under `src/catalog/`), stdlib-only (http.server).
 
+Connections are persistent: the handler speaks HTTP/1.1 keep-alive, as
+the reference's hyper server does, so a client (Iceberg's pooled Java
+HTTPClient, RestCatalogClient's per-thread connection) pays for one TCP
+connection and one server thread, not one per request. Table metadata
+is served in its stored wire form: the load, create and commit
+responses splice the text the store encoded once per version into the
+envelope, with no parse, scrub or second encode.
+
 Routes (prefix = warehouse id, as in the reference's `{prefix}`):
 
   GET    /catalog/v1/config?warehouse={project}/{name}
@@ -36,6 +44,8 @@ from __future__ import annotations
 
 import json
 import re
+import socket
+import sys
 import threading
 import urllib.parse
 from collections.abc import Callable
@@ -50,12 +60,14 @@ from .s3_signer import (
     permission_for_method,
     sign_s3_request,
 )
-from .store import (
+from .store import (  # noqa: F401 — SCRUBBED_NULL_KEYS is re-exported
+    SCRUBBED_NULL_KEYS,
     UNIT_SEPARATOR,
     CatalogStore,
     ConflictError,
     NotFoundError,
     ValidationError,
+    _scrub_table_metadata,
 )
 
 
@@ -88,52 +100,23 @@ def _ns_from_path(segment: str) -> list[str]:
     return urllib.parse.unquote(segment).split(UNIT_SEPARATOR)
 
 
-# The ONLY metadata keys the null-scrub may strip (VERDICT r9 #4: the
-# r9 scrub dropped EVERY null recursively, so a future
-# nullable-with-meaning field would be silently eaten). These are
-# exactly the serde `Option` + skip_serializing_if fields our in-memory
-# model ever holds as None, and each lives in one known place, which is
-# the only place the scrub looks: `current-snapshot-id` at the top
-# level of the metadata (None until the first snapshot commits, and
-# again after RemoveSnapshots drops the current one —
-# metadata.py:90,342,368) and `parent-snapshot-id` in each `snapshots[]`
-# entry (first snapshot of a lineage), so a response costs no walk of
-# the whole metadata tree. `metadata-location` is handled separately at
-# the top level (None only for stage-created tables). Any OTHER null is
-# left on the wire on purpose: the OpenAPI response validator
-# (tests/openapi_schema.py, every conformance exchange) then fails the
-# contract check loudly instead of the scrub hiding the bug.
-SCRUBBED_NULL_KEYS = frozenset({"current-snapshot-id", "parent-snapshot-id"})
-
-
-def _without_null(node, key: str):
-    if isinstance(node, dict) and key in node and node[key] is None:
-        return {k: v for k, v in node.items() if k != key}
-    return node
-
-
-def _scrub_table_metadata(metadata: dict) -> dict:
-    """Drop the SCRUBBED_NULL_KEYS where they occur, without mutating
-    the input: only the top level and the snapshot entries are copied."""
-    out = dict(_without_null(metadata, "current-snapshot-id"))
-    if isinstance(out.get("snapshots"), list):
-        out["snapshots"] = [_without_null(s, "parent-snapshot-id") for s in out["snapshots"]]
-    return out
-
-
 def _scrub_metadata_nulls(payload: dict) -> dict:
     """Wire-format parity with the reference's serde `Option` fields
-    (skip_serializing_if none): OPTIONAL table-metadata keys with no
-    value are OMITTED, never null — the OpenAPI document types
-    `current-snapshot-id` / `parent-snapshot-id` / `metadata-location`
-    as non-nullable, so an explicit null is a contract violation
-    (caught by tests/openapi_schema.py validating every conformance
-    exchange). The in-memory model keeps None; only the HTTP
-    serialization drops the keys, and only the keys in
-    SCRUBBED_NULL_KEYS (contract-tested in
+    (skip_serializing_if none), stated over a payload dict: OPTIONAL
+    table-metadata keys with no value are OMITTED, never null — the
+    OpenAPI document types `current-snapshot-id` / `parent-snapshot-id`
+    / `metadata-location` as non-nullable, so an explicit null is a
+    contract violation (caught by tests/openapi_schema.py validating
+    every conformance exchange). Only the keys in SCRUBBED_NULL_KEYS are
+    dropped (contract-tested in
     tests/test_catalog.py::test_scrub_strips_exactly_the_pinned_keys).
     `next-page-token: null` stays — the spec's PageToken is nullable
-    and clients read null as end-of-listing."""
+    and clients read null as end-of-listing.
+
+    The routes never build this dict: the store scrubs each version
+    when it encodes it and `_table_body` splices that text. This is the
+    reference the spliced bodies are tested against
+    (tests/test_metadata_properties.py)."""
     out = dict(payload)
     if isinstance(out.get("metadata"), dict):
         out["metadata"] = _scrub_table_metadata(out["metadata"])
@@ -147,6 +130,22 @@ def _scrub_metadata_nulls(payload: dict) -> dict:
     return out
 
 
+def _table_body(metadata_json: str, metadata_location: str | None, **rest) -> bytes:
+    """The LoadTableResult body ``{"metadata": ..., "metadata-location":
+    ..., **rest}``, byte for byte what ``json.dumps`` of that dict gives,
+    with the stored wire text spliced in as the ``metadata`` value: no
+    parse, scrub or second encode. A null ``metadata-location`` (a
+    stage-created table) is omitted."""
+    if metadata_location is not None:
+        rest = {"metadata-location": metadata_location, **rest}
+    tail = json.dumps(rest)  # "{...}": its members follow the metadata
+    return b'{"metadata": %s%s%s' % (
+        metadata_json.encode(),
+        b", " if rest else b"",
+        tail[1:].encode(),
+    )
+
+
 class CatalogHandler(BaseHTTPRequestHandler):
     store: CatalogStore  # injected by make_server
     verifier: "TokenVerifier | None" = None  # optional OIDC middleware
@@ -158,6 +157,13 @@ class CatalogHandler(BaseHTTPRequestHandler):
     # None — same default here; deployments plug in their exchanger.
     token_exchanger: "Callable[[dict, str, str], str | None] | None" = None
     server_version = "iceberg-rest-server-spark/0.1"
+    # keep-alive: one connection and one handler thread per client
+    protocol_version = "HTTP/1.1"
+    # headers and body go out in two sends; with Nagle on, the body
+    # waits for the client's delayed ACK (~40 ms per response)
+    disable_nagle_algorithm = True
+    # seconds an idle connection may park its thread
+    timeout = 30
 
     def log_message(self, *args) -> None:  # silence request logging
         pass
@@ -165,10 +171,7 @@ class CatalogHandler(BaseHTTPRequestHandler):
     # ------------------------------------------------------------ plumbing
 
     def _body(self) -> dict:
-        length = int(self.headers.get("Content-Length") or 0)
-        if not length:
-            return {}
-        return json.loads(self.rfile.read(length))
+        return json.loads(self._raw_body) if self._raw_body else {}
 
     @staticmethod
     def _require(body: dict, *keys: str) -> Any:
@@ -184,10 +187,14 @@ class CatalogHandler(BaseHTTPRequestHandler):
             body = body[key]
         return body
 
-    def _send(self, code: int, payload: dict | None = None) -> None:
-        if payload is not None:
-            payload = _scrub_metadata_nulls(payload)
-        data = b"" if payload is None else json.dumps(payload).encode()
+    def _send(self, code: int, payload: dict | bytes | None = None) -> None:
+        """Send ``payload`` (a dict to encode, or an encoded body) with
+        ``Content-Length`` on every response: keep-alive clients find the
+        end of each body by it."""
+        if isinstance(payload, bytes):
+            data = payload
+        else:
+            data = b"" if payload is None else json.dumps(payload).encode()
         self.send_response(code)
         self.send_header("Content-Type", "application/json")
         # CompressionLayer parity (api/router.rs:67): gzip when the client
@@ -227,6 +234,18 @@ class CatalogHandler(BaseHTTPRequestHandler):
         return None
 
     def _dispatch(self) -> None:
+        # read the whole body first: on a kept-alive connection, bytes
+        # left unread by a 401, a 404 or a route that ignores its body
+        # would be parsed as the next request
+        try:
+            length = int(self.headers.get("Content-Length") or 0)
+            if length < 0:
+                raise ValueError(length)
+        except ValueError:
+            self.close_connection = True
+            self._send(*_error(400, "invalid Content-Length", "ValidationException"))
+            return
+        self._raw_body = self.rfile.read(length) if length else b""
         parsed = urllib.parse.urlparse(self.path)
         qs = urllib.parse.parse_qs(parsed.query)
         parts = [p for p in parsed.path.split("/") if p]
@@ -321,7 +340,9 @@ class CatalogHandler(BaseHTTPRequestHandler):
 
     # -------------------------------------------------------------- routes
 
-    def route(self, method: str, parts: list[str], qs: dict) -> tuple[int, dict | None]:
+    def route(
+        self, method: str, parts: list[str], qs: dict
+    ) -> tuple[int, dict | bytes | None]:
         if parts == ["health"] and method == "GET":
             # api/router.rs:53 — unauthenticated liveness probe
             return 200, {"status": "ok"}
@@ -331,7 +352,9 @@ class CatalogHandler(BaseHTTPRequestHandler):
             return self._management_route(method, parts[2:], qs)
         return _error(404, f"unknown path {'/'.join(parts)}", "NoSuchObjectException")
 
-    def _catalog_route(self, method: str, p: list[str], qs: dict) -> tuple[int, dict | None]:
+    def _catalog_route(
+        self, method: str, p: list[str], qs: dict
+    ) -> tuple[int, dict | bytes | None]:
         store = self.store
         if p == ["oauth", "tokens"] and method == "POST":
             # Parity stub: the reference routes POST /oauth/tokens
@@ -433,19 +456,16 @@ class CatalogHandler(BaseHTTPRequestHandler):
                         stage_create=bool(body.get("stage-create")),
                         location=body.get("location"),
                     )
-                    return 200, {
-                        "metadata": out["metadata"],
-                        "metadata-location": out["metadata-location"],
-                    }
+                    return 200, _table_body(out["metadata-json"], out["metadata-location"])
             if len(rest) == 4 and rest[0] == "namespaces" and rest[2] == "tables":
                 ns, tbl = _ns_from_path(rest[1]), rest[3]
                 if method == "GET":
                     out = store.load_table(prefix, ns, tbl)
-                    return 200, {
-                        "metadata": out["metadata"],
-                        "metadata-location": out["metadata-location"],
-                        "config": self._table_config(prefix),
-                    }
+                    return 200, _table_body(
+                        out["metadata"],
+                        out["metadata-location"],
+                        config=self._table_config(prefix),
+                    )
                 if method == "HEAD":
                     if store.table_exists(prefix, ns, tbl):
                         return 204, None
@@ -455,7 +475,7 @@ class CatalogHandler(BaseHTTPRequestHandler):
                     return 204, None
                 if method == "POST":
                     body = self._body()
-                    results = store.commit_transaction(
+                    (result,) = store.commit_transaction(
                         prefix,
                         [
                             {
@@ -466,7 +486,7 @@ class CatalogHandler(BaseHTTPRequestHandler):
                             }
                         ],
                     )
-                    return 200, results[0]
+                    return 200, _table_body(result["metadata"], result["metadata-location"])
             if (
                 len(rest) == 5
                 and rest[0] == "namespaces"
@@ -484,7 +504,7 @@ class CatalogHandler(BaseHTTPRequestHandler):
                 # POST .../tables/{tbl}/v1/aws/s3/sign (s3_signer.rs:38-173)
                 ns, tbl = _ns_from_path(rest[1]), rest[3]
                 table = store.load_table(prefix, ns, tbl)
-                return self._sign_route(prefix, self._body(), table["metadata"]["location"])
+                return self._sign_route(prefix, self._body(), table["table-location"])
             if rest == ["v1", "aws", "s3", "sign"] and method == "POST":
                 # prefix-only sign route — the one Spark actually calls
                 # when s3.signer.uri is warehouse-scoped: resolve the
@@ -507,7 +527,7 @@ class CatalogHandler(BaseHTTPRequestHandler):
                     # reference maps location-resolution failure to 401
                     # InvalidLocation (catalog/s3_signer.rs:70-80)
                     return _error(401, str(e), "InvalidLocation")
-                return self._sign_route(prefix, body, table["metadata"]["location"])
+                return self._sign_route(prefix, body, table["table-location"])
             if rest == ["tables", "rename"]:
                 body = self._body()
                 store.rename_table(
@@ -739,12 +759,53 @@ class CatalogHandler(BaseHTTPRequestHandler):
         return _error(404, "no such route", "NoSuchObjectException")
 
 
+class CatalogHTTPServer(ThreadingHTTPServer):
+    """ThreadingHTTPServer that ends its kept-alive connections when it
+    closes: a handler thread parked on an idle connection would
+    otherwise keep serving the old store until its client hangs up or
+    the idle timeout fires."""
+
+    def __init__(self, *args, **kwargs):
+        super().__init__(*args, **kwargs)
+        self._open: set[socket.socket] = set()
+        self._open_lock = threading.Lock()
+
+    def process_request(self, request, client_address) -> None:
+        with self._open_lock:
+            self._open.add(request)
+        super().process_request(request, client_address)
+
+    def shutdown_request(self, request) -> None:
+        with self._open_lock:
+            self._open.discard(request)
+        super().shutdown_request(request)
+
+    def handle_error(self, request, client_address) -> None:
+        # a client that drops or resets its kept-alive connection is not
+        # a server fault; anything else still prints its traceback
+        if not isinstance(sys.exc_info()[1], ConnectionError):
+            super().handle_error(request, client_address)
+
+    def server_close(self) -> None:
+        super().server_close()
+        with self._open_lock:
+            parked = list(self._open)
+        for sock in parked:
+            # the handler's pending read sees end-of-stream and returns,
+            # and the client sees the connection close; a request that
+            # races the close is cut, as it would be by a process exit
+            try:
+                sock.shutdown(socket.SHUT_RDWR)
+            except OSError:
+                pass  # already closed by its handler
+
+
 def make_server(
     store: CatalogStore,
     port: int = 0,
     verifier: "TokenVerifier | None" = None,
     token_exchanger: "Callable[[dict, str, str], str | None] | None" = None,
-) -> ThreadingHTTPServer:
+) -> CatalogHTTPServer:
     handler = type(
         "BoundCatalogHandler",
         (CatalogHandler,),
@@ -758,7 +819,7 @@ def make_server(
             ),
         },
     )
-    return ThreadingHTTPServer(("127.0.0.1", port), handler)
+    return CatalogHTTPServer(("127.0.0.1", port), handler)
 
 
 class ServerThread:

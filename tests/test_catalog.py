@@ -10,6 +10,8 @@ in the reference's unit/integration tests (not of the code):
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 from iceberg_rest_server_spark.catalog import (
@@ -318,7 +320,7 @@ def test_multi_table_commit_atomic(store):
             ],
         )
     # table a must be untouched
-    assert s.load_table(wid, ["ns1"], "a")["metadata"]["properties"] == {}
+    assert json.loads(s.load_table(wid, ["ns1"], "a")["metadata"])["properties"] == {}
     # and a valid commit applies to both
     s.commit_transaction(
         wid,
@@ -327,7 +329,7 @@ def test_multi_table_commit_atomic(store):
             {"namespace": ["ns1"], "name": "b", "requirements": [], "updates": [ok]},
         ],
     )
-    assert s.load_table(wid, ["ns1"], "b")["metadata"]["properties"] == {"k": "v"}
+    assert json.loads(s.load_table(wid, ["ns1"], "b")["metadata"])["properties"] == {"k": "v"}
 
 
 def _metadata_files(root) -> set:
@@ -410,7 +412,7 @@ def test_commit_encodes_metadata_once(tmp_path, monkeypatch):
     row_text = s._table_row(wid, ["ns1"], "t")[1]
     with open(local_path(location), "rb") as fh:
         assert gzip.decompress(fh.read()).decode("utf-8") == row_text
-    assert read_metadata_file(location) == s.load_table(wid, ["ns1"], "t")["metadata"]
+    assert read_metadata_file(location) == json.loads(s.load_table(wid, ["ns1"], "t")["metadata"])
 
 
 # ------------------------------------------------------------------ HTTP

@@ -31,6 +31,10 @@ def _temp_views(spark) -> set[str]:
     return {t.name for t in spark.catalog.listTables() if t.isTemporary}
 
 
+def _user_functions(spark) -> set[str]:
+    return {r[0] for r in spark.sql("SHOW USER FUNCTIONS").collect()}
+
+
 def _frame(spark):
     return spark.range(50).groupBy((F.col("id") % 5).alias("k")).count()
 
@@ -79,6 +83,24 @@ def test_scope_drops_temp_views(spark):
     assert "materialize_probe" not in _temp_views(spark)
 
 
+def test_scope_drops_temp_functions(spark):
+    from pyspark.sql.functions import udtf
+
+    @udtf(returnType="n: int")
+    class Upto:
+        def eval(self, k: int):
+            yield from ((i,) for i in range(k))
+
+    before = _user_functions(spark)
+    with materialize.scope():
+        materialize.temp_function(spark, "materialize_probe_fn", Upto)
+        assert _user_functions(spark) - before
+        df = spark.sql("SELECT sum(n) FROM materialize_probe_fn(4)")
+        df.collect()
+    assert _user_functions(spark) == before
+    assert df.first()[0] == 6  # an analyzed plan outlives the drop
+
+
 def test_no_scope_registers_nothing(spark):
     """Without an open scope a materialization lives on, as a bare
     df.persist() would (callers that never open a scope see no change)."""
@@ -105,11 +127,13 @@ def test_registry_queries_release_every_materialization(spark):
     """Every registry query, built and consumed (toPandas) inside one
     query scope at sf0.001 in this one session, leaves nothing behind:
     no persisted RDD that was not there before the query, an empty
-    CacheManager and no added temp view. (RDD ids, not the count: the
-    ContextCleaner may unpersist an earlier leak mid-query.)"""
+    CacheManager and no added temp view or temporary function. (RDD
+    ids, not the count: the ContextCleaner may unpersist an earlier leak
+    mid-query.)"""
     # every earlier test ran in its own scope (conftest.query_scope)
     assert _cache_empty(spark), "an earlier test left a CacheManager entry behind"
     views = _temp_views(spark)
+    functions = _user_functions(spark)
     leaks = []
     t0 = time.perf_counter()
     for name, q in REGISTRY.items():
@@ -118,11 +142,11 @@ def test_registry_queries_release_every_materialization(spark):
             q.fn(spark, SF_SMOKE).toPandas()
         left = len(_persistent(spark) - before)
         cached = not _cache_empty(spark)
-        new_views = sorted(_temp_views(spark) - views)
-        if left or cached or new_views:
-            leaks.append((name, left, cached, new_views))
+        names = sorted(_temp_views(spark) - views) + sorted(_user_functions(spark) - functions)
+        if left or cached or names:
+            leaks.append((name, left, cached, names))
             spark.catalog.clearCache()  # so the next query is judged on its own
     print(f"{len(REGISTRY)} queries in {time.perf_counter() - t0:.0f} s")
     assert not leaks, f"{len(leaks)} queries leak {sum(n for _, n, _, _ in leaks)} RDDs:\n" + "\n".join(
-        f"{name}: rdds={n} cache_entries={c} views={v}" for name, n, c, v in leaks
+        f"{name}: rdds={n} cache_entries={c} views/functions={v}" for name, n, c, v in leaks
     )

@@ -5,17 +5,26 @@ SURVEY.md §7 ranks hardest ('easy to silently corrupt')."""
 from __future__ import annotations
 
 import copy
+import gzip
+import http.client
 import json
+import tempfile
+from unittest import mock
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from iceberg_rest_server_spark.catalog import metadata as metadata_mod
+from iceberg_rest_server_spark.catalog import store as store_mod
+from iceberg_rest_server_spark.catalog.io import local_path
 from iceberg_rest_server_spark.catalog.metadata import (
     PARTITION_FIELD_ID_START,
     TableMetadataBuilder,
 )
 from iceberg_rest_server_spark.catalog.server import (
     SCRUBBED_NULL_KEYS,
+    ServerThread,
     _scrub_metadata_nulls,
 )
 
@@ -195,3 +204,98 @@ def test_targeted_scrub_matches_recursive_scrub(ops, staged):
         assert out == expected
         assert json.dumps(out) == json.dumps(expected)  # same bytes on the wire
         assert payload == before
+
+
+def _history_updates(op: str, current: int | None, next_snap: int) -> list[dict]:
+    """The updates one history op commits, given the current snapshot."""
+    if op in ("append", "orphan"):
+        # an orphan starts a new lineage: its parent is None
+        snap = {"snapshot-id": next_snap, "parent-snapshot-id": current if op == "append" else None,
+                "summary": {"operation": "append"}}
+        updates = [{"action": "add-snapshot", "snapshot": snap}]
+        if op == "append":
+            updates.append({"action": "set-snapshot-ref", "ref-name": "main",
+                            "snapshot-id": next_snap})
+        return updates
+    if op == "remove_current" and current is not None:
+        return [{"action": "remove-snapshots", "snapshot-ids": [current]}]
+    if op == "remove_main":
+        return [{"action": "remove-snapshot-ref", "ref-name": "main"}]
+    if op == "tag" and current is not None:
+        return [{"action": "set-snapshot-ref", "ref-name": f"tag{next_snap}",
+                 "snapshot-id": current, "type": "tag"}]
+    if op == "props":
+        return [{"action": "set-properties", "updates": {f"k{next_snap}": "v"}}]
+    if op == "null_prop":
+        return [{"action": "set-properties", "updates": {"owner": None}}]
+    return []
+
+
+@pytest.fixture(scope="module")
+def catalog_server():
+    with ServerThread() as server:
+        yield server
+
+
+@settings(max_examples=40, deadline=None)
+@given(st.lists(history_op, min_size=0, max_size=12), st.booleans())
+def test_spliced_table_bodies_match_the_scrubbed_payload(catalog_server, ops, staged):
+    """The create (staged or committed), single-table commit and load
+    responses splice the stored text into the envelope. Over builder
+    histories each body parses to exactly what the scrub makes of the
+    payload dict the server used to encode — the unscrubbed version,
+    replayed here through the builder from the created one — and its raw
+    ``metadata`` member is the row's text, which is also what the
+    metadata file gunzips to."""
+    built = []
+
+    class Capturing(TableMetadataBuilder):
+        def build(self):
+            out = super().build()
+            built.append(json.dumps(out))  # unscrubbed, as the old row held it
+            return out
+
+    with tempfile.TemporaryDirectory() as tmp, \
+            mock.patch.object(metadata_mod, "_now_ms", lambda: 1_700_000_000_000), \
+            mock.patch.object(store_mod, "TableMetadataBuilder", Capturing):
+        store = catalog_server.store
+        wid = store.create_warehouse("p", tmp, f"file://{tmp}")
+        store.create_namespace(wid, ["ns"])
+        tables = f"/catalog/v1/{wid}/namespaces/ns/tables"
+        conn = http.client.HTTPConnection("127.0.0.1", catalog_server.port, timeout=10)
+
+        def exchange(method: str, path: str, body: dict | None = None) -> str:
+            conn.request(method, path, None if body is None else json.dumps(body))
+            resp = conn.getresponse()
+            raw = resp.read().decode()
+            assert resp.status == 200, raw
+            return raw
+
+        def check(raw: str, old_row: str, **rest) -> None:
+            _, row_text, location, _ = store._table_row(wid, ["ns"], "t")
+            payload = {"metadata": json.loads(old_row), "metadata-location": location, **rest}
+            assert json.loads(raw) == _scrub_metadata_nulls(payload)
+            member = '{"metadata": '
+            assert raw.startswith(member + row_text)
+            if location is not None:
+                with open(local_path(location), "rb") as fh:
+                    assert gzip.decompress(fh.read()).decode("utf-8") == row_text
+
+        raw = exchange("POST", tables, {"name": "t", "schema": BASE_SCHEMA, "stage-create": staged})
+        (old_row,) = built
+        check(raw, old_row)
+        next_snap = 1
+        for op in ops:
+            reference = TableMetadataBuilder(json.loads(old_row))
+            updates = _history_updates(op, reference.m.get("current-snapshot-id"), next_snap)
+            next_snap += 1
+            if not updates:
+                continue
+            for update in updates:
+                reference.apply(update)
+            old_row = json.dumps(reference.build())
+            raw = exchange("POST", f"{tables}/t", {"requirements": [], "updates": updates})
+            check(raw, old_row)
+        if not staged or store._table_row(wid, ["ns"], "t")[2] is not None:
+            check(exchange("GET", f"{tables}/t"), old_row, config={})
+        conn.close()

@@ -189,10 +189,11 @@ def test_manifest_io_has_one_owner():
 
 def test_materialization_has_one_owner():
     """Only materialize.py persists, checkpoints, registers temp views or
-    releases: every other module goes through its scoped helpers, so no
-    cache, checkpoint or view is created outside a lifetime the scopes
-    track — a raw df.persist(), a localCheckpoint or an RDD-id release
-    beside the scope fails here."""
+    functions, or releases: every other module goes through its scoped
+    helpers, so no cache, checkpoint, view or temporary function is
+    created outside a lifetime the scopes track — a raw df.persist(), a
+    localCheckpoint, a UDF/UDTF registration or an RDD-id release beside
+    the scope fails here."""
     import pathlib
     import re
 
@@ -200,7 +201,7 @@ def test_materialization_has_one_owner():
     owner = pkg / "materialize.py"
     raw = re.compile(
         r"(?<!materialize)\.(persist|localCheckpoint|unpersist)\(|\.cache\(\)"
-        r"|getPersistentRDDs|createOrReplaceTempView"
+        r"|getPersistentRDDs|createOrReplaceTempView|\.udtf\.register\(|\.udf\.register\("
     )
     offenders = [
         str(path)
