@@ -5,7 +5,8 @@ JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 
 Each query is fully executed and its complete result materialized to the
 driver (Arrow-batched toPandas) so the wall time covers the whole plan,
-not just plan construction.
+not just plan construction. The full record — every execution and one
+box-health row per pass — goes to BENCH_FULL.json.
 """
 
 from __future__ import annotations
@@ -81,30 +82,30 @@ ISOLATED = {
 }
 
 
-# Reference box speed the calibrated numbers are normalized TO: the r9
-# end-of-run probe (BENCH_r09 box_calibration.end numpy_gemm 0.0085 s),
-# taken when that box had reached steady state — the r9 ADVICE
-# established `end` as the only trustworthy r9 sample because the old
-# probe's single untimed warm-up let cold-start noise through (start
-# 0.0415 s vs end 0.0085 s on the same idle box). With REF pinned to
-# the r9 end probe, r9's recorded raw seconds ARE its calibrated
-# seconds (factor 1.0), so calibrated r10+ numbers compare directly
-# against the BENCH_r09 raw record.
-_CALIB_REF_GEMM = 0.0085
+
+# The measurement scheme. Every sample set is spread over SEPARATED
+# passes, because this box's hypervisor-steal bursts are minutes wide
+# and would cover back-to-back reps together (r11/r12 same-code runs):
+# - the ISOLATED family runs ISO_PASSES fresh-JVM subprocess passes;
+# - a shared-loop query whose first run takes >= RERUN_SEC gets one
+#   back-to-back rerun, and one whose best stays under 2 * RERUN_SEC
+#   joins the fast set;
+# - the fast set gets FAST_PASSES separated passes in all, and each
+#   streaming query FAST_PASSES back-to-back reps.
+ISO_PASSES = 2
+RERUN_SEC = 3.0
+FAST_PASSES = 3
 
 
-def _box_calibration() -> dict:
-    """Fixed CPU microprobes recorded throughout every bench run, so
-    cross-round (and intra-run) comparisons can normalize for box-speed
-    drift instead of arguing about it: an r9 audit found identical code
-    measuring a median 19% slower across 213 queries between two full
-    runs hours apart on an idle box, and the r9 recorded run started on
-    a box phase 2.3x slower than its end. numpy GEMM exercises the
-    multi-threaded CPU capacity Spark executors see; the pure-python
-    loop is the single-core baseline. Steady-state by construction
-    (ADVICE r9): two untimed warm-up multiplies, then min-of-5 timed —
-    the committed r9 artifact proved one untimed rep insufficient
-    (start probe 5x its own end probe on an idle box). ~2 s total."""
+def _box_health() -> dict:
+    """Fixed CPU and memory microprobes, one row per bench pass, so a
+    record shows what state the box was in while each pass ran. numpy
+    GEMM exercises the multi-threaded CPU capacity Spark executors see
+    (two untimed warm-up multiplies, then min-of-5); the pure-python
+    loop is the single-core baseline; the first-touch probe times
+    faulting a fresh 256 MB buffer, which this VM's hypervisor backs
+    lazily and which in its cold phase (~37-60 MB/s, r13) stalls every
+    new JVM heap page while GEMM still reads the box as fast. ~2 s."""
     import numpy as np
 
     rng = np.random.default_rng(42)
@@ -117,7 +118,6 @@ def _box_calibration() -> dict:
         t0 = time.perf_counter()
         a @ b
         reps.append(time.perf_counter() - t0)
-    gemm = min(reps)
     loops = []
     for _ in range(3):
         t0 = time.perf_counter()
@@ -125,18 +125,6 @@ def _box_calibration() -> dict:
         for i in range(2_000_000):
             s += i * i
         loops.append(time.perf_counter() - t0)
-    # VERDICT r13 #3: first-touch memory-fault probe. This VM's
-    # hypervisor lazily backs guest pages; in its cold phase, faulting
-    # fresh anonymous memory runs at ~37-60 MB/s (measured r13) and
-    # every new JVM heap page stalls — while GEMM (hot CPU, resident
-    # buffers) reads the box as FAST, so the calibrated numbers can't
-    # correct it. Recording the fault rate per probe row lets
-    # probe_align flag fault-bound windows the way it flags GEMM-slow
-    # ones. 256 MB: big enough to dominate loop overhead, small enough
-    # (~25 ms healthy, ~0.7 s at 380 MB/s, ~7 s in the r13 pathology)
-    # not to distort the probe cadence. The buffer is fresh (calloc'd)
-    # each call and freed immediately; one rep — fault service has no
-    # warm-up to strip, and min-of-N would just re-pay the cost.
     n = 256 << 20
     t0 = time.perf_counter()
     buf = bytearray(n)
@@ -145,92 +133,59 @@ def _box_calibration() -> dict:
     fault_sec = time.perf_counter() - t0
     del buf
     return {
-        "numpy_gemm_1024_sec": round(gemm, 4),
+        "numpy_gemm_1024_sec": round(min(reps), 4),
         "python_loop_2m_sec": round(min(loops), 4),
         "memfault_256m_mb_s": round(256 / fault_sec, 1),
     }
 
 
-class _ProbeLog:
-    """Timestamped probe series + per-query measurement midpoints.
-
-    Each query's calibration factor comes from the MINIMUM GEMM time of
-    the 5 probes nearest in time to when that query ran (probes bracket
-    every isolated subprocess and every ~20 shared-loop queries).
-    Estimator derivation, from two recorded r10 runs: nearest-alone was
-    wrong (single probes spiked 1.8-2.4x from transient JVM GC/compiler
-    contention, halving innocent queries), and median-of-3 was still
-    wrong on this virtualized box, whose probe series bounces
-    0.009<->0.033 with no sustained structure (hypervisor steal on the
-    32-thread BLAS burst) even while Spark query raws move only ~13%.
-    Throttle/steal/contention only ever SLOW a probe, never speed it
-    up, so the minimum over a window is the honest estimate of the
-    box's capacity when the query ran; a GENUINE slow phase (the r9
-    record's 2.3x start, many minutes wide) covers all 5 nearest
-    probes and still registers. Residual swings after this correction
-    (~±15% on this box, measured) are unattributable virtualization
-    noise — recorded as such rather than over-corrected.
-    calibrated_sec = raw_sec * (_CALIB_REF_GEMM / min5_gemm): a box
-    running 2x slower than the r9 reference halves the recorded number
-    instead of reading as a 2x plan regression."""
+class _RunLog:
+    """Everything one bench run measures: every execution as
+    [pass_label, sec, t_mid] per query, the error of each failed query,
+    and one box-health row per pass. t_mid is time.monotonic(), which is
+    system-wide on Linux, so subprocess samples share the clock of the
+    parent's health rows. A query is in `samples` or in `errors`, never
+    both: a failure on any pass drops every sample it had, so flakiness
+    surfaces as an error instead of a half-measured number."""
 
     def __init__(self) -> None:
-        self.probes: list[dict] = []
-        self.query_mid: dict[str, float] = {}
-        # VERDICT r12 #2: every sample the multi-pass schemes produce,
-        # not just the min — [pass_label, sec, t_mid] per execution,
-        # BENCH_FULL-only. Within-run spread is the cheapest attribution
-        # signal there is (r12's q125/q32_ngram residual movers needed
-        # four extra fresh-JVM runs to classify because the record threw
-        # it away); t_mid is time.monotonic() (CLOCK_MONOTONIC is
-        # system-wide on Linux, so isolated-subprocess sample times are
-        # directly comparable with this process's probe timestamps).
         self.samples: dict[str, list[list]] = {}
+        self.errors: dict[str, str] = {}
+        self.health: list[dict] = []
 
     def sample(self, name: str, label: str, sec: float, t_mid: float) -> None:
         self.samples.setdefault(name, []).append(
             [label, round(sec, 4), round(t_mid, 2)]
         )
 
-    def probe(self, label: str) -> dict:
-        rec = dict(_box_calibration())
-        rec["t"] = round(time.monotonic(), 2)
-        rec["label"] = label
-        self.probes.append(rec)
-        return rec
+    def fail(self, name: str, error: str) -> None:
+        self.errors[name] = error[:300]
+        self.samples.pop(name, None)
 
-    def mark(self, name: str, t_start: float, t_end: float) -> None:
-        self.query_mid[name] = (t_start + t_end) / 2
+    def best(self, name: str) -> float:
+        return min(s[1] for s in self.samples[name])
 
-    def factor(self, name: str) -> float:
-        mid = self.query_mid.get(name)
-        if mid is None or not self.probes:
-            return 1.0
-        nearest5 = sorted(self.probes, key=lambda p: abs(p["t"] - mid))[:5]
-        best = min(p["numpy_gemm_1024_sec"] for p in nearest5)
-        return _CALIB_REF_GEMM / max(best, 1e-6)
-
-    def calibrated(self, times: dict[str, float]) -> dict[str, float]:
-        return {n: round(t * self.factor(n), 4) for n, t in times.items()}
+    def health_row(self, label: str) -> None:
+        self.health.append(
+            {"label": label, "t": round(time.monotonic(), 2), **_box_health()}
+        )
 
 
-def run_single(name: str) -> None:
-    """--single NAME: run one query in THIS fresh process until the
-    timing converges (min 3 / max 7 executions, cache-drop + GC
-    between), print one JSON line with the raw timings. The first run
-    absorbs the query's own C2 compilation and Python-worker pool spawn
-    (that cost is real but one-time per pipeline); later runs are the
-    steady state a dedicated executor would see. Fixed min-of-3 was not
-    enough for the deepest iterative plans: q96's per-iteration stages
-    JIT across ~5 executions ([23.4, 19.6, 12.4, ...] still descending
-    at run 3), so keep going while the latest run still improves the
-    best by >15%. SPARK_GRAFT_SINGLE_MIN_RUNS (default 3) lowers the
-    floor for the isolated family's SECOND separated pass (r12): pass 2
-    exists to give each query a steady-state sample in a different box
+def run_single(name: str, min_runs: int = 3) -> None:
+    """--single NAME [MIN_RUNS]: run one query in THIS fresh process
+    until the timing converges (at least MIN_RUNS, at most 7 executions,
+    cache-drop + GC between), print one JSON line with the raw timings.
+    The first run absorbs the query's own C2 compilation and
+    Python-worker pool spawn (real, but one-time per pipeline); later
+    runs are the steady state a dedicated executor would see. q96's
+    per-iteration stages JIT across ~5 executions ([23.4, 19.6, 12.4,
+    ...] still descending at run 3), so keep going while the latest run
+    still improves the best by >15%. The isolated family's later passes
+    ask for 2: they exist to sample the steady state in another box
     phase, so warm-up + one steady run suffices when it stops
     improving."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    min_runs = max(2, int(os.environ.get("SPARK_GRAFT_SINGLE_MIN_RUNS", "3")))
+    min_runs = max(2, min_runs)
     from iceberg_rest_server_spark.queries import REGISTRY
     from iceberg_rest_server_spark.session import get_spark
 
@@ -255,87 +210,47 @@ def run_single(name: str) -> None:
     spark.stop()
 
 
-def _run_isolated(
-    names: list[str], plog: _ProbeLog
-) -> tuple[dict[str, list[float]], dict[str, str]]:
+def _run_isolated(names: list[str], log: _RunLog) -> None:
     """Spawn one fresh interpreter+JVM per query, sequentially (never
-    concurrently — two JVMs would contend for the same 32 cores and
-    contaminate each other's timings). A calibration probe runs before
-    EACH subprocess (VERDICT r9 #2: the isolated phase is where the r9
-    box ran 2.3x slow, so one start-of-run probe can't attribute
-    per-query swings).
-
-    r12: the family runs as TWO separated subprocess passes, mirroring
-    the fast set's separated-pass scheme. All of a query's pass-1 runs
-    execute back-to-back inside ONE subprocess window (~30-60 s), so a
-    minutes-wide hypervisor-steal burst covers every rep at once — the
-    r12 A/B same-code runs measured exactly that (q59 fresh-JVM min
-    4.41 s in run A vs 2.81 s in run B, probes steady both times).
-    Pass 2 revisits each query ~the family's whole duration later in a
-    new JVM (warm-up + one steady sample, SPARK_GRAFT_SINGLE_MIN_RUNS=2,
-    same >15%-improvement extension), so the two steady-state samples
-    sit in different box phases and min-of-both escapes a single burst.
-    SPARK_GRAFT_BENCH_ISOPASS=1 restores the single pass (smoke runs).
-    Returns (raw runs, errors)."""
+    concurrently — two JVMs would contend for the same cores and
+    contaminate each other's timings), in ISO_PASSES separated passes.
+    All of a query's pass-1 runs execute inside ONE subprocess window
+    (~30-60 s), so a steal burst can cover every rep at once (r12: q59
+    4.41 s in run A vs 2.81 s in run B on the same code). Pass 2
+    revisits each query about the family's whole duration later in a
+    new JVM, so min-of-both escapes a single burst."""
     import subprocess
 
-    passes = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_ISOPASS", "2")))
-    runs: dict[str, list[float]] = {}
-    errors: dict[str, str] = {}
-    best: dict[str, float] = {}
     here = os.path.abspath(__file__)
-    for p in range(passes):
+    for p in range(ISO_PASSES):
+        label = f"iso{p + 1}"
+        log.health_row(label)
         for name in names:
-            if name in errors:
+            if name in log.errors:
                 continue
-            plog.probe(f"pre{p + 1 if p else ''}:{name}")
-            t_start = time.monotonic()
-            env = dict(os.environ)
-            if p:
-                env["SPARK_GRAFT_SINGLE_MIN_RUNS"] = "2"
             try:
                 proc = subprocess.run(
-                    [sys.executable, here, "--single", name],
+                    [sys.executable, here, "--single", name, "2" if p else "3"],
                     capture_output=True,
                     text=True,
                     timeout=900,
                     cwd=os.path.dirname(here),
-                    env=env,
                 )
-                line = proc.stdout.strip().splitlines()[-1]
-                rec = json.loads(line)
-                assert rec["name"] == name and rec["runs"]
-                runs.setdefault(name, []).extend(rec["runs"])
-                # per-execution sample vectors (VERDICT r12 #2); the
-                # subprocess stamps t_mid on the shared monotonic clock
-                for sec, t_mid in rec.get("samples") or []:
-                    plog.sample(name, f"iso{p + 1}", sec, t_mid)
-                if min(rec["runs"]) < best.get(name, float("inf")):
-                    # calibration brackets whichever PASS produced the
-                    # recorded min (same ADVICE-r11 rule as fast passes)
-                    best[name] = min(rec["runs"])
-                    plog.mark(name, t_start, time.monotonic())
+                rec = json.loads(proc.stdout.strip().splitlines()[-1])
+                if rec["name"] != name or not rec["samples"]:
+                    raise ValueError(f"unexpected --single output for {name}: {rec}")
+                for sec, t_mid in rec["samples"]:
+                    log.sample(name, label, sec, t_mid)
                 print(
-                    # ADVICE r12: the pass line shows the PASS-LOCAL min
-                    # (a number this pass actually produced) and labels
-                    # the cross-pass min as best-so-far
                     f"[bench] {name} (fresh JVM pass {p + 1}): "
                     f"{min(rec['runs']):.2f}s (best so far "
-                    f"{min(runs[name]):.2f}s) runs={rec['runs']}",
+                    f"{log.best(name):.2f}s) runs={rec['runs']}",
                     file=sys.stderr,
                     flush=True,
                 )
             except Exception as exc:
-                # a pass-2 failure after a pass-1 success is flakiness
-                # the error should surface, not average away (same
-                # policy as the fast passes): drop the query entirely
-                errors[name] = f"isolated p{p + 1}: {type(exc).__name__}: {exc}"[:300]
-                runs.pop(name, None)
-                plog.samples.pop(name, None)
-                print(f"[bench] {name}: ISOLATED FAILED {errors[name]}", file=sys.stderr, flush=True)
-        if names:
-            plog.probe(f"post:isolated:{p + 1}")
-    return runs, errors
+                log.fail(name, f"isolated p{p + 1}: {type(exc).__name__}: {exc}")
+                print(f"[bench] {name}: ISOLATED FAILED {log.errors[name]}", file=sys.stderr, flush=True)
 
 
 def _shared_loop_order(
@@ -368,14 +283,13 @@ def main() -> None:
     from iceberg_rest_server_spark.queries import REGISTRY
     from iceberg_rest_server_spark.session import get_spark
 
-    plog = _ProbeLog()
-    calibration = {"start": plog.probe("start")}
+    log = _RunLog()
+    log.health_row("start")
 
     # Fresh-JVM family first, BEFORE the shared session exists, so the
     # subprocess JVMs never share the box with a second live JVM.
-    isolate = os.environ.get("SPARK_GRAFT_BENCH_ISOLATE", "1") != "0"
-    iso_names = sorted(n for n in ISOLATED if n in REGISTRY) if isolate else []
-    iso_runs, iso_errors = _run_isolated(iso_names, plog) if iso_names else ({}, {})
+    iso_names = sorted(n for n in ISOLATED if n in REGISTRY)
+    _run_isolated(iso_names, log)
 
     spark = get_spark("bench")
 
@@ -412,49 +326,12 @@ def main() -> None:
     # stage in a session otherwise pays 32 × (interpreter spawn + numpy/
     # pandas import) inside whichever query happens to run it first
     # (measured: +10-25 s on that query's wall time).
-    from pyspark.sql import functions as _F
-
     _warm = _F.pandas_udf(_warm_fn, "long")
     spark.range(256, numPartitions=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))).select(
         _warm("id")
     ).count()
 
-    # (The r8-era dedup/PPJoin/PageRank warmups are gone: their sole
-    # beneficiaries — the shingle/band/graph codegen families — now run
-    # in their own fresh JVMs via ISOLATED, so warming those stages in
-    # the shared session would only add generated-class pollution.)
-    if not isolate:
-        # isolation disabled (SPARK_GRAFT_BENCH_ISOLATE=0): the family
-        # runs in-session again and needs the old warmups back
-        try:
-            from iceberg_rest_server_spark.operators.dedup import (
-                exact_jaccard_pairs,
-                minhash_lsh_pairs,
-            )
-            from iceberg_rest_server_spark.operators.graph import pagerank
-            from iceberg_rest_server_spark.tables import load as _load
-
-            _sample = _load(spark, sf_dir, "documents").limit(1000)
-            minhash_lsh_pairs(_sample, "doc_id", "text").count()
-            spark.catalog.clearCache()
-            exact_jaccard_pairs(_sample, "doc_id", "text").count()
-            spark.catalog.clearCache()
-            _edges = spark.range(200).select(
-                (_F.col("id") % 50).alias("src"), ((_F.col("id") + 7) % 50).alias("dst")
-            )
-            pagerank(_edges, max_iter=3).count()
-            spark.catalog.clearCache()
-        except Exception:
-            pass  # warmup must never fail the bench
-
-    # Streaming queries leave executor-side residue (state-store provider
-    # caches, checkpoint IO) that measurably inflates whatever runs next
-    # (~+30% on the dedup queries, A/B-tested); run them last so every
-    # batch query is timed from comparable session state.
-    names = _shared_loop_order(set(REGISTRY), iso_runs, iso_errors)
-    times: dict[str, float] = {n: min(r) for n, r in iso_runs.items()}
-    reruns: dict[str, list[float]] = dict(iso_runs)
-    errors: dict[str, str] = dict(iso_errors)
+    names = _shared_loop_order(set(REGISTRY), log.samples, log.errors)
 
     def _quiesce() -> None:
         # queries persist intermediates (shingles, signatures, buckets);
@@ -469,161 +346,80 @@ def main() -> None:
         # never a query's reported time.
         spark.sparkContext._jvm.System.gc()
 
-    def _run_once(q) -> tuple[float, float]:
-        """One full execution; returns (wall sec, monotonic midpoint) —
-        the midpoint feeds the per-sample vector (VERDICT r12 #2)."""
+    def _run_once(name: str, label: str) -> float:
+        """One full execution, recorded as a sample; returns its sec."""
         m0 = time.monotonic()
         t0 = time.perf_counter()
-        df = q.fn(spark, sf_dir)
+        df = REGISTRY[name].fn(spark, sf_dir)
         # Arrow-batched materialization: same full execution + full result
         # on the driver as collect(), minus per-row Python object cost
         # (3-4x less harness overhead on wide outputs, measured on q22)
         df.toPandas()
         sec = round(time.perf_counter() - t0, 4)
-        return sec, round((m0 + time.monotonic()) / 2, 2)
+        log.sample(name, label, sec, (m0 + time.monotonic()) / 2)
+        return sec
 
     # Run-to-run noise on this box concentrates in the expensive tail
-    # (r5 verdict: q126 measured 5 s by the builder, 49 s by the driver
-    # on identical code). Queries whose first run exceeds this threshold
-    # get a second, identically-quiesced run and report the MIN — the
-    # cheap ~150 queries are stable and don't pay a second pass, so the
-    # extra wall-clock is bounded by the slow tail only. Streaming
-    # entries participate too (each drain uses a fresh uuid memory sink,
-    # so a rerun is just another replay): measured single-shot swings of
-    # ±30-60% on q162/q172 made one-sample streaming numbers useless.
-    #
-    # The JIT-pollution-sensitive ISOLATED family already ran fresh-JVM
-    # min-of-3 above (see the ISOLATED comment for the full r7/r8
-    # root-cause A/B); `iterative3` grants the same min-of-3 when
-    # isolation is disabled and they fall back into this shared loop.
-    rerun_sec = float(os.environ.get("SPARK_GRAFT_BENCH_RERUN_SEC", "3"))
-    # VERDICT r10 #3: sub-threshold queries were single-shot, and two
-    # same-code r10 full runs differed ±40-80% on exactly those — the
-    # per-query record was noise below ~2 s. Every sub-threshold query
-    # now reports a min-of-N (default 3). The N samples run as SEPARATE
-    # PASSES over the whole fast set, not back-to-back reps: this box's
-    # probe series shows hypervisor-steal bursts minutes wide (r11,
-    # three same-code runs: probes 0.009 steady, then 0.05-0.134 for
-    # 1-2 probe slots), and three back-to-back reps land inside one
-    # burst together — min-of-reps then records the burst, not the
-    # query. Passes are ~2-4 min apart, so a burst hits DIFFERENT
-    # queries each pass and the per-query min escapes it. clearCache
-    # between samples (a query must never replay its own persisted
-    # intermediates) but no full System.gc inside the fast passes —
-    # sub-second queries leave little garbage and the gc would triple
-    # the added wall-clock. Batch fast passes run BEFORE the streaming
-    # section (state-store residue inflates batch queries, measured
-    # ~+30%); streaming entries keep back-to-back reps (each drain is
-    # a fresh-uuid memory-sink replay; their noise is dominated by
-    # micro-batch scheduling, not box bursts).
-    fastrep_n = int(os.environ.get("SPARK_GRAFT_BENCH_FASTREP_N", "3"))
-    iterative3 = set() if isolate else set(ISOLATED)
+    # (r5: q126 measured 5 s in one run and 49 s in another on
+    # identical code), and sub-threshold single shots differed ±40-80%
+    # between same-code r10 runs; see the scheme above. Streaming
+    # entries rerun too (each drain uses a fresh uuid memory sink, so a
+    # rerun is just another replay): single shots swung ±30-60% on
+    # q162/q172. Without the borderline rule, a burst-inflated first
+    # sample >= RERUN_SEC traps a fast query in the back-to-back path,
+    # where the same burst covers both reps (r12: q63_tpch_q1 [3.28,
+    # 3.92] vs 1.65 from separated passes). The fast passes run BEFORE the
+    # streaming section (state-store residue inflates batch queries,
+    # ~+30%) with clearCache but no System.gc between samples (sub-second
+    # queries leave little garbage and the GC would triple the added
+    # wall-clock); streaming noise is micro-batch scheduling, not box
+    # bursts, so its reps stay back-to-back.
     streaming_names = {n for n in names if "_stream" in n}
     fast_batch: list[str] = []
 
-    def _measure(name: str, i: int) -> None:
-        if i % 20 == 0:
-            # periodic probe (~2 s each) so every shared-loop query has
-            # a box-speed sample within ~10 queries of when it ran
-            plog.probe(f"shared:{i}")
-        q = REGISTRY[name]
-        t_started = time.monotonic()
+    def _measure(name: str) -> None:
         try:
-            t1, mid1 = _run_once(q)
-            plog.sample(name, "p1", t1, mid1)
-            times[name] = t1
-            if t1 >= rerun_sec:
+            t1 = _run_once(name, "p1")
+            if t1 >= RERUN_SEC:
                 _quiesce()
-                t2, mid2 = _run_once(q)
-                plog.sample(name, "rerun", t2, mid2)
-                reruns[name] = [t1, t2]
-                times[name] = min(t1, t2)
-                if name in iterative3:
-                    _quiesce()
-                    t3, mid3 = _run_once(q)
-                    plog.sample(name, "rerun", t3, mid3)
-                    reruns[name].append(t3)
-                    times[name] = min(times[name], t3)
-                if name not in streaming_names and times[name] < 2 * rerun_sec:
-                    # r12: a burst-inflated FIRST sample >= rerun_sec
-                    # used to trap a fast query in this back-to-back
-                    # path, where the same minutes-wide burst covers
-                    # both reps (run B measured q63_tpch_q1 at
-                    # [3.28, 3.92] while run A's separated passes gave
-                    # 1.65 on identical code). Borderline queries —
-                    # min under 2x the threshold — now ALSO get the
-                    # separated passes; genuinely heavy queries (>= 2x)
-                    # stay rerun-only, bounding the added pass cost.
+                _run_once(name, "rerun")
+                if name not in streaming_names and log.best(name) < 2 * RERUN_SEC:
                     fast_batch.append(name)
             elif name in streaming_names:
-                rs = [t1]
-                for _ in range(fastrep_n - 1):
+                for _ in range(FAST_PASSES - 1):
                     spark.catalog.clearCache()
-                    tr, midr = _run_once(q)
-                    plog.sample(name, "rep", tr, midr)
-                    rs.append(tr)
-                reruns[name] = rs
-                times[name] = min(rs)
+                    _run_once(name, "rep")
             else:
-                reruns[name] = [t1]
                 fast_batch.append(name)
-            plog.mark(name, t_started, time.monotonic())
-            print(f"[bench] {name}: {times[name]:.2f}s", file=sys.stderr, flush=True)
+            print(f"[bench] {name}: {log.best(name):.2f}s", file=sys.stderr, flush=True)
         except Exception as exc:  # one bad query must not zero the bench
-            errors[name] = f"{type(exc).__name__}: {exc}"[:300]
-            # keep queries/errors disjoint even when the FIRST run
-            # succeeded and a rerun/rep failed (same invariant the
-            # fast-pass error path enforces): flakiness surfaces as an
-            # error, never as a half-measured number
-            times.pop(name, None)
-            reruns.pop(name, None)
-            plog.samples.pop(name, None)
-            print(f"[bench] {name}: FAILED {errors[name]}", file=sys.stderr, flush=True)
+            log.fail(name, f"{type(exc).__name__}: {exc}")
+            print(f"[bench] {name}: FAILED {log.errors[name]}", file=sys.stderr, flush=True)
         _quiesce()
 
-    batch_names = [n for n in names if n not in streaming_names]
-    for i, name in enumerate(batch_names):
-        _measure(name, i)
-    # fast passes 2..N over the batch fast set (see the burst comment)
-    for p in range(1, fastrep_n):
-        plog.probe(f"fastpass:{p}")
-        for j, name in enumerate(fast_batch):
-            if name in errors:
+    log.health_row("shared")
+    for name in names:
+        if name not in streaming_names:
+            _measure(name)
+    for p in range(2, FAST_PASSES + 1):
+        log.health_row(f"fast{p}")
+        for name in fast_batch:
+            if name in log.errors:
                 continue
-            if j and j % 40 == 0:
-                plog.probe(f"fastpass:{p}:{j}")
             try:
-                t_started = time.monotonic()
-                t, midp = _run_once(REGISTRY[name])
-                plog.sample(name, f"fast{p + 1}", t, midp)
-                reruns[name].append(t)
-                if t < times[name]:
-                    # ADVICE r11: the calibration factor brackets the
-                    # run window of whichever SAMPLE produced the
-                    # reported min — a pass-2/3 win minutes after
-                    # pass 1 must re-anchor query_mid, or the nearest
-                    # probes describe a different box phase than the
-                    # one the winning sample actually ran in
-                    times[name] = t
-                    plog.mark(name, t_started, time.monotonic())
+                _run_once(name, f"fast{p}")
             except Exception as exc:
-                # keep the errors/queries sets disjoint (a query never
-                # appears in both — the artifact invariant): a pass-1
-                # success followed by a pass-N failure is flakiness the
-                # error should surface, not average away
-                errors[name] = f"fastpass: {type(exc).__name__}: {exc}"[:300]
-                times.pop(name, None)
-                reruns.pop(name, None)
-                plog.samples.pop(name, None)
+                log.fail(name, f"fastpass: {type(exc).__name__}: {exc}")
             spark.catalog.clearCache()
-        print(f"[bench] fast pass {p + 1}/{fastrep_n} done ({len(fast_batch)} queries)",
+        print(f"[bench] fast pass {p}/{FAST_PASSES} done ({len(fast_batch)} queries)",
               file=sys.stderr, flush=True)
         _quiesce()
-    for i, name in enumerate(n for n in names if n in streaming_names):
-        _measure(name, i)
+    for name in names:
+        if name in streaming_names:
+            _measure(name)
 
-    calibration["end"] = plog.probe("end")
-    out = build_artifact(times, errors, reruns, iso_runs, plog, sf_dir, calibration)
+    log.health_row("end")
+    out = build_artifact(log, iso_names, sf_dir)
     # Full per-query record for inspection across rounds.
     try:
         with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"), "w") as fh:
@@ -634,73 +430,40 @@ def main() -> None:
     spark.stop()
 
 
-def build_artifact(
-    times: dict[str, float],
-    errors: dict[str, str],
-    reruns: dict[str, list[float]],
-    iso_runs: dict[str, list[float]],
-    plog: _ProbeLog,
-    sf_dir: str,
-    calibration: dict,
-) -> dict:
-    """Assemble the round artifact from the measured pieces. Pure of
-    Spark so the failure shapes are unit-testable (VERDICT r10 #5):
-    with ANY error — isolated subprocess or shared loop — the headline
-    `value`/`value_calibrated` must be null (a crashed expensive query
-    must never read as a speedup), the error recorded, the partial sum
-    only under `sum_succeeded_sec`, and the failed query absent from
-    `queries` (no double-booking; the ADVICE-r9 fix keeps iso-failed
-    queries out of the shared loop entirely)."""
+def build_artifact(log: _RunLog, iso_names: list[str], sf_dir: str) -> dict:
+    """Assemble the round artifact from the run log. Pure of Spark so
+    the failure shapes are unit-testable (VERDICT r10 #5): each query's
+    value is the min of its samples; with ANY error — isolated
+    subprocess or shared loop — the headline `value` is null (a crashed
+    expensive query must never read as a speedup), the error recorded,
+    the partial sum only under `sum_succeeded_sec`, and the failed query
+    absent from `queries`."""
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    calibrated = plog.calibrated(times)
+    times = {n: log.best(n) for n in log.samples}
     out = {
         "metric": "sum_query_wall_sec",
-        # A failed query must not silently LOWER the total (a regression
-        # that crashes an expensive query would read as a speedup):
-        # totals are only comparable across rounds when every query ran.
-        "value": round(sum(times.values()), 4) if not errors else None,
+        "value": round(sum(times.values()), 4) if not log.errors else None,
         "unit": "sec",
         "queries": times,
-        # Box-speed-normalized seconds (VERDICT r9 #2): each query's raw
-        # time scaled by _CALIB_REF_GEMM / nearest-probe-gemm, so a
-        # round measured on a 2x-slower box phase reads as the SAME
-        # calibrated number, not a 2x plan regression. REF is pinned to
-        # the r9 end-of-run probe, so these compare directly against
-        # BENCH_r09's raw per-query record.
-        "queries_calibrated": calibrated,
-        "value_calibrated": round(sum(calibrated.values()), 4) if not errors else None,
-        "calib_ref_gemm": _CALIB_REF_GEMM,
         "n_queries": len(times),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        # start/end probes kept for continuity with r9 artifacts; the
-        # full probe series + per-query measurement midpoints live in
-        # BENCH_FULL.json only, so any round can be re-calibrated
-        # post-hoc against a different reference or estimator
-        "box_calibration": calibration,
-        "probes": plog.probes,
-        "query_mid": {n: round(t, 2) for n, t in plog.query_mid.items()},
     }
-    if iso_runs:
-        # which numbers are fresh-JVM min-of-3 (vs shared-session) —
-        # kept in the stdout line too so the recorded BENCH_r{N}.json
-        # says HOW its numbers were measured
-        out["isolated"] = sorted(iso_runs)
-    if errors:
-        out["errors"] = errors
+    isolated = [n for n in iso_names if n in times]
+    if isolated:
+        # which numbers are fresh-JVM (vs shared-session): on the line
+        # too, so a recorded BENCH_r{N}.json says how it was measured
+        out["isolated"] = sorted(isolated)
+    if log.errors:
+        out["errors"] = log.errors
         out["sum_succeeded_sec"] = round(sum(times.values()), 4)
-    if reruns:
-        # both raw timings per re-run query — BENCH_FULL.json only (the
-        # stdout summary line drops this key to stay inside the driver's
-        # 2000-char tail capture)
-        out["reruns"] = reruns
-    if plog.samples:
-        # VERDICT r12 #2: the full per-execution sample vectors —
-        # {name: [[pass_label, sec, t_mid], ...]} — BENCH_FULL only.
-        # Within-run spread classifies the next q125-style residual
-        # mover from ONE committed record (tools/probe_align.py and
-        # tools/bench_compare.py --ab both read it) instead of paired
-        # fresh-JVM reruns.
-        out["samples"] = plog.samples
+    # BENCH_FULL only: every execution ({name: [[pass_label, sec,
+    # t_mid], ...]}), so `tools/bench_compare.py --ab` judges a
+    # cross-round delta against the query's own within-run spread, and
+    # the per-pass box-health rows
+    if log.samples:
+        out["samples"] = log.samples
+    if log.health:
+        out["box_health"] = log.health
     return out
 
 
@@ -710,41 +473,31 @@ def summary_line(out: dict, budget: int = 1700) -> str:
     The driver keeps only the LAST 2000 chars of stdout and json-parses
     the final line — with 150+ queries the full dict blows past that and
     the headline metric is lost (BENCH_r03/r04 both recorded parsed:
-    null). Keep the full summary fields but greedily trim the per-query
-    dict slowest-first to a `budget`-char line (full record is in
+    null). Keep the summary fields but greedily trim the per-query dict
+    slowest-first to a `budget`-char line (full record is in
     BENCH_FULL.json).
     """
-    line_out = dict(out)
-    line_out.pop("reruns", None)  # full record only — too wide for the line
-    line_out.pop("probes", None)  # full record only — the series is long
-    line_out.pop("query_mid", None)  # full record only
-    line_out.pop("samples", None)  # full record only — per-execution vectors
+    # samples and box-health rows are full-record only
+    line_out = {k: v for k, v in out.items() if k not in ("samples", "box_health")}
     times = out.get("queries", {})
-    calibrated = out.get("queries_calibrated", {})
     errors = out.get("errors")
     if errors:
         line_out["errors"] = {k: v[:80] for k, v in list(errors.items())[:5]}
-    slowest = sorted(times, key=times.get, reverse=True)
     kept: dict[str, float] = {}
-    kept_cal: dict[str, float] = {}
     line_out["queries"] = kept
-    line_out["queries_calibrated"] = kept_cal
     line_out["queries_shown"] = 0
-    for name in slowest:
+    for name in sorted(times, key=times.get, reverse=True):
         kept[name] = round(times[name], 2)
-        if name in calibrated:
-            kept_cal[name] = round(calibrated[name], 2)
         line_out["queries_shown"] = len(kept)
         if len(json.dumps(line_out)) > budget:
             del kept[name]
-            kept_cal.pop(name, None)
             line_out["queries_shown"] = len(kept)
             break
     return json.dumps(line_out)
 
 
 if __name__ == "__main__":
-    if len(sys.argv) == 3 and sys.argv[1] == "--single":
-        run_single(sys.argv[2])
+    if len(sys.argv) in (3, 4) and sys.argv[1] == "--single":
+        run_single(sys.argv[2], int(sys.argv[3]) if len(sys.argv) == 4 else 3)
     else:
         main()

@@ -341,6 +341,17 @@ class TableMetadataBuilder:
         # stored versions omit a null current-snapshot-id (store.py scrub)
         if self.m.get("current-snapshot-id") in ids:
             self.m["current-snapshot-id"] = None
+        # an entry whose snapshot is gone drops out, and so does all the
+        # history before it, so the log has no gaps (Iceberg Java
+        # TableMetadata.Builder.updateSnapshotLog)
+        live = {s["snapshot-id"] for s in self.m["snapshots"]}
+        log: list[dict] = []
+        for entry in self.m["snapshot-log"]:
+            if entry["snapshot-id"] in live:
+                log.append(entry)
+            else:
+                log.clear()
+        self.m["snapshot-log"] = log
 
     def _set_snapshot_ref(self, u: dict) -> None:
         name = u["ref-name"]

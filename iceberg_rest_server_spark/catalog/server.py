@@ -301,15 +301,20 @@ class CatalogHandler(BaseHTTPRequestHandler):
             config["s3.endpoint"] = profile["endpoint"]
         return config
 
+    def _sign_profile(self, prefix: str) -> dict:
+        """The warehouse's storage profile, loaded once per sign request;
+        a warehouse without one cannot sign (400)."""
+        profile = self.store.get_warehouse(prefix).get("storage_profile")
+        if not profile:
+            raise ValidationError("warehouse has no storage profile")
+        return profile
+
     def _sign_route(
-        self, prefix: str, body: dict, table_location: str
+        self, prefix: str, body: dict, table_location: str, profile: dict
     ) -> tuple[int, dict | None]:
         """Shared sign flow for the table-scoped and prefix-only routes:
-        profile + region checks, then URI validation + SigV4."""
-        wh = self.store.get_warehouse(prefix)
-        profile = wh.get("storage_profile")
-        if not profile:
-            return _error(400, "warehouse has no storage profile", "ValidationException")
+        region check against the loaded profile, then URI validation +
+        SigV4."""
         if body.get("region") and body["region"] != profile.get("region"):
             # region must match the profile (s3_signer.rs:309-320)
             return _error(
@@ -317,7 +322,7 @@ class CatalogHandler(BaseHTTPRequestHandler):
                 f"region {body.get('region')!r} does not match profile",
                 "ValidationException",
             )
-        creds = self.store.get_storage_credentials(prefix)
+        creds = self.store.get_storage_credentials(prefix, profile)
         if not creds.get("access-key-id") or not creds.get("secret-access-key"):
             # MissingStorageCredential (storage/s3.rs:264-275)
             return _error(400, "storage credentials missing", "MissingStorageCredential")
@@ -504,17 +509,16 @@ class CatalogHandler(BaseHTTPRequestHandler):
                 # POST .../tables/{tbl}/v1/aws/s3/sign (s3_signer.rs:38-173)
                 ns, tbl = _ns_from_path(rest[1]), rest[3]
                 table = store.load_table(prefix, ns, tbl)
-                return self._sign_route(prefix, self._body(), table["table-location"])
+                return self._sign_route(
+                    prefix, self._body(), table["table-location"], self._sign_profile(prefix)
+                )
             if rest == ["v1", "aws", "s3", "sign"] and method == "POST":
                 # prefix-only sign route — the one Spark actually calls
                 # when s3.signer.uri is warehouse-scoped: resolve the
                 # table from the request URI by location prefix
                 # (catalog/s3_signer.rs:55-90)
                 body = self._body()
-                wh = store.get_warehouse(prefix)
-                profile = wh.get("storage_profile")
-                if not profile:
-                    return _error(400, "warehouse has no storage profile", "ValidationException")
+                profile = self._sign_profile(prefix)
                 try:
                     s3loc = parse_s3_uri(body["uri"], profile.get("endpoint-host"))
                     key = urllib.parse.unquote(s3loc.key)
@@ -527,7 +531,7 @@ class CatalogHandler(BaseHTTPRequestHandler):
                     # reference maps location-resolution failure to 401
                     # InvalidLocation (catalog/s3_signer.rs:70-80)
                     return _error(401, str(e), "InvalidLocation")
-                return self._sign_route(prefix, body, table["table-location"])
+                return self._sign_route(prefix, body, table["table-location"], profile)
             if rest == ["tables", "rename"]:
                 body = self._body()
                 store.rename_table(

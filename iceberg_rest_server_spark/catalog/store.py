@@ -322,10 +322,15 @@ class CatalogStore:
                 (json.dumps(profile), warehouse_id),
             )
 
-    def get_storage_credentials(self, warehouse_id: str) -> dict:
+    def get_storage_credentials(
+        self, warehouse_id: str, profile: dict | None = None
+    ) -> dict:
         """Decrypt the warehouse's storage credentials for server-side
-        use (the signer) — never returned over the management API."""
-        profile = self.get_warehouse(warehouse_id).get("storage_profile") or {}
+        use (the signer) — never returned over the management API. A
+        caller that holds the warehouse's storage ``profile`` already
+        passes it, and the warehouse is not loaded again."""
+        if profile is None:
+            profile = self.get_warehouse(warehouse_id).get("storage_profile") or {}
         secret_id = profile.get("storage-secret-id")
         if not secret_id:
             return {}
@@ -550,13 +555,15 @@ class CatalogStore:
         row = self._namespace_row(warehouse_id, namespace)
         if row is None:
             raise NamespaceNotFoundError(f"namespace {namespace} not found")
-        n_tables = self._conn.execute(
-            "SELECT count(*) FROM tbl WHERE namespace_id = ?", (row[0],)
-        ).fetchone()[0]
-        if n_tables:
-            # FK violation → NamespaceNotEmpty (postgres/namespace.rs:273-283)
-            raise NamespaceNotEmptyError(f"namespace {namespace} is not empty")
         with self._txn() as c:
+            # counted under the same transaction as the DELETE, so a
+            # table created in between cannot trip the foreign key
+            n_tables = c.execute(
+                "SELECT count(*) FROM tbl WHERE namespace_id = ?", (row[0],)
+            ).fetchone()[0]
+            if n_tables:
+                # FK violation → NamespaceNotEmpty (postgres/namespace.rs:273-283)
+                raise NamespaceNotEmptyError(f"namespace {namespace} is not empty")
             c.execute("DELETE FROM namespace WHERE namespace_id = ?", (row[0],))
 
     def update_namespace_properties(
@@ -564,16 +571,18 @@ class CatalogStore:
     ) -> dict:
         if "location" in updates:
             raise ValidationError("namespace 'location' property is catalog-managed")
-        row = self._namespace_row(warehouse_id, namespace)
-        if row is None:
-            raise NamespaceNotFoundError(f"namespace {namespace} not found")
-        props = json.loads(row[2])
-        missing = [k for k in removals if k not in props]
-        removed = [k for k in removals if k in props]
-        for k in removed:
-            props.pop(k)
-        props.update(updates)
         with self._txn() as c:
+            # read under the write transaction, so a concurrent update
+            # is built on, not overwritten
+            row = self._namespace_row(warehouse_id, namespace)
+            if row is None:
+                raise NamespaceNotFoundError(f"namespace {namespace} not found")
+            props = json.loads(row[2])
+            missing = [k for k in removals if k not in props]
+            removed = [k for k in removals if k in props]
+            for k in removed:
+                props.pop(k)
+            props.update(updates)
             c.execute(
                 "UPDATE namespace SET properties = ? WHERE namespace_id = ?",
                 (json.dumps(props), row[0]),
@@ -637,8 +646,8 @@ class CatalogStore:
             # (catalog/tables.rs:150-188 ordering)
             metadata_location = metadata_file_path(table_location, new_uuid())
             write_metadata_file(metadata_location, metadata_json)
-        with self._lock, self._conn:
-            existing = self._conn.execute(
+        with self._txn() as c:
+            existing = c.execute(
                 "SELECT table_id, metadata_location FROM tbl"
                 " WHERE namespace_id = ? AND name = ?",
                 (ns_row[0], name),
@@ -648,8 +657,8 @@ class CatalogStore:
                     raise TableAlreadyExistsError(f"table {name!r} already exists")
                 # staged row may be overwritten by a new create
                 # (postgres/table.rs:237-239, 855-860)
-                self._conn.execute("DELETE FROM tbl WHERE table_id = ?", (existing[0],))
-            self._conn.execute(
+                c.execute("DELETE FROM tbl WHERE table_id = ?", (existing[0],))
+            c.execute(
                 "INSERT INTO tbl (table_id, namespace_id, name, metadata, metadata_location,"
                 " table_location) VALUES (?,?,?,?,?,?)",
                 (
@@ -800,18 +809,17 @@ class CatalogStore:
             for change in changes:
                 ns, name = change["namespace"], change["name"]
                 row = self._table_row(warehouse_id, ns, name)
-                current = None
-                if row is not None and row[2] is not None:
-                    current = json.loads(row[1])
-                elif row is not None and row[2] is None and not any(
-                    r.get("type") == "assert-create" for r in change.get("requirements", [])
+                current = None if row is None else json.loads(row[1])
+                requirements = change.get("requirements", [])
+                # a staged row reads as absent to a change that asserts
+                # create; committing anything else onto it finalizes it
+                asserted = current
+                if row is not None and row[2] is None and any(
+                    r.get("type") == "assert-create" for r in requirements
                 ):
-                    # committing onto a staged table finalizes it
-                    current = json.loads(row[1])
-                for req in change.get("requirements", []):
-                    assert_requirement(req, current)
-                if current is None and row is not None:
-                    current = json.loads(row[1])
+                    asserted = None
+                for req in requirements:
+                    assert_requirement(req, asserted)
                 if current is None:
                     raise TableNotFoundError(f"table {ns}.{name} not found")
                 builder = TableMetadataBuilder(current)

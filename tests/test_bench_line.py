@@ -53,61 +53,6 @@ def test_errors_truncated_but_present():
     assert all(len(v) <= 80 for v in parsed["errors"].values())
 
 
-def test_calibrated_queries_ride_the_line_probes_do_not():
-    """r10: per-query calibrated seconds must appear in the stdout line
-    (that's what makes BENCH_r10 deltas attributable without prose);
-    the raw probe SERIES is full-record-only — it would blow the
-    2000-char tail capture."""
-    out = _out(300)
-    out["queries_calibrated"] = {n: round(t * 0.8, 4) for n, t in out["queries"].items()}
-    out["value_calibrated"] = round(sum(out["queries_calibrated"].values()), 4)
-    out["probes"] = [{"t": i, "numpy_gemm_1024_sec": 0.01, "label": "x"} for i in range(40)]
-    line = summary_line(out)
-    assert len(line) <= 1900
-    parsed = json.loads(line)
-    assert "probes" not in parsed
-    assert parsed["value_calibrated"] == out["value_calibrated"]
-    kept = parsed["queries"]
-    # every raw entry kept on the line has its calibrated twin
-    assert set(parsed["queries_calibrated"]) == set(kept)
-    for n in kept:
-        assert parsed["queries_calibrated"][n] == round(out["queries"][n] * 0.8, 2)
-
-
-def test_probe_log_min_of_5_normalization():
-    """Calibration uses the MINIMUM of the 5 nearest probes: probe
-    slowness is one-sided (steal/contention only ever slows a probe),
-    and the r10 runs measured dense 2-3x probe bounce with no sustained
-    structure on this virtualized box while query raws barely moved.
-    A GENUINE slow phase — wide enough to cover all 5 nearest probes —
-    must still halve the calibrated number; any single fast probe in
-    the window restores the capacity estimate."""
-    from bench import _CALIB_REF_GEMM, _ProbeLog
-
-    REF = _CALIB_REF_GEMM
-    plog = _ProbeLog()
-    # sustained slow phase: five consecutive 2x probes around the query
-    for t, g in (
-        (0.0, 2 * REF), (100.0, 2 * REF), (200.0, 2 * REF),
-        (300.0, 2 * REF), (400.0, 2 * REF), (500.0, REF), (600.0, REF),
-    ):
-        plog.probes.append({"t": t, "numpy_gemm_1024_sec": g, "label": "x"})
-    plog.mark("sustained_slow_q", 190.0, 210.0)  # 5 nearest all 2x
-    plog.mark("fast_phase_q", 590.0, 610.0)      # window reaches a REF probe
-    cal = plog.calibrated({"sustained_slow_q": 8.0, "fast_phase_q": 8.0})
-    assert cal["sustained_slow_q"] == 4.0
-    assert cal["fast_phase_q"] == 8.0
-    # dense transient bounce (the measured r10 pattern): spikes adjacent
-    # to reference-speed probes never distort innocent queries
-    spiky = _ProbeLog()
-    for t, g in ((0.0, 2.4 * REF), (100.0, 2.2 * REF), (200.0, REF), (300.0, 3 * REF)):
-        spiky.probes.append({"t": t, "numpy_gemm_1024_sec": g, "label": "x"})
-    spiky.mark("innocent_q", 95.0, 105.0)
-    assert spiky.calibrated({"innocent_q": 8.0})["innocent_q"] == 8.0
-    # unmarked queries fall back to factor 1.0 (raw == calibrated)
-    assert spiky.calibrated({"never_marked": 3.0})["never_marked"] == 3.0
-
-
 def test_isolated_failure_never_falls_back_to_shared_session():
     """ADVICE r9 (medium): a query that failed its fresh-JVM run must
     NOT re-run in the shared loop — that records the JIT-polluted
@@ -124,54 +69,39 @@ def test_isolated_failure_never_falls_back_to_shared_session():
     assert "q96_pagerank_canonical" not in names
 
 
-def test_box_calibration_survives_line_trim():
-    """The calibration probes exist to make BENCH_r{N}.json numbers
-    box-comparable — they must ride the stdout line, not just
-    BENCH_FULL.json, and never be sacrificed to the per-query trim."""
-    out = _out(300)
-    out["box_calibration"] = {
-        "start": {"numpy_gemm_1024_sec": 0.0142, "python_loop_2m_sec": 0.0975},
-        "end": {"numpy_gemm_1024_sec": 0.0112, "python_loop_2m_sec": 0.1037},
-    }
-    line = summary_line(out)
-    assert len(line) <= 1900
-    parsed = json.loads(line)
-    assert parsed["box_calibration"]["start"]["numpy_gemm_1024_sec"] == 0.0142
-    assert parsed["queries_shown"] > 10  # trim still leaves the slow tail
-
-
 def test_isolated_failure_artifact_shape():
     """VERDICT r10 #5: a round with ONE isolated-subprocess failure must
-    still ship a well-formed artifact — error recorded, headline null
-    (raw AND calibrated), failed query absent from `queries` (no
-    double-booking), partial sum only under sum_succeeded_sec — and the
-    summary line must parse and carry all of it."""
-    from bench import _ProbeLog, _shared_loop_order, build_artifact
+    still ship a well-formed artifact — error recorded, headline null,
+    failed query absent from `queries` (no double-booking), partial sum
+    only under sum_succeeded_sec — and the summary line must parse and
+    carry all of it."""
+    from bench import _RunLog, _shared_loop_order, build_artifact
 
     registry = {"q96_pagerank_canonical", "q49_dedup_clusters", "q01_scan_projection"}
-    iso_runs = {"q49_dedup_clusters": [2.4, 1.9, 2.0]}
-    iso_errors = {"q96_pagerank_canonical": "isolated: RuntimeError: boom"}
+    log = _RunLog()
+    for sec in (2.4, 1.9, 2.0):
+        log.sample("q49_dedup_clusters", "iso1", sec, 10.0)
+    log.sample("q96_pagerank_canonical", "iso1", 7.0, 20.0)
+    log.fail("q96_pagerank_canonical", "isolated p2: RuntimeError: boom")
     # the iso-failed query never re-enters the shared loop (ADVICE r9)
-    shared = _shared_loop_order(registry, iso_runs, iso_errors)
+    shared = _shared_loop_order(registry, log.samples, log.errors)
     assert shared == ["q01_scan_projection"]
-    times = {n: min(r) for n, r in iso_runs.items()}
-    times["q01_scan_projection"] = 0.42  # the shared loop's one result
-    plog = _ProbeLog()
+    log.sample("q01_scan_projection", "p1", 0.42, 30.0)  # the shared loop's one result
     out = build_artifact(
-        times, dict(iso_errors), dict(iso_runs), iso_runs, plog,
-        "/root/testdata/sf0.1", {},
+        log, ["q49_dedup_clusters", "q96_pagerank_canonical"], "testdata/sf0.1"
     )
-    assert out["value"] is None and out["value_calibrated"] is None
-    assert out["errors"] == iso_errors
+    assert out["value"] is None
+    assert out["errors"] == {"q96_pagerank_canonical": "isolated p2: RuntimeError: boom"}
     assert "q96_pagerank_canonical" not in out["queries"]
-    assert "q96_pagerank_canonical" not in out["queries_calibrated"]
+    assert "q96_pagerank_canonical" not in out["samples"]
+    assert out["queries"] == {"q49_dedup_clusters": 1.9, "q01_scan_projection": 0.42}
     assert out["sum_succeeded_sec"] == round(1.9 + 0.42, 4)
     assert out["isolated"] == ["q49_dedup_clusters"]
     assert out["n_queries"] == 2
     line = summary_line(out)
     parsed = json.loads(line)
     assert parsed["value"] is None
-    assert parsed["errors"]["q96_pagerank_canonical"].startswith("isolated:")
+    assert parsed["errors"]["q96_pagerank_canonical"].startswith("isolated")
     assert parsed["sum_succeeded_sec"] == out["sum_succeeded_sec"]
 
 
@@ -180,139 +110,67 @@ def test_samples_ride_full_artifact_not_the_line():
     vectors ({name: [[pass_label, sec, t_mid], ...]}) so within-run
     spread is attributable from ONE committed record; the stdout line
     drops them (they would blow the 2000-char tail capture)."""
-    from bench import _ProbeLog, build_artifact, summary_line
+    from bench import _RunLog, build_artifact, summary_line
 
-    plog = _ProbeLog()
-    plog.sample("q_x", "p1", 1.23, 100.0)
-    plog.sample("q_x", "fast2", 1.11, 300.5)
-    plog.sample("q_y", "iso1", 5.5, 50.0)
-    out = build_artifact(
-        {"q_x": 1.11, "q_y": 5.5}, {}, {}, {}, plog, "/root/testdata/sf0.1", {},
-    )
+    log = _RunLog()
+    log.sample("q_x", "p1", 1.23, 100.0)
+    log.sample("q_x", "fast2", 1.11, 300.5)
+    log.sample("q_y", "iso1", 5.5, 50.0)
+    out = build_artifact(log, ["q_y"], "testdata/sf0.1")
     assert out["samples"] == {
         "q_x": [["p1", 1.23, 100.0], ["fast2", 1.11, 300.5]],
         "q_y": [["iso1", 5.5, 50.0]],
     }
+    # each query's value is the min over its samples
+    assert out["queries"] == {"q_x": 1.11, "q_y": 5.5}
     parsed = json.loads(summary_line(out))
     assert "samples" not in parsed
     # rounding discipline: sample() rounds sec to 4 and t_mid to 2
-    plog2 = _ProbeLog()
-    plog2.sample("q_z", "p1", 1.234567, 99.12345)
-    assert plog2.samples["q_z"] == [["p1", 1.2346, 99.12]]
+    log2 = _RunLog()
+    log2.sample("q_z", "p1", 1.234567, 99.12345)
+    assert log2.samples["q_z"] == [["p1", 1.2346, 99.12]]
 
 
 def test_clean_run_artifact_has_no_error_keys():
-    from bench import _ProbeLog, build_artifact
+    from bench import _RunLog, build_artifact
 
-    plog = _ProbeLog()
-    out = build_artifact(
-        {"q01_scan_projection": 1.0}, {}, {}, {}, plog, "/root/testdata/sf0.1", {},
-    )
-    assert out["value"] == 1.0 and out["value_calibrated"] == 1.0
+    log = _RunLog()
+    log.sample("q01_scan_projection", "p1", 1.0, 1.0)
+    out = build_artifact(log, [], "testdata/sf0.1")
+    assert out["value"] == 1.0
     assert "errors" not in out and "sum_succeeded_sec" not in out
     assert "isolated" not in out
 
 
-def test_bench_compare_same_code_ab():
-    """tools/bench_compare.py --ab: same-code reproducibility stats —
-    within-10% shares split at the 2 s fast/slow boundary, movers
-    ranked by |delta|, totals carried through verbatim."""
-    import importlib.util
-    import os
+def test_line_key_set_is_pinned():
+    """The stdout line carries exactly the one-line summary fields:
+    nothing of the full record (samples, box-health rows) and none of
+    the retired calibration fields, and it fits the tail capture at 400
+    queries with every full-record field populated."""
+    from bench import _RunLog, build_artifact
 
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "bench_compare", os.path.join(here, "tools", "bench_compare.py")
-    )
-    bc = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bc)
-
-    a = {
-        "value": 10.0, "value_calibrated": 9.0,
-        "queries": {"fast_ok": 1.0, "fast_bad": 1.0, "slow_ok": 5.0, "slow_bad": 4.0},
-        "queries_calibrated": {"fast_ok": 1.0, "fast_bad": 1.0, "slow_ok": 5.0, "slow_bad": 4.0},
-    }
-    b = {
-        "value": 11.0, "value_calibrated": 10.0,
-        "queries": {"fast_ok": 1.05, "fast_bad": 1.5, "slow_ok": 5.2, "slow_bad": 8.0},
-        "queries_calibrated": {"fast_ok": 1.05, "fast_bad": 1.5, "slow_ok": 5.2, "slow_bad": 8.0},
-    }
-    out = bc.compare_same_code(a, b)
-    raw = out["raw"]
-    assert raw["compared"] == 4 and raw["within_10pct"] == 2
-    assert raw["within_10pct_share"] == 0.5
-    assert raw["fast_within_10pct_share"] == 0.5  # fast_ok yes, fast_bad no
-    assert raw["slow_within_10pct_share"] == 0.5
-    # absolute-floor lens: slow_ok (+4%) and fast_ok (+50ms) pass both
-    # ways; fast_bad (+0.5s, +50%) and slow_bad (+4s, +100%) fail both
-    assert raw["within_10pct_or_200ms_share"] == 0.5
-    assert list(raw["movers"])[0] == "slow_bad"  # +100% is the top mover
-    assert out["totals"] == {"a": [10.0, 9.0], "b": [11.0, 10.0]}
-
-
-def test_isolated_two_pass_merges_runs_and_marks_winning_pass(monkeypatch):
-    """r12 two-pass isolated scheme: each query's runs accumulate across
-    both subprocess passes, the recorded time is the min over both, the
-    calibration midpoint tracks whichever PASS produced that min, pass 2
-    subprocesses get SPARK_GRAFT_SINGLE_MIN_RUNS=2, and a pass-2 failure
-    drops the query entirely (flakiness surfaces, never averages away)."""
-    import types
-
-    import bench
-
-    calls = []
-
-    def fake_run(cmd, **kw):
-        name = cmd[-1]
-        p = len([c for c in calls if c[0] == name])  # 0-based pass idx
-        calls.append((name, kw.get("env", {}).get("SPARK_GRAFT_SINGLE_MIN_RUNS")))
-        if name == "q_flaky" and p == 1:
-            raise RuntimeError("jvm died")
-        runs = {"q_a": [[10.0, 4.0, 3.5], [9.0, 2.5]],     # pass 2 wins
-                "q_b": [[8.0, 2.0], [7.0, 2.9]],           # pass 1 wins
-                "q_flaky": [[5.0, 1.0], None]}[name][p]
-        # the subprocess stamps [sec, t_mid] per execution (r13)
-        samples = [[r, 1000.0 * (p + 1) + i] for i, r in enumerate(runs)]
-        return types.SimpleNamespace(
-            stdout=json.dumps({"name": name, "runs": runs, "samples": samples}) + "\n",
-            stderr="", returncode=0,
-        )
-
-    import subprocess
-
-    monkeypatch.setattr(subprocess, "run", fake_run)
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_ISOPASS", "2")
-    plog = bench._ProbeLog()
-    runs, errors = bench._run_isolated(["q_a", "q_b", "q_flaky"], plog)
-
-    assert runs["q_a"] == [10.0, 4.0, 3.5, 9.0, 2.5] and min(runs["q_a"]) == 2.5
-    assert runs["q_b"] == [8.0, 2.0, 7.0, 2.9]
-    # flaky: pass-1 success + pass-2 failure -> error recorded, runs dropped
-    assert "q_flaky" not in runs and "isolated p2" in errors["q_flaky"]
-    # VERDICT r12 #2: every subprocess execution lands in the sample
-    # vector as [pass_label, sec, t_mid]; a dropped query drops its
-    # samples too (queries/errors stay disjoint in the artifact)
-    assert plog.samples["q_a"] == [
-        ["iso1", 10.0, 1000.0], ["iso1", 4.0, 1001.0], ["iso1", 3.5, 1002.0],
-        ["iso2", 9.0, 2000.0], ["iso2", 2.5, 2001.0],
-    ]
-    assert [s[0] for s in plog.samples["q_b"]] == ["iso1", "iso1", "iso2", "iso2"]
-    assert "q_flaky" not in plog.samples
-    # pass-2 subprocesses ran with the lowered min-runs floor
-    by_pass = {}
-    for name, minruns in calls:
-        by_pass.setdefault(name, []).append(minruns)
-    assert by_pass["q_a"][0] is None and by_pass["q_a"][1] == "2"
-    # the calibration midpoint tracks the winning pass: q_a's mark was
-    # re-anchored in pass 2 (later than q_b's pass-1 mark would allow
-    # if it had been left at pass 1)
-    assert plog.query_mid["q_a"] > plog.query_mid["q_b"]
-    # single-pass mode: no pass-2 subprocess, no lowered floor
-    calls.clear()
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_ISOPASS", "1")
-    runs1, errors1 = bench._run_isolated(["q_a"], bench._ProbeLog())
-    assert runs1["q_a"] == [10.0, 4.0, 3.5] and not errors1
-    assert [c[1] for c in calls] == [None]
+    log = _RunLog()
+    for i in range(400):
+        name = f"q{i:03d}_some_descriptive_query_name"
+        for label in ("p1", "fast2", "fast3"):
+            log.sample(name, label, 1.2345 + i, 100.0 + i)
+    for label in ("start", "iso1", "iso2", "shared", "fast2", "fast3", "end"):
+        log.health.append({"label": label, "t": 1.0, "numpy_gemm_1024_sec": 0.01,
+                           "python_loop_2m_sec": 0.1, "memfault_256m_mb_s": 900.0})
+    base = {"metric", "value", "unit", "queries", "n_queries", "sf", "queries_shown"}
+    out = build_artifact(log, ["q000_some_descriptive_query_name"], "testdata/sf0.1")
+    assert {"samples", "box_health"} <= set(out)
+    line = summary_line(out)
+    assert len(line) <= 1900
+    parsed = json.loads(line)
+    assert set(parsed) == base | {"isolated"}
+    assert parsed["value"] is not None and parsed["n_queries"] == 400
+    log.fail("q001_some_descriptive_query_name", "RuntimeError: boom")
+    line = summary_line(build_artifact(log, [], "testdata/sf0.1"))
+    assert len(line) <= 1900
+    parsed = json.loads(line)
+    assert set(parsed) == base | {"errors", "sum_succeeded_sec"}
+    assert parsed["value"] is None
 
 
 def _load_tool(name):
@@ -328,33 +186,110 @@ def _load_tool(name):
     return mod
 
 
+def test_bench_compare_same_code_ab():
+    """tools/bench_compare.py --ab: same-code reproducibility stats —
+    within-10% shares split at the 2 s fast/slow boundary, movers
+    ranked by |delta|, totals carried through verbatim."""
+    bc = _load_tool("bench_compare")
+    a = {
+        "value": 10.0,
+        "queries": {"fast_ok": 1.0, "fast_bad": 1.0, "slow_ok": 5.0, "slow_bad": 4.0},
+    }
+    b = {
+        "value": 11.0,
+        "queries": {"fast_ok": 1.05, "fast_bad": 1.5, "slow_ok": 5.2, "slow_bad": 8.0},
+    }
+    out = bc.compare_same_code(a, b)
+    assert out["compared"] == 4 and out["within_10pct"] == 2
+    assert out["within_10pct_share"] == 0.5
+    assert out["fast_within_10pct_share"] == 0.5  # fast_ok yes, fast_bad no
+    assert out["slow_within_10pct_share"] == 0.5
+    # absolute-floor lens: slow_ok (+4%) and fast_ok (+50ms) pass both
+    # ways; fast_bad (+0.5s, +50%) and slow_bad (+4s, +100%) fail both
+    assert out["within_10pct_or_200ms_share"] == 0.5
+    assert list(out["movers"])[0] == "slow_bad"  # +100% is the top mover
+    assert out["totals"] == {"a": 10.0, "b": 11.0}
+
+
+def test_isolated_two_pass_merges_runs_and_marks_winning_pass(monkeypatch):
+    """r12 two-pass isolated scheme: each query's runs accumulate across
+    both subprocess passes as iso1/iso2 samples, the recorded time is
+    the min over both whichever pass produced it, pass-2 subprocesses
+    are asked for 2 minimum runs on the command line, and a pass-2
+    failure drops the query entirely (flakiness surfaces, never
+    averages away)."""
+    import subprocess
+    import types
+
+    import bench
+
+    calls = []
+
+    def fake_run(cmd, **kw):
+        assert cmd[-3] == "--single"
+        name, min_runs = cmd[-2], cmd[-1]
+        p = len([c for c in calls if c[0] == name])  # 0-based pass idx
+        calls.append((name, min_runs))
+        if name == "q_flaky" and p == 1:
+            raise RuntimeError("jvm died")
+        runs = {"q_a": [[10.0, 4.0, 3.5], [9.0, 2.5]],     # pass 2 wins
+                "q_b": [[8.0, 2.0], [7.0, 2.9]],           # pass 1 wins
+                "q_flaky": [[5.0, 1.0], None]}[name][p]
+        # the subprocess stamps [sec, t_mid] per execution (r13)
+        samples = [[r, 1000.0 * (p + 1) + i] for i, r in enumerate(runs)]
+        return types.SimpleNamespace(
+            stdout=json.dumps({"name": name, "runs": runs, "samples": samples}) + "\n",
+            stderr="", returncode=0,
+        )
+
+    monkeypatch.setattr(subprocess, "run", fake_run)
+    monkeypatch.setattr(bench, "_box_health", lambda: {"numpy_gemm_1024_sec": 0.01})
+    log = bench._RunLog()
+    bench._run_isolated(["q_a", "q_b", "q_flaky"], log)
+
+    assert [s[1] for s in log.samples["q_a"]] == [10.0, 4.0, 3.5, 9.0, 2.5]
+    assert log.best("q_a") == 2.5 and log.best("q_b") == 2.0
+    # flaky: pass-1 success + pass-2 failure -> error recorded, samples dropped
+    assert "q_flaky" not in log.samples and "isolated p2" in log.errors["q_flaky"]
+    # VERDICT r12 #2: every subprocess execution lands in the sample
+    # vector as [pass_label, sec, t_mid]
+    assert log.samples["q_a"] == [
+        ["iso1", 10.0, 1000.0], ["iso1", 4.0, 1001.0], ["iso1", 3.5, 1002.0],
+        ["iso2", 9.0, 2000.0], ["iso2", 2.5, 2001.0],
+    ]
+    assert [s[0] for s in log.samples["q_b"]] == ["iso1", "iso1", "iso2", "iso2"]
+    # pass 1 asks for 3 minimum runs, pass 2 for 2
+    by_pass = {}
+    for name, min_runs in calls:
+        by_pass.setdefault(name, []).append(min_runs)
+    assert by_pass["q_a"] == ["3", "2"]
+    # one box-health row before each pass
+    assert [h["label"] for h in log.health] == ["iso1", "iso2"]
+
+
 def test_bench_compare_all_fast_slow_share_is_none():
     """ADVICE r12: an all-fast A/B has no slow cohort —
     slow_within_10pct_share must read None (mirroring the fast-share
     handling), not 0%."""
     bc = _load_tool("bench_compare")
-    a = {"queries": {"f1": 0.5, "f2": 0.8}, "queries_calibrated": {"f1": 0.5, "f2": 0.8}}
-    b = {"queries": {"f1": 0.51, "f2": 0.82}, "queries_calibrated": {"f1": 0.51, "f2": 0.82}}
-    out = bc.compare_same_code(a, b)
-    assert out["raw"]["slow_within_10pct_share"] is None
-    assert out["raw"]["fast_within_10pct_share"] == 1.0
+    out = bc.compare_same_code({"queries": {"f1": 0.5, "f2": 0.8}},
+                               {"queries": {"f1": 0.51, "f2": 0.82}})
+    assert out["slow_within_10pct_share"] is None
+    assert out["fast_within_10pct_share"] == 1.0
     # and symmetrically: an all-slow A/B reads fast=None
-    a2 = {"queries": {"s1": 5.0}, "queries_calibrated": {"s1": 5.0}}
-    b2 = {"queries": {"s1": 5.2}, "queries_calibrated": {"s1": 5.2}}
-    out2 = bc.compare_same_code(a2, b2)
-    assert out2["raw"]["fast_within_10pct_share"] is None
-    assert out2["raw"]["slow_within_10pct_share"] == 1.0
+    out2 = bc.compare_same_code({"queries": {"s1": 5.0}}, {"queries": {"s1": 5.2}})
+    assert out2["fast_within_10pct_share"] is None
+    assert out2["slow_within_10pct_share"] == 1.0
 
 
 def test_bench_compare_spread_lens():
     """r13: with per-execution sample vectors in the records, --ab
-    annotates each raw mover with both sides' within-run spreads and
+    annotates each mover with both sides' within-run spreads and
     whether the delta is COVERED (noise classified from the committed
     records alone), plus the share of ±10% misses covered by spread."""
     bc = _load_tool("bench_compare")
     a = {
         "queries": {"q_cov": 4.0, "q_real": 4.0, "q_ok": 1.0},
-        "queries_calibrated": {"q_cov": 4.0, "q_real": 4.0, "q_ok": 1.0},
         "samples": {
             # q_cov's own pass-to-pass spread (4.0..5.1) spans the +1s delta
             "q_cov": [["iso1", 5.1, 10.0], ["iso2", 4.0, 500.0]],
@@ -364,7 +299,6 @@ def test_bench_compare_spread_lens():
     }
     b = {
         "queries": {"q_cov": 5.0, "q_real": 5.0, "q_ok": 1.02},
-        "queries_calibrated": {"q_cov": 5.0, "q_real": 5.0, "q_ok": 1.02},
         "samples": {
             "q_cov": [["iso1", 5.0, 10.0], ["iso2", 5.05, 500.0]],
             "q_real": [["iso1", 5.0, 20.0], ["iso2", 5.02, 600.0]],
@@ -372,45 +306,42 @@ def test_bench_compare_spread_lens():
         },
     }
     out = bc.compare_same_code(a, b)
-    ms = out["raw"]["movers_spread"]
+    ms = out["movers_spread"]
     assert ms["q_cov"]["covered"] is True and ms["q_cov"]["a_spread_sec"] == 1.1
     assert ms["q_real"]["covered"] is False  # tight samples both sides: real
     # misses = q_cov and q_real (+25%); exactly one is spread-covered
-    assert out["raw"]["miss_covered_by_spread"] == 0.5
+    assert out["miss_covered_by_spread"] == 0.5
     # the spread is STEADY-state: a fresh-JVM pass's first sample (the
     # cold warm-up run, routinely 2-4x steady) must not make a delta
     # read `covered` — with it excluded, q_warm's tight steady samples
     # (4.0..4.1 vs 5.0..5.1) leave the +1s delta uncovered
     aw = {
-        "queries": {"q_warm": 4.0}, "queries_calibrated": {"q_warm": 4.0},
+        "queries": {"q_warm": 4.0},
         "samples": {"q_warm": [
             ["iso1", 16.0, 10.0], ["iso1", 4.1, 20.0], ["iso1", 4.0, 30.0],
             ["iso2", 15.0, 500.0], ["iso2", 4.05, 510.0],
         ]},
     }
     bw = {
-        "queries": {"q_warm": 5.0}, "queries_calibrated": {"q_warm": 5.0},
+        "queries": {"q_warm": 5.0},
         "samples": {"q_warm": [
             ["iso1", 17.0, 10.0], ["iso1", 5.1, 20.0], ["iso2", 5.0, 500.0]
         ]},
     }
-    outw = bc.compare_same_code(aw, bw)
-    msw = outw["raw"]["movers_spread"]["q_warm"]
+    msw = bc.compare_same_code(aw, bw)["movers_spread"]["q_warm"]
     assert msw["a_spread_sec"] == 0.1 and msw["covered"] is False
     # _steady_secs keeps singleton warm-JVM labels (p1/rerun/fast*) as-is
     assert bc._steady_secs([["p1", 3.0, 1.0], ["fast2", 2.8, 2.0]]) == [3.0, 2.8]
     # records without samples: no spread keys, no crash
-    out_nosamp = bc.compare_same_code(
-        {"queries": {"q": 4.0}, "queries_calibrated": {"q": 4.0}},
-        {"queries": {"q": 5.0}, "queries_calibrated": {"q": 5.0}},
-    )
-    assert "movers_spread" not in out_nosamp["raw"]
+    out_nosamp = bc.compare_same_code({"queries": {"q": 4.0}}, {"queries": {"q": 5.0}})
+    assert "movers_spread" not in out_nosamp
 
 
 def test_bench_compare_cli_contract(tmp_path):
     """ADVICE r12 tool-UX: --help exits 0 (flags are not file paths),
-    --ab with fewer than two paths errors out, and a defaulted old
-    record is NAMED in the output instead of silently compared."""
+    --ab with fewer than two paths errors out, and a command line
+    without --ab (the retired calibrated mode) errors instead of
+    comparing anything."""
     import os
     import subprocess
     import sys
@@ -422,115 +353,27 @@ def test_bench_compare_cli_contract(tmp_path):
     r = subprocess.run([sys.executable, tool, "--ab"], capture_output=True, text=True)
     assert r.returncode != 0 and "two record paths" in r.stderr
     a = tmp_path / "a.json"
-    a.write_text(json.dumps({"queries": {"q": 1.0}, "queries_calibrated": {"q": 1.0}}))
+    a.write_text(json.dumps({"queries": {"q": 1.0}, "value": 1.0}))
     r = subprocess.run([sys.executable, tool, "--ab", str(a)], capture_output=True, text=True)
     assert r.returncode != 0 and "two record paths" in r.stderr
-    # one positional arg: defaults OLD to BENCH_r09.json and SAYS so
-    r = subprocess.run([sys.executable, tool, str(a)], capture_output=True, text=True, cwd=here)
+    r = subprocess.run([sys.executable, tool, str(a), str(a)], capture_output=True, text=True)
+    assert r.returncode != 0 and "--ab" in r.stderr
+    r = subprocess.run([sys.executable, tool, "--ab", str(a), str(a)],
+                       capture_output=True, text=True)
     assert r.returncode == 0
-    out = json.loads(r.stdout)
-    assert out["new_record"] == "a.json" and out["old_record"] == "BENCH_r09.json"
+    assert json.loads(r.stdout)["within_10pct_share"] == 1.0
 
 
 def test_record_loaders_descend_committed_wrappers(tmp_path):
     """Committed per-round records are wrappers ({n, rc, tail, parsed});
-    both tools must descend into `parsed` (ADVICE r12: probe_align
-    answered 'no mark/probes recorded' on BENCH_r11.json, and the
-    attribution replay had to dig the full record out of git)."""
+    bench_compare must descend into `parsed` so `--ab` runs against
+    them as well as against a full BENCH_FULL record."""
     bc = _load_tool("bench_compare")
-    pa = _load_tool("probe_align")
     inner = {"queries": {"q": 1.5}, "value": 1.5}
     p = tmp_path / "BENCH_rXX.json"
     p.write_text(json.dumps({"n": 1, "rc": 0, "tail": "...", "parsed": inner}))
     assert bc.load_record(str(p))["queries"] == {"q": 1.5}
-    assert pa.load_record(str(p))["queries"] == {"q": 1.5}
     # a full record passes through untouched
     f = tmp_path / "BENCH_FULL.json"
-    f.write_text(json.dumps({"queries": {"q": 2.0}, "probes": []}))
+    f.write_text(json.dumps({"queries": {"q": 2.0}, "samples": {}}))
     assert bc.load_record(str(f))["queries"] == {"q": 2.0}
-    # a trimmed summary line (no probes): probe_align names the shape
-    row = pa.align(inner, "q")
-    assert "BENCH_FULL" in row["verdict"]
-
-
-def test_probe_align_guards_and_spread():
-    """ADVICE r12: probe rows missing numpy_gemm_1024_sec are skipped
-    (no KeyError); when none remain the verdict says so. r13: the
-    within-run sample spread rides the alignment row."""
-    pa = _load_tool("probe_align")
-    F = 0.01
-    full = {
-        "probes": [
-            {"t": 0.0, "label": "legacy"},  # no gemm key: skipped
-            {"t": 10.0, "numpy_gemm_1024_sec": F, "label": "ok1"},
-            {"t": 30.0, "numpy_gemm_1024_sec": 1.1 * F, "label": "ok2"},
-        ],
-        "query_mid": {"q": 20.0},
-        "queries": {"q": 3.0},
-        "queries_calibrated": {"q": 3.0},
-        "reruns": {"q": [3.0, 3.4]},
-        "samples": {"q": [["iso1", 3.4, 15.0], ["iso2", 3.0, 400.0]]},
-    }
-    row = pa.align(full, "q")
-    assert row["verdict"] == "steady"
-    assert row["spread_sec"] == 0.4 and row["spread_x_min"] == 1.13
-    assert row["steady_spread_sec"] == 0.4  # singleton passes: no warm-up
-    assert row["samples"][0] == ["iso1", 3.4, 15.0]
-    # a multi-sample iso pass drops its cold first run from the steady
-    # spread (raw spread keeps it, labeled as warm-up cost)
-    full_w = dict(full)
-    full_w["samples"] = {"q": [
-        ["iso1", 12.0, 10.0], ["iso1", 3.1, 15.0],
-        ["iso2", 11.0, 400.0], ["iso2", 3.0, 405.0],
-    ]}
-    row_w = pa.align(full_w, "q")
-    assert row_w["spread_sec"] == 9.0
-    assert row_w["steady_spread_sec"] == 0.1
-    assert row_w["spread_x_min"] == 1.03
-    assert "loop_x_floor" not in row  # no loop probes in this record
-    # the single-core loop channel rides along when probes carry it
-    full["probes"][1]["python_loop_2m_sec"] = 0.10
-    full["probes"][2]["python_loop_2m_sec"] = 0.12
-    row = pa.align(full, "q")
-    assert row["loop_x_floor"] == [1.0, 1.2]
-    # every probe lacking the key -> explicit 'no usable probes'
-    row2 = pa.align({"probes": [{"t": 0.0, "label": "x"}],
-                     "query_mid": {"q": 1.0}, "queries": {"q": 1.0}}, "q")
-    assert "no usable probes" in row2["verdict"]
-
-
-def test_probe_align_verdicts():
-    """tools/probe_align.py: the three attribution verdicts over a
-    synthetic probe series — a wide slow phase covering all 5 nearest
-    probes reads 'calibrated'; elevated BRACKETING probes with a fast
-    probe inside the estimator window read 'UNCORRECTED' (the r11 q100
-    signature); steady brackets read 'steady'."""
-    import importlib.util
-    import os
-
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "probe_align", os.path.join(here, "tools", "probe_align.py")
-    )
-    pa = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(pa)
-
-    F = 0.01  # floor gemm
-    probes = (
-        [{"t": float(t), "numpy_gemm_1024_sec": 6 * F, "label": f"p{t}"}
-         for t in (0, 10, 20, 30, 40)]          # wide slow phase
-        + [{"t": 200.0, "numpy_gemm_1024_sec": F, "label": "fast"},
-           {"t": 240.0, "numpy_gemm_1024_sec": 5 * F, "label": "pre:x"},
-           {"t": 260.0, "numpy_gemm_1024_sec": 4 * F, "label": "post:x"},
-           {"t": 400.0, "numpy_gemm_1024_sec": F, "label": "steady1"},
-           {"t": 420.0, "numpy_gemm_1024_sec": 1.1 * F, "label": "steady2"}]
-    )
-    full = {
-        "probes": probes,
-        "query_mid": {"q_wide": 20.0, "q_uncorrected": 250.0, "q_steady": 410.0},
-        "queries": {}, "queries_calibrated": {}, "reruns": {},
-    }
-    assert pa.align(full, "q_wide")["verdict"] == "slow phase (calibrated)"
-    assert pa.align(full, "q_uncorrected")["verdict"] == "slow phase (UNCORRECTED)"
-    assert pa.align(full, "q_steady")["verdict"] == "steady"
-    assert pa.align(full, "q_unmarked")["verdict"] == "no mark/probes recorded"

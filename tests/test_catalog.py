@@ -26,6 +26,7 @@ from iceberg_rest_server_spark.catalog import (
 )
 from iceberg_rest_server_spark.catalog.client import CatalogHTTPError, RestCatalogClient
 from iceberg_rest_server_spark.catalog.server import ServerThread
+from iceberg_rest_server_spark.catalog.store import NamespaceNotEmptyError
 
 SCHEMA = {
     "type": "struct",
@@ -167,6 +168,32 @@ def test_remove_snapshots_drops_dangling_refs():
     assert b.m["refs"] == {}
 
 
+def test_expired_snapshots_leave_the_snapshot_log():
+    """Expiring a snapshot drops its snapshot-log entry and all history
+    before it (Iceberg Java's updateSnapshotLog), so a table whose every
+    commit expires the previous snapshot keeps one entry, not one per
+    commit ever made."""
+    b = _builder_with_schema()
+    b.build()
+    for snap in range(1, 6):
+        b.apply({"action": "add-snapshot", "snapshot": {"snapshot-id": snap}})
+        b.apply({"action": "set-snapshot-ref", "ref-name": "main", "snapshot-id": snap})
+        if snap > 1:
+            b.apply({"action": "remove-snapshots", "snapshot-ids": [snap - 1]})
+    assert [s["snapshot-id"] for s in b.m["snapshots"]] == [5]
+    assert [e["snapshot-id"] for e in b.m["snapshot-log"]] == [5]
+    # an entry in the middle gone: everything before it goes too
+    for snap in (6, 7, 8):
+        b.apply({"action": "add-snapshot", "snapshot": {"snapshot-id": snap}})
+        b.apply({"action": "set-snapshot-ref", "ref-name": "main", "snapshot-id": snap})
+    b.apply({"action": "remove-snapshots", "snapshot-ids": [6]})
+    assert [e["snapshot-id"] for e in b.m["snapshot-log"]] == [7, 8]
+    # removing a snapshot that was never current leaves the log alone
+    b.apply({"action": "add-snapshot", "snapshot": {"snapshot-id": 9}})
+    b.apply({"action": "remove-snapshots", "snapshot-ids": [9]})
+    assert [e["snapshot-id"] for e in b.m["snapshot-log"]] == [7, 8]
+
+
 def test_location_immutable_post_create():
     b = _builder_with_schema()
     with pytest.raises(CommitError):
@@ -248,6 +275,42 @@ def test_drop_nonempty_namespace_conflicts(store):
     s.create_table(wid, ["ns1"], "t", SCHEMA)
     with pytest.raises(ConflictError):
         s.drop_namespace(wid, ["ns1"])
+
+
+def _race_before_txn(monkeypatch, s, race) -> None:
+    """Run ``race`` once, just before the store's next write transaction
+    is entered: a deterministic stand-in for another request landing
+    between a check and the write it guards."""
+    real_txn = s._txn
+    raced = []
+
+    def racing_txn():
+        if not raced:
+            raced.append(True)
+            race()
+        return real_txn()
+
+    monkeypatch.setattr(s, "_txn", racing_txn)
+
+
+def test_drop_namespace_race_with_create_table_is_409(store, monkeypatch):
+    """A table created between drop_namespace's emptiness check and its
+    DELETE must give NamespaceNotEmpty (409), not the foreign key's
+    IntegrityError (500): the count runs inside the transaction."""
+    s, wid = store
+    _race_before_txn(monkeypatch, s, lambda: s.create_table(wid, ["ns1"], "t", SCHEMA))
+    with pytest.raises(NamespaceNotEmptyError):
+        s.drop_namespace(wid, ["ns1"])
+    assert s.table_exists(wid, ["ns1"], "t")
+
+
+def test_concurrent_namespace_property_updates_are_not_lost(store, monkeypatch):
+    s, wid = store
+    _race_before_txn(
+        monkeypatch, s, lambda: s.update_namespace_properties(wid, ["ns1"], [], {"a": "1"})
+    )
+    s.update_namespace_properties(wid, ["ns1"], [], {"b": "2"})
+    assert s.load_namespace(wid, ["ns1"])["properties"] == {"a": "1", "b": "2"}
 
 
 def test_table_property_keys_must_be_lowercase(store):

@@ -1,40 +1,28 @@
-"""Compare a calibrated bench record against a previous round's raw
-record (VERDICT r9 #2 'done' criterion: an untouched query's CALIBRATED
-delta vs the previous round should sit within noise, so raw swings are
-attributable to box phase inside the artifact itself).
+"""Same-code A/B reproducibility between two bench records.
 
-The calibration reference (bench.py _CALIB_REF_GEMM) is pinned to the
-r9 end-of-run probe, so BENCH_r09's raw seconds ARE its calibrated
-seconds and the comparison is one-sided by construction.
+Usage: python tools/bench_compare.py --ab A_JSON B_JSON
+       (both paths are REQUIRED — a defaulted B side would compare
+       against non-same-code data)
 
-Usage: python tools/bench_compare.py [NEW_JSON] [OLD_JSON]
-       (defaults: BENCH_FULL.json vs BENCH_r09.json — the output names
-       both records so a defaulted old side is never silent)
-       python tools/bench_compare.py --ab A_JSON B_JSON
-       (same-code A/B reproducibility; both paths are REQUIRED — a
-       defaulted B side would compare against non-same-code data)
-
-Prints one JSON line with per-decile calibrated deltas + the biggest
-movers. With r13 records (per-execution `samples` vectors in
-BENCH_FULL), --ab also reports the within-run-spread lens: a mover
-whose A/B delta is covered by its own within-run spread is measurement
-noise classified from the committed records alone, no rerun needed.
+Prints one JSON line: the share of per-query values agreeing within
+±10%, split at the 2 s fast/slow boundary, and the biggest movers. With
+per-execution `samples` vectors in the records (BENCH_FULL since r13),
+each mover is also judged against its own within-run spread: a mover
+whose A/B delta is covered by that spread is measurement noise,
+classified from the committed records alone, no rerun needed.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
-import os
 import statistics
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def load_record(path: str) -> dict:
     """Read a bench record; committed per-round files are wrappers
     ({n, rc, tail, parsed}) whose `parsed` is the TRIMMED stdout line
-    (slowest-queries-only, no probes/samples) — descend so comparisons
+    (slowest-queries-only, no samples) — descend so comparisons
     against them work, but they carry less than a BENCH_FULL record."""
     with open(path) as fh:
         data = json.load(fh)
@@ -62,171 +50,116 @@ def _steady_secs(samples: list[list]) -> list[float]:
     return out
 
 
-def _spread_sec(rec: dict, name: str, steady: bool = True) -> float | None:
-    """Within-run spread (max-min over the per-execution samples;
-    steady=True excludes cold-JVM warm-up runs) — None when the record
-    predates r13 sample vectors."""
+def _spread_sec(rec: dict, name: str) -> float | None:
+    """Steady within-run spread (max-min over the per-execution samples,
+    cold-JVM warm-up runs excluded) — None when the record predates r13
+    sample vectors."""
     ss = (rec.get("samples") or {}).get(name)
     if not ss:
         return None
-    secs = _steady_secs(ss) if steady else [s[1] for s in ss]
+    secs = _steady_secs(ss)
     return round(max(secs) - min(secs), 4)
-
-
-def compare(new: dict, old: dict) -> dict:
-    new_cal = new.get("queries_calibrated") or new.get("queries", {})
-    new_raw = new.get("queries", {})
-    old_raw = old.get("queries", {})
-    deltas = {}
-    for name, old_sec in old_raw.items():
-        if name in new_cal and old_sec and old_sec > 0:
-            deltas[name] = (new_cal[name] - old_sec) / old_sec
-    if not deltas:
-        return {"compared": 0}
-    vals = sorted(deltas.values())
-    movers = sorted(deltas.items(), key=lambda kv: abs(kv[1]), reverse=True)[:8]
-    return {
-        "compared": len(deltas),
-        "median_delta_pct": round(100 * statistics.median(vals), 1),
-        "p10_pct": round(100 * vals[int(0.10 * len(vals))], 1),
-        "p90_pct": round(100 * vals[int(0.90 * len(vals))], 1),
-        "within_10pct": sum(1 for v in vals if abs(v) <= 0.10),
-        "biggest_movers": {
-            n: {
-                "old_raw": old_raw[n],
-                "new_raw": new_raw.get(n),
-                "new_calibrated": new_cal[n],
-                "delta_pct": round(100 * d, 1),
-            }
-            for n, d in movers
-        },
-    }
 
 
 def compare_same_code(a: dict, b: dict) -> dict:
     """Same-code A/B reproducibility (VERDICT r10 #3 / r11 #2): given
-    two full BENCH_FULL records from IDENTICAL code, report the share
-    of per-query values agreeing within ±10%, raw and calibrated,
-    split by the fast(<2 s)/slow boundary, plus the biggest movers.
-    Unlike compare(), both sides use the same key (min-of-samples), so
-    this measures the MEASUREMENT's stability, not code deltas.
+    two records from IDENTICAL code, report the share of per-query
+    values agreeing within ±10%, split by the fast(<2 s)/slow boundary,
+    plus the biggest movers — the MEASUREMENT's stability, not code
+    deltas.
 
-    r13 spread lens: when either record carries per-execution `samples`
-    vectors, each raw mover is annotated with both sides' STEADY
-    within-run spreads (cold-JVM warm-up samples excluded — see
-    _steady_secs; the compared values are mins, which land in steady
-    state) and whether the A/B delta is COVERED by the larger one —
-    covered means the two records' own steady sampling already spans
-    the delta, i.e. noise classified without a rerun. The summary share
-    `miss_covered_by_spread` is computed over all queries OUTSIDE the
-    ±10% band (the misses are what need attributing)."""
-    out: dict = {}
-    for label, key in (("raw", "queries"), ("calibrated", "queries_calibrated")):
-        qa, qb = a.get(key, {}), b.get(key, {})
-        rel = {
-            n: (qb[n] - qa[n]) / qa[n]
-            for n in set(qa) & set(qb)
-            if qa[n] and qa[n] > 0
-        }
-        if not rel:
-            out[label] = {"compared": 0}
-            continue
-        fast = {n for n in rel if max(qa[n], qb[n]) < 2.0}
-        slow = [n for n in rel if n not in fast]
-        vals = sorted(abs(v) for v in rel.values())
-        movers = sorted(rel.items(), key=lambda kv: -abs(kv[1]))[:8]
-        out[label] = {
-            "compared": len(rel),
-            "within_10pct": sum(1 for v in rel.values() if abs(v) <= 0.10),
-            "within_10pct_share": round(
-                sum(1 for v in rel.values() if abs(v) <= 0.10) / len(rel), 3
-            ),
-            # the tracking lens that acknowledges the box's absolute
-            # noise floor: most queries run sub-second, where +-10% is
-            # +-30-150 ms — under the scheduler/steal floor regardless
-            # of sampling scheme. 0.2 s = the measured floor (r12).
-            "within_10pct_or_200ms_share": round(
-                sum(
-                    1 for n, v in rel.items()
-                    if abs(v) <= 0.10 or abs(qb[n] - qa[n]) <= 0.2
-                ) / len(rel), 3,
-            ),
-            "fast_within_10pct_share": round(
-                sum(1 for n in fast if abs(rel[n]) <= 0.10) / len(fast), 3
-            ) if fast else None,
-            # ADVICE r12: mirror the fast-share handling — an all-fast
-            # A/B has no slow cohort and must read None, not 0%
-            "slow_within_10pct_share": round(
-                sum(1 for n in slow if abs(rel[n]) <= 0.10) / len(slow), 3
-            ) if slow else None,
-            "median_abs_delta_pct": round(100 * statistics.median(vals), 1),
-            "movers": {n: round(100 * v, 1) for n, v in movers},
-        }
-        if label == "raw" and (a.get("samples") or b.get("samples")):
-            detail = {}
-            for n, v in movers:
-                sa, sb = _spread_sec(a, n), _spread_sec(b, n)
-                delta = abs(qb[n] - qa[n])
-                detail[n] = {
-                    "delta_sec": round(delta, 3),
-                    "a_spread_sec": sa,
-                    "b_spread_sec": sb,
-                    "covered": (
-                        None if sa is None and sb is None
-                        else delta <= max(sa or 0.0, sb or 0.0)
-                    ),
-                }
-            out[label]["movers_spread"] = detail
-            misses = [n for n, v in rel.items() if abs(v) > 0.10]
-            covered = [
-                n for n in misses
-                if (s := max(_spread_sec(a, n) or 0.0, _spread_sec(b, n) or 0.0))
-                and abs(qb[n] - qa[n]) <= s
-            ]
-            out[label]["miss_covered_by_spread"] = (
-                round(len(covered) / len(misses), 3) if misses else None
-            )
-    out["totals"] = {
-        "a": [a.get("value"), a.get("value_calibrated")],
-        "b": [b.get("value"), b.get("value_calibrated")],
+    Spread lens: when either record carries per-execution `samples`
+    vectors, each mover is annotated with both sides' STEADY within-run
+    spreads (see _steady_secs) and whether the A/B delta is COVERED by
+    the larger one — covered means the two records' own sampling
+    already spans the delta, i.e. noise classified without a rerun. The
+    summary share `miss_covered_by_spread` is computed over all queries
+    OUTSIDE the ±10% band (the misses are what need attributing)."""
+    qa, qb = a.get("queries", {}), b.get("queries", {})
+    rel = {
+        n: (qb[n] - qa[n]) / qa[n]
+        for n in set(qa) & set(qb)
+        if qa[n] and qa[n] > 0
     }
+    totals = {"a": a.get("value"), "b": b.get("value")}
+    if not rel:
+        return {"compared": 0, "totals": totals}
+    fast = {n for n in rel if max(qa[n], qb[n]) < 2.0}
+    slow = [n for n in rel if n not in fast]
+    vals = sorted(abs(v) for v in rel.values())
+    movers = sorted(rel.items(), key=lambda kv: -abs(kv[1]))[:8]
+    out = {
+        "compared": len(rel),
+        "within_10pct": sum(1 for v in rel.values() if abs(v) <= 0.10),
+        "within_10pct_share": round(
+            sum(1 for v in rel.values() if abs(v) <= 0.10) / len(rel), 3
+        ),
+        # the tracking lens that acknowledges the box's absolute
+        # noise floor: most queries run sub-second, where +-10% is
+        # +-30-150 ms — under the scheduler/steal floor regardless
+        # of sampling scheme. 0.2 s = the measured floor (r12).
+        "within_10pct_or_200ms_share": round(
+            sum(
+                1 for n, v in rel.items()
+                if abs(v) <= 0.10 or abs(qb[n] - qa[n]) <= 0.2
+            ) / len(rel), 3,
+        ),
+        "fast_within_10pct_share": round(
+            sum(1 for n in fast if abs(rel[n]) <= 0.10) / len(fast), 3
+        ) if fast else None,
+        # ADVICE r12: mirror the fast-share handling — an all-fast
+        # A/B has no slow cohort and must read None, not 0%
+        "slow_within_10pct_share": round(
+            sum(1 for n in slow if abs(rel[n]) <= 0.10) / len(slow), 3
+        ) if slow else None,
+        "median_abs_delta_pct": round(100 * statistics.median(vals), 1),
+        "movers": {n: round(100 * v, 1) for n, v in movers},
+    }
+    if a.get("samples") or b.get("samples"):
+        detail = {}
+        for n, v in movers:
+            sa, sb = _spread_sec(a, n), _spread_sec(b, n)
+            delta = abs(qb[n] - qa[n])
+            detail[n] = {
+                "delta_sec": round(delta, 3),
+                "a_spread_sec": sa,
+                "b_spread_sec": sb,
+                "covered": (
+                    None if sa is None and sb is None
+                    else delta <= max(sa or 0.0, sb or 0.0)
+                ),
+            }
+        out["movers_spread"] = detail
+        misses = [n for n, v in rel.items() if abs(v) > 0.10]
+        covered = [
+            n for n in misses
+            if (s := max(_spread_sec(a, n) or 0.0, _spread_sec(b, n) or 0.0))
+            and abs(qb[n] - qa[n]) <= s
+        ]
+        out["miss_covered_by_spread"] = (
+            round(len(covered) / len(misses), 3) if misses else None
+        )
+    out["totals"] = totals
     return out
 
 
 def main() -> None:
     ap = argparse.ArgumentParser(
-        description="Compare bench records (cross-round calibrated, or "
-        "--ab same-code A/B reproducibility)."
+        description="Same-code A/B reproducibility between two bench records."
     )
+    ap.add_argument("paths", nargs="*", help="the two record paths, A then B")
     ap.add_argument(
-        "paths", nargs="*",
-        help="record paths; default NEW=BENCH_FULL.json OLD=BENCH_r09.json "
-        "(the output names both). --ab requires exactly two paths.",
-    )
-    ap.add_argument(
-        "--ab", action="store_true",
+        "--ab", action="store_true", required=True,
         help="same-code A/B reproducibility between two records of "
         "IDENTICAL code (both paths required)",
     )
     args = ap.parse_args()
-    if args.ab:
-        # ADVICE r12: a defaulted B side would silently compare against
-        # non-same-code data — --ab takes exactly two explicit paths
-        if len(args.paths) != 2:
-            ap.error("--ab requires exactly two record paths (same-code A/B)")
-        a, b = (load_record(p) for p in args.paths)
-        print(json.dumps(compare_same_code(a, b)))
-        return
-    if len(args.paths) > 2:
-        ap.error("at most two record paths (NEW OLD)")
-    new_path = args.paths[0] if args.paths else os.path.join(REPO, "BENCH_FULL.json")
-    old_path = args.paths[1] if len(args.paths) > 1 else os.path.join(REPO, "BENCH_r09.json")
-    out = compare(load_record(new_path), load_record(old_path))
-    # ADVICE r12: name both records in the output so a defaulted old
-    # side (BENCH_r09.json — a different-code baseline) is never silent
-    out["new_record"] = os.path.basename(new_path)
-    out["old_record"] = os.path.basename(old_path)
-    print(json.dumps(out))
+    # ADVICE r12: a defaulted B side would silently compare against
+    # non-same-code data — --ab takes exactly two explicit paths
+    if len(args.paths) != 2:
+        ap.error("--ab requires exactly two record paths (same-code A/B)")
+    a, b = (load_record(p) for p in args.paths)
+    print(json.dumps(compare_same_code(a, b)))
 
 
 if __name__ == "__main__":
