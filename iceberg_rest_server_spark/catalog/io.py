@@ -20,6 +20,10 @@ import gzip
 import json
 import os
 
+# one gzip level for metadata files and compressed responses: Java's
+# GZIPOutputStream default, ~3x faster than level 9 for ~2% more bytes
+GZIP_LEVEL = 6
+
 
 def metadata_file_path(table_location: str, metadata_uuid: str) -> str:
     return os.path.join(
@@ -32,8 +36,8 @@ def local_path(path: str) -> str:
 
 
 def write_metadata_file(path: str, metadata_json: str) -> str:
-    """Write already-encoded metadata JSON, gzip'd at the default level
-    9 in one write; returns the path written.
+    """Write already-encoded metadata JSON, gzip'd at GZIP_LEVEL in one
+    write; returns the path written.
 
     s3:// paths are tracked but not written — this container has no S3
     client (boto3/fsspec); the metastore row stays authoritative, and the
@@ -43,7 +47,7 @@ def write_metadata_file(path: str, metadata_json: str) -> str:
         return path
     p = local_path(path)
     os.makedirs(os.path.dirname(p), exist_ok=True)
-    data = gzip.compress(metadata_json.encode("utf-8"))
+    data = gzip.compress(metadata_json.encode("utf-8"), compresslevel=GZIP_LEVEL)
     with open(p, "wb") as fh:
         fh.write(data)
     return path

@@ -10,27 +10,12 @@ is served in its stored wire form: the load, create and commit
 responses splice the text the store encoded once per version into the
 envelope, with no parse, scrub or second encode.
 
-Routes (prefix = warehouse id, as in the reference's `{prefix}`):
-
-  GET    /catalog/v1/config?warehouse={project}/{name}
-  GET    /catalog/v1/{prefix}/namespaces[?parent=]
-  POST   /catalog/v1/{prefix}/namespaces
-  GET    /catalog/v1/{prefix}/namespaces/{ns}
-  HEAD   /catalog/v1/{prefix}/namespaces/{ns}
-  DELETE /catalog/v1/{prefix}/namespaces/{ns}
-  POST   /catalog/v1/{prefix}/namespaces/{ns}/properties
-  GET    /catalog/v1/{prefix}/namespaces/{ns}/tables
-  POST   /catalog/v1/{prefix}/namespaces/{ns}/tables
-  GET    /catalog/v1/{prefix}/namespaces/{ns}/tables/{tbl}
-  HEAD   /catalog/v1/{prefix}/namespaces/{ns}/tables/{tbl}
-  POST   /catalog/v1/{prefix}/namespaces/{ns}/tables/{tbl}   (commit)
-  DELETE /catalog/v1/{prefix}/namespaces/{ns}/tables/{tbl}
-  POST   /catalog/v1/{prefix}/tables/rename
-  POST   /catalog/v1/{prefix}/transactions/commit             (multi-table)
-  POST   /catalog/v1/{prefix}/namespaces/{ns}/tables/{tbl}/metrics
-  POST   /management/v1/warehouse
-  GET    /management/v1/warehouse?project={id}
-  POST   /management/v1/warehouse/{id}/activate|deactivate|rename
+Every route is one entry of `CatalogHandler.ROUTES`, keyed by (method,
+path template) in the OpenAPI document's template spelling; an
+unlisted pair is a 404. Every request body is read by one reader
+(`_read_body`), as serde extraction reads it in the reference: a body
+that is not a JSON object is a 400 before the handler runs, and a
+required member it lacks is a 400 where the handler reads it.
 
 Errors use the reference's envelope
 {"error": {"message", "type", "code"}} (rest/error.rs:22-70).
@@ -43,16 +28,15 @@ the reference (catalog/tables.rs:211-225); views return 404/501 stubs
 from __future__ import annotations
 
 import json
-import re
 import socket
 import sys
 import threading
 import urllib.parse
 from collections.abc import Callable
-from typing import Any
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from .auth import TokenVerifier, UnauthorizedError
+from .io import GZIP_LEVEL
 from .metadata import CommitError
 from .s3_signer import (
     SigningError,
@@ -65,7 +49,9 @@ from .store import (  # noqa: F401 — SCRUBBED_NULL_KEYS is re-exported
     UNIT_SEPARATOR,
     CatalogStore,
     ConflictError,
+    NamespaceNotFoundError,
     NotFoundError,
+    TableNotFoundError,
     ValidationError,
     _scrub_table_metadata,
 )
@@ -98,6 +84,29 @@ def _uuid7() -> str:
 
 def _ns_from_path(segment: str) -> list[str]:
     return urllib.parse.unquote(segment).split(UNIT_SEPARATOR)
+
+
+class _Body(dict):
+    """A JSON object of a request body. A member the handler indexes but
+    the client left out is a 400 ValidationException, as serde
+    extraction rejects it in the reference, not a KeyError's 500."""
+
+    def __missing__(self, key):
+        raise ValidationError(f"missing required field {key!r}")
+
+
+def _read_body(raw: bytes) -> _Body:
+    """The one reader of every request body: a JSON object, ``{}`` when
+    the body is empty; malformed JSON or any other JSON value is a 400."""
+    if not raw:
+        return _Body()
+    try:
+        body = json.loads(raw, object_pairs_hook=_Body)
+    except ValueError as e:  # JSONDecodeError, UnicodeDecodeError
+        raise ValidationError(f"malformed JSON body: {e}") from e
+    if not isinstance(body, _Body):
+        raise ValidationError("request body must be a JSON object")
+    return body
 
 
 def _scrub_metadata_nulls(payload: dict) -> dict:
@@ -170,23 +179,6 @@ class CatalogHandler(BaseHTTPRequestHandler):
 
     # ------------------------------------------------------------ plumbing
 
-    def _body(self) -> dict:
-        return json.loads(self._raw_body) if self._raw_body else {}
-
-    @staticmethod
-    def _require(body: dict, *keys: str) -> Any:
-        """Fetch a required wire field, 400-ing (ValidationException)
-        when absent — parity with axum/serde extraction, which rejects
-        malformed bodies with 4xx before the handler runs. A bare
-        KeyError would fall through to the generic 500 handler, and the
-        repo's own contract validators treat undocumented 5xx as a
-        contract failure (openapi_schema.py, ADVICE r9/r10)."""
-        for key in keys:
-            if not isinstance(body, dict) or key not in body:
-                raise ValidationError(f"missing required field {key!r}")
-            body = body[key]
-        return body
-
     def _send(self, code: int, payload: dict | bytes | None = None) -> None:
         """Send ``payload`` (a dict to encode, or an encoded body) with
         ``Content-Length`` on every response: keep-alive clients find the
@@ -204,7 +196,7 @@ class CatalogHandler(BaseHTTPRequestHandler):
         if data and len(data) >= 256 and "gzip" in accept.lower():
             import gzip as _gzip
 
-            data = _gzip.compress(data, compresslevel=6)
+            data = _gzip.compress(data, compresslevel=GZIP_LEVEL)
             self.send_header("Content-Encoding", "gzip")
         self.send_header("Content-Length", str(len(data)))
         # x-request-id middleware (api/router.rs:58-77: set_x_request_id
@@ -245,9 +237,9 @@ class CatalogHandler(BaseHTTPRequestHandler):
             self.close_connection = True
             self._send(*_error(400, "invalid Content-Length", "ValidationException"))
             return
-        self._raw_body = self.rfile.read(length) if length else b""
+        raw = self.rfile.read(length) if length else b""
         parsed = urllib.parse.urlparse(self.path)
-        qs = urllib.parse.parse_qs(parsed.query)
+        self.query = urllib.parse.parse_qs(parsed.query)
         parts = [p for p in parsed.path.split("/") if p]
         # /health sits outside the auth layer (api/router.rs:53 mounts it
         # on the top-level router, not behind the token middleware)
@@ -257,7 +249,15 @@ class CatalogHandler(BaseHTTPRequestHandler):
                 self._send(*denied)
                 return
         try:
-            code, payload = self.route(self.command, parts, qs)
+            for template, handler in _ROUTE_INDEX.get((self.command, len(parts)), ()):
+                if all(t == p or t[0] == "{" for t, p in zip(template, parts)):
+                    break
+            else:
+                raise NotFoundError(f"no route for {self.command} /{'/'.join(parts)}")
+            self.body = _read_body(raw)
+            params = [_ns_from_path(p) if t == "{namespace}" else p
+                      for t, p in zip(template, parts) if t[0] == "{"]
+            code, payload = handler(self, *params)
         except NotFoundError as e:
             code, payload = _error(404, str(e), e.error_type)
         except ConflictError as e:
@@ -275,7 +275,21 @@ class CatalogHandler(BaseHTTPRequestHandler):
             code, payload = _error(500, f"{type(e).__name__}: {e}", "InternalServerError")
         self._send(code, payload)
 
-    do_GET = do_POST = do_DELETE = do_HEAD = _dispatch
+    # every method goes through the route table, so one it does not list
+    # gets the JSON 404 envelope, not http.server's HTML 501
+    do_GET = do_POST = do_PUT = do_PATCH = do_DELETE = do_HEAD = _dispatch
+
+    def _param(self, name: str) -> str | None:
+        return self.query.get(name, [None])[0]
+
+    def _page(self) -> tuple[str | None, int | None]:
+        """The pageToken and pageSize query parameters: each absent or a
+        non-negative integer."""
+        token, size = self._param("pageToken"), self._param("pageSize")
+        for value in (token, size):
+            if value is not None and not (value.isascii() and value.isdigit()):
+                raise ValidationError(f"page parameter {value!r} is not an integer ≥ 0")
+        return token, None if size is None else int(size)
 
     # ------------------------------------------------------------- signing
 
@@ -284,8 +298,7 @@ class CatalogHandler(BaseHTTPRequestHandler):
         generate_table_config): region keys, endpoint, path-style flag,
         and remote-signing enablement — what a RESTCatalog client needs
         to route its IO through the signer."""
-        wh = self.store.get_warehouse(prefix)
-        profile = wh.get("storage_profile")
+        profile = self.store.get_warehouse(prefix).get("storage_profile")
         if not profile:
             return {}
         region = profile.get("region", "")
@@ -310,18 +323,15 @@ class CatalogHandler(BaseHTTPRequestHandler):
         return profile
 
     def _sign_route(
-        self, prefix: str, body: dict, table_location: str, profile: dict
+        self, prefix: str, table_location: str, profile: dict
     ) -> tuple[int, dict | None]:
         """Shared sign flow for the table-scoped and prefix-only routes:
         region check against the loaded profile, then URI validation +
         SigV4."""
+        body = self.body
         if body.get("region") and body["region"] != profile.get("region"):
             # region must match the profile (s3_signer.rs:309-320)
-            return _error(
-                400,
-                f"region {body.get('region')!r} does not match profile",
-                "ValidationException",
-            )
+            raise ValidationError(f"region {body['region']!r} does not match profile")
         creds = self.store.get_storage_credentials(prefix, profile)
         if not creds.get("access-key-id") or not creds.get("secret-access-key"):
             # MissingStorageCredential (storage/s3.rs:264-275)
@@ -343,241 +353,176 @@ class CatalogHandler(BaseHTTPRequestHandler):
             return _error(403, str(e), "SignAccessDenied")
         return 200, {"uri": body["uri"], "headers": signed}
 
-    # -------------------------------------------------------------- routes
+    # ------------------------------------------------------ catalog routes
+    # Each handler gets the path template's {…} values in order, with
+    # {namespace} decoded to its parts, and returns (status, payload).
 
-    def route(
-        self, method: str, parts: list[str], qs: dict
-    ) -> tuple[int, dict | bytes | None]:
-        if parts == ["health"] and method == "GET":
-            # api/router.rs:53 — unauthenticated liveness probe
-            return 200, {"status": "ok"}
-        if parts[:2] == ["catalog", "v1"]:
-            return self._catalog_route(method, parts[2:], qs)
-        if parts[:2] == ["management", "v1"]:
-            return self._management_route(method, parts[2:], qs)
-        return _error(404, f"unknown path {'/'.join(parts)}", "NoSuchObjectException")
+    def _health(self):
+        # api/router.rs:53 — unauthenticated liveness probe
+        return 200, {"status": "ok"}
 
-    def _catalog_route(
-        self, method: str, p: list[str], qs: dict
-    ) -> tuple[int, dict | bytes | None]:
-        store = self.store
-        if p == ["oauth", "tokens"] and method == "POST":
-            # Parity stub: the reference routes POST /oauth/tokens
-            # (api/iceberg/v1/oauth.rs:22-33) to a Service trait that has
-            # no implementation anywhere in the crates — clients must
-            # bring external OIDC. We answer with the same "unimplemented"
-            # envelope instead of a 404 so clients get a clear signal.
-            return _error(501, "OAuth token endpoint is not implemented", "NotImplemented")
-        if p == ["config"]:
-            # catalog/config.rs:35-143 — warehouse arg "{project}/{name}"
-            wh_arg = qs.get("warehouse", [""])[0]
-            if "/" not in wh_arg:
-                return _error(400, "warehouse must be '{project}/{name}'", "ValidationException")
-            project, name = wh_arg.split("/", 1)
-            wh = store.get_warehouse_by_name(project, name)
-            overrides = {}
-            # Give the auth handler a chance to exchange / enrich the
-            # token (config.rs:115-130): a returned token lands in
-            # overrides BEFORE prefix/uri so it can never clobber them.
-            if self.token_exchanger is not None:
-                new_token = self.token_exchanger(
-                    dict(self.headers), project, wh["warehouse_id"]
-                )
-                if new_token is not None:
-                    overrides["token"] = new_token
-            overrides["prefix"] = wh["warehouse_id"]
-            host = self.headers.get("Host") or "127.0.0.1"
-            # config.rs:137-139 — clients are redirected to this server's
-            # base uri (reference default ends in /catalog/, config.rs:85)
-            overrides["uri"] = f"http://{host}/catalog/"
-            if wh.get("storage_profile"):
-                # warehouse-scoped signer base; the client appends
-                # v1/aws/s3/sign (storage/s3.rs:278-288,
-                # config.rs s3_signer_uri_for_warehouse)
-                overrides["s3.signer.uri"] = (
-                    f"http://{host}/catalog/v1/{wh['warehouse_id']}"
-                )
-            return 200, {"overrides": overrides, "defaults": {}}
-        if len(p) >= 2:
-            prefix, rest = p[0], p[1:]
-            if rest == ["namespaces"]:
-                if method == "GET":
-                    parent = qs.get("parent", [None])[0]
-                    parent_ns = _ns_from_path(parent) if parent else None
-                    page_token = qs.get("pageToken", [None])[0]
-                    page_size = qs.get("pageSize", [None])[0]
-                    names, next_token = store.list_namespaces(
-                        prefix, parent_ns, page_token, int(page_size) if page_size else None
-                    )
-                    return 200, {"namespaces": names, "next-page-token": next_token}
-                if method == "POST":
-                    body = self._body()
-                    out = store.create_namespace(
-                        prefix, body["namespace"], body.get("properties")
-                    )
-                    return 200, out
-            if len(rest) == 2 and rest[0] == "namespaces":
-                ns = _ns_from_path(rest[1])
-                if method == "GET":
-                    return 200, store.load_namespace(prefix, ns)
-                if method == "HEAD":
-                    if store.namespace_exists(prefix, ns):
-                        return 204, None
-                    return _error(404, f"namespace {ns} not found", "NoSuchNamespaceException")
-                if method == "DELETE":
-                    store.drop_namespace(prefix, ns)
-                    return 204, None
-            if len(rest) == 3 and rest[0] == "namespaces" and rest[2] == "properties":
-                body = self._body()
-                out = store.update_namespace_properties(
-                    prefix,
-                    _ns_from_path(rest[1]),
-                    body.get("removals", []),
-                    body.get("updates", {}),
-                )
-                return 200, out
-            if len(rest) == 3 and rest[0] == "namespaces" and rest[2] == "tables":
-                ns = _ns_from_path(rest[1])
-                if method == "GET":
-                    page_token = qs.get("pageToken", [None])[0]
-                    page_size = qs.get("pageSize", [None])[0]
-                    names, next_token = store.list_tables(
-                        prefix, ns, page_token, int(page_size) if page_size else None
-                    )
-                    return 200, {
-                        "identifiers": [{"namespace": ns, "name": n} for n in names],
-                        "next-page-token": next_token,
-                    }
-                if method == "POST":
-                    body = self._body()
-                    out = store.create_table(
-                        prefix,
-                        ns,
-                        body["name"],
-                        body["schema"],
-                        partition_spec=body.get("partition-spec"),
-                        write_order=body.get("write-order"),
-                        properties=body.get("properties"),
-                        stage_create=bool(body.get("stage-create")),
-                        location=body.get("location"),
-                    )
-                    return 200, _table_body(out["metadata-json"], out["metadata-location"])
-            if len(rest) == 4 and rest[0] == "namespaces" and rest[2] == "tables":
-                ns, tbl = _ns_from_path(rest[1]), rest[3]
-                if method == "GET":
-                    out = store.load_table(prefix, ns, tbl)
-                    return 200, _table_body(
-                        out["metadata"],
-                        out["metadata-location"],
-                        config=self._table_config(prefix),
-                    )
-                if method == "HEAD":
-                    if store.table_exists(prefix, ns, tbl):
-                        return 204, None
-                    return _error(404, f"table {tbl} not found", "NoSuchTableException")
-                if method == "DELETE":
-                    store.drop_table(prefix, ns, tbl)
-                    return 204, None
-                if method == "POST":
-                    body = self._body()
-                    (result,) = store.commit_transaction(
-                        prefix,
-                        [
-                            {
-                                "namespace": ns,
-                                "name": tbl,
-                                "requirements": body.get("requirements", []),
-                                "updates": body.get("updates", []),
-                            }
-                        ],
-                    )
-                    return 200, _table_body(result["metadata"], result["metadata-location"])
-            if (
-                len(rest) == 5
-                and rest[0] == "namespaces"
-                and rest[2] == "tables"
-                and rest[4] == "metrics"
-            ):
-                # accepted and discarded (catalog/metrics.rs:12-20)
-                return 204, None
-            if (
-                len(rest) == 8
-                and rest[0] == "namespaces"
-                and rest[2] == "tables"
-                and rest[4:] == ["v1", "aws", "s3", "sign"]
-            ):
-                # POST .../tables/{tbl}/v1/aws/s3/sign (s3_signer.rs:38-173)
-                ns, tbl = _ns_from_path(rest[1]), rest[3]
-                table = store.load_table(prefix, ns, tbl)
-                return self._sign_route(
-                    prefix, self._body(), table["table-location"], self._sign_profile(prefix)
-                )
-            if rest == ["v1", "aws", "s3", "sign"] and method == "POST":
-                # prefix-only sign route — the one Spark actually calls
-                # when s3.signer.uri is warehouse-scoped: resolve the
-                # table from the request URI by location prefix
-                # (catalog/s3_signer.rs:55-90)
-                body = self._body()
-                profile = self._sign_profile(prefix)
-                try:
-                    s3loc = parse_s3_uri(body["uri"], profile.get("endpoint-host"))
-                    key = urllib.parse.unquote(s3loc.key)
-                    table = store.resolve_table_by_location(
-                        prefix, f"s3://{s3loc.bucket}/{key}"
-                    )
-                except SigningError as e:
-                    return _error(403, str(e), "SignAccessDenied")
-                except NotFoundError as e:
-                    # reference maps location-resolution failure to 401
-                    # InvalidLocation (catalog/s3_signer.rs:70-80)
-                    return _error(401, str(e), "InvalidLocation")
-                return self._sign_route(prefix, body, table["table-location"], profile)
-            if rest == ["tables", "rename"]:
-                body = self._body()
-                store.rename_table(
-                    prefix,
-                    body["source"]["namespace"],
-                    body["source"]["name"],
-                    body["destination"]["namespace"],
-                    body["destination"]["name"],
-                )
-                return 204, None
-            if rest == ["transactions", "commit"]:
-                body = self._body()
-                changes = [
-                    {
-                        "namespace": t["identifier"]["namespace"],
-                        "name": t["identifier"]["name"],
-                        "requirements": t.get("requirements", []),
-                        "updates": t.get("updates", []),
-                    }
-                    for t in body.get("table-changes", [])
-                ]
-                store.commit_transaction(prefix, changes)
-                return 204, None
-            if (
-                method == "POST"
-                and len(rest) == 3
-                and rest[0] == "namespaces"
-                and rest[2] == "register"
-            ):
-                # 501 parity (catalog/tables.rs:211-225). The spec route
-                # is /v1/{prefix}/namespaces/{namespace}/register; the
-                # pre-r9 match (`rest == ["register"]`) tested a path
-                # that doesn't exist, so a real RESTCatalog
-                # register_table call fell through to a generic 404
-                # instead of the structured 501 — found by the r9
-                # OpenAPI route-coverage test. POST-only (ADVICE r9):
-                # the reference registers the route with axum `post()`,
-                # so GET/DELETE on the same path 404 there, not 501.
-                return _error(501, "register_table is not implemented", "NotImplemented")
-            if len(rest) >= 3 and rest[0] == "namespaces" and rest[2] == "views":
-                if method == "GET" and len(rest) == 3:
-                    return 200, {"identifiers": []}  # catalog/views.rs:43-46
-                return _error(501, "views are not implemented", "NotImplemented")
-        return _error(404, "no such route", "NoSuchObjectException")
+    def _not_implemented(self, *_):
+        # Parity stubs for routes the reference serves with 501: POST
+        # /oauth/tokens goes to a Service trait no crate implements
+        # (api/iceberg/v1/oauth.rs:22-33; clients bring external OIDC),
+        # register_table (catalog/tables.rs:211-225, POST only: any other
+        # method on its path is an unrouted 404 there too) and views
+        # (catalog/views.rs:21-190)
+        path = self.path.partition("?")[0]
+        return _error(501, f"{self.command} {path} is not implemented", "NotImplemented")
 
-    # ------------------------- management wire-shape translation helpers
+    def _config(self):
+        # catalog/config.rs:35-143 — warehouse arg "{project}/{name}"
+        wh_arg = self._param("warehouse") or ""
+        if "/" not in wh_arg:
+            return _error(400, "warehouse must be '{project}/{name}'", "ValidationException")
+        project, name = wh_arg.split("/", 1)
+        wh = self.store.get_warehouse_by_name(project, name)
+        overrides = {}
+        # Give the auth handler a chance to exchange / enrich the
+        # token (config.rs:115-130): a returned token lands in
+        # overrides BEFORE prefix/uri so it can never clobber them.
+        if self.token_exchanger is not None:
+            new_token = self.token_exchanger(dict(self.headers), project, wh["warehouse_id"])
+            if new_token is not None:
+                overrides["token"] = new_token
+        overrides["prefix"] = wh["warehouse_id"]
+        host = self.headers.get("Host") or "127.0.0.1"
+        # config.rs:137-139 — clients are redirected to this server's
+        # base uri (reference default ends in /catalog/, config.rs:85)
+        overrides["uri"] = f"http://{host}/catalog/"
+        if wh.get("storage_profile"):
+            # warehouse-scoped signer base; the client appends
+            # v1/aws/s3/sign (storage/s3.rs:278-288,
+            # config.rs s3_signer_uri_for_warehouse)
+            overrides["s3.signer.uri"] = f"http://{host}/catalog/v1/{wh['warehouse_id']}"
+        return 200, {"overrides": overrides, "defaults": {}}
+
+    def _list_namespaces(self, prefix):
+        parent = self._param("parent")
+        names, next_token = self.store.list_namespaces(
+            prefix, _ns_from_path(parent) if parent else None, *self._page()
+        )
+        return 200, {"namespaces": names, "next-page-token": next_token}
+
+    def _create_namespace(self, prefix):
+        body = self.body
+        return 200, self.store.create_namespace(prefix, body["namespace"], body.get("properties"))
+
+    def _load_namespace(self, prefix, ns):
+        return 200, self.store.load_namespace(prefix, ns)
+
+    def _namespace_exists(self, prefix, ns):
+        if not self.store.namespace_exists(prefix, ns):
+            raise NamespaceNotFoundError(f"namespace {ns} not found")
+        return 204, None
+
+    def _drop_namespace(self, prefix, ns):
+        self.store.drop_namespace(prefix, ns)
+        return 204, None
+
+    def _update_properties(self, prefix, ns):
+        body = self.body
+        return 200, self.store.update_namespace_properties(
+            prefix, ns, body.get("removals", []), body.get("updates", {})
+        )
+
+    def _list_tables(self, prefix, ns):
+        names, next_token = self.store.list_tables(prefix, ns, *self._page())
+        return 200, {
+            "identifiers": [{"namespace": ns, "name": n} for n in names],
+            "next-page-token": next_token,
+        }
+
+    def _create_table(self, prefix, ns):
+        body = self.body
+        out = self.store.create_table(
+            prefix,
+            ns,
+            body["name"],
+            body["schema"],
+            partition_spec=body.get("partition-spec"),
+            write_order=body.get("write-order"),
+            properties=body.get("properties"),
+            stage_create=bool(body.get("stage-create")),
+            location=body.get("location"),
+        )
+        return 200, _table_body(out["metadata-json"], out["metadata-location"])
+
+    def _load_table(self, prefix, ns, table):
+        out = self.store.load_table(prefix, ns, table)
+        return 200, _table_body(
+            out["metadata"], out["metadata-location"], config=self._table_config(prefix)
+        )
+
+    def _table_exists(self, prefix, ns, table):
+        if not self.store.table_exists(prefix, ns, table):
+            raise TableNotFoundError(f"table {table} not found")
+        return 204, None
+
+    def _drop_table(self, prefix, ns, table):
+        self.store.drop_table(prefix, ns, table)
+        return 204, None
+
+    @staticmethod
+    def _table_change(ns: list[str], name: str, change: dict) -> dict:
+        return {
+            "namespace": ns,
+            "name": name,
+            "requirements": change.get("requirements", []),
+            "updates": change.get("updates", []),
+        }
+
+    def _commit_table(self, prefix, ns, table):
+        change = self._table_change(ns, table, self.body)
+        (result,) = self.store.commit_transaction(prefix, [change])
+        return 200, _table_body(result["metadata"], result["metadata-location"])
+
+    def _commit_transaction(self, prefix):
+        changes = [
+            self._table_change(t["identifier"]["namespace"], t["identifier"]["name"], t)
+            for t in self.body["table-changes"]
+        ]
+        self.store.commit_transaction(prefix, changes)
+        return 204, None
+
+    def _rename_table(self, prefix):
+        src, dst = self.body["source"], self.body["destination"]
+        self.store.rename_table(
+            prefix, src["namespace"], src["name"], dst["namespace"], dst["name"]
+        )
+        return 204, None
+
+    def _metrics(self, prefix, ns, table):
+        # accepted and discarded (catalog/metrics.rs:12-20)
+        return 204, None
+
+    def _list_views(self, prefix, ns):
+        return 200, {"identifiers": []}  # catalog/views.rs:43-46
+
+    def _sign_table(self, prefix, ns, table):
+        # POST .../tables/{table}/v1/aws/s3/sign (s3_signer.rs:38-173)
+        location = self.store.load_table(prefix, ns, table)["table-location"]
+        return self._sign_route(prefix, location, self._sign_profile(prefix))
+
+    def _sign(self, prefix):
+        # prefix-only sign route — the one Spark actually calls when
+        # s3.signer.uri is warehouse-scoped: resolve the table from the
+        # request URI by location prefix (catalog/s3_signer.rs:55-90)
+        profile = self._sign_profile(prefix)
+        try:
+            s3loc = parse_s3_uri(self.body["uri"], profile.get("endpoint-host"))
+            key = urllib.parse.unquote(s3loc.key)
+            table = self.store.resolve_table_by_location(prefix, f"s3://{s3loc.bucket}/{key}")
+        except SigningError as e:
+            return _error(403, str(e), "SignAccessDenied")
+        except NotFoundError as e:
+            # reference maps location-resolution failure to 401
+            # InvalidLocation (catalog/s3_signer.rs:70-80)
+            return _error(401, str(e), "InvalidLocation")
+        return self._sign_route(prefix, table["table-location"], profile)
+
+    # --------------------------------------------------- management routes
     # The reference's management contract is compile-time utoipa
     # (management/mod.rs ManagementApiDoc + v1/warehouse.rs serde
     # derives); tests/management_openapi.py is the same document derived
@@ -594,39 +539,33 @@ class CatalogHandler(BaseHTTPRequestHandler):
         if not profile:
             return None
         out = {"type": "s3"}
-        for k in (
-            "bucket", "key-prefix", "assume-role-arn",
-            "endpoint", "region", "path-style-access",
-        ):
+        for k in ("bucket", "key-prefix", "assume-role-arn", "endpoint", "region",
+                  "path-style-access"):
             if profile.get(k) is not None:
                 out[k] = profile[k]
         return out
 
     @staticmethod
-    def _profile_from_wire(p: dict) -> dict:
-        if p.get("type") != "s3":
-            # storage/mod.rs:18 — S3 is the only StorageProfile variant
-            raise ValidationError(f"unsupported storage profile type {p.get('type')!r}")
-        return {k: v for k, v in p.items() if k != "type" and v is not None}
-
-    @staticmethod
     def _credential_from_wire(c: dict | None) -> dict | None:
         """StorageCredential wire (nested tags `type: s3` +
         `credential-type: access-key`, storage/mod.rs:161 + s3.rs:428)
-        -> store credential keys. The legacy flat shape (access-key-id,
-        ...) is kept as a local extension for pre-r10 callers."""
+        -> store credential keys."""
         if c is None:
             return None
-        if "credential-type" in c or "aws-access-key-id" in c:
-            if c.get("credential-type", "access-key") != "access-key":
-                raise ValidationError(
-                    f"unsupported credential-type {c.get('credential-type')!r}"
-                )
-            return {
-                "access-key-id": CatalogHandler._require(c, "aws-access-key-id"),
-                "secret-access-key": CatalogHandler._require(c, "aws-secret-access-key"),
-            }
-        return c
+        if c["credential-type"] != "access-key":
+            raise ValidationError(f"unsupported credential-type {c['credential-type']!r}")
+        return {"access-key-id": c["aws-access-key-id"],
+                "secret-access-key": c["aws-secret-access-key"]}
+
+    def _storage_from_wire(self) -> dict:
+        """The body's typed storage-profile and optional
+        storage-credential, as one store profile."""
+        p = self.body["storage-profile"]
+        if p["type"] != "s3":
+            # storage/mod.rs:18 — S3 is the only StorageProfile variant
+            raise ValidationError(f"unsupported storage profile type {p['type']!r}")
+        creds = self._credential_from_wire(self.body.get("storage-credential")) or {}
+        return {**{k: v for k, v in p.items() if k != "type" and v is not None}, **creds}
 
     def _warehouse_to_wire(self, w: dict) -> dict:
         """Store row -> GetWarehouseResponse (warehouse.rs:84-97: id,
@@ -645,122 +584,147 @@ class CatalogHandler(BaseHTTPRequestHandler):
             out["storage-profile"] = profile
         return out
 
-    def _management_route(self, method: str, p: list[str], qs: dict) -> tuple[int, dict | None]:
-        store = self.store
-        if p == ["project"] and method == "GET":
-            # management/mod.rs:214-218 + warehouse.rs:70-81.
-            # ProjectResponse is the one management struct WITHOUT
-            # #[serde(rename_all = "kebab-case")] (warehouse.rs:70-74),
-            # so the key is snake_case project_id on the wire — pinned
-            # by tests/test_management_contract.py (pre-r10 we emitted
-            # kebab project-id; found deriving the contract document).
-            return 200, {
-                "projects": [{"project_id": pid} for pid in store.list_projects()]
-            }
-        if p == ["warehouse"]:
-            if method == "POST":
-                # CreateWarehouseRequest (warehouse.rs:14-26): requires
-                # warehouse-name, project-id, storage-profile; optional
-                # storage-credential. `base-location` is OUR local
-                # extension (the reference is S3-only; this container
-                # has no S3, so file:// warehouses keep e2e tests real).
-                body = self._body()
-                if "storage-profile" in body:
-                    profile = self._profile_from_wire(body["storage-profile"])
-                    creds = self._credential_from_wire(body.get("storage-credential"))
-                    base = f"s3://{profile.get('bucket', '')}"
-                    if profile.get("key-prefix"):
-                        base += f"/{profile['key-prefix']}"
-                    wid = store.create_warehouse(
-                        self._require(body, "project-id"),
-                        self._require(body, "warehouse-name"),
-                        base,
-                    )
-                    store.set_storage_profile(wid, {**profile, **(creds or {})})
-                else:
-                    wid = store.create_warehouse(
-                        self._require(body, "project-id"),
-                        self._require(body, "warehouse-name"),
-                        self._require(body, "base-location"),
-                    )
-                return 201, {"warehouse-id": wid}  # axum 201 (warehouse.rs:115-119)
-            if method == "GET":
-                # ListWarehousesRequest query params (warehouse.rs:50-62):
-                # repeatable warehouse-status enum is an INCLUSION filter
-                # (postgres/warehouse.rs:152 `unwrap_or([Active])` then
-                # `status = ANY(...)`) — `?warehouse-status=inactive`
-                # alone excludes active warehouses. project-id absent →
-                # 400 MissingProjectId (warehouse.rs:205-211). The
-                # pre-r10 `project`/`include-inactive` params stay as
-                # legacy aliases.
-                project = (qs.get("project-id") or qs.get("project") or [""])[0]
-                if not project:
-                    return _error(400, "project-id is required", "MissingProjectId")
-                statuses = tuple(qs.get("warehouse-status", []))
-                if not statuses:
-                    statuses = (
-                        ("active", "inactive")
-                        if qs.get("include-inactive", ["false"])[0] == "true"
-                        else ("active",)
-                    )
-                return 200, {
-                    "warehouses": [
-                        self._warehouse_to_wire(w)
-                        for w in store.list_warehouses(project, statuses)
-                    ]
-                }
-        if len(p) == 2 and p[0] == "warehouse":
-            if method == "GET":
-                return 200, self._warehouse_to_wire(store.get_warehouse(p[1]))
-            if method == "DELETE":
-                # management/mod.rs:268-270 `.delete(delete_warehouse)`;
-                # 409 WarehouseNotEmpty on contained namespaces/tables
-                # (typed ConflictError → envelope via the generic
-                # handler). Result<()> responds 200 with empty body
-                # (axum IntoResponse for unit), not 204.
-                store.delete_warehouse(p[1])
-                return 200, None
-        if len(p) == 3 and p[0] == "warehouse":
-            wid, action = p[1], p[2]
-            if action == "storage":
-                # the REFERENCE route (management/mod.rs:282-285):
-                # UpdateWarehouseStorageRequest carries a typed
-                # storage-profile + optional storage-credential. With no
-                # credential the OLD secret is detached and deleted
-                # (warehouse.rs:360-386: 'The existing credential is not
-                # re-used. If no credential is provided, we assume that
-                # this storage does not require credentials.') — silently
-                # retaining it would leave the signer using a credential
-                # the caller believes was dropped.
-                body = self._body()
-                profile = self._profile_from_wire(self._require(body, "storage-profile"))
-                creds = self._credential_from_wire(body.get("storage-credential"))
-                store.set_storage_profile(
-                    wid, {**profile, **(creds or {})}, retain_credential=False
-                )
-                return 200, None
-            if action == "storage-profile":
-                # legacy local alias (flat un-tagged profile dict)
-                store.set_storage_profile(wid, self._body())
-                return 200, None
-            if action == "storage-credential":
-                # management/mod.rs:288-292: rotate only the credential,
-                # storage profile untouched
-                body = self._body()
-                store.update_storage_credential(
-                    wid, self._credential_from_wire(body.get("new-storage-credential"))
-                )
-                return 200, None
-            if action == "activate":
-                store.set_warehouse_status(wid, "active")
-                return 200, None
-            if action == "deactivate":
-                store.set_warehouse_status(wid, "inactive")
-                return 200, None
-            if action == "rename":
-                store.rename_warehouse(wid, self._require(self._body(), "new-name"))
-                return 200, None
-        return _error(404, "no such route", "NoSuchObjectException")
+    def _list_projects(self):
+        # management/mod.rs:214-218 + warehouse.rs:70-81.
+        # ProjectResponse is the one management struct WITHOUT
+        # #[serde(rename_all = "kebab-case")] (warehouse.rs:70-74), so
+        # the key is snake_case project_id on the wire — pinned by
+        # tests/test_management_contract.py.
+        return 200, {"projects": [{"project_id": p} for p in self.store.list_projects()]}
+
+    def _create_warehouse(self):
+        # CreateWarehouseRequest (warehouse.rs:14-26): requires
+        # warehouse-name, project-id, storage-profile; optional
+        # storage-credential. `base-location` is OUR local extension
+        # (the reference is S3-only; this container has no S3, so
+        # file:// warehouses keep e2e tests real).
+        body = self.body
+        profile = None
+        if "storage-profile" in body:
+            profile = self._storage_from_wire()
+            base = f"s3://{profile.get('bucket', '')}"
+            if profile.get("key-prefix"):
+                base += f"/{profile['key-prefix']}"
+        else:
+            base = body["base-location"]
+        wid = self.store.create_warehouse(body["project-id"], body["warehouse-name"], base)
+        if profile is not None:
+            self.store.set_storage_profile(wid, profile)
+        return 201, {"warehouse-id": wid}  # axum 201 (warehouse.rs:115-119)
+
+    def _list_warehouses(self):
+        # ListWarehousesRequest query params (warehouse.rs:50-62): the
+        # repeatable warehouse-status enum is an INCLUSION filter
+        # (postgres/warehouse.rs:152 `unwrap_or([Active])` then
+        # `status = ANY(...)`) — `?warehouse-status=inactive` alone
+        # excludes active warehouses. project-id absent → 400
+        # MissingProjectId (warehouse.rs:205-211).
+        project = self._param("project-id")
+        if not project:
+            return _error(400, "project-id is required", "MissingProjectId")
+        warehouses = self.store.list_warehouses(project, self.query.get("warehouse-status", ()))
+        return 200, {"warehouses": [self._warehouse_to_wire(w) for w in warehouses]}
+
+    def _get_warehouse(self, wid):
+        return 200, self._warehouse_to_wire(self.store.get_warehouse(wid))
+
+    def _delete_warehouse(self, wid):
+        # management/mod.rs:268-270 `.delete(delete_warehouse)`; 409
+        # WarehouseNotEmpty on contained namespaces/tables. Result<()>
+        # responds 200 with empty body (axum IntoResponse for unit), not
+        # 204 — as every management handler below does.
+        self.store.delete_warehouse(wid)
+        return 200, None
+
+    def _rename_warehouse(self, wid):
+        self.store.rename_warehouse(wid, self.body["new-name"])
+        return 200, None
+
+    def _activate_warehouse(self, wid):
+        self.store.set_warehouse_status(wid, "active")
+        return 200, None
+
+    def _deactivate_warehouse(self, wid):
+        self.store.set_warehouse_status(wid, "inactive")
+        return 200, None
+
+    def _update_storage(self, wid):
+        # management/mod.rs:282-285: UpdateWarehouseStorageRequest
+        # carries a typed storage-profile + optional storage-credential.
+        # With no credential the OLD secret is detached and deleted
+        # (warehouse.rs:360-386: 'The existing credential is not
+        # re-used. If no credential is provided, we assume that this
+        # storage does not require credentials.')
+        self.store.set_storage_profile(wid, self._storage_from_wire())
+        return 200, None
+
+    def _rotate_credential(self, wid):
+        # management/mod.rs:288-292: rotate only the credential, storage
+        # profile untouched
+        self.store.update_storage_credential(
+            wid, self._credential_from_wire(self.body.get("new-storage-credential"))
+        )
+        return 200, None
+
+    # (method, path template): handler. Templates are spelled as in the
+    # Iceberg REST OpenAPI document (under the /catalog mount) and in
+    # tests/management_openapi.py; the sign routes are the reference's
+    # own (api/router.rs:40-52).
+    ROUTES = {
+        ("GET", "health"): _health,
+        ("POST", "catalog/v1/oauth/tokens"): _not_implemented,
+        ("GET", "catalog/v1/config"): _config,
+        ("GET", "catalog/v1/{prefix}/namespaces"): _list_namespaces,
+        ("POST", "catalog/v1/{prefix}/namespaces"): _create_namespace,
+        ("GET", "catalog/v1/{prefix}/namespaces/{namespace}"): _load_namespace,
+        ("HEAD", "catalog/v1/{prefix}/namespaces/{namespace}"): _namespace_exists,
+        ("DELETE", "catalog/v1/{prefix}/namespaces/{namespace}"): _drop_namespace,
+        ("POST", "catalog/v1/{prefix}/namespaces/{namespace}/properties"): _update_properties,
+        ("GET", "catalog/v1/{prefix}/namespaces/{namespace}/tables"): _list_tables,
+        ("POST", "catalog/v1/{prefix}/namespaces/{namespace}/tables"): _create_table,
+        ("POST", "catalog/v1/{prefix}/namespaces/{namespace}/register"): _not_implemented,
+        ("GET", "catalog/v1/{prefix}/namespaces/{namespace}/tables/{table}"): _load_table,
+        ("HEAD", "catalog/v1/{prefix}/namespaces/{namespace}/tables/{table}"): _table_exists,
+        ("DELETE", "catalog/v1/{prefix}/namespaces/{namespace}/tables/{table}"): _drop_table,
+        ("POST", "catalog/v1/{prefix}/namespaces/{namespace}/tables/{table}"): _commit_table,
+        ("POST", "catalog/v1/{prefix}/namespaces/{namespace}/tables/{table}/metrics"): _metrics,
+        (
+            "POST", "catalog/v1/{prefix}/namespaces/{namespace}/tables/{table}/v1/aws/s3/sign"
+        ): _sign_table,
+        ("POST", "catalog/v1/{prefix}/v1/aws/s3/sign"): _sign,
+        ("POST", "catalog/v1/{prefix}/tables/rename"): _rename_table,
+        ("POST", "catalog/v1/{prefix}/transactions/commit"): _commit_transaction,
+        ("GET", "catalog/v1/{prefix}/namespaces/{namespace}/views"): _list_views,
+        ("POST", "catalog/v1/{prefix}/namespaces/{namespace}/views"): _not_implemented,
+        **dict.fromkeys(
+            ((m, "catalog/v1/{prefix}/namespaces/{namespace}/views/{view}")
+             for m in ("GET", "HEAD", "POST", "DELETE")),
+            _not_implemented,
+        ),
+        ("GET", "management/v1/project"): _list_projects,
+        ("POST", "management/v1/warehouse"): _create_warehouse,
+        ("GET", "management/v1/warehouse"): _list_warehouses,
+        ("GET", "management/v1/warehouse/{warehouse_id}"): _get_warehouse,
+        ("DELETE", "management/v1/warehouse/{warehouse_id}"): _delete_warehouse,
+        ("POST", "management/v1/warehouse/{warehouse_id}/rename"): _rename_warehouse,
+        ("POST", "management/v1/warehouse/{warehouse_id}/activate"): _activate_warehouse,
+        ("POST", "management/v1/warehouse/{warehouse_id}/deactivate"): _deactivate_warehouse,
+        ("POST", "management/v1/warehouse/{warehouse_id}/storage"): _update_storage,
+        ("POST", "management/v1/warehouse/{warehouse_id}/storage-credential"): _rotate_credential,
+    }
+
+
+def _route_index(routes: dict) -> dict[tuple[str, int], list[tuple[list[str], Callable]]]:
+    """(method, segment count) -> [(template segments, handler)]: a
+    request is matched only against templates of its method and length."""
+    index: dict = {}
+    for (method, template), handler in routes.items():
+        segments = template.split("/")
+        index.setdefault((method, len(segments)), []).append((segments, handler))
+    return index
+
+
+_ROUTE_INDEX = _route_index(CatalogHandler.ROUTES)
 
 
 class CatalogHTTPServer(ThreadingHTTPServer):

@@ -271,52 +271,39 @@ class CatalogStore:
     # credential keys never stored in plaintext (postgres/secrets.rs:99-103)
     CREDENTIAL_KEYS = ("access-key-id", "secret-access-key", "session-token")
 
-    def set_storage_profile(
-        self, warehouse_id: str, profile: dict, retain_credential: bool = True
-    ) -> None:
+    def set_storage_profile(self, warehouse_id: str, profile: dict) -> None:
         """Attach/update the S3 storage profile. bucket/region/key_prefix
         are immutable once set (storage/s3.rs:184-220). Credentials are
         split out of the profile and stored pgp_sym_encrypt-style in the
         secret table (postgres/secrets.rs:99-103); the warehouse row
-        keeps only a storage-secret-id pointer.
-
-        `retain_credential=False` is the reference `update_storage`
-        semantics (warehouse.rs:360-386: 'The existing credential is not
-        re-used. If no credential is provided, we assume that this
-        storage does not require credentials.') — with no credential
-        keys in `profile`, the old secret is detached AND deleted.
-        `True` keeps the pre-r11 retain behavior for the legacy
-        storage-profile alias."""
+        keeps only a storage-secret-id pointer. The old secret is deleted
+        even when ``profile`` carries no credential (warehouse.rs:360-386:
+        'The existing credential is not re-used. If no credential is
+        provided, we assume that this storage does not require
+        credentials.')."""
         if not profile.get("region"):
             raise ValidationError("storage profile requires 'region'")
         if not profile.get("bucket"):
             raise ValidationError("storage profile requires 'bucket'")
-        current = self.get_warehouse(warehouse_id).get("storage_profile")
-        if current:
-            for key in ("bucket", "region", "key-prefix"):
-                if key in current and current.get(key) != profile.get(key):
-                    raise ValidationError(f"storage profile {key!r} is immutable")
         profile = dict(profile)
         creds = {k: profile.pop(k) for k in self.CREDENTIAL_KEYS if k in profile}
         with self._txn() as c:
+            # read under the write transaction, so two concurrent updates
+            # cannot both delete one old secret and strand a new one
+            current = self.get_warehouse(warehouse_id).get("storage_profile") or {}
+            for key in ("bucket", "region", "key-prefix"):
+                if key in current and current.get(key) != profile.get(key):
+                    raise ValidationError(f"storage profile {key!r} is immutable")
             if creds:
-                secret_id = new_uuid()
+                profile["storage-secret-id"] = new_uuid()
                 c.execute(
                     "INSERT INTO secret (secret_id, encrypted) VALUES (?,?)",
-                    (secret_id, self._cipher.encrypt(creds)),
+                    (profile["storage-secret-id"], self._cipher.encrypt(creds)),
                 )
-                old = (current or {}).get("storage-secret-id")
-                if old:
-                    c.execute("DELETE FROM secret WHERE secret_id = ?", (old,))
-                profile["storage-secret-id"] = secret_id
-            elif current and current.get("storage-secret-id"):
-                if retain_credential:
-                    profile["storage-secret-id"] = current["storage-secret-id"]
-                else:
-                    c.execute(
-                        "DELETE FROM secret WHERE secret_id = ?",
-                        (current["storage-secret-id"],),
-                    )
+            if current.get("storage-secret-id"):
+                c.execute(
+                    "DELETE FROM secret WHERE secret_id = ?", (current["storage-secret-id"],)
+                )
             c.execute(
                 "UPDATE warehouse SET storage_profile = ? WHERE warehouse_id = ?",
                 (json.dumps(profile), warehouse_id),
@@ -436,17 +423,19 @@ class CatalogStore:
         secret — 'we assume that this endpoint does not require a
         secret'). Distinct from set_storage_profile so credential
         rotation can't trip the profile-immutability checks."""
-        profile = self.get_warehouse(warehouse_id).get("storage_profile")
-        if profile is None:
-            raise ValidationError(
-                "warehouse has no storage profile to attach a credential to"
-            )
         if credentials is not None:
             unknown = set(credentials) - set(self.CREDENTIAL_KEYS)
             if unknown:
                 raise ValidationError(f"unknown credential keys {sorted(unknown)}")
-        old = profile.pop("storage-secret-id", None)
         with self._txn() as c:
+            # read under the write transaction: a concurrent rotation
+            # must see this one's secret, not delete the same old one
+            profile = self.get_warehouse(warehouse_id).get("storage_profile")
+            if profile is None:
+                raise ValidationError(
+                    "warehouse has no storage profile to attach a credential to"
+                )
+            old = profile.pop("storage-secret-id", None)
             if credentials:
                 secret_id = new_uuid()
                 c.execute(
@@ -638,14 +627,7 @@ class CatalogStore:
             builder.apply({"action": "set-properties", "updates": properties})
         metadata = builder.build()
         metadata_json = _encode_metadata(metadata)
-        if stage_create:
-            metadata_location = None
-        else:
-            # metadata file written BEFORE the metastore commit — a crash
-            # here leaks an orphan file, never a broken catalog entry
-            # (catalog/tables.rs:150-188 ordering)
-            metadata_location = metadata_file_path(table_location, new_uuid())
-            write_metadata_file(metadata_location, metadata_json)
+        metadata_location = None
         with self._txn() as c:
             existing = c.execute(
                 "SELECT table_id, metadata_location FROM tbl"
@@ -658,6 +640,13 @@ class CatalogStore:
                 # staged row may be overwritten by a new create
                 # (postgres/table.rs:237-239, 855-860)
                 c.execute("DELETE FROM tbl WHERE table_id = ?", (existing[0],))
+            if not stage_create:
+                # the metadata file is written once the create is known
+                # to succeed, and BEFORE the metastore commit — a crash
+                # here leaks an orphan file, never a broken catalog entry
+                # (catalog/tables.rs:150-188 ordering)
+                metadata_location = metadata_file_path(table_location, new_uuid())
+                write_metadata_file(metadata_location, metadata_json)
             c.execute(
                 "INSERT INTO tbl (table_id, namespace_id, name, metadata, metadata_location,"
                 " table_location) VALUES (?,?,?,?,?,?)",
@@ -722,15 +711,13 @@ class CatalogStore:
             "table-location": row[3],
         }
 
-    def resolve_table_by_location(
-        self, warehouse_id: str, location: str, include_staged: bool = True
-    ) -> dict:
+    def resolve_table_by_location(self, warehouse_id: str, location: str) -> dict:
         """Reverse lookup: the table whose location is a path-prefix of
         ``location`` (postgres/table.rs:430-506: ``$2 LIKE table_location
         || '%'`` on an active warehouse; served by idx_tbl_loc). The
         boundary is re-checked in Python so a request under
         ``.../tbl-id-evil/`` never resolves to table ``tbl-id``; staged
-        tables are included, matching the signer's include_staged=true
+        tables are included, as the signer includes them
         (catalog/s3_signer.rs:55-56)."""
         rows = self._conn.execute(
             "SELECT t.table_id, t.metadata_location, t.table_location"
@@ -744,8 +731,6 @@ class CatalogStore:
         for row in rows:
             tl = row[2].rstrip("/")
             if location == tl or location.startswith(tl + "/"):
-                if not include_staged and row[1] is None:
-                    raise TableNotFoundError("table is staged and not yet created")
                 return {
                     "table_id": row[0],
                     "metadata-location": row[1],

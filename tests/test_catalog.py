@@ -26,7 +26,10 @@ from iceberg_rest_server_spark.catalog import (
 )
 from iceberg_rest_server_spark.catalog.client import CatalogHTTPError, RestCatalogClient
 from iceberg_rest_server_spark.catalog.server import ServerThread
-from iceberg_rest_server_spark.catalog.store import NamespaceNotEmptyError
+from iceberg_rest_server_spark.catalog.store import (
+    NamespaceNotEmptyError,
+    TableAlreadyExistsError,
+)
 
 SCHEMA = {
     "type": "struct",
@@ -311,6 +314,38 @@ def test_concurrent_namespace_property_updates_are_not_lost(store, monkeypatch):
     )
     s.update_namespace_properties(wid, ["ns1"], [], {"b": "2"})
     assert s.load_namespace(wid, ["ns1"])["properties"] == {"a": "1", "b": "2"}
+
+
+@pytest.mark.parametrize("rotate", ["update_storage_credential", "set_storage_profile"])
+def test_concurrent_credential_rotations_leave_one_secret(store, monkeypatch, rotate):
+    """Two rotations racing each other: each reads the old secret id
+    inside its transaction, so the loser deletes the winner's secret
+    instead of stranding it beside the one it writes."""
+    s, wid = store
+    profile = {"region": "r", "bucket": "b"}
+    s.set_storage_profile(wid, {**profile, "access-key-id": "k1", "secret-access-key": "x1"})
+
+    def rotation(key):
+        creds = {"access-key-id": key, "secret-access-key": "x"}
+        if rotate == "update_storage_credential":
+            return lambda: s.update_storage_credential(wid, creds)
+        return lambda: s.set_storage_profile(wid, {**profile, **creds})
+
+    _race_before_txn(monkeypatch, s, rotation("k2"))
+    rotation("k3")()
+    assert s._conn.execute("SELECT count(*) FROM secret").fetchone()[0] == 1
+    assert s.get_storage_credentials(wid)["access-key-id"] == "k3"
+
+
+def test_rejected_duplicate_create_leaves_no_metadata_file(tmp_path):
+    s = CatalogStore()
+    wid = s.create_warehouse("p", "wh", f"file://{tmp_path}/wh")
+    s.create_namespace(wid, ["ns"])
+    s.create_table(wid, ["ns"], "t", SCHEMA)
+    for _ in range(3):
+        with pytest.raises(TableAlreadyExistsError):
+            s.create_table(wid, ["ns"], "t", SCHEMA)
+    assert len(list(tmp_path.rglob("*.metadata.json"))) == 1
 
 
 def test_table_property_keys_must_be_lowercase(store):
@@ -633,16 +668,27 @@ def test_warehouse_delete_and_credential_routes_http():
     with ServerThread() as server:
         c = RestCatalogClient(server.base_url)
         wid = c.create_warehouse("p", "wh", "s3://bucket-a/prefix")
+        credential = {"type": "s3", "credential-type": "access-key"}
         c._request(
             "POST",
-            f"/management/v1/warehouse/{wid}/storage-profile",
-            {"region": "r", "bucket": "bucket-a", "access-key-id": "k", "secret-access-key": "x"},
+            f"/management/v1/warehouse/{wid}/storage",
+            {
+                "storage-profile": {"type": "s3", "region": "r", "bucket": "bucket-a"},
+                "storage-credential": {
+                    **credential, "aws-access-key-id": "k", "aws-secret-access-key": "x",
+                },
+            },
         )
         c._request(
             "POST",
             f"/management/v1/warehouse/{wid}/storage-credential",
-            {"new-storage-credential": {"access-key-id": "k2", "secret-access-key": "x2"}},
+            {
+                "new-storage-credential": {
+                    **credential, "aws-access-key-id": "k2", "aws-secret-access-key": "x2",
+                },
+            },
         )
+        assert server.store.get_storage_credentials(wid)["access-key-id"] == "k2"
         c.configure("p", "wh")
         c.create_namespace(["ns"])
         with pytest.raises(CatalogHTTPError) as ei:

@@ -142,6 +142,57 @@ def test_create_namespace_shape(server):
     assert payload["properties"] == {}
 
 
+@pytest.mark.parametrize(
+    "method,path,body,code",
+    [
+        # a method the route table does not list for a path is a 404,
+        # never a run of another method's handler
+        ("GET", "/transactions/commit", None, 404),
+        ("DELETE", "/namespaces/ns/properties", None, 404),
+        ("GET", "/tables/rename", None, 404),
+        ("PUT", "/namespaces/ns", "{}", 404),
+        # client faults in the body or the query are 400s, never 500s
+        ("POST", "/namespaces", "{not json", 400),
+        ("POST", "/namespaces", "[]", 400),
+        ("POST", "/namespaces", json.dumps({"properties": {}}), 400),
+        ("POST", "/namespaces/ns/tables", '{"schema": {}}', 400),
+        (
+            "POST",
+            "/tables/rename",
+            json.dumps({"source": {"namespace": ["ns"], "name": "t"}}),
+            400,
+        ),
+        (
+            "POST",
+            "/transactions/commit",
+            json.dumps({"table-changes": [{"requirements": [], "updates": []}]}),
+            400,
+        ),
+        ("GET", "/namespaces?pageSize=abc", None, 400),
+        ("GET", "/namespaces/ns/tables?pageToken=abc", None, 400),
+    ],
+)
+def test_client_faults_are_4xx_envelopes(server, method, path, body, code):
+    """The reference's router matches method and path together, and
+    serde extraction rejects a malformed body before the handler runs
+    (api/router.rs:40-52). Raw requests: none of these is a shape a
+    spec-generated client sends."""
+    prefix = _prefix(server)
+    assert _create_ns(server, prefix, "ns")[0] == 200
+    conn = http.client.HTTPConnection("127.0.0.1", server.port, timeout=10)
+    conn.request(
+        method,
+        f"/catalog/v1/{prefix}{path}",
+        body=body,
+        headers={"Content-Type": "application/json"},
+    )
+    resp = conn.getresponse()
+    raw = resp.read()
+    conn.close()
+    assert resp.status == code, raw
+    _assert_error_envelope(json.loads(raw), code)
+
+
 def test_list_namespaces_shape(server):
     """test_spark.py:13-19 SHOW NAMESPACES → GET /v1/{prefix}/namespaces."""
     prefix = _prefix(server)

@@ -14,11 +14,14 @@ SCHEMA = {
     "fields": [{"id": 1, "name": "x", "required": False, "type": "long"}],
 }
 
-PROFILE = {
-    "region": "us-east-1",
-    "bucket": "bucket-a",
-    "access-key-id": "AKIDEXAMPLE",
-    "secret-access-key": "secret",
+STORAGE = {
+    "storage-profile": {"type": "s3", "region": "us-east-1", "bucket": "bucket-a"},
+    "storage-credential": {
+        "type": "s3",
+        "credential-type": "access-key",
+        "aws-access-key-id": "AKIDEXAMPLE",
+        "aws-secret-access-key": "secret",
+    },
 }
 
 
@@ -27,7 +30,7 @@ def env():
     with ServerThread() as server:
         c = RestCatalogClient(server.base_url)
         wid = c.create_warehouse("p", "wh", "s3://bucket-a/prefix")
-        c._request("POST", f"/management/v1/warehouse/{wid}/storage-profile", PROFILE)
+        c._request("POST", f"/management/v1/warehouse/{wid}/storage", STORAGE)
         c.configure("p", "wh")
         c.create_namespace(["ns"])
         out = c.create_table(["ns"], "t", SCHEMA)
