@@ -13,25 +13,15 @@ import json
 import os
 import time
 import uuid
+from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+if TYPE_CHECKING:  # the server and client processes never load Spark
+    from pyspark.sql import DataFrame, SparkSession
 
-EVENT_SCHEMA = StructType(
-    [
-        StructField("event_id", StringType()),
-        StructField("event_type", StringType()),
-        StructField("time_ms", LongType()),
-        StructField("table_id", StringType()),
-        StructField("namespace", StringType()),
-        StructField("name", StringType()),
-        StructField("metadata_location", StringType()),
-    ]
+# the event files' columns, as the DDL string both Spark readers take
+EVENT_SCHEMA = (
+    "event_id STRING, event_type STRING, time_ms BIGINT, table_id STRING,"
+    " namespace STRING, name STRING, metadata_location STRING"
 )
 
 

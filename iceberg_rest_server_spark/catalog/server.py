@@ -15,7 +15,8 @@ path template) in the OpenAPI document's template spelling; an
 unlisted pair is a 404. Every request body is read by one reader
 (`_read_body`), as serde extraction reads it in the reference: a body
 that is not a JSON object is a 400 before the handler runs, and a
-required member it lacks is a 400 where the handler reads it.
+required member it lacks, or an identifier member of the wrong type
+(`_member`), is a 400 where the handler reads it.
 
 Errors use the reference's envelope
 {"error": {"message", "type", "code"}} (rest/error.rs:22-70).
@@ -49,9 +50,7 @@ from .store import (  # noqa: F401 — SCRUBBED_NULL_KEYS is re-exported
     UNIT_SEPARATOR,
     CatalogStore,
     ConflictError,
-    NamespaceNotFoundError,
     NotFoundError,
-    TableNotFoundError,
     ValidationError,
     _scrub_table_metadata,
 )
@@ -107,6 +106,27 @@ def _read_body(raw: bytes) -> _Body:
     if not isinstance(body, _Body):
         raise ValidationError("request body must be a JSON object")
     return body
+
+
+def _member(body: dict, key: str):
+    """Member ``key`` of a request body, type-checked where it names a
+    catalog object, as serde's typed extraction checks it in the
+    reference: ``namespace`` is a list of non-empty strings, ``name`` a
+    string, and ``source``, ``destination`` and ``identifier`` are
+    objects holding those two, returned as ``(namespace, name)``. A
+    wrong type is a 400."""
+    value = body[key]
+    if key in ("source", "destination", "identifier"):
+        if not isinstance(value, dict):
+            raise ValidationError(f"{key!r} must be a table identifier object, got {value!r}")
+        return _member(value, "namespace"), _member(value, "name")
+    if key == "namespace":
+        ok = isinstance(value, list) and all(isinstance(p, str) and p for p in value)
+    else:
+        ok = isinstance(value, str)
+    if not ok:
+        raise ValidationError(f"{key!r} has the wrong type: {value!r}")
+    return value
 
 
 def _scrub_metadata_nulls(payload: dict) -> dict:
@@ -407,14 +427,15 @@ class CatalogHandler(BaseHTTPRequestHandler):
 
     def _create_namespace(self, prefix):
         body = self.body
-        return 200, self.store.create_namespace(prefix, body["namespace"], body.get("properties"))
+        return 200, self.store.create_namespace(
+            prefix, _member(body, "namespace"), body.get("properties")
+        )
 
     def _load_namespace(self, prefix, ns):
         return 200, self.store.load_namespace(prefix, ns)
 
     def _namespace_exists(self, prefix, ns):
-        if not self.store.namespace_exists(prefix, ns):
-            raise NamespaceNotFoundError(f"namespace {ns} not found")
+        self.store.load_namespace(prefix, ns)
         return 204, None
 
     def _drop_namespace(self, prefix, ns):
@@ -439,7 +460,7 @@ class CatalogHandler(BaseHTTPRequestHandler):
         out = self.store.create_table(
             prefix,
             ns,
-            body["name"],
+            _member(body, "name"),
             body["schema"],
             partition_spec=body.get("partition-spec"),
             write_order=body.get("write-order"),
@@ -456,8 +477,7 @@ class CatalogHandler(BaseHTTPRequestHandler):
         )
 
     def _table_exists(self, prefix, ns, table):
-        if not self.store.table_exists(prefix, ns, table):
-            raise TableNotFoundError(f"table {table} not found")
+        self.store.load_table(prefix, ns, table)
         return 204, None
 
     def _drop_table(self, prefix, ns, table):
@@ -480,16 +500,14 @@ class CatalogHandler(BaseHTTPRequestHandler):
 
     def _commit_transaction(self, prefix):
         changes = [
-            self._table_change(t["identifier"]["namespace"], t["identifier"]["name"], t)
-            for t in self.body["table-changes"]
+            self._table_change(*_member(t, "identifier"), t) for t in self.body["table-changes"]
         ]
         self.store.commit_transaction(prefix, changes)
         return 204, None
 
     def _rename_table(self, prefix):
-        src, dst = self.body["source"], self.body["destination"]
         self.store.rename_table(
-            prefix, src["namespace"], src["name"], dst["namespace"], dst["name"]
+            prefix, *_member(self.body, "source"), *_member(self.body, "destination")
         )
         return 204, None
 
@@ -607,9 +625,9 @@ class CatalogHandler(BaseHTTPRequestHandler):
                 base += f"/{profile['key-prefix']}"
         else:
             base = body["base-location"]
-        wid = self.store.create_warehouse(body["project-id"], body["warehouse-name"], base)
-        if profile is not None:
-            self.store.set_storage_profile(wid, profile)
+        wid = self.store.create_warehouse(
+            body["project-id"], body["warehouse-name"], base, profile
+        )
         return 201, {"warehouse-id": wid}  # axum 201 (warehouse.rs:115-119)
 
     def _list_warehouses(self):

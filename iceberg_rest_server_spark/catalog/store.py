@@ -4,10 +4,18 @@ Schema mirrors the reference's 5 migrations
 (`crates/iceberg-catalog/src/implementations/postgres/migrations/01-05_*.sql`):
 warehouse → namespace (text-array name, case-insensitive, depth ≤ 1) →
 table (the current version's wire-form metadata JSON;
-`metadata_location IS NULL` ⇔ staged). Atomic
-multi-table commits run inside one `BEGIN IMMEDIATE` transaction, the
-SQLite analogue of the reference's single Postgres write transaction
-(`postgres/table.rs:771-852`).
+`metadata_location IS NULL` ⇔ staged).
+
+One transaction per operation, as the reference runs each request in
+one Postgres write transaction (`postgres/table.rs:771-852`): a method
+that writes resolves every name it acts on, and checks every state it
+depends on (warehouse present and active, namespace present, table
+present or staged), inside the one ``BEGIN IMMEDIATE`` transaction that
+does the write. A call that races it therefore lands wholly before or
+wholly after it. Each level has one lookup that raises its 404:
+`get_warehouse`, `_namespace_row`, `_table_id`. Reads do not take the
+lock and still share the writer's connection, so a reader can see a
+commit in progress (ROADMAP item 1).
 """
 
 from __future__ import annotations
@@ -237,8 +245,14 @@ class CatalogStore:
             return
         raise ValidationError(f"unsupported base location scheme: {base_location!r}")
 
-    def create_warehouse(self, project_id: str, name: str, base_location: str) -> str:
+    def create_warehouse(
+        self, project_id: str, name: str, base_location: str, profile: dict | None = None
+    ) -> str:
+        """Create a warehouse, with its storage ``profile`` when given: a
+        rejected profile creates nothing."""
         self._validate_base_location(base_location)
+        if profile is not None:
+            profile, creds = self._split_profile(profile)
         wid = new_uuid()
         try:
             with self._txn() as c:
@@ -247,6 +261,8 @@ class CatalogStore:
                     " VALUES (?,?,?,?)",
                     (wid, project_id, name, base_location),
                 )
+                if profile is not None:
+                    self._write_profile(c, wid, profile, creds, None)
         except sqlite3.IntegrityError as e:
             raise ConflictError(f"warehouse {name!r} already exists in project") from e
         return wid
@@ -271,6 +287,35 @@ class CatalogStore:
     # credential keys never stored in plaintext (postgres/secrets.rs:99-103)
     CREDENTIAL_KEYS = ("access-key-id", "secret-access-key", "session-token")
 
+    def _split_profile(self, profile: dict) -> tuple[dict, dict]:
+        """A checked copy of an S3 storage ``profile``, and the
+        credentials split out of it."""
+        if not profile.get("region"):
+            raise ValidationError("storage profile requires 'region'")
+        if not profile.get("bucket"):
+            raise ValidationError("storage profile requires 'bucket'")
+        profile = dict(profile)
+        return profile, {k: profile.pop(k) for k in self.CREDENTIAL_KEYS if k in profile}
+
+    def _write_profile(
+        self, c, warehouse_id: str, profile: dict, creds: dict | None, old_secret_id: str | None
+    ) -> None:
+        """Store ``creds`` (if any) as a new encrypted secret that
+        ``profile`` points to, delete the old secret, and write
+        ``profile`` to the warehouse row."""
+        if creds:
+            profile["storage-secret-id"] = new_uuid()
+            c.execute(
+                "INSERT INTO secret (secret_id, encrypted) VALUES (?,?)",
+                (profile["storage-secret-id"], self._cipher.encrypt(creds)),
+            )
+        if old_secret_id:
+            c.execute("DELETE FROM secret WHERE secret_id = ?", (old_secret_id,))
+        c.execute(
+            "UPDATE warehouse SET storage_profile = ? WHERE warehouse_id = ?",
+            (json.dumps(profile), warehouse_id),
+        )
+
     def set_storage_profile(self, warehouse_id: str, profile: dict) -> None:
         """Attach/update the S3 storage profile. bucket/region/key_prefix
         are immutable once set (storage/s3.rs:184-220). Credentials are
@@ -281,33 +326,13 @@ class CatalogStore:
         'The existing credential is not re-used. If no credential is
         provided, we assume that this storage does not require
         credentials.')."""
-        if not profile.get("region"):
-            raise ValidationError("storage profile requires 'region'")
-        if not profile.get("bucket"):
-            raise ValidationError("storage profile requires 'bucket'")
-        profile = dict(profile)
-        creds = {k: profile.pop(k) for k in self.CREDENTIAL_KEYS if k in profile}
+        profile, creds = self._split_profile(profile)
         with self._txn() as c:
-            # read under the write transaction, so two concurrent updates
-            # cannot both delete one old secret and strand a new one
             current = self.get_warehouse(warehouse_id).get("storage_profile") or {}
             for key in ("bucket", "region", "key-prefix"):
                 if key in current and current.get(key) != profile.get(key):
                     raise ValidationError(f"storage profile {key!r} is immutable")
-            if creds:
-                profile["storage-secret-id"] = new_uuid()
-                c.execute(
-                    "INSERT INTO secret (secret_id, encrypted) VALUES (?,?)",
-                    (profile["storage-secret-id"], self._cipher.encrypt(creds)),
-                )
-            if current.get("storage-secret-id"):
-                c.execute(
-                    "DELETE FROM secret WHERE secret_id = ?", (current["storage-secret-id"],)
-                )
-            c.execute(
-                "UPDATE warehouse SET storage_profile = ? WHERE warehouse_id = ?",
-                (json.dumps(profile), warehouse_id),
-            )
+            self._write_profile(c, warehouse_id, profile, creds, current.get("storage-secret-id"))
 
     def get_storage_credentials(
         self, warehouse_id: str, profile: dict | None = None
@@ -397,18 +422,17 @@ class CatalogStore:
 
         The reference surfaces Postgres' FK violation as 409
         WarehouseNotEmpty (postgres/warehouse.rs:269-299); sqlite FK
-        enforcement is connection-dependent, so check explicitly under
-        the same transaction. The attached storage secret dies with the
-        warehouse."""
-        self.get_warehouse(warehouse_id)  # 404 before 409, like the reference
+        enforcement is connection-dependent, so check explicitly. The
+        attached storage secret dies with the warehouse."""
         with self._txn() as c:
+            # 404 before 409, like the reference
+            profile = self.get_warehouse(warehouse_id).get("storage_profile") or {}
             n_ns = c.execute(
                 "SELECT count(*) FROM namespace WHERE warehouse_id = ?",
                 (warehouse_id,),
             ).fetchone()[0]
             if n_ns:
                 raise WarehouseNotEmptyError("Warehouse is not empty")
-            profile = self.get_warehouse(warehouse_id).get("storage_profile") or {}
             secret_id = profile.get("storage-secret-id")
             if secret_id:
                 c.execute("DELETE FROM secret WHERE secret_id = ?", (secret_id,))
@@ -428,36 +452,26 @@ class CatalogStore:
             if unknown:
                 raise ValidationError(f"unknown credential keys {sorted(unknown)}")
         with self._txn() as c:
-            # read under the write transaction: a concurrent rotation
-            # must see this one's secret, not delete the same old one
             profile = self.get_warehouse(warehouse_id).get("storage_profile")
             if profile is None:
                 raise ValidationError(
                     "warehouse has no storage profile to attach a credential to"
                 )
             old = profile.pop("storage-secret-id", None)
-            if credentials:
-                secret_id = new_uuid()
-                c.execute(
-                    "INSERT INTO secret (secret_id, encrypted) VALUES (?,?)",
-                    (secret_id, self._cipher.encrypt(credentials)),
-                )
-                profile["storage-secret-id"] = secret_id
-            if old:
-                c.execute("DELETE FROM secret WHERE secret_id = ?", (old,))
-            c.execute(
-                "UPDATE warehouse SET storage_profile = ? WHERE warehouse_id = ?",
-                (json.dumps(profile), warehouse_id),
-            )
+            self._write_profile(c, warehouse_id, profile, credentials, old)
 
     # -------------------------------------------------------- namespaces
 
-    def _namespace_row(self, warehouse_id: str, namespace: list[str]):
-        return self._conn.execute(
+    def _namespace_row(self, warehouse_id: str, namespace: list[str]) -> tuple:
+        """(namespace_id, name_json, properties) of the namespace."""
+        row = self._conn.execute(
             "SELECT namespace_id, name_json, properties FROM namespace"
             " WHERE warehouse_id = ? AND name_key = ?",
             (warehouse_id, _ns_key(namespace)),
         ).fetchone()
+        if row is None:
+            raise NamespaceNotFoundError(f"namespace {namespace} not found")
+        return row
 
     def create_namespace(
         self, warehouse_id: str, namespace: list[str], properties: dict | None = None
@@ -475,10 +489,10 @@ class CatalogStore:
         if "location" in properties:
             # catalog-managed property (catalog/namespace.rs:16,252-276)
             raise ValidationError("namespace 'location' property is catalog-managed")
-        self.get_warehouse(warehouse_id)
         nid = new_uuid()
         try:
             with self._txn() as c:
+                self.get_warehouse(warehouse_id)
                 c.execute(
                     "INSERT INTO namespace (namespace_id, warehouse_id, name_key, name_json,"
                     " properties) VALUES (?,?,?,?,?)",
@@ -531,29 +545,20 @@ class CatalogStore:
 
     def load_namespace(self, warehouse_id: str, namespace: list[str]) -> dict:
         row = self._namespace_row(warehouse_id, namespace)
-        if row is None:
-            raise NamespaceNotFoundError(f"namespace {namespace} not found")
         return {"namespace": json.loads(row[1]), "properties": json.loads(row[2])}
-
-    def namespace_exists(self, warehouse_id: str, namespace: list[str]) -> bool:
-        return self._namespace_row(warehouse_id, namespace) is not None
 
     def drop_namespace(self, warehouse_id: str, namespace: list[str]) -> None:
         if namespace and namespace[0].lower() in RESERVED_NAMESPACES:
             raise ValidationError(f"namespace {namespace[0]!r} is reserved")
-        row = self._namespace_row(warehouse_id, namespace)
-        if row is None:
-            raise NamespaceNotFoundError(f"namespace {namespace} not found")
         with self._txn() as c:
-            # counted under the same transaction as the DELETE, so a
-            # table created in between cannot trip the foreign key
+            nid = self._namespace_row(warehouse_id, namespace)[0]
             n_tables = c.execute(
-                "SELECT count(*) FROM tbl WHERE namespace_id = ?", (row[0],)
+                "SELECT count(*) FROM tbl WHERE namespace_id = ?", (nid,)
             ).fetchone()[0]
             if n_tables:
                 # FK violation → NamespaceNotEmpty (postgres/namespace.rs:273-283)
                 raise NamespaceNotEmptyError(f"namespace {namespace} is not empty")
-            c.execute("DELETE FROM namespace WHERE namespace_id = ?", (row[0],))
+            c.execute("DELETE FROM namespace WHERE namespace_id = ?", (nid,))
 
     def update_namespace_properties(
         self, warehouse_id: str, namespace: list[str], removals: list[str], updates: dict
@@ -561,11 +566,7 @@ class CatalogStore:
         if "location" in updates:
             raise ValidationError("namespace 'location' property is catalog-managed")
         with self._txn() as c:
-            # read under the write transaction, so a concurrent update
-            # is built on, not overwritten
             row = self._namespace_row(warehouse_id, namespace)
-            if row is None:
-                raise NamespaceNotFoundError(f"namespace {namespace} not found")
             props = json.loads(row[2])
             missing = [k for k in removals if k not in props]
             removed = [k for k in removals if k in props]
@@ -605,34 +606,32 @@ class CatalogStore:
             # client-provided location rejected (catalog/tables.rs:84,965-975)
             raise ValidationError("client-provided table location is not supported")
         self._validate_table_properties(properties or {})
-        wh = self.get_warehouse(warehouse_id)
-        if wh["status"] != "active":
-            raise ConflictError(f"warehouse {warehouse_id} is not active")
-        ns_row = self._namespace_row(warehouse_id, namespace)
-        if ns_row is None:
-            raise NamespaceNotFoundError(f"namespace {namespace} not found")
         table_id = new_uuid()
-        table_location = f"{wh['base_location'].rstrip('/')}/{ns_row[0]}/{table_id}"
-        builder = TableMetadataBuilder()
-        builder.apply({"action": "set-location", "location": table_location})
-        builder.apply({"action": "add-schema", "schema": schema})
-        builder.apply({"action": "set-current-schema", "schema-id": -1})
-        if partition_spec is not None:
-            builder.apply({"action": "add-spec", "spec": partition_spec})
-            builder.apply({"action": "set-default-spec", "spec-id": -1})
-        if write_order is not None:
-            builder.apply({"action": "add-sort-order", "sort-order": write_order})
-            builder.apply({"action": "set-default-sort-order", "sort-order-id": -1})
-        if properties:
-            builder.apply({"action": "set-properties", "updates": properties})
-        metadata = builder.build()
-        metadata_json = _encode_metadata(metadata)
         metadata_location = None
         with self._txn() as c:
+            wh = self.get_warehouse(warehouse_id)
+            if wh["status"] != "active":
+                raise ConflictError(f"warehouse {warehouse_id} is not active")
+            nid = self._namespace_row(warehouse_id, namespace)[0]
+            table_location = f"{wh['base_location'].rstrip('/')}/{nid}/{table_id}"
+            builder = TableMetadataBuilder()
+            builder.apply({"action": "set-location", "location": table_location})
+            builder.apply({"action": "add-schema", "schema": schema})
+            builder.apply({"action": "set-current-schema", "schema-id": -1})
+            if partition_spec is not None:
+                builder.apply({"action": "add-spec", "spec": partition_spec})
+                builder.apply({"action": "set-default-spec", "spec-id": -1})
+            if write_order is not None:
+                builder.apply({"action": "add-sort-order", "sort-order": write_order})
+                builder.apply({"action": "set-default-sort-order", "sort-order-id": -1})
+            if properties:
+                builder.apply({"action": "set-properties", "updates": properties})
+            metadata = builder.build()
+            metadata_json = _encode_metadata(metadata)
             existing = c.execute(
                 "SELECT table_id, metadata_location FROM tbl"
                 " WHERE namespace_id = ? AND name = ?",
-                (ns_row[0], name),
+                (nid, name),
             ).fetchone()
             if existing is not None:
                 if existing[1] is not None:
@@ -650,14 +649,7 @@ class CatalogStore:
             c.execute(
                 "INSERT INTO tbl (table_id, namespace_id, name, metadata, metadata_location,"
                 " table_location) VALUES (?,?,?,?,?,?)",
-                (
-                    table_id,
-                    ns_row[0],
-                    name,
-                    metadata_json,
-                    metadata_location,
-                    table_location,
-                ),
+                (table_id, nid, name, metadata_json, metadata_location, table_location),
             )
         if not stage_create:
             # fire-and-forget after commit (catalog/tables.rs:190-205)
@@ -687,13 +679,11 @@ class CatalogStore:
         page_token: str | None = None,
         page_size: int | None = None,
     ) -> tuple[list[str], str | None]:
-        ns_row = self._namespace_row(warehouse_id, namespace)
-        if ns_row is None:
-            raise NamespaceNotFoundError(f"namespace {namespace} not found")
+        nid = self._namespace_row(warehouse_id, namespace)[0]
         rows = self._conn.execute(
             # staged tables are invisible to list (postgres/table.rs:330)
             "SELECT name FROM tbl WHERE namespace_id = ? AND metadata_location IS NOT NULL",
-            (ns_row[0],),
+            (nid,),
         ).fetchall()
         return self._paginate(sorted(r[0] for r in rows), page_token, page_size)
 
@@ -740,16 +730,17 @@ class CatalogStore:
         # table at all) resolves nothing (postgres/table.rs tests)
         raise NotFoundError(f"no table found for location {location!r}")
 
-    def table_exists(self, warehouse_id: str, namespace: list[str], name: str) -> bool:
-        row = self._table_row(warehouse_id, namespace, name)
-        return row is not None and row[2] is not None
-
-    def drop_table(self, warehouse_id: str, namespace: list[str], name: str) -> None:
+    def _table_id(self, warehouse_id: str, namespace: list[str], name: str) -> str:
+        """The id of the table, committed or staged."""
         row = self._table_row(warehouse_id, namespace, name)
         if row is None:
             raise TableNotFoundError(f"table {namespace}.{name} not found")
+        return row[0]
+
+    def drop_table(self, warehouse_id: str, namespace: list[str], name: str) -> None:
         with self._txn() as c:
-            c.execute("DELETE FROM tbl WHERE table_id = ?", (row[0],))
+            table_id = self._table_id(warehouse_id, namespace, name)
+            c.execute("DELETE FROM tbl WHERE table_id = ?", (table_id,))
 
     def rename_table(
         self,
@@ -759,17 +750,13 @@ class CatalogStore:
         dst_ns: list[str],
         dst_name: str,
     ) -> None:
-        row = self._table_row(warehouse_id, src_ns, src_name)
-        if row is None:
-            raise TableNotFoundError(f"table {src_ns}.{src_name} not found")
-        dst_ns_row = self._namespace_row(warehouse_id, dst_ns)
-        if dst_ns_row is None:
-            raise NamespaceNotFoundError(f"namespace {dst_ns} not found")
         try:
             with self._txn() as c:
+                table_id = self._table_id(warehouse_id, src_ns, src_name)
+                dst_nid = self._namespace_row(warehouse_id, dst_ns)[0]
                 c.execute(
                     "UPDATE tbl SET namespace_id = ?, name = ? WHERE table_id = ?",
-                    (dst_ns_row[0], dst_name, row[0]),
+                    (dst_nid, dst_name, table_id),
                 )
         except sqlite3.IntegrityError as e:
             raise TableAlreadyExistsError(

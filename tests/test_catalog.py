@@ -11,6 +11,9 @@ in the reference's unit/integration tests (not of the code):
 from __future__ import annotations
 
 import json
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
 
@@ -28,7 +31,9 @@ from iceberg_rest_server_spark.catalog.client import CatalogHTTPError, RestCatal
 from iceberg_rest_server_spark.catalog.server import ServerThread
 from iceberg_rest_server_spark.catalog.store import (
     NamespaceNotEmptyError,
+    NamespaceNotFoundError,
     TableAlreadyExistsError,
+    TableNotFoundError,
 )
 
 SCHEMA = {
@@ -304,7 +309,118 @@ def test_drop_namespace_race_with_create_table_is_409(store, monkeypatch):
     _race_before_txn(monkeypatch, s, lambda: s.create_table(wid, ["ns1"], "t", SCHEMA))
     with pytest.raises(NamespaceNotEmptyError):
         s.drop_namespace(wid, ["ns1"])
-    assert s.table_exists(wid, ["ns1"], "t")
+    assert s.list_tables(wid, ["ns1"])[0] == ["t"]
+
+
+def _race_catalog(root):
+    """Warehouse ``wh`` with namespaces ns1 (holding table t) and ns2
+    (empty), and an empty warehouse ``empty``."""
+    s = CatalogStore()
+    wids = {name: s.create_warehouse("p", name, f"file://{root}/{name}")
+            for name in ("wh", "empty")}
+    s.create_namespace(wids["wh"], ["ns1"])
+    s.create_namespace(wids["wh"], ["ns2"])
+    s.create_table(wids["wh"], ["ns1"], "t", SCHEMA)
+    return s, wids
+
+
+def _catalog_state(s, root) -> tuple:
+    return (
+        sorted(s._conn.execute("SELECT name, status FROM warehouse")),
+        sorted(s._conn.execute("SELECT name_key FROM namespace")),
+        sorted(s._conn.execute(
+            "SELECT n.name_key, t.name FROM tbl t JOIN namespace n USING (namespace_id)")),
+        len(list(root.rglob("*.metadata.json"))),
+    )
+
+
+@pytest.mark.parametrize(
+    "op,race,error",
+    [
+        pytest.param(
+            lambda s, w: s.create_namespace(w["empty"], ["ns"]),
+            lambda s, w: s.delete_warehouse(w["empty"]),
+            NotFoundError,
+            id="create_namespace-delete_warehouse",
+        ),
+        pytest.param(
+            lambda s, w: s.create_table(w["wh"], ["ns2"], "t", SCHEMA),
+            lambda s, w: s.drop_namespace(w["wh"], ["ns2"]),
+            NamespaceNotFoundError,
+            id="create_table-drop_namespace",
+        ),
+        pytest.param(
+            lambda s, w: s.create_table(w["wh"], ["ns1"], "t2", SCHEMA),
+            lambda s, w: s.set_warehouse_status(w["wh"], "inactive"),
+            ConflictError,
+            id="create_table-deactivate_warehouse",
+        ),
+        pytest.param(
+            lambda s, w: s.rename_table(w["wh"], ["ns1"], "t", ["ns2"], "u"),
+            lambda s, w: s.drop_namespace(w["wh"], ["ns2"]),
+            NamespaceNotFoundError,
+            id="rename_table-drop_destination_namespace",
+        ),
+        pytest.param(
+            lambda s, w: s.rename_table(w["wh"], ["ns1"], "t", ["ns1"], "u"),
+            lambda s, w: s.drop_table(w["wh"], ["ns1"], "t"),
+            TableNotFoundError,
+            id="rename_table-drop_table",
+        ),
+        pytest.param(
+            lambda s, w: s.drop_table(w["wh"], ["ns1"], "t"),
+            lambda s, w: s.rename_table(w["wh"], ["ns1"], "t", ["ns1"], "u"),
+            TableNotFoundError,
+            id="drop_table-rename_table",
+        ),
+        pytest.param(
+            lambda s, w: s.drop_table(w["wh"], ["ns1"], "t"),
+            lambda s, w: s.drop_table(w["wh"], ["ns1"], "t"),
+            TableNotFoundError,
+            id="drop_table-drop_table",
+        ),
+        pytest.param(
+            lambda s, w: s.drop_namespace(w["wh"], ["ns2"]),
+            lambda s, w: s.drop_namespace(w["wh"], ["ns2"]),
+            NamespaceNotFoundError,
+            id="drop_namespace-drop_namespace",
+        ),
+    ],
+)
+def test_write_sees_a_racing_call_as_finished_before_it(tmp_path, monkeypatch, op, race, error):
+    """Every write resolves its names and checks its preconditions inside
+    the transaction that writes, so a call that lands just before that
+    transaction gives the outcome (error, rows and metadata files) it
+    gives when it finishes before the operation starts."""
+    s, wids = _race_catalog(tmp_path / "serial")
+    race(s, wids)
+    with pytest.raises(error) as serial:
+        op(s, wids)
+    expected = _catalog_state(s, tmp_path / "serial")
+
+    s, wids = _race_catalog(tmp_path / "raced")
+    _race_before_txn(monkeypatch, s, lambda: race(s, wids))
+    with pytest.raises(error) as raced:
+        op(s, wids)
+    assert type(raced.value) is type(serial.value)
+    assert _catalog_state(s, tmp_path / "raced") == expected
+
+
+def test_catalog_server_and_client_import_no_spark():
+    """The catalog server and client are stdlib-only: importing them
+    loads neither pyspark nor numpy."""
+    code = (
+        "import sys\n"
+        "import iceberg_rest_server_spark.catalog.server\n"
+        "import iceberg_rest_server_spark.catalog.client\n"
+        "print(sorted(m for m in ('pyspark', 'numpy') if m in sys.modules))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True, text=True, check=True,
+        cwd=Path(__file__).resolve().parents[1],
+    )
+    assert out.stdout.strip() == "[]"
 
 
 def test_concurrent_namespace_property_updates_are_not_lost(store, monkeypatch):
@@ -367,7 +483,6 @@ def test_staged_table_invisible_and_overwritable(store):
     assert s.list_tables(wid, ["ns1"])[0] == []          # staged filtered from list
     with pytest.raises(NotFoundError):
         s.load_table(wid, ["ns1"], "t")               # staged 404 on load
-    assert not s.table_exists(wid, ["ns1"], "t")
     # a second stage-create over a staged row is allowed…
     s.create_table(wid, ["ns1"], "t", SCHEMA, stage_create=True)
     # …and a real create over a staged row is allowed

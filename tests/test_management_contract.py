@@ -343,6 +343,28 @@ def test_storage_update_without_credential_detaches_secret(server):
     assert server.store._conn.execute("SELECT count(*) FROM secret").fetchone()[0] == 0
 
 
+def test_rejected_profile_creates_no_warehouse(server):
+    """The warehouse row, its secret and its storage profile are written
+    in one transaction: a create whose profile is rejected leaves no
+    warehouse behind, so the corrected retry is created, not a 409."""
+    body = {
+        "warehouse-name": "retry",
+        "project-id": PROJECT,
+        "storage-profile": {k: v for k, v in PROFILE.items() if k != "region"},
+        "storage-credential": CREDENTIAL,
+    }
+    status, err = _raw(server, "POST", "/management/v1/warehouse", body)
+    assert status == 400, err
+    _, listing = _req(server, "GET", "/management/v1/warehouse", query=f"project-id={PROJECT}")
+    assert listing["warehouses"] == []
+    assert server.store._conn.execute("SELECT count(*) FROM secret").fetchone()[0] == 0
+    status, payload = _req(
+        server, "POST", "/management/v1/warehouse", {**body, "storage-profile": PROFILE}
+    )
+    assert status == 201
+    assert server.store.get_storage_credentials(payload["warehouse-id"]) != {}
+
+
 @pytest.mark.parametrize(
     "method,path,body",
     [

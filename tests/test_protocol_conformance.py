@@ -170,6 +170,24 @@ def test_create_namespace_shape(server):
         ),
         ("GET", "/namespaces?pageSize=abc", None, 400),
         ("GET", "/namespaces/ns/tables?pageToken=abc", None, 400),
+        # identifier members of the wrong JSON type are 400s too
+        (
+            "POST",
+            "/tables/rename",
+            json.dumps({"source": 5, "destination": {"namespace": ["ns"], "name": "u"}}),
+            400,
+        ),
+        (
+            "POST",
+            "/transactions/commit",
+            json.dumps(
+                {"table-changes": [{"identifier": 1, "requirements": [], "updates": []}]}
+            ),
+            400,
+        ),
+        ("POST", "/namespaces", json.dumps({"namespace": "abc"}), 400),
+        ("POST", "/namespaces", json.dumps({"namespace": "x"}), 400),
+        ("POST", "/namespaces/ns/tables", json.dumps({"name": 5, "schema": SCHEMA}), 400),
     ],
 )
 def test_client_faults_are_4xx_envelopes(server, method, path, body, code):
