@@ -15,8 +15,9 @@ path template) in the OpenAPI document's template spelling; an
 unlisted pair is a 404. Every request body is read by one reader
 (`_read_body`), as serde extraction reads it in the reference: a body
 that is not a JSON object is a 400 before the handler runs, and a
-required member it lacks, or an identifier member of the wrong type
-(`_member`), is a 400 where the handler reads it.
+required member it lacks, or a member of the wrong JSON type
+(`_member` for identifiers, `_typed` for the rest), is a 400 where the
+handler reads it.
 
 Errors use the reference's envelope
 {"error": {"message", "type", "code"}} (rest/error.rs:22-70).
@@ -35,6 +36,7 @@ import threading
 import urllib.parse
 from collections.abc import Callable
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from typing import get_args, get_origin
 
 from .auth import TokenVerifier, UnauthorizedError
 from .io import GZIP_LEVEL
@@ -124,6 +126,29 @@ def _member(body: dict, key: str):
         ok = isinstance(value, list) and all(isinstance(p, str) and p for p in value)
     else:
         ok = isinstance(value, str)
+    if not ok:
+        raise ValidationError(f"{key!r} has the wrong type: {value!r}")
+    return value
+
+
+_REQUIRED = object()
+
+
+def _typed(body: dict, key: str, kind, default=_REQUIRED):
+    """Member ``key`` of a request body, checked to be of the JSON type
+    ``kind`` names: ``dict`` an object, ``list[dict]`` a list of objects,
+    ``list[str]`` a list of strings. A member left out or null is
+    ``default`` when one is given. A wrong type is a 400, as serde's
+    typed extraction rejects it in the reference."""
+    if default is _REQUIRED:
+        value = body[key]
+    elif (value := body.get(key)) is None:
+        return default
+    if get_origin(kind) is list:
+        (item,) = get_args(kind)
+        ok = isinstance(value, list) and all(isinstance(v, item) for v in value)
+    else:
+        ok = isinstance(value, kind)
     if not ok:
         raise ValidationError(f"{key!r} has the wrong type: {value!r}")
     return value
@@ -313,12 +338,13 @@ class CatalogHandler(BaseHTTPRequestHandler):
 
     # ------------------------------------------------------------- signing
 
-    def _table_config(self, prefix: str) -> dict:
+    @staticmethod
+    def _table_config(profile: dict | None) -> dict:
         """Per-table config vended on load_table (storage/s3.rs:313-377
-        generate_table_config): region keys, endpoint, path-style flag,
-        and remote-signing enablement — what a RESTCatalog client needs
-        to route its IO through the signer."""
-        profile = self.store.get_warehouse(prefix).get("storage_profile")
+        generate_table_config) from the warehouse's storage ``profile``:
+        region keys, endpoint, path-style flag, and remote-signing
+        enablement — what a RESTCatalog client needs to route its IO
+        through the signer."""
         if not profile:
             return {}
         region = profile.get("region", "")
@@ -334,10 +360,10 @@ class CatalogHandler(BaseHTTPRequestHandler):
             config["s3.endpoint"] = profile["endpoint"]
         return config
 
-    def _sign_profile(self, prefix: str) -> dict:
-        """The warehouse's storage profile, loaded once per sign request;
-        a warehouse without one cannot sign (400)."""
-        profile = self.store.get_warehouse(prefix).get("storage_profile")
+    @staticmethod
+    def _sign_profile(profile: dict | None) -> dict:
+        """The warehouse's storage ``profile``, loaded once per sign
+        request; a warehouse without one cannot sign (400)."""
         if not profile:
             raise ValidationError("warehouse has no storage profile")
         return profile
@@ -428,7 +454,7 @@ class CatalogHandler(BaseHTTPRequestHandler):
     def _create_namespace(self, prefix):
         body = self.body
         return 200, self.store.create_namespace(
-            prefix, _member(body, "namespace"), body.get("properties")
+            prefix, _member(body, "namespace"), _typed(body, "properties", dict, None)
         )
 
     def _load_namespace(self, prefix, ns):
@@ -445,7 +471,7 @@ class CatalogHandler(BaseHTTPRequestHandler):
     def _update_properties(self, prefix, ns):
         body = self.body
         return 200, self.store.update_namespace_properties(
-            prefix, ns, body.get("removals", []), body.get("updates", {})
+            prefix, ns, _typed(body, "removals", list[str], []), _typed(body, "updates", dict, {})
         )
 
     def _list_tables(self, prefix, ns):
@@ -461,10 +487,10 @@ class CatalogHandler(BaseHTTPRequestHandler):
             prefix,
             ns,
             _member(body, "name"),
-            body["schema"],
-            partition_spec=body.get("partition-spec"),
-            write_order=body.get("write-order"),
-            properties=body.get("properties"),
+            _typed(body, "schema", dict),
+            partition_spec=_typed(body, "partition-spec", dict, None),
+            write_order=_typed(body, "write-order", dict, None),
+            properties=_typed(body, "properties", dict, None),
             stage_create=bool(body.get("stage-create")),
             location=body.get("location"),
         )
@@ -473,7 +499,8 @@ class CatalogHandler(BaseHTTPRequestHandler):
     def _load_table(self, prefix, ns, table):
         out = self.store.load_table(prefix, ns, table)
         return 200, _table_body(
-            out["metadata"], out["metadata-location"], config=self._table_config(prefix)
+            out["metadata"], out["metadata-location"],
+            config=self._table_config(out["storage-profile"]),
         )
 
     def _table_exists(self, prefix, ns, table):
@@ -489,8 +516,8 @@ class CatalogHandler(BaseHTTPRequestHandler):
         return {
             "namespace": ns,
             "name": name,
-            "requirements": change.get("requirements", []),
-            "updates": change.get("updates", []),
+            "requirements": _typed(change, "requirements", list[dict], []),
+            "updates": _typed(change, "updates", list[dict], []),
         }
 
     def _commit_table(self, prefix, ns, table):
@@ -500,7 +527,8 @@ class CatalogHandler(BaseHTTPRequestHandler):
 
     def _commit_transaction(self, prefix):
         changes = [
-            self._table_change(*_member(t, "identifier"), t) for t in self.body["table-changes"]
+            self._table_change(*_member(t, "identifier"), t)
+            for t in _typed(self.body, "table-changes", list[dict])
         ]
         self.store.commit_transaction(prefix, changes)
         return 204, None
@@ -520,14 +548,16 @@ class CatalogHandler(BaseHTTPRequestHandler):
 
     def _sign_table(self, prefix, ns, table):
         # POST .../tables/{table}/v1/aws/s3/sign (s3_signer.rs:38-173)
-        location = self.store.load_table(prefix, ns, table)["table-location"]
-        return self._sign_route(prefix, location, self._sign_profile(prefix))
+        out = self.store.load_table(prefix, ns, table)
+        return self._sign_route(
+            prefix, out["table-location"], self._sign_profile(out["storage-profile"])
+        )
 
     def _sign(self, prefix):
         # prefix-only sign route — the one Spark actually calls when
         # s3.signer.uri is warehouse-scoped: resolve the table from the
         # request URI by location prefix (catalog/s3_signer.rs:55-90)
-        profile = self._sign_profile(prefix)
+        profile = self._sign_profile(self.store.get_warehouse(prefix)["storage_profile"])
         try:
             s3loc = parse_s3_uri(self.body["uri"], profile.get("endpoint-host"))
             key = urllib.parse.unquote(s3loc.key)

@@ -13,9 +13,32 @@ depends on (warehouse present and active, namespace present, table
 present or staged), inside the one ``BEGIN IMMEDIATE`` transaction that
 does the write. A call that races it therefore lands wholly before or
 wholly after it. Each level has one lookup that raises its 404:
-`get_warehouse`, `_namespace_row`, `_table_id`. Reads do not take the
-lock and still share the writer's connection, so a reader can see a
-commit in progress (ROADMAP item 1).
+`get_warehouse`, `_namespace_row`, `_table_id`.
+
+Two connections to one database in WAL journal mode, at SQLite's
+default ``synchronous=FULL`` (every acknowledged commit is on disk):
+
+- the writer, ``_conn``, which sets up the schema and is then used
+  only inside `_txn`, under ``_lock``;
+- the reader, ``_reader``, behind ``_read_lock``, which serves every
+  read made outside a write transaction (loads, lists, the signer's
+  lookups).
+
+A WAL reader sees the last committed state and never waits for the
+writer, so a load neither queues behind a commit's fsync nor sees a
+commit in progress: of a two-table commit it sees both rows old or both
+new, and of one that rolls back nothing, as the reference's
+read-committed Postgres reads do. Each reader statement is fetched to
+completion under ``_read_lock``, so no read transaction outlives its
+call to pin an old snapshot and hold up WAL checkpoints. The lookups a
+write transaction makes take that transaction's connection ``c`` and
+run on the writer: its checks must see its own uncommitted writes and
+hold the write lock from check to write, which a read on the reader
+would not (``c`` None reads on the reader).
+
+A store built without a path keeps its database in a private temporary
+file, removed when the store is collected: a second connection cannot
+share a private ``:memory:`` database.
 """
 
 from __future__ import annotations
@@ -23,9 +46,10 @@ from __future__ import annotations
 import json
 import os
 import sqlite3
+import tempfile
 import threading
+import weakref
 from contextlib import contextmanager
-from typing import Any
 
 from .events import publish_event
 from .io import metadata_file_path, write_metadata_file
@@ -146,15 +170,34 @@ def _encode_metadata(metadata: dict) -> str:
     return json.dumps(_scrub_table_metadata(metadata))
 
 
+def _close_and_remove(path: str, *conns: sqlite3.Connection) -> None:
+    for conn in conns:
+        conn.close()
+    for suffix in ("", "-wal", "-shm"):
+        try:
+            os.remove(path + suffix)
+        except FileNotFoundError:
+            pass
+
+
 class CatalogStore:
-    def __init__(self, path: str = ":memory:", encryption_key: str | None = None):
-        # one shared connection; a lock serializes writers (local analogue
-        # of the reference's 5-connection write pool, config.rs:99)
+    def __init__(self, path: str | None = None, encryption_key: str | None = None):
+        private = path is None
+        if private:
+            fd, path = tempfile.mkstemp(prefix="catalog-", suffix=".sqlite")
+            os.close(fd)
+        # the writer; the lock serializes writers (local analogue of the
+        # reference's 5-connection write pool, config.rs:99)
         self._conn = sqlite3.connect(path, check_same_thread=False)
+        self._conn.execute("PRAGMA journal_mode = WAL")
         self._conn.execute("PRAGMA foreign_keys = ON")
         self._lock = threading.RLock()
-        self._cipher = SecretCipher(encryption_key)
         self._init_schema()
+        self._reader = sqlite3.connect(path, check_same_thread=False)
+        self._read_lock = threading.Lock()
+        self._cipher = SecretCipher(encryption_key)
+        if private:
+            weakref.finalize(self, _close_and_remove, path, self._conn, self._reader)
 
     def _init_schema(self) -> None:
         with self._conn:
@@ -207,6 +250,15 @@ class CatalogStore:
                 raise
             else:
                 self._conn.commit()
+
+    def _rows(self, c: sqlite3.Connection | None, sql: str, params: tuple = ()) -> list:
+        """Every row of one statement: on ``c``, the connection of the
+        write transaction the caller is in, or, when ``c`` is None, on the
+        reader, fetched to completion under its lock."""
+        if c is not None:
+            return c.execute(sql, params).fetchall()
+        with self._read_lock:
+            return self._reader.execute(sql, params).fetchall()
 
     # -------------------------------------------------------- warehouses
 
@@ -267,22 +319,22 @@ class CatalogStore:
             raise ConflictError(f"warehouse {name!r} already exists in project") from e
         return wid
 
-    def get_warehouse(self, warehouse_id: str) -> dict:
-        row = self._conn.execute(
-            "SELECT warehouse_id, project_id, name, base_location, status, storage_profile"
-            " FROM warehouse WHERE warehouse_id = ?",
-            (warehouse_id,),
-        ).fetchone()
-        if row is None:
-            raise NotFoundError(f"warehouse {warehouse_id} not found")
-        out = dict(
-            zip(
-                ("warehouse_id", "project_id", "name", "base_location", "status", "storage_profile"),
-                row,
-            )
-        )
+    _WAREHOUSE_COLUMNS = (
+        "warehouse_id", "project_id", "name", "base_location", "status", "storage_profile"
+    )
+    _SELECT_WAREHOUSE = f"SELECT {', '.join(_WAREHOUSE_COLUMNS)} FROM warehouse"
+
+    @classmethod
+    def _warehouse(cls, row: tuple) -> dict:
+        out = dict(zip(cls._WAREHOUSE_COLUMNS, row))
         out["storage_profile"] = json.loads(out["storage_profile"]) if out["storage_profile"] else None
         return out
+
+    def get_warehouse(self, warehouse_id: str, c: sqlite3.Connection | None = None) -> dict:
+        rows = self._rows(c, self._SELECT_WAREHOUSE + " WHERE warehouse_id = ?", (warehouse_id,))
+        if not rows:
+            raise NotFoundError(f"warehouse {warehouse_id} not found")
+        return self._warehouse(rows[0])
 
     # credential keys never stored in plaintext (postgres/secrets.rs:99-103)
     CREDENTIAL_KEYS = ("access-key-id", "secret-access-key", "session-token")
@@ -328,7 +380,7 @@ class CatalogStore:
         credentials.')."""
         profile, creds = self._split_profile(profile)
         with self._txn() as c:
-            current = self.get_warehouse(warehouse_id).get("storage_profile") or {}
+            current = self.get_warehouse(warehouse_id, c).get("storage_profile") or {}
             for key in ("bucket", "region", "key-prefix"):
                 if key in current and current.get(key) != profile.get(key):
                     raise ValidationError(f"storage profile {key!r} is immutable")
@@ -346,22 +398,20 @@ class CatalogStore:
         secret_id = profile.get("storage-secret-id")
         if not secret_id:
             return {}
-        row = self._conn.execute(
-            "SELECT encrypted FROM secret WHERE secret_id = ?", (secret_id,)
-        ).fetchone()
-        if row is None:
+        rows = self._rows(None, "SELECT encrypted FROM secret WHERE secret_id = ?", (secret_id,))
+        if not rows:
             raise NotFoundError(f"secret {secret_id} not found")
-        return self._cipher.decrypt(row[0])
+        return self._cipher.decrypt(rows[0][0])
 
     def get_warehouse_by_name(self, project_id: str, name: str) -> dict:
-        row = self._conn.execute(
-            "SELECT warehouse_id FROM warehouse"
-            " WHERE project_id = ? AND name = ? AND status = 'active'",
+        rows = self._rows(
+            None,
+            self._SELECT_WAREHOUSE + " WHERE project_id = ? AND name = ? AND status = 'active'",
             (project_id, name),
-        ).fetchone()
-        if row is None:
+        )
+        if not rows:
             raise NotFoundError(f"warehouse {name!r} not found in project {project_id}")
-        return self.get_warehouse(row[0])
+        return self._warehouse(rows[0])
 
     def list_projects(self) -> list[str]:
         """Distinct project ids across warehouses (management/v1/
@@ -369,9 +419,7 @@ class CatalogStore:
         warehouse rows — there is no separate project table)."""
         return [
             r[0]
-            for r in self._conn.execute(
-                "SELECT DISTINCT project_id FROM warehouse ORDER BY project_id"
-            )
+            for r in self._rows(None, "SELECT DISTINCT project_id FROM warehouse ORDER BY project_id")
         ]
 
     def list_warehouses(
@@ -387,13 +435,10 @@ class CatalogStore:
             if s not in ("active", "inactive"):  # service/mod.rs:186-191
                 raise ValidationError(f"invalid warehouse status {s!r}")
         q = (
-            "SELECT warehouse_id FROM warehouse WHERE project_id = ?"
+            self._SELECT_WAREHOUSE + " WHERE project_id = ?"
             f" AND status IN ({','.join('?' * len(statuses))})"
         )
-        return [
-            self.get_warehouse(r[0])
-            for r in self._conn.execute(q, (project_id, *statuses))
-        ]
+        return [self._warehouse(r) for r in self._rows(None, q, (project_id, *statuses))]
 
     def set_warehouse_status(self, warehouse_id: str, status: str) -> None:
         if status not in ("active", "inactive"):  # service/mod.rs:186-191
@@ -426,7 +471,7 @@ class CatalogStore:
         attached storage secret dies with the warehouse."""
         with self._txn() as c:
             # 404 before 409, like the reference
-            profile = self.get_warehouse(warehouse_id).get("storage_profile") or {}
+            profile = self.get_warehouse(warehouse_id, c).get("storage_profile") or {}
             n_ns = c.execute(
                 "SELECT count(*) FROM namespace WHERE warehouse_id = ?",
                 (warehouse_id,),
@@ -452,7 +497,7 @@ class CatalogStore:
             if unknown:
                 raise ValidationError(f"unknown credential keys {sorted(unknown)}")
         with self._txn() as c:
-            profile = self.get_warehouse(warehouse_id).get("storage_profile")
+            profile = self.get_warehouse(warehouse_id, c).get("storage_profile")
             if profile is None:
                 raise ValidationError(
                     "warehouse has no storage profile to attach a credential to"
@@ -462,16 +507,17 @@ class CatalogStore:
 
     # -------------------------------------------------------- namespaces
 
-    def _namespace_row(self, warehouse_id: str, namespace: list[str]) -> tuple:
+    def _namespace_row(self, c, warehouse_id: str, namespace: list[str]) -> tuple:
         """(namespace_id, name_json, properties) of the namespace."""
-        row = self._conn.execute(
+        rows = self._rows(
+            c,
             "SELECT namespace_id, name_json, properties FROM namespace"
             " WHERE warehouse_id = ? AND name_key = ?",
             (warehouse_id, _ns_key(namespace)),
-        ).fetchone()
-        if row is None:
+        )
+        if not rows:
             raise NamespaceNotFoundError(f"namespace {namespace} not found")
-        return row
+        return rows[0]
 
     def create_namespace(
         self, warehouse_id: str, namespace: list[str], properties: dict | None = None
@@ -492,7 +538,7 @@ class CatalogStore:
         nid = new_uuid()
         try:
             with self._txn() as c:
-                self.get_warehouse(warehouse_id)
+                self.get_warehouse(warehouse_id, c)
                 c.execute(
                     "INSERT INTO namespace (namespace_id, warehouse_id, name_key, name_json,"
                     " properties) VALUES (?,?,?,?,?)",
@@ -530,9 +576,9 @@ class CatalogStore:
         page_token: str | None = None,
         page_size: int | None = None,
     ) -> tuple[list[list[str]], str | None]:
-        rows = self._conn.execute(
-            "SELECT name_json FROM namespace WHERE warehouse_id = ?", (warehouse_id,)
-        ).fetchall()
+        rows = self._rows(
+            None, "SELECT name_json FROM namespace WHERE warehouse_id = ?", (warehouse_id,)
+        )
         names = [json.loads(r[0]) for r in rows]
         if parent:
             names = [
@@ -544,14 +590,14 @@ class CatalogStore:
         return self._paginate(sorted(names), page_token, page_size)
 
     def load_namespace(self, warehouse_id: str, namespace: list[str]) -> dict:
-        row = self._namespace_row(warehouse_id, namespace)
+        row = self._namespace_row(None, warehouse_id, namespace)
         return {"namespace": json.loads(row[1]), "properties": json.loads(row[2])}
 
     def drop_namespace(self, warehouse_id: str, namespace: list[str]) -> None:
         if namespace and namespace[0].lower() in RESERVED_NAMESPACES:
             raise ValidationError(f"namespace {namespace[0]!r} is reserved")
         with self._txn() as c:
-            nid = self._namespace_row(warehouse_id, namespace)[0]
+            nid = self._namespace_row(c, warehouse_id, namespace)[0]
             n_tables = c.execute(
                 "SELECT count(*) FROM tbl WHERE namespace_id = ?", (nid,)
             ).fetchone()[0]
@@ -566,7 +612,7 @@ class CatalogStore:
         if "location" in updates:
             raise ValidationError("namespace 'location' property is catalog-managed")
         with self._txn() as c:
-            row = self._namespace_row(warehouse_id, namespace)
+            row = self._namespace_row(c, warehouse_id, namespace)
             props = json.loads(row[2])
             missing = [k for k in removals if k not in props]
             removed = [k for k in removals if k in props]
@@ -609,10 +655,10 @@ class CatalogStore:
         table_id = new_uuid()
         metadata_location = None
         with self._txn() as c:
-            wh = self.get_warehouse(warehouse_id)
+            wh = self.get_warehouse(warehouse_id, c)
             if wh["status"] != "active":
                 raise ConflictError(f"warehouse {warehouse_id} is not active")
-            nid = self._namespace_row(warehouse_id, namespace)[0]
+            nid = self._namespace_row(c, warehouse_id, namespace)[0]
             table_location = f"{wh['base_location'].rstrip('/')}/{nid}/{table_id}"
             builder = TableMetadataBuilder()
             builder.apply({"action": "set-location", "location": table_location})
@@ -663,14 +709,21 @@ class CatalogStore:
             "metadata-location": metadata_location,
         }
 
-    def _table_row(self, warehouse_id: str, namespace: list[str], name: str):
+    def _table_row(self, c, warehouse_id: str, namespace: list[str], name: str):
+        """(table_id, metadata, metadata_location, table_location,
+        warehouse storage_profile) of the table, committed or staged, or
+        None."""
         # one query, like the reference's lookups (postgres/table.rs:40-55)
-        return self._conn.execute(
-            "SELECT t.table_id, t.metadata, t.metadata_location, t.table_location"
+        rows = self._rows(
+            c,
+            "SELECT t.table_id, t.metadata, t.metadata_location, t.table_location,"
+            " w.storage_profile"
             " FROM tbl t JOIN namespace n ON n.namespace_id = t.namespace_id"
+            " JOIN warehouse w ON w.warehouse_id = n.warehouse_id"
             " WHERE n.warehouse_id = ? AND n.name_key = ? AND t.name = ?",
             (warehouse_id, _ns_key(namespace), name),
-        ).fetchone()
+        )
+        return rows[0] if rows else None
 
     def list_tables(
         self,
@@ -679,18 +732,20 @@ class CatalogStore:
         page_token: str | None = None,
         page_size: int | None = None,
     ) -> tuple[list[str], str | None]:
-        nid = self._namespace_row(warehouse_id, namespace)[0]
-        rows = self._conn.execute(
+        nid = self._namespace_row(None, warehouse_id, namespace)[0]
+        rows = self._rows(
+            None,
             # staged tables are invisible to list (postgres/table.rs:330)
             "SELECT name FROM tbl WHERE namespace_id = ? AND metadata_location IS NOT NULL",
             (nid,),
-        ).fetchall()
+        )
         return self._paginate(sorted(r[0] for r in rows), page_token, page_size)
 
     def load_table(self, warehouse_id: str, namespace: list[str], name: str) -> dict:
-        """The table's row; ``metadata`` is the stored wire text of its
+        """The table's row, read in one statement with its warehouse's
+        storage profile; ``metadata`` is the stored wire text of its
         current version, unparsed."""
-        row = self._table_row(warehouse_id, namespace, name)
+        row = self._table_row(None, warehouse_id, namespace, name)
         if row is None or row[2] is None:
             # staged tables 404 on load (postgres/table.rs:285)
             raise TableNotFoundError(f"table {namespace}.{name} not found")
@@ -699,25 +754,34 @@ class CatalogStore:
             "metadata": row[1],
             "metadata-location": row[2],
             "table-location": row[3],
+            "storage-profile": json.loads(row[4]) if row[4] else None,
         }
 
     def resolve_table_by_location(self, warehouse_id: str, location: str) -> dict:
         """Reverse lookup: the table whose location is a path-prefix of
-        ``location`` (postgres/table.rs:430-506: ``$2 LIKE table_location
-        || '%'`` on an active warehouse; served by idx_tbl_loc). The
-        boundary is re-checked in Python so a request under
-        ``.../tbl-id-evil/`` never resolves to table ``tbl-id``; staged
-        tables are included, as the signer includes them
-        (catalog/s3_signer.rs:55-56)."""
-        rows = self._conn.execute(
+        ``location`` on an active warehouse (postgres/table.rs:430-506:
+        ``$2 LIKE table_location || '%'``). Only ``location``'s prefixes
+        that end at a ``/`` (with and without it) and ``location`` itself
+        can be such a table location, so idx_tbl_loc is probed with
+        those, one probe each, instead of testing the pattern on every
+        table of the warehouse. The boundary is re-checked in Python so a
+        request under ``.../tbl-id-evil/`` never resolves to table
+        ``tbl-id``; staged tables are included, as the signer includes
+        them (catalog/s3_signer.rs:55-56)."""
+        cuts = [i for i, ch in enumerate(location) if ch == "/"]
+        prefixes = [location[:i] for i in cuts] + [location[: i + 1] for i in cuts] + [location]
+        rows = self._rows(
+            None,
+            # the planner walks the warehouse's namespaces instead unless
+            # the index is named
             "SELECT t.table_id, t.metadata_location, t.table_location"
-            " FROM tbl t"
+            " FROM tbl t INDEXED BY idx_tbl_loc"
             " JOIN namespace n ON n.namespace_id = t.namespace_id"
             " JOIN warehouse w ON w.warehouse_id = n.warehouse_id"
-            " WHERE n.warehouse_id = ? AND ? LIKE t.table_location || '%'"
-            " AND w.status = 'active'",
-            (warehouse_id, location),
-        ).fetchall()
+            " WHERE t.table_location IN (SELECT value FROM json_each(?))"
+            " AND n.warehouse_id = ? AND w.status = 'active'",
+            (json.dumps(prefixes), warehouse_id),
+        )
         for row in rows:
             tl = row[2].rstrip("/")
             if location == tl or location.startswith(tl + "/"):
@@ -730,16 +794,16 @@ class CatalogStore:
         # table at all) resolves nothing (postgres/table.rs tests)
         raise NotFoundError(f"no table found for location {location!r}")
 
-    def _table_id(self, warehouse_id: str, namespace: list[str], name: str) -> str:
+    def _table_id(self, c, warehouse_id: str, namespace: list[str], name: str) -> str:
         """The id of the table, committed or staged."""
-        row = self._table_row(warehouse_id, namespace, name)
+        row = self._table_row(c, warehouse_id, namespace, name)
         if row is None:
             raise TableNotFoundError(f"table {namespace}.{name} not found")
         return row[0]
 
     def drop_table(self, warehouse_id: str, namespace: list[str], name: str) -> None:
         with self._txn() as c:
-            table_id = self._table_id(warehouse_id, namespace, name)
+            table_id = self._table_id(c, warehouse_id, namespace, name)
             c.execute("DELETE FROM tbl WHERE table_id = ?", (table_id,))
 
     def rename_table(
@@ -752,8 +816,8 @@ class CatalogStore:
     ) -> None:
         try:
             with self._txn() as c:
-                table_id = self._table_id(warehouse_id, src_ns, src_name)
-                dst_nid = self._namespace_row(warehouse_id, dst_ns)[0]
+                table_id = self._table_id(c, warehouse_id, src_ns, src_name)
+                dst_nid = self._namespace_row(c, warehouse_id, dst_ns)[0]
                 c.execute(
                     "UPDATE tbl SET namespace_id = ?, name = ? WHERE table_id = ?",
                     (dst_nid, dst_name, table_id),
@@ -780,7 +844,7 @@ class CatalogStore:
             staged = []
             for change in changes:
                 ns, name = change["namespace"], change["name"]
-                row = self._table_row(warehouse_id, ns, name)
+                row = self._table_row(c, warehouse_id, ns, name)
                 current = None if row is None else json.loads(row[1])
                 requirements = change.get("requirements", [])
                 # a staged row reads as absent to a change that asserts

@@ -10,9 +10,13 @@ in the reference's unit/integration tests (not of the code):
 
 from __future__ import annotations
 
+import gc
 import json
+import os
+import sqlite3
 import subprocess
 import sys
+import threading
 from pathlib import Path
 
 import pytest
@@ -622,10 +626,152 @@ def test_commit_encodes_metadata_once(tmp_path, monkeypatch):
     assert len(encoded) == 1
 
     location = result["metadata-location"]
-    row_text = s._table_row(wid, ["ns1"], "t")[1]
+    row_text = s._table_row(None, wid, ["ns1"], "t")[1]
     with open(local_path(location), "rb") as fh:
         assert gzip.decompress(fh.read()).decode("utf-8") == row_text
     assert read_metadata_file(location) == json.loads(s.load_table(wid, ["ns1"], "t")["metadata"])
+
+
+# ----------------------------------------------------------------- reads
+
+class _PausedWriter:
+    """Stands in for the store's writer connection: a commit's second
+    ``UPDATE tbl`` waits until ``resume`` is set, so the commit holds
+    its first table's new row uncommitted; with ``fail`` the second
+    UPDATE then raises, and the commit rolls back."""
+
+    def __init__(self, conn, fail: bool = False):
+        self._conn, self._fail = conn, fail
+        self._updates = 0
+        self.paused, self.resume = threading.Event(), threading.Event()
+
+    def execute(self, sql, *args):
+        if sql.startswith("UPDATE tbl"):
+            self._updates += 1
+            if self._updates == 2:
+                self.paused.set()
+                assert self.resume.wait(10)
+                if self._fail:
+                    raise sqlite3.OperationalError("disk I/O error")
+        return self._conn.execute(sql, *args)
+
+    def __getattr__(self, name):
+        return getattr(self._conn, name)
+
+
+def _pause_two_table_commit(s, wid, monkeypatch, fail: bool):
+    """Start a commit of tables a and b on a thread and return once it
+    has updated a's row; returns the writer stand-in, the thread, the
+    commit's outcome list and the locations before the commit."""
+    for name in ("a", "b"):
+        s.create_table(wid, ["ns1"], name, SCHEMA)
+    before = {n: s.load_table(wid, ["ns1"], n)["metadata-location"] for n in ("a", "b")}
+    writer = _PausedWriter(s._conn, fail)
+    monkeypatch.setattr(s, "_conn", writer)
+    change = {"requirements": [], "updates": [{"action": "set-properties", "updates": {"k": "v"}}]}
+    outcome = []
+
+    def commit():
+        try:
+            outcome.append(s.commit_transaction(
+                wid, [{"namespace": ["ns1"], "name": n, **change} for n in ("a", "b")]))
+        except sqlite3.OperationalError as e:
+            outcome.append(e)
+
+    thread = threading.Thread(target=commit)
+    thread.start()
+    assert writer.paused.wait(10)
+    return writer, thread, outcome, before
+
+
+def test_load_during_a_commit_sees_neither_table_changed(store, monkeypatch):
+    """A load that lands between the two UPDATEs of a two-table commit
+    returns the pre-commit location of either table, without waiting
+    for the commit; once the commit is acknowledged, both new ones."""
+    s, wid = store
+    writer, thread, outcome, before = _pause_two_table_commit(s, wid, monkeypatch, fail=False)
+    try:
+        for name in ("a", "b"):
+            assert s.load_table(wid, ["ns1"], name)["metadata-location"] == before[name]
+    finally:
+        writer.resume.set()
+        thread.join(10)
+    (results,) = outcome
+    after = [s.load_table(wid, ["ns1"], n)["metadata-location"] for n in ("a", "b")]
+    assert after == [r["metadata-location"] for r in results]
+
+
+def test_rolled_back_commit_is_never_read(store, monkeypatch):
+    """The same pause, then a failure that rolls the commit back: no load,
+    during the commit or after it, returns the rolled-back location."""
+    s, wid = store
+    writer, thread, outcome, before = _pause_two_table_commit(s, wid, monkeypatch, fail=True)
+    try:
+        during = {n: s.load_table(wid, ["ns1"], n)["metadata-location"] for n in ("a", "b")}
+    finally:
+        writer.resume.set()
+        thread.join(10)
+    assert isinstance(outcome[0], sqlite3.OperationalError)
+    assert during == before
+    assert {n: s.load_table(wid, ["ns1"], n)["metadata-location"] for n in ("a", "b")} == before
+
+
+def test_interleaved_commits_and_loads_keep_the_wal_bounded(tmp_path):
+    """2,000 single-table commits, each followed by a load, on one file
+    store: every load returns the commit just acknowledged, and the WAL
+    file never outgrows one auto-checkpoint interval (a read transaction
+    left open between calls would both stale the loads and let the WAL
+    grow with every commit)."""
+    path = str(tmp_path / "catalog.sqlite")
+    s = CatalogStore(path)
+    wid = s.create_warehouse("p1", "wh", f"file://{tmp_path}/wh")
+    s.create_namespace(wid, ["ns1"])
+    s.create_table(wid, ["ns1"], "t", SCHEMA)
+    frames, page_size = (
+        s._reader.execute(f"PRAGMA {p}").fetchone()[0] for p in ("wal_autocheckpoint", "page_size")
+    )
+    bound = (frames + 10) * (page_size + 24) + 32  # frame header 24 B, file header 32 B
+    largest = 0
+    for i in range(2000):
+        (result,) = s.commit_transaction(wid, [{
+            "namespace": ["ns1"], "name": "t", "requirements": [],
+            "updates": [{"action": "set-properties", "updates": {"i": str(i)}}],
+        }])
+        assert s.load_table(wid, ["ns1"], "t")["metadata-location"] == result["metadata-location"]
+        largest = max(largest, os.path.getsize(path + "-wal"))
+    assert 0 < largest <= bound
+
+
+def test_private_store_leaves_no_file():
+    s = CatalogStore()
+    path = s._reader.execute("PRAGMA database_list").fetchone()[2]
+    s.create_warehouse("p1", "wh", "file:///tmp/wh")
+    assert os.path.exists(path) and os.path.exists(path + "-wal")
+    del s
+    gc.collect()
+    assert [p for p in (path, path + "-wal", path + "-shm") if os.path.exists(p)] == []
+
+
+def test_resolve_by_location_probes_the_location_index(store, monkeypatch):
+    """The prefix-only sign route's lookup searches idx_tbl_loc with the
+    location's prefixes, not every table of the warehouse."""
+    s, wid = store
+    for i in range(20):
+        s.create_table(wid, ["ns1"], f"t{i}", SCHEMA)
+    location = s.load_table(wid, ["ns1"], "t7")["table-location"]
+    statements = []
+    rows = s._rows
+
+    def recording_rows(c, sql, params=()):
+        statements.append((sql, params))
+        return rows(c, sql, params)
+
+    monkeypatch.setattr(s, "_rows", recording_rows)
+    found = s.resolve_table_by_location(wid, location + "/data/f.parquet")
+    assert found["table-location"] == location
+    ((sql, params),) = statements
+    plan = [r[3] for r in s._reader.execute("EXPLAIN QUERY PLAN " + sql, params)]
+    assert any("USING INDEX idx_tbl_loc (table_location=?)" in step for step in plan), plan
 
 
 # ------------------------------------------------------------------ HTTP

@@ -272,7 +272,7 @@ def test_spliced_table_bodies_match_the_scrubbed_payload(catalog_server, ops, st
             return raw
 
         def check(raw: str, old_row: str, **rest) -> None:
-            _, row_text, location, _ = store._table_row(wid, ["ns"], "t")
+            _, row_text, location, _, _ = store._table_row(None, wid, ["ns"], "t")
             payload = {"metadata": json.loads(old_row), "metadata-location": location, **rest}
             assert json.loads(raw) == _scrub_metadata_nulls(payload)
             member = '{"metadata": '
@@ -296,6 +296,6 @@ def test_spliced_table_bodies_match_the_scrubbed_payload(catalog_server, ops, st
             old_row = json.dumps(reference.build())
             raw = exchange("POST", f"{tables}/t", {"requirements": [], "updates": updates})
             check(raw, old_row)
-        if not staged or store._table_row(wid, ["ns"], "t")[2] is not None:
+        if not staged or store._table_row(None, wid, ["ns"], "t")[2] is not None:
             check(exchange("GET", f"{tables}/t"), old_row, config={})
         conn.close()

@@ -188,6 +188,22 @@ def test_create_namespace_shape(server):
         ("POST", "/namespaces", json.dumps({"namespace": "abc"}), 400),
         ("POST", "/namespaces", json.dumps({"namespace": "x"}), 400),
         ("POST", "/namespaces/ns/tables", json.dumps({"name": 5, "schema": SCHEMA}), 400),
+        # and so are the other members of the wrong JSON type
+        ("POST", "/transactions/commit", json.dumps({"table-changes": 5}), 400),
+        ("POST", "/transactions/commit", json.dumps({"table-changes": [5]}), 400),
+        ("POST", "/namespaces/ns/tables/t", json.dumps({"updates": 5}), 400),
+        ("POST", "/namespaces/ns/tables/t", json.dumps({"updates": [5]}), 400),
+        ("POST", "/namespaces/ns/tables/t", json.dumps({"requirements": [5]}), 400),
+        ("POST", "/namespaces", json.dumps({"namespace": ["ns2"], "properties": 5}), 400),
+        ("POST", "/namespaces/ns/properties", json.dumps({"updates": 5}), 400),
+        ("POST", "/namespaces/ns/properties", json.dumps({"removals": 5}), 400),
+        ("POST", "/namespaces/ns/tables", json.dumps({"name": "u", "schema": 5}), 400),
+        (
+            "POST",
+            "/namespaces/ns/tables",
+            json.dumps({"name": "u", "schema": SCHEMA, "properties": 5}),
+            400,
+        ),
     ],
 )
 def test_client_faults_are_4xx_envelopes(server, method, path, body, code):
@@ -197,6 +213,7 @@ def test_client_faults_are_4xx_envelopes(server, method, path, body, code):
     spec-generated client sends."""
     prefix = _prefix(server)
     assert _create_ns(server, prefix, "ns")[0] == 200
+    assert _create_table(server, prefix, "ns", "t")[0] == 200
     conn = http.client.HTTPConnection("127.0.0.1", server.port, timeout=10)
     conn.request(
         method,
